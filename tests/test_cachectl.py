@@ -63,21 +63,17 @@ def test_repeated_calls_bounded_storage(spark, clean_caches):
             _intervals(spark, i), ["s", "e"], group_vars=["g"]
         ).count()
         high_water = max(high_water, _n_cached(spark))
-    # three per-call FAMILIES (remove_overlaps.base, the r7
-    # remove_overlaps.atomic sweep cache, merge_intervals.deltas), each
-    # FIFO-bounded at keep=2 (r5 item 6: shared tags silently recompute
-    # when a pipeline holds several lazy results); async unpersist may
-    # briefly hold one stale frame per family
-    assert high_water <= 9, f"storage pool grew to {high_water} cached RDDs"
+    # two per-call FAMILIES (remove_overlaps.base,
+    # merge_intervals.deltas), each FIFO-bounded at keep=2 (r5 item 6:
+    # shared tags silently recompute when a pipeline holds several lazy
+    # results); async unpersist may briefly hold one stale frame per
+    # family
+    assert high_water <= 6, f"storage pool grew to {high_water} cached RDDs"
     fams = {t.split("#")[0] for t in cachectl.managed_tags()}
-    assert fams == {
-        "merge_intervals.deltas",
-        "remove_overlaps.base",
-        "remove_overlaps.atomic",
-    }
-    assert len(cachectl.managed_tags()) <= 6  # keep=2 per family
+    assert fams == {"merge_intervals.deltas", "remove_overlaps.base"}
+    assert len(cachectl.managed_tags()) <= 4  # keep=2 per family
     released = cachectl.release()
-    assert 3 <= released <= 6
+    assert 2 <= released <= 4
     assert cachectl.managed_tags() == []
     assert _wait_cached_at_most(spark, 0) == 0
 

@@ -133,16 +133,16 @@ def test_asof_many_groups_no_carry_broadcast(spark):
 
 
 def test_integrity_scan_many_groups_no_broadcast(spark):
-    from timeperiods_spark.operators.interval_avg import _integrity_flags_frame
+    from timeperiods_spark.operators.interval_avg import _overlap_scan
 
     xw = spark.range(2000).selectExpr(
         "CAST(id % 500 AS STRING) AS __g0",
         "CAST(id * 10 AS LONG) AS __xs",
         "CAST(id * 10 + 4 AS LONG) AS __xe",
     )
-    flags = _integrity_flags_frame(xw, ["__g0"])
-    assert "BroadcastExchange" not in _plan(flags)
-    assert flags.filter("ovl OR dup OR nul OR rev").count() == 0
+    scan = _overlap_scan(xw, ["__g0"])
+    assert "BroadcastExchange" not in _plan(scan)
+    assert scan.first()["ovl"] == 0
 
 
 def test_running_max_date_order_column(spark):

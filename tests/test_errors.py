@@ -115,3 +115,36 @@ def test_duplicate_y_warns_and_dedups(spark, xy):
         out = interval_weighted_avg(x, y.union(y), ("start", "end"), ("v",))
         assert out.count() == 1
     assert any("duplicate" in str(m.message) for m in w)
+    # stacklevel points at the caller, not into the package
+    assert any(m.filename == __file__ for m in w), [m.filename for m in w]
+
+
+def _sparse_two_groups(spark, rows_a):
+    """Two groups (< 4 x defaultParallelism, so the integrity scan
+    buckets the start axis into 16 buckets) of 8 intervals 1000 apart:
+    each interval lands alone in its start bucket."""
+    b = [("b", i * 1000, i * 1000 + 9, 1.0) for i in range(8)]
+    return spark.createDataFrame(rows_a + b, "g string, s int, e int, v double")
+
+
+def test_overlap_across_scan_buckets_raises(spark):
+    """An early long interval overlapping rows in LATER start buckets is
+    only visible at the bucket boundaries of the adjacency scan."""
+    from timeperiods_spark import check_no_overlaps
+
+    assert spark.sparkContext.defaultParallelism * 4 > 2
+    a = [("a", 0, 2500, 1.0)] + [("a", i * 1000, i * 1000 + 9, 1.0) for i in range(1, 8)]
+    x = _sparse_two_groups(spark, a)
+    y = spark.createDataFrame([("a", 0, 9000), ("b", 0, 9000)], "g string, s int, e int")
+    with pytest.raises(OverlapError):
+        interval_weighted_avg(x, y, ("s", "e"), ("v",), ("g",))
+    assert not check_no_overlaps(x, ("s", "e"), ("g",), raise_on_overlap=False)
+    clean = _sparse_two_groups(
+        spark, [("a", i * 1000, i * 1000 + 9, 1.0) for i in range(8)]
+    )
+    assert check_no_overlaps(clean, ("s", "e"), ("g",))
+    dup = _sparse_two_groups(
+        spark, [("a", i * 1000, i * 1000 + 9, 1.0) for i in (0, 1, 2, 3, 3)]
+    )
+    with pytest.raises(DuplicateIntervalError):
+        interval_weighted_avg(dup, y, ("s", "e"), ("v",), ("g",))

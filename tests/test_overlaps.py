@@ -113,6 +113,42 @@ def test_remove_overlaps_duplicate_originals_multiset(spark):
     assert Counter(per[(8, 45)]) == Counter({(8, 16): 1, (17, 45): 1})
 
 
+def test_remove_overlaps_empty_and_all_null_inputs(spark):
+    """No rows, or no non-NULL endpoint at all: no atomic pieces, for
+    the grouped and the ungrouped sweep."""
+    empty = spark.createDataFrame([], "g int, s int, e int")
+    nulls = spark.createDataFrame([(1, None, None), (1, None, None)], "g int, s int, e int")
+    for x in (empty, nulls):
+        assert remove_overlaps(x, ("s", "e"), ("g",)).count() == 0
+        assert remove_overlaps(x, ("s", "e")).count() == 0
+
+
+def test_remove_overlaps_sweep_buckets_stay_bounded(spark, monkeypatch):
+    """Nested intervals sharing one start: the event values are mostly
+    ends, all past the last start. The sweep's bucket plan must cover
+    them, or every distinct end gets a bucket of its own and the
+    broadcast handoff frame grows to one row per interval."""
+    from timeperiods_spark.plans import carry
+
+    real, plans = carry.plan_buckets, []
+
+    def spy(*args, **kwargs):
+        plans.append(real(*args, **kwargs))
+        return plans[-1]
+
+    monkeypatch.setattr(carry, "plan_buckets", spy)
+    x = spark.createDataFrame(
+        [(g, 0, e) for g in (1, 2) for e in range(10, 2000, 10)], "g int, s int, e int"
+    )
+    out = remove_overlaps(x, ("s", "e"), ("g",))
+    # piece k of a group's 199 is covered by the 200 - k longest
+    assert out.count() == 2 * sum(range(1, 200))
+    (plan,) = plans
+    assert plan.bucketed
+    top = plan.df.agg(F.max("__bk")).first()[0]
+    assert 0 <= top < plan.n_buckets, (top, plan.n_buckets)
+
+
 def test_remove_overlaps_dates(spark):
     d = dt.date
     x = spark.createDataFrame(

@@ -204,17 +204,15 @@ def test_minhash_hot_bucket_probe_fills_banded_cache(spark):
 def test_ungrouped_validation_is_not_single_partition(spark):
     """With group_vars=[] the integrity scan must window by the
     deterministic start-bucket — not funnel everything through one
-    Window.partitionBy(lit(1)) task. (The tiny per-bucket carry frame
-    may use a constant window; the FULL-DATA window may not, which is
+    Window.partitionBy(lit(1)) task. (The tiny per-bucket frame may use
+    a constant window; the FULL-DATA window may not, which is
     what the __bk partitioning key pins.)"""
-    from timeperiods_spark.operators.interval_avg import (
-        _integrity_flags_frame,
-    )
+    from timeperiods_spark.operators.interval_avg import _overlap_scan
 
     xw = spark.createDataFrame(
         [(i * 10, i * 10 + 5) for i in range(100)], "__xs long, __xe long"
     )
-    p = _plan(_integrity_flags_frame(xw, []))
+    p = _plan(_overlap_scan(xw, []))
     assert "hashpartitioning(__bk" in p, p[:1500]
 
 
@@ -513,3 +511,65 @@ def test_vocab_coverage_preaggregates_before_rank(spark):
     assert "WindowGroupLimit" in plan
     # totals attach by broadcast (1-row side)
     assert "BroadcastExchange" in plan
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, read from a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_eager_work_is_one_stats_pass_and_one_scan(spark):
+    """The call itself (not its result) runs the fused stats pass and
+    the overlap scan only: 7 jobs on this bucketed few-group panel,
+    where the separate y check, x scan with broadcast carry and
+    auto-join stats ran 15. The bound leaves margin for AQE stage
+    splits."""
+    x = spark.range(600).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 10 AS INT) AS s",
+        "CAST(id DIV 3 * 10 + 6 AS INT) AS e", "CAST(id AS DOUBLE) AS v",
+    )
+    y = spark.range(300).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 20 AS INT) AS s",
+        "CAST(id DIV 3 * 20 + 14 AS INT) AS e",
+    )
+    n = _jobs_run_by(
+        spark, lambda: interval_weighted_avg(x, y, ("s", "e"), ("v",), ("g",))
+    )
+    assert 0 < n <= 10, n
+
+
+def test_build_overlap_pairs_with_hints_runs_no_job(spark):
+    """Given the request's stats, planning the join runs no job —
+    including a fresh RequestStats whose estimate sits in the recheck
+    band, where a bare tuple hint would be rechecked."""
+    from pyspark.sql import Row
+
+    from timeperiods_spark.plans.strategy import (
+        AUTO_BIN_PAIRS,
+        RequestStats,
+        build_overlap_pairs,
+    )
+
+    xw = spark.range(100).selectExpr(
+        "id % 2 AS __g0", "id * 10 AS __xs", "id * 10 + 5 AS __xe"
+    )
+    yw = spark.range(50).selectExpr(
+        "id % 2 AS __yg0", "id * 20 AS __ys", "id * 20 + 9 AS __ye"
+    )
+    in_band = RequestStats(Row(n=AUTO_BIN_PAIRS // 2, groups=1), Row(n=1), 8)
+    # bin, group_equi, then the fresh in-band stats (bin width from them)
+    for hint, width in (((10**9, 10**9, 2), 10), ((100, 50, 2), 10), (in_band, None)):
+        n = _jobs_run_by(spark, lambda: build_overlap_pairs(
+            xw, yw, 1, auto_stats=hint, bin_width=width
+        ))
+        assert n == 0, (hint, n)

@@ -26,11 +26,12 @@ timeperiod_functions.R:83, :265, :334).
 
 from __future__ import annotations
 
+import time
 import warnings
 from typing import Optional, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from ..errors import (
@@ -39,7 +40,8 @@ from ..errors import (
     OverlapError,
     RoleValidationError,
 )
-from ..plans.strategy import build_overlap_pairs
+from ..plans.carry import plan_buckets
+from ..plans.strategy import RequestStats, build_overlap_pairs, request_stats
 
 #: Output column names reserved by the operator
 #: (reference timeperiod_functions.R:126-130).
@@ -52,7 +54,7 @@ _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 #: per-call persist gates for the double-consumed join inputs (rows).
 #: xw is ~40 B/row after projection, so the cap bounds the cache at a
 #: couple of GB cluster-wide — far cheaper than re-running the upstream
-#: pipeline for the bin-width sample; above the cap the persist is
+#: pipeline for the bin-width stats pass; above the cap the persist is
 #: skipped and behavior is unchanged.
 _X_PERSIST_MAX_ROWS = 50_000_000
 _Y_PERSIST_MAX_ROWS = 100_000_000
@@ -155,138 +157,129 @@ def _validate_roles(
     return xs_t
 
 
-def _integrity_flags_frame(xw: DataFrame, gcols: Sequence[str]) -> DataFrame:
-    """Per-row integrity flags (nul, rev, dup, ovl) with parallelism
-    independent of group cardinality.
+def _canonical(
+    x: DataFrame, y: DataFrame, interval_vars: Sequence[str],
+    value_vars: Sequence[str], group_vars: Sequence[str],
+) -> tuple:
+    """(interval dtype, xw, yw): the roles validated, then the canonical
+    frames — collision-free, side-disjoint names (x ``__g*, __xs, __xe,
+    __v*``; y ``__yg*, __ys, __ye``) in long grid units, as the
+    reference renames to placeholders (timeperiod_functions.R:229-255)."""
+    ivl_dtype = _validate_roles(x, y, interval_vars, value_vars, group_vars)
+    s, e = interval_vars
+    xf = {f.name: f.dataType for f in x.schema.fields}
+    yf = {f.name: f.dataType for f in y.schema.fields}
+    xw = x.select(
+        *[F.col(g).alias(f"__g{i}") for i, g in enumerate(group_vars)],
+        _grid(s, xf[s]).alias("__xs"),
+        _grid(e, xf[e]).alias("__xe"),
+        *[F.col(v).cast("double").alias(f"__v{i}") for i, v in enumerate(value_vars)],
+    )
+    yw = y.select(
+        *[F.col(g).alias(f"__yg{i}") for i, g in enumerate(group_vars)],
+        _grid(s, yf[s]).alias("__ys"),
+        _grid(e, yf[e]).alias("__ye"),
+    )
+    return ivl_dtype, xw, yw
 
-    A window partitioned by the group columns caps the scan at one task
-    per group (and one task TOTAL when ungrouped) — a hang at scale.
-    Instead the scan windows within (group…, start-bucket) with a
-    per-bucket carry-in of the group's max end over strictly earlier
-    buckets — the shared machinery in plans/carry.py, which also guards
-    the carry broadcast by group cardinality (many groups → plain
-    per-group windows, already parallel). Duplicates never straddle
-    buckets (equal starts share a bucket), so the lag-based dup check
-    stays local; null and reversed endpoints are row-local.
+
+def _overlap_scan(
+    xw: DataFrame, gcols: Sequence[str], *,
+    bounds_hint: Optional[tuple] = None, group_count_hint: Optional[int] = None,
+) -> DataFrame:
+    """One-row frame whose ``ovl`` is > 0 iff two intervals of ``xw``
+    overlap within a group (closed: a shared endpoint counts). NULL and
+    reversed rows overlap nothing here.
+
+    Replaces the reference's self-``foverlaps`` assertion
+    (timeperiod_functions.R:216) with an adjacency scan: in (group,
+    start, end) order the first row that overlaps ANY predecessor also
+    overlaps its immediate predecessor (the rows before it are disjoint
+    and sorted, so their ends increase), so a lag suffices. The lag
+    runs within (group…, start-bucket) (plans/carry.py), so parallelism
+    never collapses to one task per group, or one in all when
+    ungrouped; bucket boundaries are checked by a lag over the tiny
+    per-bucket frame of (first start, max end) — no join back onto x.
     """
-    from pyspark.sql import Window
-
-    from ..plans.carry import attach_carry, plan_buckets
-
     gcols = list(gcols)
-    plan = plan_buckets(xw, gcols, "__xs")
-    if plan.empty:
-        # empty, or every start NULL: flag rows directly (no windows)
-        return xw.select(
-            (F.col("__xs").isNull() | F.col("__xe").isNull()).alias("nul"),
-            (F.col("__xe") < F.col("__xs")).alias("rev"),
-            F.lit(False).alias("dup"),
-            F.lit(False).alias("ovl"),
-        )
+    plan = plan_buckets(
+        xw.where(F.col("__xe") >= F.col("__xs")), gcols, "__xs",
+        bounds_hint=bounds_hint, group_count_hint=group_count_hint,
+    )
     w = Window.partitionBy(*gcols, "__bk").orderBy("__xs", "__xe")
-    local_prev_max = F.max("__xe").over(w.rowsBetween(Window.unboundedPreceding, -1))
-    prev_s = F.lag("__xs").over(w)
-    prev_e = F.lag("__xe").over(w)
-    stitched = attach_carry(
-        plan,
-        [F.max("__xe").alias("__bmax")],
-        lambda wg: [
-            F.max("__bmax")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__carry_max")
-        ],
-    )
-    # greatest() skips NULLs: first row of the first bucket has neither
-    # a local predecessor nor a carry-in → NULL → not an overlap
-    prev_max_end = F.greatest(local_prev_max, F.col("__carry_max"))
-    return stitched.select(
-        (F.col("__xs").isNull() | F.col("__xe").isNull()).alias("nul"),
-        (F.col("__xe") < F.col("__xs")).alias("rev"),
-        (prev_s.eqNullSafe(F.col("__xs")) & prev_e.eqNullSafe(F.col("__xe"))).alias("dup"),
-        (F.col("__xs") <= prev_max_end).alias("ovl"),
-    )
-
-
-def _integrity_totals(xw: DataFrame, gcols: Sequence[str]) -> dict:
-    row = (
-        _integrity_flags_frame(xw, gcols)
+    buckets = (
+        plan.df.withColumn("__o", F.col("__xs") <= F.lag("__xe").over(w))
+        .groupBy(*gcols, "__bk")
         .agg(
-            F.sum(F.when(F.col("nul"), 1).otherwise(0)).alias("nulls"),
-            F.sum(F.when(F.col("rev"), 1).otherwise(0)).alias("rev"),
-            F.sum(F.when(F.col("dup"), 1).otherwise(0)).alias("dup"),
-            F.sum(F.when(F.col("ovl"), 1).otherwise(0)).alias("ovl"),
+            F.min("__xs").alias("__fs"),
+            F.max("__xe").alias("__me"),
+            F.count_if("__o").alias("__o"),
         )
-        .first()
     )
-    if row is None:
-        return {"nulls": 0, "rev": 0, "dup": 0, "ovl": 0}
-    return {k: row[k] or 0 for k in ("nulls", "rev", "dup", "ovl")}
+    if plan.bucketed:
+        wb = Window.partitionBy(*(gcols or [F.lit(1)])).orderBy("__bk")
+        across = (F.col("__fs") <= F.lag("__me").over(wb)).cast("long")
+        buckets = buckets.withColumn("__o", F.col("__o") + F.coalesce(across, F.lit(0)))
+    return buckets.agg(F.coalesce(F.sum("__o"), F.lit(0)).alias("ovl"))
 
 
-def _check_x_integrity(
-    xw: DataFrame, n_groups: int, skip_overlap_check: bool
-) -> None:
-    """One-pass eager integrity check over the measurement table.
-
-    Replaces the reference's O(n log n) self-``foverlaps`` assertion
-    (timeperiod_functions.R:216) with a window scan: within each group,
-    sorted by (start, end), an interval overlaps some predecessor iff
-    its start <= running max of previous ends (closed intervals, so a
-    shared endpoint counts). Exact duplicates (hard error,
-    timeperiod_functions.R:198-202) ride along in the same single job.
-    The scan windows within (group, start-bucket) with a per-bucket
-    carry-in (see _integrity_flags_frame), so its parallelism does not
-    collapse to one task per group — or one task total when ungrouped.
-    """
-    row = _integrity_totals(xw, [f"__g{i}" for i in range(n_groups)])
-    if row is None:
-        return
-    if (row["nulls"] or 0) > 0:
-        raise IntervalValidationError(
-            "interval_vars columns cannot be NULL in x (reference "
-            "timeperiod_functions.R:154-160)"
-        )
-    if (row["rev"] or 0) > 0:
-        raise IntervalValidationError(
-            "x has intervals with end < start; interval_vars must be "
-            "(start, end) of increasing intervals"
-        )
-    if (row["dup"] or 0) > 0:
-        raise DuplicateIntervalError(
-            "duplicate (group, start, end) intervals in x; average them "
-            "together first (reference timeperiod_functions.R:198-202)"
-        )
-    if not skip_overlap_check and (row["ovl"] or 0) > 0:
-        raise OverlapError(
-            "overlapping intervals within groups of x (closed intervals: "
-            "a shared endpoint is an overlap). Decompose with "
-            "remove_overlaps() first."
-        )
+def _vlog(verbose: bool, msg: str) -> None:
+    if verbose:
+        print(f"[interval_weighted_avg] {msg}", flush=True)
 
 
-def _check_y_intervals(yw: DataFrame) -> None:
-    row = yw.agg(
-        F.sum(
-            F.when(F.col("__ys").isNull() | F.col("__ye").isNull(), 1).otherwise(0)
-        ).alias("nulls"),
-        F.sum(F.when(F.col("__ye") < F.col("__ys"), 1).otherwise(0)).alias("rev"),
-        F.count(F.lit(1)).alias("n"),
-        # struct-wrap: count_distinct over bare columns drops rows where
-        # ANY column is NULL, but NULL group keys are legal (tests.R:564-580)
-        F.count_distinct(F.struct(*[F.col(c) for c in yw.columns])).alias("nd"),
-    ).first()
-    if row is None:
-        return
-    if (row["nulls"] or 0) > 0:
+def _validate(
+    xw: DataFrame, yw: DataFrame, n_groups: int, skip_overlap_check: bool,
+    verbose: bool = False,
+) -> RequestStats:
+    """Eager checks of one request, in this order: y NULL, y reversed,
+    y duplicates (a warning), x NULL, x reversed, x duplicates, then
+    x overlaps (the scan; unless ``skip_overlap_check``). Returns the
+    stats pass for planning."""
+    t0 = time.time()
+    stats = request_stats(xw, yw, n_groups)
+    x, y = stats.x, stats.y
+    _vlog(verbose, f"request stats (one pass) nx={x.n} ny={y.n} groups~{x.groups} "
+                   f"bin_width~{stats.bin_width}: {time.time() - t0:.2f}s")
+    if y.nulls:
         raise IntervalValidationError("interval_vars columns cannot be NULL in y")
-    if (row["rev"] or 0) > 0:
+    if y.rev:
         raise IntervalValidationError("y has intervals with end < start")
-    if row["n"] != row["nd"]:
+    if y.n != y.nd:
         warnings.warn(
             "duplicate (group, start, end) rows in y; deduplicating "
             "(reference timeperiod_functions.R:205-211)",
             stacklevel=3,
         )
+    if x.nulls:
+        raise IntervalValidationError(
+            "interval_vars columns cannot be NULL in x (reference "
+            "timeperiod_functions.R:154-160)"
+        )
+    if x.rev:
+        raise IntervalValidationError(
+            "x has intervals with end < start; interval_vars must be "
+            "(start, end) of increasing intervals"
+        )
+    if x.n != x.nd:
+        raise DuplicateIntervalError(
+            "duplicate (group, start, end) intervals in x; average them "
+            "together first (reference timeperiod_functions.R:198-202)"
+        )
+    if skip_overlap_check or not x.n:
+        return stats
+    t0 = time.time()
+    gcols = [f"__g{i}" for i in range(n_groups)]
+    scan = _overlap_scan(xw, gcols, bounds_hint=(x.lo, x.hi), group_count_hint=x.groups)
+    n_ovl = scan.first()["ovl"]
+    _vlog(verbose, f"x integrity (overlap scan): {time.time() - t0:.2f}s")
+    if n_ovl:
+        raise OverlapError(
+            "overlapping intervals within groups of x (closed intervals: "
+            "a shared endpoint is an overlap). Decompose with "
+            "remove_overlaps() first."
+        )
+    return stats
 
 
 def interval_weighted_avg(
@@ -322,11 +315,16 @@ def interval_weighted_avg(
       reference's equivalent is ``skip_overlap_check`` but at 100 TB the
       duplicate/NULL checks are equally worth skipping once enforced
       upstream.
-    - ``assume_y_distinct=True`` skips the y deduplication shuffle.
+    - ``assume_y_distinct=True`` skips the y deduplication shuffle, as
+      does a stats pass whose exact distinct count finds no duplicates.
     - ``join_strategy``/``bin_width``/``skew_salt`` select the physical
-      range-join plan (see plans.strategy.build_overlap_pairs);
-      ``join_stats=(nx, ny, n_groups_distinct)`` lets the ``auto``
-      picker decide without its stats action on hot paths.
+      range-join plan (see plans.strategy.build_overlap_pairs).
+
+    Eager work is one fused stats pass over x and y
+    (plans.strategy.request_stats), which validates and plans the join,
+    plus one overlap scan of x. With ``validate=False`` the pass only
+    plans (no distinct count, so y keeps its dedup), and
+    ``join_stats=(nx, ny, n_groups_distinct)`` skips it too.
 
     Returns one row per distinct (group, y-interval):
     ``group_vars…, interval_vars…, value_vars… (weighted means, masked
@@ -335,75 +333,33 @@ def interval_weighted_avg(
     timeperiod_functions.R:345-347, README.md:74-110).
     """
     group_vars = list(group_vars or [])
-    ivl_dtype = _validate_roles(x, y, interval_vars, value_vars, group_vars)
+    ivl_dtype, xw, yw = _canonical(x, y, interval_vars, value_vars, group_vars)
     n_g, n_v = len(group_vars), len(value_vars)
-    gcols = [f"__g{i}" for i in range(n_g)]
     ygcols = [f"__yg{i}" for i in range(n_g)]
     vcols = [f"__v{i}" for i in range(n_v)]
 
-    xf = {f.name: f.dataType for f in x.schema.fields}
-    # Canonical internal frames: collision-free, side-disjoint names,
-    # long grid units. (The reference renames to placeholder g*/v*/i*
-    # names for the same reason, timeperiod_functions.R:229-232, 252-255.)
-    xw = x.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
-        _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
-        *[F.col(v).cast("double").alias(vc) for v, vc in zip(value_vars, vcols)],
-    )
-    yf = {f.name: f.dataType for f in y.schema.fields}
-    yw = y.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, ygcols)],
-        _grid(interval_vars[0], yf[interval_vars[0]]).alias("__ys"),
-        _grid(interval_vars[1], yf[interval_vars[1]]).alias("__ye"),
-    )
-
-    import time as _time
-
-    def _vlog(msg: str) -> None:
-        if verbose:
-            print(f"[interval_weighted_avg] {msg}", flush=True)
-
     if validate:
-        _t0 = _time.time()
-        _check_y_intervals(yw)
-        _vlog(f"y validation (null/reversed/dup scan): {_time.time() - _t0:.2f}s")
-        _t0 = _time.time()
-        _check_x_integrity(xw, n_g, skip_overlap_check)
-        _vlog(
-            f"x integrity (null/reversed/dup{'' if skip_overlap_check else '/overlap'}"
-            f" scan): {_time.time() - _t0:.2f}s"
-        )
+        stats = _validate(xw, yw, n_g, skip_overlap_check, verbose)
     else:
-        _vlog("validation skipped (validate=False)")
-
-    caller_join_stats = join_stats is not None
-    if join_strategy == "auto" and join_stats is None and n_g:
-        # compute the auto picker's stats HERE on the pre-dedup frames:
-        # build_overlap_pairs' own fallback would yd.count() and pay
-        # the y-dedup shuffle once for planning and again in the join.
-        # Pre-dedup ny is an upper bound — it can only steer the pick
-        # toward the (safe at any size) bin join.
-        _t0 = _time.time()
-        _row = xw.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(F.struct(*gcols)).alias("g"),
-        ).first()
-        join_stats = (_row["n"], yw.count(), _row["g"])
-        _vlog(
-            f"auto-join stats nx={join_stats[0]} ny<={join_stats[1]} "
-            f"groups~{join_stats[2]} ({_time.time() - _t0:.2f}s)"
+        _vlog(verbose, "validation skipped (validate=False)")
+        # planning-only stats (nothing shuffled; y keeps its dedup) on
+        # the pre-dedup y: ny is an upper bound, which can only steer
+        # the pick toward the bin join, safe at any size
+        need = (join_strategy == "auto" and join_stats is None) or (
+            join_strategy == "bin" and bin_width is None
         )
+        stats = request_stats(xw, yw, n_g, distinct=False) if need else None
 
-    yd = yw if assume_y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
+    y_distinct = assume_y_distinct or (stats is not None and stats.y.n == stats.y.nd)
+    yd = yw if y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
 
     # Size-gated per-call persists (pure plan reuse, no semantic
     # effect on any VALUE — but see the gate below). yd always has TWO
     # consumers — the overlap join and the completion join — so
     # unpersisted, the whole y subtree (dedup shuffle included)
     # executes twice. xw gains a second consumer whenever the bin
-    # strategy must SAMPLE interval lengths to pick a width (strategy
-    # auto/bin with no explicit bin_width): the sample otherwise
+    # strategy must run its own stats pass to pick a width (no
+    # bin_width, no stats here): that pass otherwise
     # re-executes the full upstream x pipeline (measured: the r6
     # iwa_orders plan held two live copies of the y distinct+cross
     # subtree). Gated on CALLER-provided join_stats only, never on the
@@ -413,8 +369,8 @@ def interval_weighted_avg(
     # integer durations land exactly on rounding boundaries) against a
     # differential oracle. Callers that pass join_stats are hot-path
     # production callers opting into physical tuning; size caps keep a
-    # 100 TB x from being spooled to cache to save a 10k-row sample.
-    if caller_join_stats:
+    # 100 TB x from being spooled to cache to save one stats pass.
+    if join_stats is not None:
         from ..plans.cachectl import managed_persist_percall
 
         _nx = join_stats[0] if len(join_stats) > 0 else None
@@ -423,6 +379,7 @@ def interval_weighted_avg(
             _nx is not None
             and int(_nx) <= _X_PERSIST_MAX_ROWS
             and bin_width is None
+            and stats is None
             and join_strategy in ("auto", "bin")
         ):
             xw = managed_persist_percall(
@@ -435,8 +392,9 @@ def interval_weighted_avg(
                 storage_level=StorageLevel.DISK_ONLY,
             )
     _vlog(
+        verbose,
         f"plan: join_strategy={join_strategy!r} n_groups={n_g} "
-        f"n_values={n_v} y_dedup={not assume_y_distinct} "
+        f"n_values={n_v} y_dedup={not y_distinct} "
         f"required_percentage={required_percentage}"
     )
 
@@ -448,7 +406,7 @@ def interval_weighted_avg(
         strategy=join_strategy,
         bin_width=bin_width,
         skew_salt=skew_salt,
-        auto_stats=join_stats,
+        auto_stats=stats or join_stats,
     )
 
     # clip (O3), weight (O4), per-value weights/products (O5, O6)

@@ -15,13 +15,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .interval_avg import (
-    _check_x_integrity,
-    _check_y_intervals,
-    _grid,
-    _ungrid,
-    _validate_roles,
-)
+from .interval_avg import _canonical, _ungrid, _validate
 
 
 def interval_weighted_avg_slow(
@@ -38,28 +32,14 @@ def interval_weighted_avg_slow(
     """Unit-grid expansion oracle; output contract identical to
     :func:`timeperiods_spark.operators.interval_avg.interval_weighted_avg`."""
     group_vars = list(group_vars or [])
-    ivl_dtype = _validate_roles(x, y, interval_vars, value_vars, group_vars)
+    ivl_dtype, xw, yw = _canonical(x, y, interval_vars, value_vars, group_vars)
     n_g, n_v = len(group_vars), len(value_vars)
     gcols = [f"__g{i}" for i in range(n_g)]
     ygcols = [f"__yg{i}" for i in range(n_g)]
     vcols = [f"__v{i}" for i in range(n_v)]
-
-    xf = {f.name: f.dataType for f in x.schema.fields}
-    yf = {f.name: f.dataType for f in y.schema.fields}
-    xw = x.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
-        _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
-        *[F.col(v).cast("double").alias(vc) for v, vc in zip(value_vars, vcols)],
-    )
-    yw = y.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, ygcols)],
-        _grid(interval_vars[0], yf[interval_vars[0]]).alias("__ys"),
-        _grid(interval_vars[1], yf[interval_vars[1]]).alias("__ye"),
-    )
     if validate:
-        _check_y_intervals(yw)
-        _check_x_integrity(xw, n_g, skip_overlap_check)
+        # the engine's own checks: both reject exactly the same inputs
+        _validate(xw, yw, n_g, skip_overlap_check)
     yd = yw.dropDuplicates(ygcols + ["__ys", "__ye"])
 
     # O16: one row per grid unit; values repeated; measurement marker

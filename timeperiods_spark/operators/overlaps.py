@@ -16,14 +16,14 @@ pluggable range-join strategies — every step is a native DataFrame op.
 
 from __future__ import annotations
 
+from dataclasses import replace
 from typing import Optional, Sequence
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Row, Window, functions as F
 from pyspark.sql import types as T
 
 from ..errors import IntervalValidationError, OverlapError, RoleValidationError
-from ..plans.strategy import build_overlap_pairs
+from ..plans.strategy import build_overlap_pairs, request_stats
 from .interval_avg import _grid, _is_intervalish, _ungrid
 
 
@@ -45,7 +45,7 @@ def _normalize(
 
 
 def _lead_with_boundary_handoff(
-    melted: DataFrame, gcols: Sequence[str], n_buckets: Optional[int] = None
+    melted: DataFrame, gcols: Sequence[str], bounds_hint: tuple, group_count_hint: int
 ) -> DataFrame:
     """lead(__is_end), lead(__val) over (gcols…, __val, __is_end) order
     WITHOUT a per-group window: bucket the value axis deterministically,
@@ -61,19 +61,15 @@ def _lead_with_boundary_handoff(
     stitch — and guards by group cardinality (many groups → per-group
     windows, no handoff frame at all). Rows whose true lead is absent
     (each group's final event) are filtered, matching the plain-window
-    formulation."""
+    formulation. Given the hints, planning runs no action; an empty or
+    all-NULL stream flows through and yields no rows."""
     from ..plans.carry import attach_carry, plan_buckets
 
     gcols = list(gcols)
-    plan = plan_buckets(melted, gcols, "__val", n_buckets=n_buckets)
-    if plan.empty:
-        return melted.select(
-            *gcols,
-            "__val",
-            "__is_end",
-            F.lit(None).cast("boolean").alias("__next_end"),
-            F.lit(None).cast("long").alias("__next_val"),
-        ).filter(F.lit(False))
+    plan = plan_buckets(
+        melted, gcols, "__val",
+        bounds_hint=bounds_hint, group_count_hint=group_count_hint,
+    )
     # forward handoff: each bucket's lead comes from the group's NEXT
     # non-empty bucket's first row. The (val, is_end) pair is packed
     # into ONE long — 2*val + is_end — which orders identically
@@ -169,7 +165,7 @@ def remove_overlaps(
         _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
         *[F.col(c).alias(f"__p{i}") for i, c in enumerate(payload)],
     )
-    # base feeds four subtrees (sweep bounds, per-bucket leads, bucket
+    # base feeds four subtrees (the stats pass, per-bucket leads, bucket
     # firsts, and the join-back): persist so the upstream input is
     # computed once — at corpus scale it's (groups, 2 longs, payload)
     # per interval, spilling to disk if needed. Managed: a repeat call
@@ -179,6 +175,11 @@ def remove_overlaps(
         from ..plans.cachectl import managed_persist_percall
 
         base = managed_persist_percall(base, "remove_overlaps.base", keep=2)
+
+    # one planning pass (base not shuffled) bounds the sweep over starts
+    # AND ends and sizes the join-back (bin width ≈ p90 original length)
+    stats = request_stats(base, None, n_g, distinct=False)
+    x = stats.x
 
     # O21 — melt endpoints into a long event stream
     melted = base.select(*gcols, F.col("__xs").alias("__val"), F.lit(False).alias("__is_end")).unionByName(
@@ -195,7 +196,7 @@ def remove_overlaps(
     # Instead the lead() runs within (group…, value-bucket) and bucket
     # boundaries are stitched from a tiny per-bucket handoff frame
     # (_lead_with_boundary_handoff, built on plans/carry.py).
-    swept = _lead_with_boundary_handoff(melted, gcols)
+    swept = _lead_with_boundary_handoff(melted, gcols, (x.lo or 0, x.hi or 0), x.groups)
 
     # O23 — boundary reconstruction (timeperiod_functions.R:568-573):
     # piece start = value at a start-point, value+1 after an end-point;
@@ -205,20 +206,6 @@ def remove_overlaps(
         F.when(~F.col("__is_end"), F.col("__val")).otherwise(F.col("__val") + 1).alias("__as"),
         F.when(~F.col("__next_end"), F.col("__next_val") - 1).otherwise(F.col("__next_val")).alias("__ae"),
     ).filter(F.col("__ae") >= F.col("__as"))
-    # atomic feeds TWO consumers: the join-back below and (when no
-    # bin_width is given) the bin-width estimator's sample inside
-    # build_overlap_pairs — unpersisted, the whole melt→window→stitch
-    # sweep executed twice per call (measured ~2x the sweep cost in the
-    # r6 bench). The frame is small (<= 2 rows per input interval,
-    # group keys + 2 longs), so the per-call persist is cheap at any
-    # scale; managed, same lifecycle as the base melt above.
-    if cache:
-        from ..plans.cachectl import managed_persist_percall
-
-        atomic = managed_persist_percall(
-            atomic, "remove_overlaps.atomic", keep=2,
-            storage_level=StorageLevel.DISK_ONLY,
-        )
 
     # O24 — tag each atomic piece with every original interval covering
     # it. Reuse the range-join strategies: originals are the x side,
@@ -228,8 +215,10 @@ def remove_overlaps(
         F.col("__as").alias("__ys"),
         F.col("__ae").alias("__ye"),
     )
+    # <= 2 atomic pieces per original: ny is exact, trusted (no recheck)
     pairs = build_overlap_pairs(
-        base, yw, n_g, strategy=join_strategy, bin_width=bin_width
+        base, yw, n_g, strategy=join_strategy, bin_width=bin_width,
+        auto_stats=replace(stats, y=Row(n=2 * x.n)),
     )
 
     out = pairs.select(
@@ -254,9 +243,9 @@ def check_no_overlaps(
 
     Window-scan formulation of the reference's self-``foverlaps``
     assertion (timeperiod_functions.R:213-220): within each group sorted
-    by (start, end), a row overlaps a predecessor iff its start <= the
-    running max of previous ends (closed intervals — a touching
-    endpoint IS an overlap). One shuffle, no join.
+    by (start, end), some row overlaps a predecessor iff some row
+    overlaps its immediate predecessor (closed intervals — a touching
+    endpoint IS an overlap). No join.
     """
     group_vars = list(group_vars or [])
     _normalize(x, interval_vars, group_vars)
@@ -267,12 +256,11 @@ def check_no_overlaps(
         _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
         _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
     )
-    # bucketed scan with per-bucket carry-in: parallelism independent of
-    # group cardinality (one task per group — or one total, ungrouped —
-    # would otherwise serialize the check; interval_avg._integrity_*)
-    from .interval_avg import _integrity_totals
+    # bucketed adjacency scan (interval_avg._overlap_scan): parallelism
+    # independent of group cardinality
+    from .interval_avg import _overlap_scan
 
-    n_bad = _integrity_totals(base, gcols)["ovl"]
+    n_bad = _overlap_scan(base, gcols).first()["ovl"]
     if n_bad and raise_on_overlap:
         raise OverlapError("overlapping intervals within groups")
     return n_bad == 0

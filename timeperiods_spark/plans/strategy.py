@@ -31,17 +31,17 @@ no custom Catalyst rules — into one of four shapes:
 
 ``auto``
     Data-aware pick. Ungrouped → bin. Grouped → estimate the equi
-    join's candidate volume ``|x| x |y| / groups`` (one bounded stats
-    action: count + approx_count_distinct on x, count on y) and switch
-    to bin above ``AUTO_BIN_PAIRS``. Rationale: group_equi's SMJ
-    applies the range predicate AFTER the per-group cross, so its cost
-    is the candidate volume, not the match volume — few groups x long
-    panels degenerates quadratically (measured: the sf1.0 bench's
-    20-group x 750k-interval panel ran 97x the sf0.1 wall under
-    unconditional group_equi; the bin join is linear in actual
-    overlaps). Callers that know their sizes pass
-    ``auto_stats=(nx, ny, n_groups_distinct)`` to skip the stats
-    action, or pick a strategy explicitly.
+    join's candidate volume ``|x| x |y| / groups`` and switch to bin
+    above ``AUTO_BIN_PAIRS``. Rationale: group_equi's SMJ applies the
+    range predicate AFTER the per-group cross, so its cost is the
+    candidate volume, not the match volume — few groups x long panels
+    degenerates quadratically (measured: the sf1.0 bench's 20-group x
+    750k-interval panel ran 97x the sf0.1 wall under unconditional
+    group_equi; the bin join is linear in actual overlaps). The
+    operators pass the numbers from their one stats pass
+    (:func:`request_stats`), so ``auto`` runs no stats action of its
+    own unless called without them, or with a tuple hint that lands
+    in the recheck band below the cliff.
 
 All null handling is null-safe (``eqNullSafe``): NULL group values are
 legal join keys, matching data.table's NA-matching keyed joins
@@ -55,9 +55,11 @@ unambiguous even when y was derived from x (self-join lineage).
 
 from __future__ import annotations
 
-from typing import Optional
+from dataclasses import dataclass
+from functools import reduce
+from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Row, functions as F
 
 #: auto switches group_equi -> bin when the estimated per-group cross
 #: volume |x| * |y| / groups exceeds this. Calibrated on this host:
@@ -84,28 +86,98 @@ def _group_cond(n_groups: int) -> Optional[Column]:
     return cond
 
 
-def estimate_bin_width(xw: DataFrame, yw: DataFrame, sample_rows: int = 10_000) -> int:
-    """Pick a bin width ≈ p90 interval length from a random sample.
+def _volume(auto_stats: tuple) -> int:
+    """group_equi's candidate volume |x| * |y| / groups."""
+    nx, ny, g = auto_stats
+    return int(nx or 0) * int(ny or 0) // max(1, int(g or 0))
 
-    Uses sample()+limit on a 1-column projection: the limit still
-    short-circuits the scan, and the Bernoulli sample decorrelates the
-    estimate from input order (a head sample is biased whenever data is
-    sorted by interval length). Any width is correct; width only tunes
-    fan-out (intervals much longer than W explode to many bins; much
-    shorter means many unrelated pairs share a bin). p90 of both sides'
-    lengths balances the two.
+
+#: the stats of a side with no rows
+_NO_ROWS = Row(n=0, nd=0, nulls=0, rev=0, groups=0, lo=None, hi=None, p90=None)
+
+
+@dataclass(frozen=True)
+class RequestStats:
+    """Per side (``x``/``y``): ``n`` rows, ``nd`` distinct (group, start,
+    end) rows or None, ``nulls``/``rev`` rows with a NULL endpoint / end
+    < start, approx ``groups`` (x only), ``lo``/``hi`` over starts AND
+    ends, approx ``p90`` length; ``p90`` pools both sides."""
+
+    x: Row
+    y: Row
+    p90: Optional[int]
+
+    @property
+    def auto_stats(self) -> tuple:
+        return (self.x.n, self.y.n, self.x.groups)
+
+    @property
+    def bin_width(self) -> int:
+        # any width is correct; it only tunes the bin join's fan-out
+        return max(1, int(self.p90 or 1))
+
+
+def request_stats(
+    xw: DataFrame,
+    yw: Optional[DataFrame] = None,
+    n_groups: int = 0,
+    *,
+    distinct: bool = True,
+) -> RequestStats:
+    """:class:`RequestStats` of the x (``__g*, __xs, __xe``) and y
+    (``__yg*, __ys, __ye``) frames in ONE Spark action.
+
+    Each side's group keys travel in their own (never NULL) struct, so
+    x and y keys need no common type and NULL group values stay keys.
+    ``distinct`` counts ``nd`` as the rows of a (side, keys, start, end)
+    pre-aggregate, which shuffles both frames; without it (planning
+    only) the partial aggregate shuffles just its buffers. Do not put
+    ``count_distinct`` and ``percentile_approx`` in one aggregate
+    instead: Spark's distinct rewrite then builds one percentile digest
+    per distinct key (750 groups, 40k x rows, 4 local cores: over 200 s
+    against 0.8 s for this pass).
     """
-    lens: list[int] = []
-    for df, s, e in ((xw, "__xs", "__xe"), (yw, "__ys", "__ye")):
-        proj = df.select((F.col(e) - F.col(s) + F.lit(1)).alias("len"))
-        rows = proj.sample(0.01, seed=42).limit(sample_rows).collect()
-        if not rows:  # tiny input: the 1% sample may miss everything
-            rows = proj.limit(sample_rows).collect()
-        lens.extend(r["len"] for r in rows if r["len"] is not None)
-    if not lens:
-        return 1
-    lens.sort()
-    return max(1, int(lens[min(len(lens) - 1, int(len(lens) * 0.9))]))
+    parts = [
+        df.select(
+            F.lit(side).alias("side"),
+            (F.struct(*[F.col(f"{p}{i}") for i in range(n_groups)]) if n_groups
+             else F.lit(0)).alias(f"__k{side}"),
+            F.col(s).alias("s"),
+            F.col(e).alias("e"),
+        )
+        for side, df, p, s, e in (
+            ("x", xw, "__g", "__xs", "__xe"), ("y", yw, "__yg", "__ys", "__ye")
+        )
+        if df is not None
+    ]
+    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    if distinct:
+        union = union.groupBy(*union.columns).count()
+        n, nd = F.sum("count"), F.count(F.lit(1))
+    else:
+        n, nd = F.count(F.lit(1)), F.lit(None).cast("long")
+    s, e = F.col("s"), F.col("e")
+    rows = (
+        # rollup adds the both-sides row (side NULL) the bin width uses
+        union.rollup("side")
+        .agg(
+            n.alias("n"),
+            nd.alias("nd"),
+            F.count_if(s.isNull() | e.isNull()).alias("nulls"),
+            F.count_if(e < s).alias("rev"),
+            F.approx_count_distinct("__kx").alias("groups"),
+            # least/greatest skip a NULL endpoint
+            F.min(F.least(s, e)).alias("lo"),
+            F.max(F.greatest(s, e)).alias("hi"),
+            F.percentile_approx(e - s + F.lit(1), 0.9).alias("p90"),
+        )
+        .collect()
+    )
+    by_side = {r["side"]: r for r in rows}
+    both = by_side.get(None)
+    return RequestStats(
+        by_side.get("x", _NO_ROWS), by_side.get("y", _NO_ROWS), both and both["p90"]
+    )
 
 
 def build_overlap_pairs(
@@ -115,7 +187,7 @@ def build_overlap_pairs(
     strategy: str = "auto",
     bin_width: Optional[int] = None,
     skew_salt: Optional[int] = None,
-    auto_stats: Optional[tuple] = None,
+    auto_stats: Union[tuple, RequestStats, None] = None,
     how: str = "inner",
 ) -> DataFrame:
     """Join x intervals to y periods on closed-interval overlap.
@@ -141,7 +213,9 @@ def build_overlap_pairs(
 
     ``auto_stats=(nx, ny, n_groups_distinct)`` feeds the auto picker
     without its stats action (hot paths that know their sizes; the
-    numbers only steer the strategy choice, never correctness).
+    numbers only steer the strategy choice, never correctness). A
+    :class:`RequestStats` is trusted as fresh (no recheck) and also
+    gives the bin width; without either, both share one action.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
@@ -161,35 +235,21 @@ def build_overlap_pairs(
         if not c.startswith("__yg") and c not in ("__ys", "__ye")
     ]
 
-    if strategy == "auto":
-        if not n_groups:
-            strategy = "bin"
-        else:
-            if auto_stats is not None:
-                nx, ny, g = auto_stats
-                est = (
-                    int(nx or 0) * int(ny or 0) // max(1, int(g or 0))
-                )
-                if AUTO_BIN_PAIRS // AUTO_STATS_RECHECK_BAND < est <= AUTO_BIN_PAIRS:
-                    # hint says group_equi but sits inside the cliff's
-                    # padding band — pay the one stats action to confirm
-                    # against the data as it is NOW
-                    auto_stats = None
-            if auto_stats is None:
-                row = xw.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.approx_count_distinct(
-                        F.struct(*[f"__g{i}" for i in range(n_groups)])
-                    ).alias("g"),
-                ).first()
-                nx, g = row["n"], row["g"]
-                ny = yw.count()
-            g = max(1, int(g or 0))
-            strategy = (
-                "bin"
-                if int(nx or 0) * int(ny or 0) // g > AUTO_BIN_PAIRS
-                else "group_equi"
-            )
+    stats = auto_stats if isinstance(auto_stats, RequestStats) else None
+    if strategy == "auto" and n_groups:
+        hint = stats.auto_stats if stats else auto_stats
+        est = None if hint is None else _volume(hint)
+        if est is None or (
+            stats is None and AUTO_BIN_PAIRS // AUTO_STATS_RECHECK_BAND < est <= AUTO_BIN_PAIRS
+        ):
+            # no hint, or a hint that says group_equi but sits inside
+            # the cliff's padding band: pay the one stats action to
+            # decide against the data as it is NOW
+            stats = request_stats(xw, yw, n_groups, distinct=False)
+            est = _volume(stats.auto_stats)
+        strategy = "bin" if est > AUTO_BIN_PAIRS else "group_equi"
+    elif strategy == "auto":
+        strategy = "bin"
 
     if strategy in ("group_equi", "broadcast_y", "broadcast_x"):
         gc = _group_cond(n_groups)
@@ -213,7 +273,7 @@ def build_overlap_pairs(
         return pairs.select(*out_g, *x_payload, "__ys", "__ye", *y_payload)
 
     if strategy == "bin":
-        w = bin_width or estimate_bin_width(xw, yw)
+        w = bin_width or (stats or request_stats(xw, yw, n_groups, distinct=False)).bin_width
         wl = F.lit(int(w))
         xbin = xw.withColumn(
             "__bin",

@@ -1,9 +1,10 @@
 """SparkSession construction tuned for this engine.
 
-Local-mode defaults match the sandbox (local[$SPARK_GRAFT_CPUS]); on a
-real cluster the same builder options apply, with
-spark.sql.shuffle.partitions sized to ~2-3x total cores and AQE left on
-to coalesce and to split skewed partitions at runtime.
+Local-mode defaults fit the host (local[usable cpus], a heap of half
+its memory; arguments and the SPARK_GRAFT_* variables override); on a
+real cluster the same options apply, with shuffle partitions sized to
+~2-3x total cores and AQE left on to coalesce and to split skewed
+partitions at runtime.
 """
 
 from __future__ import annotations
@@ -11,6 +12,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _host_cpus() -> int:
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _half_host_memory() -> str:
+    """Half the host's physical memory (MemTotal), in MiB."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, total // 2**21)}m"
 
 
 def get_spark(
@@ -39,7 +52,8 @@ def get_spark(
             pkg_root + (os.pathsep + existing if existing else "")
         )
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
+    driver_memory = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -61,7 +75,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory or _half_host_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in extra_conf.items():

@@ -1488,65 +1488,518 @@ SQL_TIER_COVARIANCE = SQL_TIER_COVARIANCE.format(
 )
 
 
-N_MEDIA = 200
+# --------------------------------------------------------------------
+# event-series queries (events table, daily means)
+# --------------------------------------------------------------------
 
 
-def q_multimodal_features(spark, sf_dir):
-    """Numeric check of the multimodal plumbing: stub-codec features
-    (byte-histogram embedding, L2-normalized float32) over the
-    deterministic synthetic payloads (sha256 of the decimal media id,
-    repeated 8 + id % 8 times). The oracle recomputes the same digest
-    bytes, histogram, norm and float32 rounding in SQL."""
-    from timeperiods_spark.operators.multimodal import (
-        extract_features,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, N_MEDIA, kind="image")
-    feats = extract_features(media, dim=16)
-    checksum = F.aggregate(
-        F.zip_with(
-            F.col("feature").cast("array<double>"),
-            F.sequence(F.lit(1), F.lit(16)).cast("array<double>"),
-            lambda x, d: x * d,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return feats.select(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.col("n_bytes").cast("int").alias("n_bytes"),
-        F.round(checksum, _R).alias("feature_checksum"),
-        F.round(F.element_at(F.col("feature").cast("array<double>"), 1), _R).alias("f0"),
+def _daily_means(spark, sf_dir):
+    """Shared scaffold for the recurrence queries: one row per
+    (event_type, day) with the 6dp-rounded daily mean — rounded BEFORE
+    the recurrence so both engines feed bit-identical inputs."""
+    ev = _read(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
+        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
+        .agg(F.round(F.avg("value"), _R).alias("v"))
     )
 
 
-SQL_MULTIMODAL = f"""
-WITH ids AS (SELECT range AS i FROM range({N_MEDIA})),
-dig AS (SELECT i, sha256(CAST(i AS VARCHAR)) AS h, 8 + i % 8 AS reps FROM ids),
-bytes AS (
-  SELECT i, reps, list_transform(range(32), j ->
-    (strpos('0123456789abcdef', substr(h, CAST(2*j+1 AS INT), 1)) - 1) * 16 +
-    (strpos('0123456789abcdef', substr(h, CAST(2*j+2 AS INT), 1)) - 1)) AS bl
-  FROM dig
-),
-hist AS (
-  SELECT i, reps, list_transform(range(16), d ->
-    CAST(reps * len(list_filter(bl, b -> b % 16 = d)) AS DOUBLE)) AS hl
-  FROM bytes
-),
-feat AS (
-  SELECT i, reps,
-         list_transform(hl, x ->
-           CAST(x / sqrt(list_sum(list_transform(hl, y -> y * y))) AS REAL)) AS f
-  FROM hist
+_SQL_DAILY_MEANS = """
+  SELECT event_type, CAST(ts AS DATE) AS day, ROUND(AVG(value), 6) AS v
+  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+  GROUP BY 1, 2
+"""
+
+
+def q_ewma_daily(spark, sf_dir):
+    """EWMA (pandas adjust=False recurrence, init=first) over daily
+    event means. Spark computes the two-level scan (per-bucket Arrow
+    `ewm` + exact HOF composition across buckets); the oracle computes
+    the same statistic via the O(n^2) closed-form weighted sum — tiny
+    at oracle scale, and the float gap between the two assemblies is
+    O(eps/alpha), far below the shared 6dp output grid."""
+    from timeperiods_spark import ewma
+
+    return ewma(
+        _daily_means(spark, sf_dir), "day", "v", ["event_type"], alpha=0.3
+    )
+
+
+SQL_EWMA_DAILY = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+idx AS (
+  SELECT event_type, day, v,
+         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) - 1 AS i
+  FROM daily
 )
-SELECT CAST(i AS BIGINT) AS media_id,
-       CAST(32 * reps AS INT) AS n_bytes,
-       ROUND(list_sum(list_transform(range(16), d ->
-             CAST(f[CAST(d + 1 AS INT)] AS DOUBLE) * (d + 1))), 6) AS feature_checksum,
-       ROUND(CAST(f[1] AS DOUBLE), 6) AS f0
-FROM feat
+SELECT a.event_type, a.day, a.v,
+       ROUND(SUM(CASE WHEN b.i = 0 THEN POWER(0.7, a.i - b.i) * b.v
+                 ELSE 0.3 * POWER(0.7, a.i - b.i) * b.v END), 6) AS ewma
+FROM idx a JOIN idx b
+  ON a.event_type IS NOT DISTINCT FROM b.event_type AND b.i <= a.i
+GROUP BY a.event_type, a.day, a.v
+"""
+
+
+def q_holt_daily(spark, sf_dir):
+    """Holt linear-trend smoothing (alpha=.3, beta=.2, h=7 forecast)
+    over daily event means. Spark runs the generalized 2-dim linear
+    recurrence scan (matrix-kernel convolution per bucket + exact
+    matrix composition); the oracle is the recurrence ITSELF via a
+    recursive CTE — sequential per group, fine at oracle scale."""
+    from timeperiods_spark import holt
+
+    return holt(
+        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
+        alpha=0.3, beta=0.2, forecast=7,
+    )
+
+
+SQL_HOLT_DAILY = f"""
+WITH RECURSIVE daily AS ({_SQL_DAILY_MEANS}),
+idx AS (
+  SELECT event_type, day, v,
+         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
+  FROM daily
+),
+rec AS (
+  SELECT event_type, day, v, i, v AS l, CAST(0.0 AS DOUBLE) AS b
+  FROM idx WHERE i = 1
+  UNION ALL
+  SELECT idx.event_type, idx.day, idx.v, idx.i,
+         0.3 * idx.v + 0.7 * (rec.l + rec.b) AS l,
+         0.2 * (0.3 * idx.v + 0.7 * (rec.l + rec.b) - rec.l) + 0.8 * rec.b AS b
+  FROM idx JOIN rec
+    ON idx.event_type IS NOT DISTINCT FROM rec.event_type
+   AND idx.i = rec.i + 1
+)
+SELECT event_type, day, v,
+       ROUND(l, 6) AS holt_level,
+       ROUND(b, 6) AS holt_trend,
+       ROUND(l + 7 * b, 6) AS holt_forecast
+FROM rec
+"""
+
+
+def q_cusum_daily(spark, sf_dir):
+    """Two-sided tabular CUSUM over daily event means (target 50,
+    slack 1, alarm threshold 25) — exact closed prefix form
+    (P_i - min(0, running min P)) via two chained bucketed-carry
+    scans; the oracle is the identical arithmetic as window sums."""
+    from timeperiods_spark import cusum
+
+    return cusum(
+        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
+        target=50.0, slack=1.0, threshold=25.0,
+    )
+
+
+SQL_CUSUM_DAILY = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+p AS (
+  SELECT event_type, day, v,
+         SUM(v - 50.0 - 1.0) OVER w AS P,
+         SUM(-(v - 50.0) - 1.0) OVER w AS Pn
+  FROM daily
+  WINDOW w AS (PARTITION BY event_type ORDER BY day
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+)
+SELECT event_type, day, v,
+       ROUND(P - LEAST(0, MIN(P) OVER w2), 6) AS cusum_pos,
+       ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) AS cusum_neg,
+       (ROUND(P - LEAST(0, MIN(P) OVER w2), 6) > 25.0
+        OR ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) > 25.0) AS alarm
+FROM p
+WINDOW w2 AS (PARTITION BY event_type ORDER BY day
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+"""
+
+
+def _events_days(spark, sf_dir):
+    ev = _read(spark, sf_dir, "events")
+    return (
+        ev.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+        .select(
+            "event_type",
+            F.unix_date(F.col("ts").cast("date")).cast("long").alias("day"),
+            "user_id",
+        )
+    )
+
+
+_SQL_EVENTS_DAYS = """
+  SELECT event_type,
+         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+         user_id
+  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
+"""
+
+
+def q_distinct_daily(spark, sf_dir):
+    """Daily distinct users per event type through the HLL tier path.
+    The sketch itself has no cross-engine twin, so the query is
+    self-auditing: it emits the EXACT count (oracle-comparable) plus
+    ``est_ok`` = |HLL estimate − exact| / exact <= 5% computed in-band
+    (the oracle emits literal TRUE — a drifting sketch flips the flag
+    and fails the hash compare)."""
+    from timeperiods_spark import distinct_rollup, finalize_distinct
+
+    ev = _events_days(spark, sf_dir)
+    daily = distinct_rollup(ev, "day", "user_id", ["event_type"],
+                            width=1, exact=True)
+    fin = finalize_distinct(daily, "user_id", ["event_type"], width=1)
+    return fin.select(
+        "event_type",
+        F.col("period").alias("day"),
+        F.col("n_distinct").cast("long").alias("n_users"),
+        (
+            F.abs(F.col("n_distinct_est") - F.col("n_distinct"))
+            <= 0.05 * F.col("n_distinct")
+        ).alias("est_ok"),
+    )
+
+
+SQL_DISTINCT_DAILY = f"""
+WITH ev AS ({_SQL_EVENTS_DAYS})
+SELECT event_type, day,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+       TRUE AS est_ok
+FROM ev GROUP BY event_type, day
+"""
+
+
+def q_distinct_weekly(spark, sf_dir):
+    """Weekly distinct users derived by CASCADING the daily HLL
+    partials (hll_union_agg — no raw rescan), audited in-band against
+    the exact weekly distinct count."""
+    from timeperiods_spark import (
+        distinct_cascade,
+        distinct_rollup,
+        finalize_distinct,
+    )
+
+    ev = _events_days(spark, sf_dir)
+    daily = distinct_rollup(ev, "day", "user_id", ["event_type"], width=1)
+    weekly = finalize_distinct(
+        distinct_cascade(daily, "user_id", ["event_type"],
+                         fine_width=1, coarse_width=7),
+        "user_id", ["event_type"], width=7,
+    )
+    exact = (
+        ev.withColumn("period", F.floor(F.col("day") / 7).cast("long"))
+        .groupBy("event_type", "period")
+        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
+    )
+    j = weekly.join(exact, ["event_type", "period"], "inner")
+    return j.select(
+        "event_type",
+        F.col("period").alias("week"),
+        "n_users",
+        (
+            F.abs(F.col("n_distinct_est") - F.col("n_users"))
+            <= 0.05 * F.col("n_users")
+        ).alias("est_ok"),
+    )
+
+
+SQL_DISTINCT_WEEKLY = f"""
+WITH ev AS ({_SQL_EVENTS_DAYS})
+SELECT event_type,
+       CAST(FLOOR(day / 7) AS BIGINT) AS week,
+       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+       TRUE AS est_ok
+FROM ev GROUP BY event_type, FLOOR(day / 7)
+"""
+
+
+def q_zscore_anomaly(spark, sf_dir):
+    """Trailing z-score anomaly flags over daily event means: baseline
+    = the 7 strictly-preceding days (fan-out + hash agg in Spark; a
+    RANGE window in the oracle — same arithmetic)."""
+    from timeperiods_spark import zscore_anomaly
+
+    return zscore_anomaly(
+        _daily_means(spark, sf_dir), "day", "v", ["event_type"], k=7, z=2.0
+    )
+
+
+_ZN = "SUM(v) OVER win"
+_ZSS = "SUM(v*v) OVER win"
+_ZC = "COUNT(v) OVER win"
+_ZMEAN = f"({_ZN}) / ({_ZC})"
+_ZSTD = f"sqrt(greatest(({_ZSS}) / ({_ZC}) - ({_ZMEAN}) * ({_ZMEAN}), 0.0))"
+_ZSCORE = (
+    f"CASE WHEN ({_ZC}) >= 3 AND ROUND({_ZSTD}, 6) > 0.0 "
+    f"THEN ROUND((v - ({_ZMEAN})) / ({_ZSTD}), 6) END"
+)
+
+SQL_ZSCORE_ANOMALY = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+d2 AS (
+  SELECT event_type, day, v,
+         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
+  FROM daily
+)
+SELECT event_type, day, v,
+       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZMEAN}, 6) END AS base_mean,
+       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZSTD}, 6) END AS base_std,
+       {_ZSCORE} AS zscore,
+       COALESCE(ABS({_ZSCORE}) > 2.0, FALSE) AS is_anomaly
+FROM d2
+WINDOW win AS (PARTITION BY event_type ORDER BY dl
+               RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)
+"""
+
+
+def q_seasonal_adjust(spark, sf_dir):
+    """Additive day-of-week adjustment of daily event means: subtract
+    the (type, weekday) mean, re-center on the type mean."""
+    from timeperiods_spark import seasonal_adjust
+
+    return seasonal_adjust(
+        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
+        season_length=7,
+    )
+
+
+SQL_SEASONAL_ADJUST = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+d2 AS (
+  SELECT event_type, day, v,
+         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
+  FROM daily
+)
+SELECT event_type, day, v,
+       CAST(((dl % 7) + 7) % 7 AS BIGINT) AS season,
+       ROUND(AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7), 6)
+         AS seasonal_mean,
+       ROUND(v - AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7)
+             + AVG(v) OVER (PARTITION BY event_type), 6) AS v_adj
+FROM d2
+"""
+
+
+def q_overlap_join(spark, sf_dir):
+    """Public foverlaps surface: 3-day measurement intervals joined to
+    even-week target periods per event type, left-outer (unmatched
+    measurements keep NULL y columns — data.table nomatch=NA)."""
+    from timeperiods_spark import overlap_join
+
+    d = _daily_means(spark, sf_dir).select(
+        "event_type", F.unix_date("day").cast("long").alias("dl"), "v"
+    )
+    x = d.select("event_type", F.col("dl").alias("s"),
+                 (F.col("dl") + 2).alias("e"), "v")
+    y = d.select(
+        "event_type",
+        (F.floor(F.col("dl") / 7) * 7).cast("long").alias("s"),
+        (F.floor(F.col("dl") / 7) * 7 + 6).cast("long").alias("e"),
+    ).filter(F.pmod(F.floor(F.col("s") / 7), F.lit(2)) == 0).distinct()
+    out = overlap_join(x, y, ("s", "e"), ["event_type"], how="left")
+    return out.select(
+        "event_type", "s_x", "e_x", "s_y", "e_y", "v",
+        "overlap_start", "overlap_end", "overlap_duration",
+    )
+
+
+SQL_OVERLAP_JOIN = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+d2 AS (
+  SELECT event_type,
+         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl, v
+  FROM daily
+),
+x AS (SELECT event_type, dl AS s, dl + 2 AS e, v FROM d2),
+y AS (
+  SELECT DISTINCT event_type,
+         CAST(FLOOR(dl / 7) * 7 AS BIGINT) AS ys,
+         CAST(FLOOR(dl / 7) * 7 + 6 AS BIGINT) AS ye
+  FROM d2
+  WHERE CAST(FLOOR(dl / 7) AS BIGINT) % 2 = 0
+)
+SELECT x.event_type,
+       x.s AS s_x, x.e AS e_x, y.ys AS s_y, y.ye AS e_y, x.v,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE GREATEST(x.s, y.ys) END AS overlap_start,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE LEAST(x.e, y.ye) END AS overlap_end,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE CAST(LEAST(x.e, y.ye) - GREATEST(x.s, y.ys) + 1 AS BIGINT)
+       END AS overlap_duration
+FROM x LEFT JOIN y
+  ON x.event_type IS NOT DISTINCT FROM y.event_type
+ AND x.s <= y.ye AND x.e >= y.ys
+"""
+
+
+def q_overlap_join_bin_left(spark, sf_dir):
+    """Left-how twin on the BUCKETIZED strategy: the bin join preserves
+    x inside the join (first-bin NULL candidate + one max(matched)
+    window over the x identity) instead of the old dropDuplicates +
+    left_anti rescan — pinned in tests/test_plans.py as <= inner
+    exchanges + 1 and anti-join-free. Odd weeks only, so a third of the
+    measurements come back unmatched with NULL y columns."""
+    from timeperiods_spark import overlap_join
+
+    d = _daily_means(spark, sf_dir).select(
+        "event_type", F.unix_date("day").cast("long").alias("dl"), "v"
+    )
+    x = d.select("event_type", F.col("dl").alias("s"),
+                 (F.col("dl") + 2).alias("e"), "v")
+    y = d.select(
+        "event_type",
+        (F.floor(F.col("dl") / 7) * 7).cast("long").alias("s"),
+        (F.floor(F.col("dl") / 7) * 7 + 6).cast("long").alias("e"),
+    ).filter(F.pmod(F.floor(F.col("s") / 7), F.lit(2)) == 1).distinct()
+    out = overlap_join(
+        x, y, ("s", "e"), ["event_type"], how="left",
+        join_strategy="bin", bin_width=7,
+    )
+    return out.select(
+        "event_type", "s_x", "e_x", "s_y", "e_y", "v",
+        "overlap_start", "overlap_end", "overlap_duration",
+    )
+
+
+SQL_OVERLAP_JOIN_BIN_LEFT = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+d2 AS (
+  SELECT event_type,
+         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl, v
+  FROM daily
+),
+x AS (SELECT event_type, dl AS s, dl + 2 AS e, v FROM d2),
+y AS (
+  SELECT DISTINCT event_type,
+         CAST(FLOOR(dl / 7) * 7 AS BIGINT) AS ys,
+         CAST(FLOOR(dl / 7) * 7 + 6 AS BIGINT) AS ye
+  FROM d2
+  WHERE CAST(FLOOR(dl / 7) AS BIGINT) % 2 = 1
+)
+SELECT x.event_type,
+       x.s AS s_x, x.e AS e_x, y.ys AS s_y, y.ye AS e_y, x.v,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE GREATEST(x.s, y.ys) END AS overlap_start,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE LEAST(x.e, y.ye) END AS overlap_end,
+       CASE WHEN y.ys IS NULL THEN NULL
+            ELSE CAST(LEAST(x.e, y.ye) - GREATEST(x.s, y.ys) + 1 AS BIGINT)
+       END AS overlap_duration
+FROM x LEFT JOIN y
+  ON x.event_type IS NOT DISTINCT FROM y.event_type
+ AND x.s <= y.ye AND x.e >= y.ys
+"""
+
+
+def q_ohlc_weekly(spark, sf_dir):
+    """OHLC bars per (event_type, 7-day bucket of epoch seconds): one
+    hash aggregate, struct orderings encode the deterministic open
+    (earliest second, value tie -> min) / close (latest second, tie ->
+    max) picks — the oracle mirrors both rules with two row_number
+    windows. Values round to 6dp BEFORE aggregation so both engines
+    feed identical inputs; the order-sensitive sum reports at 4dp."""
+    from timeperiods_spark import rollup_ohlc
+
+    ev = _read(spark, sf_dir, "events").filter(
+        F.col("ts").isNotNull() & F.col("value").isNotNull()
+    )
+    base = ev.select(
+        "event_type",
+        F.unix_timestamp("ts").cast("long").alias("sec"),
+        F.round(F.col("value"), _R).alias("v"),
+    )
+    out = rollup_ohlc(base, "sec", "v", ["event_type"], bucket_width=604800)
+    return out.select(
+        "event_type",
+        "bucket",
+        F.round("open", _R).alias("open"),
+        F.round("high", _R).alias("high"),
+        F.round("low", _R).alias("low"),
+        F.round("close", _R).alias("close"),
+        "n_obs",
+        F.round("sum_value", 4).alias("sum_value"),
+    )
+
+
+SQL_OHLC_WEEKLY = """
+WITH base AS (
+  SELECT event_type,
+         CAST(epoch(ts) AS BIGINT) AS sec,
+         ROUND(value, 6) AS v
+  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
+),
+b AS (
+  SELECT event_type, CAST(FLOOR(sec / 604800.0) AS BIGINT) AS bucket, sec, v
+  FROM base
+),
+r AS (
+  SELECT event_type, bucket, v,
+         ROW_NUMBER() OVER (PARTITION BY event_type, bucket
+                            ORDER BY sec ASC, v ASC) AS rn_open,
+         ROW_NUMBER() OVER (PARTITION BY event_type, bucket
+                            ORDER BY sec DESC, v DESC) AS rn_close
+  FROM b
+)
+SELECT event_type, bucket,
+       ROUND(MAX(CASE WHEN rn_open = 1 THEN v END), 6) AS open,
+       ROUND(MAX(v), 6) AS high,
+       ROUND(MIN(v), 6) AS low,
+       ROUND(MAX(CASE WHEN rn_close = 1 THEN v END), 6) AS close,
+       COUNT(*) AS n_obs,
+       ROUND(SUM(v), 4) AS sum_value
+FROM r GROUP BY 1, 2
+"""
+
+
+def q_xcorr_daily(spark, sf_dir):
+    """Lagged cross-correlation between event-type daily-mean series
+    (lead/lag discovery; the (error, error) pair is the ACF). The
+    lagged pairing is an EQUI join — (series, period + lag) keys — so
+    the plan is one shuffle join + one tiny hash aggregate; the twin
+    spells the identical join. Inputs round to 6dp first; Pearson on
+    ~30 shared points compares clean at 6dp."""
+    from timeperiods_spark import cross_correlation
+
+    base = _daily_means(spark, sf_dir).select(
+        "event_type", F.unix_date("day").alias("p"), "v"
+    )
+    out = cross_correlation(
+        base,
+        "p",
+        "v",
+        "event_type",
+        pairs=[("click", "purchase"), ("view", "click"), ("error", "error")],
+        lags=[-3, -1, 0, 1, 3],
+    )
+    return out.select(
+        "series_a",
+        "series_b",
+        F.col("lag").cast("int").alias("lag"),
+        "n_overlap",
+        F.round("xcorr", _R).alias("xcorr"),
+    )
+
+
+SQL_XCORR_DAILY = f"""
+WITH daily AS ({_SQL_DAILY_MEANS}),
+g AS (
+  SELECT event_type, date_diff('day', DATE '1970-01-01', day) AS p, v
+  FROM daily
+),
+pairs(series_a, series_b) AS (
+  VALUES ('click', 'purchase'), ('view', 'click'), ('error', 'error')
+),
+lags(lag) AS (VALUES (-3), (-1), (0), (1), (3))
+SELECT pr.series_a, pr.series_b, CAST(l.lag AS INTEGER) AS lag,
+       COUNT(*) AS n_overlap,
+       ROUND(CORR(a.v, b.v), 6) AS xcorr
+FROM pairs pr
+CROSS JOIN lags l
+JOIN g a ON a.event_type = pr.series_a
+JOIN g b ON b.event_type = pr.series_b AND b.p = a.p + l.lag
+GROUP BY 1, 2, 3
+HAVING COUNT(*) >= 2
 """
 
 
@@ -1588,7 +2041,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "merge_intervals_events": q_merge_intervals,
         "interval_difference_events": q_interval_difference,
         "iwa_sorted_validated": q_iwa_sorted_validated,
-        "multimodal_features": q_multimodal_features,
+        "ewma_daily_events": q_ewma_daily,
+        "cusum_daily_events": q_cusum_daily,
+        "holt_daily_events": q_holt_daily,
+        "distinct_users_daily": q_distinct_daily,
+        "distinct_users_weekly_cascade": q_distinct_weekly,
+        "zscore_anomaly_daily": q_zscore_anomaly,
+        "seasonal_adjust_daily": q_seasonal_adjust,
+        "overlap_join_weeks": q_overlap_join,
+        "overlap_join_bin_left": q_overlap_join_bin_left,
+        "asof_events_tolerance": q_asof_tolerance,
+        "rollup_ohlc_weekly": q_ohlc_weekly,
+        "xcorr_daily_events": q_xcorr_daily,
         **_PIPELINE_QUERIES,
     }
 
@@ -1621,7 +2085,18 @@ def oracle_sql() -> dict[str, str]:
         "merge_intervals_events": SQL_MERGE_INTERVALS,
         "interval_difference_events": SQL_INTERVAL_DIFFERENCE,
         "iwa_sorted_validated": SQL_IWA_SORTED,
-        "multimodal_features": SQL_MULTIMODAL,
+        "ewma_daily_events": SQL_EWMA_DAILY,
+        "cusum_daily_events": SQL_CUSUM_DAILY,
+        "holt_daily_events": SQL_HOLT_DAILY,
+        "distinct_users_daily": SQL_DISTINCT_DAILY,
+        "distinct_users_weekly_cascade": SQL_DISTINCT_WEEKLY,
+        "zscore_anomaly_daily": SQL_ZSCORE_ANOMALY,
+        "seasonal_adjust_daily": SQL_SEASONAL_ADJUST,
+        "overlap_join_weeks": SQL_OVERLAP_JOIN,
+        "overlap_join_bin_left": SQL_OVERLAP_JOIN_BIN_LEFT,
+        "asof_events_tolerance": SQL_ASOF_TOLERANCE,
+        "rollup_ohlc_weekly": SQL_OHLC_WEEKLY,
+        "xcorr_daily_events": SQL_XCORR_DAILY,
         **_PIPELINE_ORACLES,
     }
 
@@ -1631,7 +2106,6 @@ def oracle_sql() -> dict[str, str]:
 # --------------------------------------------------------------------
 
 from timeperiods_spark.functions import texthash as _TH  # noqa: E402
-from timeperiods_spark.operators import textops as _TX  # noqa: E402
 from timeperiods_spark.operators.dedup import (  # noqa: E402
     connected_components,
     exact_dedup,
@@ -2145,491 +2619,6 @@ WHERE bid NOT IN (SELECT id_b FROM pr)
 """
 
 
-def q_textops(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    t = F.col("text")
-    return docs.select(
-        "doc_id",
-        _TX.whitespace_token_count(t).cast("long").alias("ws_tokens"),
-        _TX.bpe_token_count(t).cast("long").alias("bpe_tokens"),
-        F.round(_TX.quality_score(t), _R).alias("quality"),
-        _TX.lang_id(t).alias("lang_pred"),
-        _TX.fingerprint(t).alias("fingerprint"),
-    )
-
-
-SQL_TEXTOPS = f"""
-SELECT doc_id,
-       CAST({_TX.whitespace_token_count_sql('text')} AS BIGINT) AS ws_tokens,
-       CAST({_TX.bpe_token_count_sql('text')} AS BIGINT) AS bpe_tokens,
-       ROUND({_TX.quality_score_sql('text')}, 6) AS quality,
-       {_TX.lang_id_sql('text')} AS lang_pred,
-       {_TX.fingerprint_sql('text')} AS fingerprint
-FROM documents
-"""
-
-def _docs_with_lines(spark, sf_dir):
-    """Line-broken documents scaffold: the synthetic corpus is
-    single-line, so both engines deterministically break lines before
-    the word 'table' and append a shared boilerplate footer — giving
-    every doc multiple lines and the corpus guaranteed cross-doc
-    duplicate lines."""
-    docs = _read(spark, sf_dir, "documents")
-    t = F.concat(
-        F.regexp_replace(F.col("text"), F.lit(" table"), F.lit("\ntable")),
-        F.lit("\nthe common footer boilerplate"),
-    )
-    return docs.select(F.col("doc_id").cast("long").alias("doc_id"), t.alias("text"))
-
-
-_SQL_DOCS_WITH_LINES = """
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         replace(text, ' table', chr(10) || 'table')
-         || chr(10) || 'the common footer boilerplate' AS text
-  FROM documents
-"""
-
-
-def q_filter_lines(spark, sf_dir):
-    """C4-style rule filtering over line-broken docs: keep lines with
-    >= 3 words that don't mention 'footer'. Pure map-side projection
-    (split -> HOF filter -> reassemble), zero shuffle."""
-    from timeperiods_spark import filter_lines
-
-    return filter_lines(
-        _docs_with_lines(spark, sf_dir), "text",
-        min_words=3, deny_substrings=["footer"],
-    ).select("doc_id", "text_filtered", "lines_kept", "lines_dropped")
-
-
-_DUCK_KEEP = (
-    "list_filter(ls, x -> len(string_split_regex(trim(x), '\\s+')) >= 3 "
-    "AND length(trim(x)) > 0 AND NOT contains(lower(x), 'footer'))"
-)
-
-SQL_FILTER_LINES = f"""
-WITH base AS ({_SQL_DOCS_WITH_LINES}),
-parts AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM base)
-SELECT doc_id,
-       array_to_string({_DUCK_KEEP}, chr(10)) AS text_filtered,
-       CAST(len({_DUCK_KEEP}) AS BIGINT) AS lines_kept,
-       CAST(len(ls) - len({_DUCK_KEEP}) AS BIGINT) AS lines_dropped
-FROM parts
-"""
-
-
-def q_dedup_lines(spark, sf_dir):
-    """Exact cross-corpus line dedup (keep-first) over line-broken
-    docs: every repeated line survives only at its smallest
-    (doc_id, line index). Two exchanges: the election hash-agg keyed
-    by line and the join-back; reassembly is bounded per doc."""
-    from timeperiods_spark import dedup_lines
-
-    return dedup_lines(_docs_with_lines(spark, sf_dir), "doc_id", "text")
-
-
-SQL_DEDUP_LINES = f"""
-WITH base AS ({_SQL_DOCS_WITH_LINES}),
-lines AS (
-  SELECT doc_id, ln, idx - 1 AS idx, trim(ln) AS key,
-         length(trim(ln)) >= 1 AS cand
-  FROM (
-    SELECT doc_id,
-           unnest(string_split(text, chr(10))) AS ln,
-           generate_subscripts(string_split(text, chr(10)), 1) AS idx
-    FROM base
-  )
-),
-first AS (
-  SELECT key, doc_id AS fid, idx AS fidx,
-         ROW_NUMBER() OVER (PARTITION BY key ORDER BY doc_id, idx) AS rn
-  FROM lines WHERE cand
-),
-keep AS (
-  SELECT l.doc_id, l.idx, l.ln
-  FROM lines l
-  LEFT JOIN (SELECT key, fid, fidx FROM first WHERE rn = 1) f
-    ON l.key = f.key
-  WHERE NOT l.cand OR (l.doc_id = f.fid AND l.idx = f.fidx)
-),
-agg AS (
-  SELECT doc_id, string_agg(ln, chr(10) ORDER BY idx) AS txt,
-         COUNT(*) AS n
-  FROM keep GROUP BY doc_id
-),
-totals AS (SELECT doc_id, COUNT(*) AS total FROM lines GROUP BY doc_id)
-SELECT t.doc_id,
-       COALESCE(a.txt, '') AS text_deduped,
-       CAST(COALESCE(a.n, 0) AS BIGINT) AS lines_kept,
-       CAST(t.total - COALESCE(a.n, 0) AS BIGINT) AS lines_dropped
-FROM totals t LEFT JOIN agg a ON t.doc_id = a.doc_id
-"""
-
-
-def _daily_means(spark, sf_dir):
-    """Shared scaffold for the recurrence queries: one row per
-    (event_type, day) with the 6dp-rounded daily mean — rounded BEFORE
-    the recurrence so both engines feed bit-identical inputs."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .groupBy("event_type", F.col("ts").cast("date").alias("day"))
-        .agg(F.round(F.avg("value"), _R).alias("v"))
-    )
-
-
-_SQL_DAILY_MEANS = """
-  SELECT event_type, CAST(ts AS DATE) AS day, ROUND(AVG(value), 6) AS v
-  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-  GROUP BY 1, 2
-"""
-
-
-def q_ewma_daily(spark, sf_dir):
-    """EWMA (pandas adjust=False recurrence, init=first) over daily
-    event means. Spark computes the two-level scan (per-bucket Arrow
-    `ewm` + exact HOF composition across buckets); the oracle computes
-    the same statistic via the O(n^2) closed-form weighted sum — tiny
-    at oracle scale, and the float gap between the two assemblies is
-    O(eps/alpha), far below the shared 6dp output grid."""
-    from timeperiods_spark import ewma
-
-    return ewma(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"], alpha=0.3
-    )
-
-
-SQL_EWMA_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-idx AS (
-  SELECT event_type, day, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) - 1 AS i
-  FROM daily
-)
-SELECT a.event_type, a.day, a.v,
-       ROUND(SUM(CASE WHEN b.i = 0 THEN POWER(0.7, a.i - b.i) * b.v
-                 ELSE 0.3 * POWER(0.7, a.i - b.i) * b.v END), 6) AS ewma
-FROM idx a JOIN idx b
-  ON a.event_type IS NOT DISTINCT FROM b.event_type AND b.i <= a.i
-GROUP BY a.event_type, a.day, a.v
-"""
-
-
-def q_holt_daily(spark, sf_dir):
-    """Holt linear-trend smoothing (alpha=.3, beta=.2, h=7 forecast)
-    over daily event means. Spark runs the generalized 2-dim linear
-    recurrence scan (matrix-kernel convolution per bucket + exact
-    matrix composition); the oracle is the recurrence ITSELF via a
-    recursive CTE — sequential per group, fine at oracle scale."""
-    from timeperiods_spark import holt
-
-    return holt(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        alpha=0.3, beta=0.2, forecast=7,
-    )
-
-
-SQL_HOLT_DAILY = f"""
-WITH RECURSIVE daily AS ({_SQL_DAILY_MEANS}),
-idx AS (
-  SELECT event_type, day, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-  FROM daily
-),
-rec AS (
-  SELECT event_type, day, v, i, v AS l, CAST(0.0 AS DOUBLE) AS b
-  FROM idx WHERE i = 1
-  UNION ALL
-  SELECT idx.event_type, idx.day, idx.v, idx.i,
-         0.3 * idx.v + 0.7 * (rec.l + rec.b) AS l,
-         0.2 * (0.3 * idx.v + 0.7 * (rec.l + rec.b) - rec.l) + 0.8 * rec.b AS b
-  FROM idx JOIN rec
-    ON idx.event_type IS NOT DISTINCT FROM rec.event_type
-   AND idx.i = rec.i + 1
-)
-SELECT event_type, day, v,
-       ROUND(l, 6) AS holt_level,
-       ROUND(b, 6) AS holt_trend,
-       ROUND(l + 7 * b, 6) AS holt_forecast
-FROM rec
-"""
-
-
-def q_cusum_daily(spark, sf_dir):
-    """Two-sided tabular CUSUM over daily event means (target 50,
-    slack 1, alarm threshold 25) — exact closed prefix form
-    (P_i - min(0, running min P)) via two chained bucketed-carry
-    scans; the oracle is the identical arithmetic as window sums."""
-    from timeperiods_spark import cusum
-
-    return cusum(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        target=50.0, slack=1.0, threshold=25.0,
-    )
-
-
-SQL_CUSUM_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-p AS (
-  SELECT event_type, day, v,
-         SUM(v - 50.0 - 1.0) OVER w AS P,
-         SUM(-(v - 50.0) - 1.0) OVER w AS Pn
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, day, v,
-       ROUND(P - LEAST(0, MIN(P) OVER w2), 6) AS cusum_pos,
-       ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) AS cusum_neg,
-       (ROUND(P - LEAST(0, MIN(P) OVER w2), 6) > 25.0
-        OR ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) > 25.0) AS alarm
-FROM p
-WINDOW w2 AS (PARTITION BY event_type ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
-
-
-def _events_days(spark, sf_dir):
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select(
-            "event_type",
-            F.unix_date(F.col("ts").cast("date")).cast("long").alias("day"),
-            "user_id",
-        )
-    )
-
-
-_SQL_EVENTS_DAYS = """
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-         user_id
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-"""
-
-
-def q_distinct_daily(spark, sf_dir):
-    """Daily distinct users per event type through the HLL tier path.
-    The sketch itself has no cross-engine twin, so the query is
-    self-auditing: it emits the EXACT count (oracle-comparable) plus
-    ``est_ok`` = |HLL estimate − exact| / exact <= 5% computed in-band
-    (the oracle emits literal TRUE — a drifting sketch flips the flag
-    and fails the hash compare)."""
-    from timeperiods_spark import distinct_rollup, finalize_distinct
-
-    ev = _events_days(spark, sf_dir)
-    daily = distinct_rollup(ev, "day", "user_id", ["event_type"],
-                            width=1, exact=True)
-    fin = finalize_distinct(daily, "user_id", ["event_type"], width=1)
-    return fin.select(
-        "event_type",
-        F.col("period").alias("day"),
-        F.col("n_distinct").cast("long").alias("n_users"),
-        (
-            F.abs(F.col("n_distinct_est") - F.col("n_distinct"))
-            <= 0.05 * F.col("n_distinct")
-        ).alias("est_ok"),
-    )
-
-
-SQL_DISTINCT_DAILY = f"""
-WITH ev AS ({_SQL_EVENTS_DAYS})
-SELECT event_type, day,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-       TRUE AS est_ok
-FROM ev GROUP BY event_type, day
-"""
-
-
-def q_distinct_weekly(spark, sf_dir):
-    """Weekly distinct users derived by CASCADING the daily HLL
-    partials (hll_union_agg — no raw rescan), audited in-band against
-    the exact weekly distinct count."""
-    from timeperiods_spark import (
-        distinct_cascade,
-        distinct_rollup,
-        finalize_distinct,
-    )
-
-    ev = _events_days(spark, sf_dir)
-    daily = distinct_rollup(ev, "day", "user_id", ["event_type"], width=1)
-    weekly = finalize_distinct(
-        distinct_cascade(daily, "user_id", ["event_type"],
-                         fine_width=1, coarse_width=7),
-        "user_id", ["event_type"], width=7,
-    )
-    exact = (
-        ev.withColumn("period", F.floor(F.col("day") / 7).cast("long"))
-        .groupBy("event_type", "period")
-        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
-    )
-    j = weekly.join(exact, ["event_type", "period"], "inner")
-    return j.select(
-        "event_type",
-        F.col("period").alias("week"),
-        "n_users",
-        (
-            F.abs(F.col("n_distinct_est") - F.col("n_users"))
-            <= 0.05 * F.col("n_users")
-        ).alias("est_ok"),
-    )
-
-
-SQL_DISTINCT_WEEKLY = f"""
-WITH ev AS ({_SQL_EVENTS_DAYS})
-SELECT event_type,
-       CAST(FLOOR(day / 7) AS BIGINT) AS week,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-       TRUE AS est_ok
-FROM ev GROUP BY event_type, FLOOR(day / 7)
-"""
-
-
-def q_zscore_anomaly(spark, sf_dir):
-    """Trailing z-score anomaly flags over daily event means: baseline
-    = the 7 strictly-preceding days (fan-out + hash agg in Spark; a
-    RANGE window in the oracle — same arithmetic)."""
-    from timeperiods_spark import zscore_anomaly
-
-    return zscore_anomaly(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"], k=7, z=2.0
-    )
-
-
-_ZN = "SUM(v) OVER win"
-_ZSS = "SUM(v*v) OVER win"
-_ZC = "COUNT(v) OVER win"
-_ZMEAN = f"({_ZN}) / ({_ZC})"
-_ZSTD = f"sqrt(greatest(({_ZSS}) / ({_ZC}) - ({_ZMEAN}) * ({_ZMEAN}), 0.0))"
-_ZSCORE = (
-    f"CASE WHEN ({_ZC}) >= 3 AND ROUND({_ZSTD}, 6) > 0.0 "
-    f"THEN ROUND((v - ({_ZMEAN})) / ({_ZSTD}), 6) END"
-)
-
-SQL_ZSCORE_ANOMALY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type, day, v,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
-  FROM daily
-)
-SELECT event_type, day, v,
-       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZMEAN}, 6) END AS base_mean,
-       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZSTD}, 6) END AS base_std,
-       {_ZSCORE} AS zscore,
-       COALESCE(ABS({_ZSCORE}) > 2.0, FALSE) AS is_anomaly
-FROM d2
-WINDOW win AS (PARTITION BY event_type ORDER BY dl
-               RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)
-"""
-
-
-def q_seasonal_adjust(spark, sf_dir):
-    """Additive day-of-week adjustment of daily event means: subtract
-    the (type, weekday) mean, re-center on the type mean."""
-    from timeperiods_spark import seasonal_adjust
-
-    return seasonal_adjust(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        season_length=7,
-    )
-
-
-SQL_SEASONAL_ADJUST = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type, day, v,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
-  FROM daily
-)
-SELECT event_type, day, v,
-       CAST(((dl % 7) + 7) % 7 AS BIGINT) AS season,
-       ROUND(AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7), 6)
-         AS seasonal_mean,
-       ROUND(v - AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7)
-             + AVG(v) OVER (PARTITION BY event_type), 6) AS v_adj
-FROM d2
-"""
-
-
-#: greedy-tokenizer vocab for the driver query — multi-char pieces
-#: exercise longest-match; single letters are fallbacks; letters
-#: outside the list emit unk (0)
-_TOKVOCAB = {
-    "ta": 1, "ble": 2, "val": 3, "ue": 4, "row": 5, "scan": 6,
-    "key": 7, "agg": 8, "ha": 9, "sh": 10, "mer": 11, "ge": 12,
-    "ba": 13, "tch": 14, "win": 15, "dow": 16, "spark": 17, "or": 18,
-    "der": 19, "da": 20, "col": 21, "umn": 22, "jo": 23, "in": 24,
-    "a": 25, "e": 26, "s": 27, "t": 28, "l": 29, "m": 30, "n": 31,
-    "r": 32, "u": 33, "c": 34, "d": 35, "o": 36, "p": 37, "q": 38,
-    "b": 39, "f": 40, "w": 41,
-}
-
-
-def q_tokenize(spark, sf_dir):
-    """Greedy longest-match vocab tokenization of the documents
-    corpus. Spark tokenizes DISTINCT words only (Zipf: vocabulary-
-    sized Python, corpus-sized JVM) and joins back; the oracle runs
-    the identical greedy semantics as a recursive CTE over word
-    positions. Token ids compare as a CSV string (array columns
-    sidestep the driver's value-hash ordering)."""
-    from timeperiods_spark import tokenize_vocab
-
-    docs = _read(spark, sf_dir, "documents")
-    out = tokenize_vocab(docs, "doc_id", "text", _TOKVOCAB)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_tok"),
-        F.concat_ws(",", F.transform("tokens", lambda t: t.cast("string")))
-        .alias("toks_csv"),
-    )
-
-
-_VOCAB_VALUES = ",".join(f"('{p}',{i})" for p, i in _TOKVOCAB.items())
-
-SQL_TOKENIZE = f"""
-WITH RECURSIVE vocab(piece, id) AS (VALUES {_VOCAB_VALUES}),
-docw AS (
-  SELECT doc_id, w, idx FROM (
-    SELECT doc_id,
-           unnest(string_split(text, ' ')) AS w,
-           generate_subscripts(string_split(text, ' '), 1) AS idx
-    FROM documents
-  ) WHERE LEN(w) > 0
-),
-words0 AS (SELECT DISTINCT w FROM docw),
-steps AS (
-  SELECT w, 0 AS pos, CAST('' AS VARCHAR) AS toks FROM words0
-  UNION ALL
-  SELECT s.w,
-         s.pos + COALESCE((SELECT MAX(LEN(v.piece)) FROM vocab v
-                           WHERE v.piece = substr(s.w, s.pos + 1, LEN(v.piece))), 1) AS pos,
-         (CASE WHEN s.toks = '' THEN '' ELSE s.toks || ',' END) ||
-         COALESCE(CAST((SELECT v.id FROM vocab v
-                        WHERE v.piece = substr(s.w, s.pos + 1, LEN(v.piece))
-                        ORDER BY LEN(v.piece) DESC LIMIT 1) AS VARCHAR), '0') AS toks
-  FROM steps s WHERE s.pos < LEN(s.w)
-),
-final AS (SELECT w, toks FROM steps WHERE pos >= LEN(w)),
-joined AS (
-  SELECT d.doc_id, d.idx, f.toks,
-         LEN(string_split(f.toks, ',')) AS n
-  FROM docw d JOIN final f ON d.w = f.w
-),
-agg AS (
-  SELECT doc_id,
-         string_agg(toks, ',' ORDER BY idx) AS toks_csv,
-         SUM(n) AS n
-  FROM joined GROUP BY doc_id
-)
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-       CAST(COALESCE(a.n, 0) AS BIGINT) AS n_tok,
-       COALESCE(a.toks_csv, '') AS toks_csv
-FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-"""
-
-
 def q_cosine_ivf_via_index(spark, sf_dir):
     """IVF top-k against the PERSISTED index path (build_ivf_index +
     cosine_topk_ivf_index): same semantics as cosine_topk_ivf, so the
@@ -2650,211 +2639,6 @@ def q_cosine_ivf_via_index(spark, sf_dir):
         "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
         F.col("rank").cast("long").alias("rank"),
     )
-
-
-def q_overlap_join(spark, sf_dir):
-    """Public foverlaps surface: 3-day measurement intervals joined to
-    even-week target periods per event type, left-outer (unmatched
-    measurements keep NULL y columns — data.table nomatch=NA)."""
-    from timeperiods_spark import overlap_join
-
-    d = _daily_means(spark, sf_dir).select(
-        "event_type", F.unix_date("day").cast("long").alias("dl"), "v"
-    )
-    x = d.select("event_type", F.col("dl").alias("s"),
-                 (F.col("dl") + 2).alias("e"), "v")
-    y = d.select(
-        "event_type",
-        (F.floor(F.col("dl") / 7) * 7).cast("long").alias("s"),
-        (F.floor(F.col("dl") / 7) * 7 + 6).cast("long").alias("e"),
-    ).filter(F.pmod(F.floor(F.col("s") / 7), F.lit(2)) == 0).distinct()
-    out = overlap_join(x, y, ("s", "e"), ["event_type"], how="left")
-    return out.select(
-        "event_type", "s_x", "e_x", "s_y", "e_y", "v",
-        "overlap_start", "overlap_end", "overlap_duration",
-    )
-
-
-SQL_OVERLAP_JOIN = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl, v
-  FROM daily
-),
-x AS (SELECT event_type, dl AS s, dl + 2 AS e, v FROM d2),
-y AS (
-  SELECT DISTINCT event_type,
-         CAST(FLOOR(dl / 7) * 7 AS BIGINT) AS ys,
-         CAST(FLOOR(dl / 7) * 7 + 6 AS BIGINT) AS ye
-  FROM d2
-  WHERE CAST(FLOOR(dl / 7) AS BIGINT) % 2 = 0
-)
-SELECT x.event_type,
-       x.s AS s_x, x.e AS e_x, y.ys AS s_y, y.ye AS e_y, x.v,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE GREATEST(x.s, y.ys) END AS overlap_start,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE LEAST(x.e, y.ye) END AS overlap_end,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE CAST(LEAST(x.e, y.ye) - GREATEST(x.s, y.ys) + 1 AS BIGINT)
-       END AS overlap_duration
-FROM x LEFT JOIN y
-  ON x.event_type IS NOT DISTINCT FROM y.event_type
- AND x.s <= y.ye AND x.e >= y.ys
-"""
-
-
-def q_overlap_join_bin_left(spark, sf_dir):
-    """Left-how twin on the BUCKETIZED strategy: the bin join preserves
-    x inside the join (first-bin NULL candidate + one max(matched)
-    window over the x identity) instead of the old dropDuplicates +
-    left_anti rescan — pinned in tests/test_plans.py as <= inner
-    exchanges + 1 and anti-join-free. Odd weeks only, so a third of the
-    measurements come back unmatched with NULL y columns."""
-    from timeperiods_spark import overlap_join
-
-    d = _daily_means(spark, sf_dir).select(
-        "event_type", F.unix_date("day").cast("long").alias("dl"), "v"
-    )
-    x = d.select("event_type", F.col("dl").alias("s"),
-                 (F.col("dl") + 2).alias("e"), "v")
-    y = d.select(
-        "event_type",
-        (F.floor(F.col("dl") / 7) * 7).cast("long").alias("s"),
-        (F.floor(F.col("dl") / 7) * 7 + 6).cast("long").alias("e"),
-    ).filter(F.pmod(F.floor(F.col("s") / 7), F.lit(2)) == 1).distinct()
-    out = overlap_join(
-        x, y, ("s", "e"), ["event_type"], how="left",
-        join_strategy="bin", bin_width=7,
-    )
-    return out.select(
-        "event_type", "s_x", "e_x", "s_y", "e_y", "v",
-        "overlap_start", "overlap_end", "overlap_duration",
-    )
-
-
-SQL_OVERLAP_JOIN_BIN_LEFT = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl, v
-  FROM daily
-),
-x AS (SELECT event_type, dl AS s, dl + 2 AS e, v FROM d2),
-y AS (
-  SELECT DISTINCT event_type,
-         CAST(FLOOR(dl / 7) * 7 AS BIGINT) AS ys,
-         CAST(FLOOR(dl / 7) * 7 + 6 AS BIGINT) AS ye
-  FROM d2
-  WHERE CAST(FLOOR(dl / 7) AS BIGINT) % 2 = 1
-)
-SELECT x.event_type,
-       x.s AS s_x, x.e AS e_x, y.ys AS s_y, y.ye AS e_y, x.v,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE GREATEST(x.s, y.ys) END AS overlap_start,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE LEAST(x.e, y.ye) END AS overlap_end,
-       CASE WHEN y.ys IS NULL THEN NULL
-            ELSE CAST(LEAST(x.e, y.ye) - GREATEST(x.s, y.ys) + 1 AS BIGINT)
-       END AS overlap_duration
-FROM x LEFT JOIN y
-  ON x.event_type IS NOT DISTINCT FROM y.event_type
- AND x.s <= y.ye AND x.e >= y.ys
-"""
-
-
-def q_gopher_quality(spark, sf_dir):
-    """Gopher Appendix-A quality rules over documents (thresholds
-    lowered to fit the short synthetic docs so both branches of every
-    rule are exercised)."""
-    from timeperiods_spark import gopher_quality
-
-    docs = _read(spark, sf_dir, "documents")
-    out = gopher_quality(
-        docs, "text", min_words=40, min_stopword_hits=1,
-        min_mean_word_len=3.0, max_mean_word_len=6.0,
-    )
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "words_ok", "word_len_ok", "symbol_ok", "alpha_ok",
-        "stopword_ok", "bullet_ok", "ellipsis_ok", "gopher_keep",
-    )
-
-
-def _gopher_sql():
-    from timeperiods_spark.operators.textops import gopher_quality_sql
-
-    r = gopher_quality_sql("text", dict(
-        min_words=40, min_stopword_hits=1,
-        min_mean_word_len=3.0, max_mean_word_len=6.0,
-    ))
-    keep = " AND ".join(r.values())
-    cols = ",\n       ".join(f"{v} AS {k}" for k, v in r.items())
-    return f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id,
-       {cols},
-       ({keep}) AS gopher_keep
-FROM documents
-"""
-
-
-SQL_GOPHER_QUALITY = _gopher_sql()
-
-
-def q_pii_scrub(spark, sf_dir):
-    """PII detect + scrub over the documents table. The synthetic
-    corpus carries no organic emails/IPs, so the query PLANTS
-    deterministic PII spans first (email on doc_id%7, IPv4 on %11,
-    phone on %13) — the DuckDB twin plants byte-identical spans —
-    then counts each pattern on the original text and emits the
-    scrubbed text. Pure map-side projection: zero shuffle; the three
-    regexes are RE2-safe so the twin runs them verbatim."""
-    docs = _read(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("long")
-    txt = F.concat(
-        F.col("text"),
-        F.when(did % 7 == 0,
-               F.format_string(" mail user%d@example.com", did))
-         .otherwise(F.lit("")),
-        F.when(did % 11 == 0,
-               F.format_string(" from 10.0.%d.9", did % 200))
-         .otherwise(F.lit("")),
-        F.when(did % 13 == 0,
-               F.format_string(" call +1 (555) 010-%04d", did % 10000))
-         .otherwise(F.lit("")),
-    )
-    base = docs.select(did.alias("doc_id"), txt.alias("text"))
-    out = _TX.scrub_pii(base, "text", out_col="scrubbed")
-    return out.select(
-        "doc_id",
-        F.col("email_count").cast("long").alias("email_count"),
-        F.col("ipv4_count").cast("long").alias("ipv4_count"),
-        F.col("phone_count").cast("long").alias("phone_count"),
-        "scrubbed",
-    )
-
-
-SQL_PII_SCRUB = f"""
-WITH base AS (
-  SELECT CAST(doc_id AS BIGINT) AS doc_id,
-         text
-         || CASE WHEN doc_id % 7 = 0
-                 THEN printf(' mail user%d@example.com', doc_id) ELSE '' END
-         || CASE WHEN doc_id % 11 = 0
-                 THEN printf(' from 10.0.%d.9', doc_id % 200) ELSE '' END
-         || CASE WHEN doc_id % 13 = 0
-                 THEN printf(' call +1 (555) 010-%04d', doc_id % 10000) ELSE '' END
-         AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST({_TX.pii_count_sql('text', _TX.PII_PATTERNS[0][1])} AS BIGINT) AS email_count,
-       CAST({_TX.pii_count_sql('text', _TX.PII_PATTERNS[1][1])} AS BIGINT) AS ipv4_count,
-       CAST({_TX.pii_count_sql('text', _TX.PII_PATTERNS[2][1])} AS BIGINT) AS phone_count,
-       {_TX.scrub_text_sql('text')} AS scrubbed
-FROM base
-"""
 
 
 def q_minhash_incremental(spark, sf_dir):
@@ -3120,117 +2904,6 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(tkn AS BIGINT) AS token,
        ROUND(tf, 6) AS tf, ROUND(idf, 6) AS idf, tfidf,
        CAST(rnk AS BIGINT) AS rank
 FROM r WHERE rnk <= 5
-"""
-
-
-def q_ohlc_weekly(spark, sf_dir):
-    """OHLC bars per (event_type, 7-day bucket of epoch seconds): one
-    hash aggregate, struct orderings encode the deterministic open
-    (earliest second, value tie -> min) / close (latest second, tie ->
-    max) picks — the oracle mirrors both rules with two row_number
-    windows. Values round to 6dp BEFORE aggregation so both engines
-    feed identical inputs; the order-sensitive sum reports at 4dp."""
-    from timeperiods_spark import rollup_ohlc
-
-    ev = _read(spark, sf_dir, "events").filter(
-        F.col("ts").isNotNull() & F.col("value").isNotNull()
-    )
-    base = ev.select(
-        "event_type",
-        F.unix_timestamp("ts").cast("long").alias("sec"),
-        F.round(F.col("value"), _R).alias("v"),
-    )
-    out = rollup_ohlc(base, "sec", "v", ["event_type"], bucket_width=604800)
-    return out.select(
-        "event_type",
-        "bucket",
-        F.round("open", _R).alias("open"),
-        F.round("high", _R).alias("high"),
-        F.round("low", _R).alias("low"),
-        F.round("close", _R).alias("close"),
-        "n_obs",
-        F.round("sum_value", 4).alias("sum_value"),
-    )
-
-
-SQL_OHLC_WEEKLY = """
-WITH base AS (
-  SELECT event_type,
-         CAST(epoch(ts) AS BIGINT) AS sec,
-         ROUND(value, 6) AS v
-  FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
-),
-b AS (
-  SELECT event_type, CAST(FLOOR(sec / 604800.0) AS BIGINT) AS bucket, sec, v
-  FROM base
-),
-r AS (
-  SELECT event_type, bucket, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type, bucket
-                            ORDER BY sec ASC, v ASC) AS rn_open,
-         ROW_NUMBER() OVER (PARTITION BY event_type, bucket
-                            ORDER BY sec DESC, v DESC) AS rn_close
-  FROM b
-)
-SELECT event_type, bucket,
-       ROUND(MAX(CASE WHEN rn_open = 1 THEN v END), 6) AS open,
-       ROUND(MAX(v), 6) AS high,
-       ROUND(MIN(v), 6) AS low,
-       ROUND(MAX(CASE WHEN rn_close = 1 THEN v END), 6) AS close,
-       COUNT(*) AS n_obs,
-       ROUND(SUM(v), 4) AS sum_value
-FROM r GROUP BY 1, 2
-"""
-
-
-def q_xcorr_daily(spark, sf_dir):
-    """Lagged cross-correlation between event-type daily-mean series
-    (lead/lag discovery; the (error, error) pair is the ACF). The
-    lagged pairing is an EQUI join — (series, period + lag) keys — so
-    the plan is one shuffle join + one tiny hash aggregate; the twin
-    spells the identical join. Inputs round to 6dp first; Pearson on
-    ~30 shared points compares clean at 6dp."""
-    from timeperiods_spark import cross_correlation
-
-    base = _daily_means(spark, sf_dir).select(
-        "event_type", F.unix_date("day").alias("p"), "v"
-    )
-    out = cross_correlation(
-        base,
-        "p",
-        "v",
-        "event_type",
-        pairs=[("click", "purchase"), ("view", "click"), ("error", "error")],
-        lags=[-3, -1, 0, 1, 3],
-    )
-    return out.select(
-        "series_a",
-        "series_b",
-        F.col("lag").cast("int").alias("lag"),
-        "n_overlap",
-        F.round("xcorr", _R).alias("xcorr"),
-    )
-
-
-SQL_XCORR_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-g AS (
-  SELECT event_type, date_diff('day', DATE '1970-01-01', day) AS p, v
-  FROM daily
-),
-pairs(series_a, series_b) AS (
-  VALUES ('click', 'purchase'), ('view', 'click'), ('error', 'error')
-),
-lags(lag) AS (VALUES (-3), (-1), (0), (1), (3))
-SELECT pr.series_a, pr.series_b, CAST(l.lag AS INTEGER) AS lag,
-       COUNT(*) AS n_overlap,
-       ROUND(CORR(a.v, b.v), 6) AS xcorr
-FROM pairs pr
-CROSS JOIN lags l
-JOIN g a ON a.event_type = pr.series_a
-JOIN g b ON b.event_type = pr.series_b AND b.p = a.p + l.lag
-GROUP BY 1, 2, 3
-HAVING COUNT(*) >= 2
 """
 
 
@@ -3715,7 +3388,6 @@ _PIPELINE_QUERIES = {
     "cosine_topk_ivf": q_cosine_ivf,
     "embedding_neardup_pairs": q_embedding_neardup,
     "embedding_dedup_incremental": q_embedding_incremental,
-    "text_analysis": q_textops,
     "pack_sequences_spans": q_pack_spans,
     "pack_chunks_by_source": q_pack_chunks,
     "token_histogram_by_source": q_token_histogram,
@@ -3727,27 +3399,10 @@ _PIPELINE_QUERIES = {
     "duplicate_span_stats_docs": q_duplicate_span_stats,
     "ngram_repetition_docs": q_ngram_repetition,
     "quality_weighted_sample": q_quality_sample,
-    "pii_scrub_docs": q_pii_scrub,
-    "ewma_daily_events": q_ewma_daily,
-    "cusum_daily_events": q_cusum_daily,
-    "filter_lines_docs": q_filter_lines,
-    "dedup_lines_docs": q_dedup_lines,
     "hash_sample_n_per_source": q_hash_sample_n,
-    "distinct_users_daily": q_distinct_daily,
-    "distinct_users_weekly_cascade": q_distinct_weekly,
-    "holt_daily_events": q_holt_daily,
-    "zscore_anomaly_daily": q_zscore_anomaly,
-    "seasonal_adjust_daily": q_seasonal_adjust,
-    "tokenize_vocab_docs": q_tokenize,
     "cosine_topk_ivf_index": q_cosine_ivf_via_index,
     "ngram_logprob_tokens": q_ngram_logprob,
-    "gopher_quality_docs": q_gopher_quality,
-    "overlap_join_weeks": q_overlap_join,
-    "overlap_join_bin_left": q_overlap_join_bin_left,
-    "asof_events_tolerance": q_asof_tolerance,
     "tfidf_topk_tokens": q_tfidf,
-    "rollup_ohlc_weekly": q_ohlc_weekly,
-    "xcorr_daily_events": q_xcorr_daily,
     "vocab_coverage_docs": q_vocab_coverage,
 }
 
@@ -3773,31 +3428,13 @@ _PIPELINE_ORACLES = {
     "ngram_contamination_check": SQL_CONTAMINATION,
     "hash_sample_docs": SQL_HASH_SAMPLE,
     "source_mix_tokens": SQL_SOURCE_MIX,
-    "text_analysis": SQL_TEXTOPS,
     "duplicate_spans_docs": SQL_DUPLICATE_SPANS,
     "duplicate_span_stats_docs": SQL_DUPLICATE_SPAN_STATS,
     "ngram_repetition_docs": SQL_NGRAM_REPETITION,
     "quality_weighted_sample": SQL_QUALITY_SAMPLE,
-    "pii_scrub_docs": SQL_PII_SCRUB,
-    "ewma_daily_events": SQL_EWMA_DAILY,
-    "cusum_daily_events": SQL_CUSUM_DAILY,
-    "filter_lines_docs": SQL_FILTER_LINES,
-    "dedup_lines_docs": SQL_DEDUP_LINES,
     "hash_sample_n_per_source": SQL_HASH_SAMPLE_N,
-    "distinct_users_daily": SQL_DISTINCT_DAILY,
-    "distinct_users_weekly_cascade": SQL_DISTINCT_WEEKLY,
-    "holt_daily_events": SQL_HOLT_DAILY,
-    "zscore_anomaly_daily": SQL_ZSCORE_ANOMALY,
-    "seasonal_adjust_daily": SQL_SEASONAL_ADJUST,
-    "tokenize_vocab_docs": SQL_TOKENIZE,
     "cosine_topk_ivf_index": SQL_COSINE_IVF,
     "ngram_logprob_tokens": SQL_NGRAM_LOGPROB,
-    "gopher_quality_docs": SQL_GOPHER_QUALITY,
-    "overlap_join_weeks": SQL_OVERLAP_JOIN,
-    "overlap_join_bin_left": SQL_OVERLAP_JOIN_BIN_LEFT,
-    "asof_events_tolerance": SQL_ASOF_TOLERANCE,
     "tfidf_topk_tokens": SQL_TFIDF,
-    "rollup_ohlc_weekly": SQL_OHLC_WEEKLY,
-    "xcorr_daily_events": SQL_XCORR_DAILY,
     "vocab_coverage_docs": SQL_VOCAB_COVERAGE,
 }

@@ -15,8 +15,7 @@ Headline hygiene (r2 verdict): every query runs SPARK_GRAFT_BENCH_REPS
 interleaved passes, each bracketed by 4-thread steal probes taken while
 Spark is idle (a probe DURING a full-width run cannot tell co-tenant
 steal from our own load); reported time = best clean-bracketed rep,
-with all walls + probes in extras. ANN recall@10 for the LSH and IVF
-families vs the brute-force truth rides along in extras.
+with all walls + probes in extras.
 
 Scaling evidence (north rule: >=0.8 throughput efficiency from N to 4N
 executors; no real cluster in this sandbox): the tier job re-runs in
@@ -52,7 +51,6 @@ from timeperiods_spark import (  # noqa: E402
     cascade,
     token_table,
 )
-from timeperiods_spark.operators.dedup import minhash_dedup  # noqa: E402
 from timeperiods_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -67,79 +65,6 @@ HEAD_CANARY_THREADS = 4
 
 def _count(df) -> int:
     return df.count()
-
-
-#: code whose changes invalidate a recorded headline wall / scale leg
-_HEADLINE_CODE_PATHS = ("bench.py", "timeperiods_spark")
-_SCALE_CODE_PATHS = ("jobs", "timeperiods_spark")
-
-
-#: union of the measured-code path sets: the dirty bit on a recorded
-#: sha label (and on _code_current's working-tree check) is scoped to
-#: the paths that can change a measured wall — an edited BASELINE.md or
-#: an untracked scratch file must not permanently poison a hunter leg
-_MEASURED_PATHS = ("bench.py", "jobs", "timeperiods_spark")
-
-
-def _git_head() -> tuple[str, bool]:
-    """(short sha, measured-code-dirty) — ("unknown", True) when git
-    fails. Dirty is scoped to _MEASURED_PATHS (tracked-file edits only;
-    a new file under those paths also shows in --porcelain)."""
-    try:
-        sha = subprocess.run(
-            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        dirty = bool(
-            subprocess.run(
-                ["git", "-C", REPO, "status", "--porcelain", "--",
-                 *_MEASURED_PATHS],
-                capture_output=True, text=True, timeout=10,
-            ).stdout.strip()
-        )
-        return (sha, dirty) if sha else ("unknown", True)
-    except Exception:
-        return ("unknown", True)
-
-
-def _sha_label() -> str:
-    sha, dirty = _git_head()
-    return sha + ("+dirty" if dirty else "")
-
-
-def _code_current(rec_sha: str | None, paths: tuple[str, ...]) -> bool:
-    """Is the code a hunter record measured byte-identical (over the
-    paths that produce the measured walls) to the code running NOW?
-
-    ADVICE r5: the merge pool filtered only by sf_dir/cpus, so a
-    published min-of-reps could silently come from an older commit.
-    Dirty-tree records are always rejected (nothing to diff against);
-    clean records are accepted when ``git diff --quiet sha..HEAD --
-    paths`` is empty — commits that touch only docs/tests keep legs
-    valid, anything touching the measured code invalidates them."""
-    if not rec_sha or rec_sha == "unknown" or rec_sha.endswith("+dirty"):
-        return False
-    head, dirty = _git_head()
-    if head == "unknown":
-        return False
-    try:
-        if dirty:
-            r = subprocess.run(
-                ["git", "-C", REPO, "status", "--porcelain", "--", *paths],
-                capture_output=True, text=True, timeout=10,
-            )
-            if r.stdout.strip():
-                return False  # measured code edited since HEAD
-        if rec_sha == head:
-            return True
-        r = subprocess.run(
-            ["git", "-C", REPO, "diff", "--quiet", rec_sha, "HEAD",
-             "--", *paths],
-            capture_output=True, text=True, timeout=15,
-        )
-        return r.returncode == 0
-    except Exception:
-        return False
 
 
 def _steal_seconds(samples: list[float], n_threads: int) -> float:
@@ -225,15 +150,6 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
             extra_budget - (time.time() - t_extra0) - 90.0,
         )
         one_pass()
-    sources: dict[str, list] = {
-        n: [["bench", None, None]] * len(all_times[n]) for n in all_times
-    }
-    n_merged, n_stale = _merge_headline_state(all_times, all_probes, sources)
-    if n_merged:
-        extras["headline_hunter_passes"] = n_merged
-    if n_stale:
-        extras["headline_hunter_rejected_stale"] = n_stale
-
     times: dict[str, float] = {}
     for name in all_times:
         walls, probes = all_times[name], all_probes[name]
@@ -243,91 +159,7 @@ def bench_queries(spark) -> tuple[dict[str, float], dict[str, float]]:
         extras[f"{name}_all_seconds"] = [round(w, 3) for w in walls]
         extras[f"{name}_bracket_probes"] = probes
         extras[f"{name}_clean"] = best in clean_idx
-        if n_merged:
-            extras[f"{name}_rep_sources"] = sources[name]
-            extras[f"{name}_selected_source"] = sources[name][best]
     return times, extras
-
-
-def _merge_headline_state(
-    all_times: dict[str, list[float]],
-    all_probes: dict[str, list[list[float]]],
-    sources: dict[str, list],
-) -> tuple[int, int]:
-    """Merge per-pass headline walls recorded by the background
-    quiet-window hunter (tools/headline_hunt.py) into the rep pool.
-
-    The hunter runs the SAME query closures through the SAME
-    `_bracketed_call` probes in a warm local[CPUS] session — it differs
-    only in WHEN it runs (it spends a pass only when the 4-thread
-    canary reads quiet, which hours of background probing find far more
-    often than one bench wall; r4 shipped all six headline clean flags
-    false). Records are merged only when their sf_dir and cpus match
-    this run AND their recorded sha still matches the measured code
-    (``_code_current`` over bench.py + the package — ADVICE r5: the
-    old sf/cpus-only filter let a min-of-reps come from an older
-    commit); rejected-stale records are counted and surfaced. Each
-    merged rep is labeled [source, unix-time, git-sha] so provenance
-    stays auditable in BENCH_DETAIL. Steal only ever inflates a wall,
-    so the min-picker downstream can never be flattered by a merged
-    rep, only un-polluted by one. Returns (merged, rejected_stale)."""
-    paths = [
-        p
-        for p in [
-            os.environ.get(
-                "SPARK_GRAFT_HEADLINE_STATE", "/tmp/headline_hunt.jsonl"
-            ),
-            os.path.join(REPO, "HEADLINE_HUNT.jsonl"),
-        ]
-        if p
-    ]
-    seen: set = set()
-    n = 0
-    n_stale = 0
-    sha_ok: dict[str, bool] = {}
-    for path in paths:
-        try:
-            with open(path) as f:
-                lines = f.readlines()
-        except OSError:
-            continue
-        for line in lines:
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            if (
-                rec.get("sf_dir") != SF_DIR
-                or rec.get("cpus") != CPUS
-                or not isinstance(rec.get("queries"), dict)
-            ):
-                continue
-            key = rec.get("t")
-            if key in seen:
-                continue
-            seen.add(key)
-            rsha = str(rec.get("sha"))
-            if rsha not in sha_ok:
-                sha_ok[rsha] = _code_current(rsha, _HEADLINE_CODE_PATHS)
-            if not sha_ok[rsha]:
-                n_stale += 1
-                continue
-            merged_any = False
-            for name, v in rec["queries"].items():
-                if name not in all_times or "wall" not in v:
-                    continue
-                all_times[name].append(v["wall"])
-                all_probes[name].append(
-                    [round(b, 3) for b in v.get("brackets", [9.9])]
-                )
-                sources[name].append(["hunter", rec.get("t"), rec.get("sha")])
-                merged_any = True
-            if merged_any:
-                n += 1
-    return n, n_stale
 
 
 def _build_queries(spark, state: dict, extras: dict):
@@ -394,22 +226,6 @@ def _build_queries(spark, state: dict, extras: dict):
             remove_overlaps(xl, ("s", "e"), ("g",)))
 
     queries.append(("remove_overlaps", q_remove_overlaps))
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-    def q_minhash():
-        # production settings: xxhash64 (the portable poly hash exists
-        # for DuckDB oracle parity only) + the hot-bucket cap — the
-        # bench corpus is template text over a small vocabulary, where
-        # the RAW candidate count is hash-draw-sensitive (a globally
-        # minimal common shingle captures a large corpus fraction in
-        # one bucket); the cap makes the workload draw-stable while
-        # true near-dup clusters (~5 docs) pass far under it
-        extras["minhash_dedup_rows"] = _count(
-            minhash_dedup(docs, "doc_id", "text", verify_threshold=0.5,
-                          hash_fn="xxhash64", max_bucket_size=500))
-
-    queries.append(("minhash_dedup", q_minhash))
 
     def q_tier():
         tok = token_table(spark, N_DOCS, partitions=CPUS * 4)
@@ -545,84 +361,6 @@ def gorilla_bulk_throughput(spark) -> dict:
     }
 
 
-def minhash_phase_split(spark, full_wall: float | None) -> dict:
-    """Attribute the minhash_dedup headline wall to its three phases
-    (VERDICT r5 item 3): shingle (map-heavy hash stage), band join
-    (signature + LSH candidate generation), verify+survivor election
-    (exact Jaccard on candidates + cluster window). Measured as
-    cumulative prefixes with the SAME production settings as the
-    headline query; the full wall reuses the headline's best rep, so
-    the split costs two extra runs, not three. A future regression is
-    then attributable to a phase, not just to the total."""
-    from timeperiods_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        shingle_frame,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    t0 = time.time()
-    shingle_frame(docs, "doc_id", "text", 5, "xxhash64").filter(
-        F.size("hashes") > 0
-    ).count()
-    t_sh = time.time() - t0
-    t0 = time.time()
-    n_cand = minhash_candidate_pairs(
-        docs, "doc_id", "text", hash_fn="xxhash64", max_bucket_size=500
-    ).count()
-    t_cand = time.time() - t0
-    out = {
-        "shingle_s": round(t_sh, 3),
-        "band_join_s": round(max(0.0, t_cand - t_sh), 3),
-        "n_candidates": n_cand,
-    }
-    if full_wall is not None:
-        out["verify_elect_s"] = round(max(0.0, full_wall - t_cand), 3)
-    return {"minhash_phase_split": out}
-
-
-def ann_recall(spark) -> dict:
-    """Measured recall@k of both ANN families vs the brute-force truth
-    on the embeddings table (VERDICT r2 item 10) — the evidence base
-    for tuning n_planes/probes/n_probe."""
-    from timeperiods_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_ivf,
-        cosine_topk_lsh,
-    )
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries_df = emb.filter(F.col("vec_id") < 50).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    ).cache()
-    k = 10
-
-    def pairs(df):
-        return {(r["query_id"], r["vec_id"]) for r in df.select("query_id", "vec_id").collect()}
-
-    truth = pairs(cosine_topk(emb, queries_df, k=k))
-    out = {}
-    for name, fn in (
-        # "lsh"/"ivf" run the LIBRARY DEFAULTS (probes=2 / n_probe=8,
-        # the measured-recall settings promoted in round 4); the
-        # "_cheap" variants document what the cheapest opt-out costs
-        ("lsh", lambda: cosine_topk_lsh(
-            emb, queries_df, k=k, dim=64, n_planes=6)),
-        ("lsh_cheap", lambda: cosine_topk_lsh(
-            emb, queries_df, k=k, dim=64, n_planes=6, probes=0)),
-        ("ivf", lambda: cosine_topk_ivf(
-            emb, queries_df, k=k, dim=64, n_centroids=16)),
-        ("ivf_cheap", lambda: cosine_topk_ivf(
-            emb, queries_df, k=k, dim=64, n_centroids=16, n_probe=4)),
-    ):
-        t0 = time.time()
-        got = pairs(fn())
-        out[f"ann_recall_{name}_at_{k}"] = round(
-            len(got & truth) / max(1, len(truth)), 4)
-        out[f"ann_{name}_seconds"] = round(time.time() - t0, 3)
-    queries_df.unpersist()
-    return out
-
-
 def _cpu_probe(n_threads: int = 1) -> float:
     """Fixed LCG burn on ``n_threads`` concurrent numpy loops (seconds)
     — the host-steal canary recorded alongside every scaling rep.
@@ -721,72 +459,7 @@ class _PairState:
         self.lo, self.hi, self.n_scale = lo, hi, n_scale
         self.runs: dict[int, list[dict]] = {lo: [], hi: []}
         self.probes: dict[int, list[list[float]]] = {lo: [], hi: []}
-        self.sources: dict[int, list[str]] = {lo: [], hi: []}
         self.round_walls: list[float] = []
-        self.rejected_stale = 0
-
-    def seed_from_state(self, paths: list[str]) -> int:
-        """Merge legs recorded by the background quiet-window hunter
-        (tools/scale_hunt.py). The hunter runs the SAME
-        jobs/run_tiers.py subprocess through the SAME _sampled_run
-        canary and steal-seconds gate as one_leg() — it only differs
-        in WHEN it runs: it probes for hours and spends a leg only when
-        the host reads quiet, which a single bench wall on this
-        steal-bursty host cannot do (r2-r4: three rounds of all-dirty
-        back-to-back reps). Merged reps are labeled source="hunter"
-        with their unix timestamp in the detail trail so the evidence
-        provenance is auditable; the clean gate is re-applied here from
-        the raw canary samples, never trusted from the file. Legs whose
-        recorded sha no longer matches the measured code (jobs/ + the
-        package; ``_code_current``) — or that predate sha recording —
-        are REJECTED and counted (ADVICE r5)."""
-        seen: set[tuple] = set()
-        n = 0
-        sha_ok: dict[str, bool] = {}
-        for path in paths:
-            try:
-                with open(path) as f:
-                    lines = f.readlines()
-            except OSError:
-                continue
-            for line in lines:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                if (
-                    rec.get("n_docs") != self.n_scale
-                    or rec.get("cores") not in (self.lo, self.hi)
-                    or not isinstance(rec.get("samples"), list)
-                    or "seconds" not in rec
-                ):
-                    continue
-                key = (rec.get("t"), rec["cores"], rec["seconds"])
-                if key in seen:
-                    continue
-                seen.add(key)
-                rsha = str(rec.get("sha"))
-                if rsha not in sha_ok:
-                    sha_ok[rsha] = _code_current(rsha, _SCALE_CODE_PATHS)
-                if not sha_ok[rsha]:
-                    self.rejected_stale += 1
-                    continue
-                c = rec["cores"]
-                self.runs[c].append(
-                    {
-                        "seconds": rec["seconds"],
-                        "docs_per_sec": rec["docs_per_sec"],
-                        "points_per_sec": rec.get("points_per_sec"),
-                        "t": rec.get("t"),
-                    }
-                )
-                self.probes[c].append([round(s, 3) for s in rec["samples"]])
-                self.sources[c].append("hunter")
-                n += 1
-        return n
 
     def clean(self, cores: int, i: int) -> bool:
         # steal-SECONDS gate, not max-sample: a single 0.6 s canary blip
@@ -820,7 +493,6 @@ class _PairState:
         )
         self.runs[cores].append(m)
         self.probes[cores].append([round(s, 3) for s in samples])
-        self.sources[cores].append("bench")
         shutil.rmtree(cat, ignore_errors=True)
         shutil.rmtree(man, ignore_errors=True)
         self.round_walls.append(round(time.time() - t0, 1))
@@ -855,18 +527,11 @@ class _PairState:
         """(compact, detail): compact goes in the final JSON line, the
         per-rep walls + canary traces go to BENCH_DETAIL.json."""
         lo, hi = self.lo, self.hi
-        n_hunter = sum(
-            1 for c in (lo, hi) for s in self.sources[c] if s == "hunter"
-        )
         compact: dict = {
             "n_docs": self.n_scale,
             "cores": [lo, hi],
             "reps": len(self.runs[lo]),
         }
-        if n_hunter:
-            # background quiet-window hunter legs merged in (same job,
-            # same canary + steal gate; see seed_from_state docstring)
-            compact["hunter_legs"] = n_hunter
         detail: dict = dict(compact)
         for cores in (lo, hi):
             best, has_clean, best_j = self._select(cores)
@@ -879,11 +544,7 @@ class _PairState:
             }
             detail[f"local{cores}"] = {
                 **compact[f"local{cores}"],
-                "selected_source": self.sources[cores][best_j],
-                "selected_t": self.runs[cores][best_j].get("t"),
                 "all_seconds": [m["seconds"] for m in self.runs[cores]],
-                "sources": list(self.sources[cores]),
-                "rep_t": [m.get("t") for m in self.runs[cores]],
                 "canary_max_per_rep": [
                     round(max(p), 3) if p else None for p in self.probes[cores]
                 ],
@@ -929,31 +590,12 @@ class _PairState:
             "(the only direction that can flatter the ratio) and takes "
             "the fast leg as measured"
         )
-        if self.rejected_stale:
-            detail["hunter_rejected_stale"] = self.rejected_stale
         detail["round_walls"] = self.round_walls
         return compact, detail
 
 
-#: announces a live bench run to the background hunters
-#: (tools/scale_hunt.py, tools/headline_hunt.py pause while it exists)
-BENCH_FLAG = "/tmp/spark_graft_bench_running"
-#: flags a hunter mid-measurement; bench waits for them at startup
-HUNTER_FLAGS = ("/tmp/spark_graft_busy", "/tmp/spark_graft_leg_running")
-
-
 def main():
     t_bench0 = time.time()
-    # drain any in-flight hunter measurement (a pass/leg takes ~1-2
-    # min) so neither side pollutes the other's canary
-    t_wait0 = time.time()
-    while (
-        any(os.path.exists(p) for p in HUNTER_FLAGS)
-        and time.time() - t_wait0 < 240.0
-    ):
-        time.sleep(5.0)
-    with open(BENCH_FLAG, "w") as f:
-        f.write(str(os.getpid()))
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "2400"))
     scaling_on = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
     lo, hi = (
@@ -967,38 +609,19 @@ def main():
     n_scale = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "512000000"))
     max_rounds = int(os.environ.get("SPARK_GRAFT_SCALE_MAX_ROUNDS", "6"))
 
-    # evidence accumulated by the background quiet-window hunter
-    # (tools/scale_hunt.py): the live /tmp state first, then the
-    # repo-committed snapshot (survives a /tmp wipe); seed_from_state
-    # dedupes overlapping records by (t, cores, seconds)
-    hunt_paths = [
-        p
-        for p in [
-            os.environ.get("SPARK_GRAFT_HUNT_STATE", "/tmp/scale_hunt.jsonl"),
-            os.path.join(REPO, "SCALE_HUNT.jsonl"),
-        ]
-        if p
-    ]
-
     tmp = tempfile.mkdtemp(prefix="bench_scale_")
     primary = _PairState(lo, hi, n_scale)
     detail: dict = {}
     try:
         if scaling_on:
-            n_seeded = primary.seed_from_state(hunt_paths)
             # phase 1: one pair-round BEFORE the headline session — the
-            # retry budget then spans the full bench wall. With hunter
-            # legs seeded, spend bench budget only on what the pair
-            # still needs (phase 3's needy-leg loop handles it).
-            if n_seeded == 0 or primary.next_leg() is not None:
-                primary.one_round(tmp)
+            # retry budget then spans the full bench wall
+            primary.one_round(tmp)
 
         # phase 2: headline queries on their own full-width session
         spark = get_spark("timeperiods-bench", master=f"local[{CPUS}]")
         times, extras = bench_queries(spark)
         total = round(sum(times.values()), 3)
-        extras.update(ann_recall(spark))
-        extras.update(minhash_phase_split(spark, times.get("minhash_dedup")))
         extras.update(gorilla_bulk_throughput(spark))
         spark.stop()
 
@@ -1049,14 +672,7 @@ def main():
             if sec and sec != "0":
                 lo2, hi2 = (int(c) for c in sec.split(","))
                 secondary = _PairState(lo2, hi2, n_scale)
-                n_seed2 = secondary.seed_from_state(hunt_paths)
-                need_legs = (
-                    n_seed2 == 0
-                    or not secondary.runs[lo2]
-                    or not secondary.runs[hi2]
-                    or secondary.next_leg() is not None
-                )
-                if need_legs and budget_left() > est_round + 30.0:
+                if budget_left() > est_round + 30.0:
                     _wait_quiet(4, max(20.0, (budget_left() - est_round) * 0.3))
                     secondary.one_round(tmp)
                     for _ in range(2 * max_rounds):
@@ -1079,10 +695,6 @@ def main():
                     }
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            os.remove(BENCH_FLAG)
-        except OSError:
-            pass
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # ------- evidence split (r3 verdict finding 2): the driver's tail
@@ -1099,8 +711,6 @@ def main():
     compact_extras = {
         k: extras[k]
         for k in (
-            "ann_recall_lsh_at_10",
-            "ann_recall_ivf_at_10",
             "gorilla_bulk_compress_pts_per_sec",
             "gorilla_bulk_decode_pts_per_sec",
             "gorilla_bulk_clean",

@@ -37,7 +37,6 @@ from timeperiods_spark import (  # noqa: E402
     cascade,
     token_table,
 )
-from timeperiods_spark.operators.dedup import minhash_dedup  # noqa: E402
 from timeperiods_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -116,14 +115,6 @@ def build(spark, extras: dict, state: dict):
 
     queries.append(("remove_overlaps", mk_ro, lambda: mk_ro().count()))
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-
-    def mk_minhash():
-        return minhash_dedup(docs, "doc_id", "text", verify_threshold=0.5,
-                             hash_fn="xxhash64", max_bucket_size=500)
-
-    queries.append(("minhash_dedup", mk_minhash, lambda: mk_minhash().count()))
-
     def run_tier():
         tok = token_table(spark, N_DOCS, partitions=CPUS * 4)
         hourly = rollup_regular(
@@ -178,53 +169,13 @@ def build(spark, extras: dict, state: dict):
     return queries, mk_tier_plans
 
 
-def contam_probe(spark, n_train: int, reps: int = 2) -> dict:
-    """A/B the decontamination join: exact array gram keys vs
-    hash_grams=True (one xxhash64 long per gram, computed map-side).
-    Deterministic token_table corpus; test = every 10th doc re-keyed,
-    so ~10% of test grams hit train. Walls are min-of-reps counts."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from timeperiods_spark.operators.tokenstats import ngram_contamination
-
-    train = token_table(spark, n_train, with_interval=False,
-                        partitions=CPUS * 4).select("doc_id", "tokens")
-    test = (
-        token_table(spark, n_train, with_interval=False,
-                    partitions=CPUS * 4)
-        .filter(F.col("doc_id").cast("long") % 10 == 0)
-        .select("doc_id", "tokens")
-    )
-    out: dict = {"n_train": n_train}
-    for label, hg in (("exact_arrays", False), ("hash_grams", True)):
-        walls = []
-        for _ in range(reps):
-            t0 = time.time()
-            n = ngram_contamination(
-                test, train, "tokens", "doc_id", n=8, hash_grams=hg
-            ).count()
-            walls.append(round(time.time() - t0, 3))
-        out[label] = {"walls": walls, "min": min(walls), "rows": n}
-    return out
-
-
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--queries", type=str, default="")
     ap.add_argument("--plans", type=str, default="")
     ap.add_argument("--suffix", type=str, default="before")
-    ap.add_argument("--contam", type=int, default=0,
-                    help="run only the decontamination key A/B at this "
-                         "many train docs")
     args = ap.parse_args()
-
-    if args.contam:
-        spark = get_spark("bench-extra-contam", master=f"local[{CPUS}]")
-        print(json.dumps(contam_probe(spark, args.contam, max(1, args.reps))))
-        return
 
     only = set(args.queries.split(",")) if args.queries else None
     spark = get_spark("timeperiods-bench-extra", master=f"local[{CPUS}]")

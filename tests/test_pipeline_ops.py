@@ -1,9 +1,6 @@
-"""Training-data pipeline operators: dedup, similarity, textops,
-multimodal plumbing."""
+"""Training-data pipeline operators: dedup and similarity search."""
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pytest
@@ -16,16 +13,10 @@ from timeperiods_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
-from timeperiods_spark.operators.multimodal import (
-    extract_features,
-    frame_sample,
-    synthetic_media,
-)
 from timeperiods_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_lsh,
 )
-from timeperiods_spark.operators import textops as TX
 
 
 @pytest.fixture(scope="module")
@@ -258,94 +249,6 @@ def test_cosine_lsh_subset_of_exact_bucket(spark):
     exact_scores = {(r["query_id"], r["vec_id"]): r["cosine"] for r in exact}
     for r in approx:
         assert exact_scores[(r["query_id"], r["vec_id"])] == pytest.approx(r["cosine"])
-
-
-def test_textops_basics(spark):
-    df = spark.createDataFrame(
-        [(0, "The cat and the dog. It is here to stay, truly!"), (1, "   "), (2, "der hund und die katze ist nicht da")],
-        "id int, t string",
-    )
-    out = df.select(
-        "id",
-        TX.whitespace_token_count(F.col("t")).alias("ws"),
-        TX.bpe_token_count(F.col("t")).alias("bpe"),
-        TX.quality_score(F.col("t")).alias("q"),
-        TX.lang_id(F.col("t")).alias("lang"),
-        TX.fingerprint(F.col("t")).alias("fp"),
-    ).orderBy("id").collect()
-    assert out[0]["lang"] == "en" and out[2]["lang"] == "de"
-    assert out[0]["ws"] == 11 and out[0]["bpe"] == 14
-    # whitespace-only: all gates fail except punct (no punctuation soup)
-    assert out[1]["ws"] == 0 and out[1]["q"] == 0.25
-    assert 0.0 <= out[0]["q"] <= 1.0 and out[0]["q"] >= 0.75
-    # fingerprint is whitespace/case-insensitive but content-sensitive
-    df2 = spark.createDataFrame(
-        [(0, "THE cat   and the dog. It is here to stay, truly!"), (1, "the cat and the dog. it is here to stay, truly?")],
-        "id int, t string",
-    )
-    fps = [r["fp"] for r in df2.select(TX.fingerprint(F.col("t")).alias("fp")).collect()]
-    assert fps[0] == out[0]["fp"] and fps[1] != out[0]["fp"]
-
-
-def test_pii_scrub_counts_and_order(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "reach me at jo.doe+x@mail.example.org or 10.1.2.3 now"),
-            (1, "call +1 (555) 010-7788 after five"),
-            (2, "plain text, nothing sensitive"),
-            (3, "two mails: a@b.io and c-d_e@f.co, one ip 192.168.0.1"),
-        ],
-        "id int, text string",
-    )
-    out = {r["id"]: r for r in TX.scrub_pii(df, "text").collect()}
-    assert (out[0]["email_count"], out[0]["ipv4_count"]) == (1, 1)
-    assert out[1]["phone_count"] == 1
-    assert (out[2]["email_count"], out[2]["ipv4_count"], out[2]["phone_count"]) == (0, 0, 0)
-    assert out[3]["email_count"] == 2 and out[3]["ipv4_count"] == 1
-    s0, s1, s3 = out[0]["text_scrubbed"], out[1]["text_scrubbed"], out[3]["text_scrubbed"]
-    # every match replaced by its typed placeholder, nothing leaks
-    assert "<EMAIL>" in s0 and "<IP>" in s0 and "@" not in s0 and "10.1.2.3" not in s0
-    assert "<PHONE>" in s1 and "555" not in s1
-    assert s3.count("<EMAIL>") == 2 and "<IP>" in s3
-    # scrub order is load-bearing: the email's digit-bearing local part
-    # must survive as <EMAIL>, not get chewed by the phone pass; and an
-    # IP must become <IP>, not <PHONE> (phone's charset matches IPs too)
-    df2 = spark.createDataFrame(
-        [(0, "mail 12345678@digits.example and ip 10.0.0.1")], "id int, text string"
-    )
-    s = TX.scrub_pii(df2, "text").collect()[0]["text_scrubbed"]
-    assert s == "mail <EMAIL> and ip <IP>"
-    # untouched rows pass through byte-identical
-    assert out[2]["text_scrubbed"] == "plain text, nothing sensitive"
-
-
-def test_multimodal_plumbing(spark):
-    media = synthetic_media(spark, 20, kind="video")
-    feats = extract_features(media, dim=16).collect()
-    assert len(feats) == 20
-    for r in feats:
-        v = np.array(r["feature"])
-        assert len(v) == 16 and abs(np.linalg.norm(v) - 1.0) < 1e-5
-        assert r["n_bytes"] >= 256
-    # determinism across recompute
-    again = {r["media_id"]: r["feature"] for r in extract_features(media, dim=16).collect()}
-    for r in feats:
-        assert list(again[r["media_id"]]) == list(r["feature"])
-    # real codec is stubbed: must raise, not silently fake
-    with pytest.raises(Exception) as exc:
-        extract_features(media, codec="real").collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-    frames = frame_sample(media, every=2)
-    rows = frames.collect()
-    assert all(len(r["frame_bytes"]) > 0 for r in rows)
-    n_by_media = {}
-    for r in rows:
-        n_by_media[r["media_id"]] = n_by_media.get(r["media_id"], 0) + 1
-    med = media.select("media_id", "meta.n_frames").collect()
-    for r in med:
-        assert n_by_media[r["media_id"]] == math.ceil(r["n_frames"] / 2)
 
 
 def test_connected_components_chain_and_clusters(spark):
@@ -820,49 +723,3 @@ def test_ivf_index_roundtrip_and_equality(spark, tmp_path):
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [isnotnull(cell" in plan.replace("#", "")[:10**6] or \
         "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:120]
-
-
-def test_gopher_quality_rules(spark):
-    from timeperiods_spark import gopher_quality
-
-    good = ("the quick brown fox and the lazy dog have been " * 8).strip()
-    rows = [
-        (0, good),                                  # passes everything
-        (1, "too short to have fifty words"),       # words_ok fails
-        (2, good + " ##### " * 30),                 # symbol_ok fails
-        (3, ("1 2 3 4 5 " * 12).strip()),           # alpha + stopword fail
-        (4, None),                                  # NULL -> all fail
-    ]
-    df = spark.createDataFrame(rows, "id int, text string")
-    out = {r["id"]: r for r in gopher_quality(
-        df, "text", min_words=40, min_mean_word_len=2.0,
-    ).collect()}
-    assert out[0]["gopher_keep"] is True
-    assert out[1]["words_ok"] is False and out[1]["gopher_keep"] is False
-    assert out[2]["symbol_ok"] is False
-    assert out[3]["alpha_ok"] is False and out[3]["stopword_ok"] is False
-    assert out[4]["gopher_keep"] is False and out[4]["words_ok"] is False
-    # every rule column is a non-null boolean
-    for r in out.values():
-        for c in ("words_ok", "word_len_ok", "symbol_ok", "alpha_ok",
-                  "stopword_ok", "bullet_ok", "ellipsis_ok",
-                  "gopher_keep"):
-            assert r[c] in (True, False)
-    # line-level rules: bullet-heavy and ellipsis-heavy docs flagged
-    ldf = spark.createDataFrame(
-        [(0, "* one\n* two\n* three\nplain"),
-         (1, "trailing...\nlines...\nhere...\nokay"),
-         (2, "regular\nlines\nhere")],
-        "id int, text string",
-    )
-    lout = {r["id"]: r for r in gopher_quality(ldf, "text").collect()}
-    assert lout[0]["bullet_ok"] is True   # 3/4 = 0.75 < 0.9
-    assert lout[1]["ellipsis_ok"] is False  # 3/4 = 0.75 >= 0.3
-    assert lout[2]["bullet_ok"] is True and lout[2]["ellipsis_ok"] is True
-    all_bullets = spark.createDataFrame(
-        [(0, "* a\n- b\n\u2022 c")], "id int, text string"
-    )
-    assert gopher_quality(all_bullets, "text").collect()[0]["bullet_ok"] is False
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        gopher_quality(df, "text", nonsense=1)

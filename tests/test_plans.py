@@ -333,20 +333,6 @@ def test_auto_stats_near_threshold_triggers_recheck(xy):
     assert AUTO_BIN_PAIRS // AUTO_STATS_RECHECK_BAND < AUTO_BIN_PAIRS // 2
 
 
-def test_dedup_lines_no_cartesian_and_slim_election(spark):
-    """dedup_lines: the election join must be an equi join on the line
-    key (never BNLJ/cartesian), and with hash_lines=True the exchange
-    must NOT carry the line text into the election aggregate side."""
-    from timeperiods_spark import dedup_lines
-
-    df = spark.createDataFrame(
-        [(i, "a b\nc d\ne f") for i in range(10)], "id int, text string"
-    )
-    plan = _plan(dedup_lines(df, "id", "text", hash_lines=True))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_zscore_anomaly_two_exchanges_no_window_over_raw(spark):
     """zscore_anomaly: baseline via explode + hash agg — no window
     function over the raw rows (a RANGE window would serialize per
@@ -360,22 +346,6 @@ def test_zscore_anomaly_two_exchanges_no_window_over_raw(spark):
     assert "Window" not in plan  # pure agg+join formulation
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_tokenize_distinct_words_before_python(spark):
-    """tokenize_vocab: the Python stage (mapInPandas) must sit above a
-    distinct (HashAggregate) over words — Python work is vocabulary-
-    sized, never corpus-sized."""
-    from timeperiods_spark import tokenize_vocab
-
-    df = spark.createDataFrame(
-        [(i, "hello world") for i in range(10)], "id int, text string"
-    )
-    plan = _plan(tokenize_vocab(df, "id", "text", {"hello": 1, "world": 2}))
-    # exactly one Arrow eval, fed by an aggregate (the distinct)
-    assert plan.count("MapInPandas") == 1
-    pos_py = plan.find("MapInPandas")
-    assert "HashAggregate" in plan[pos_py:] or "SortAggregate" in plan[pos_py:]
 
 
 def test_holt_single_arrow_stage_and_broadcast_composition(spark):

@@ -227,303 +227,6 @@ def test_sessionized_rollup_stream_matches_batch(spark, tmp_path):
         assert want[k] == v, (k, v, want.get(k))
 
 
-def test_stream_dedup_ingest_equals_whole_corpus(spark, tmp_path):
-    """Two availableNow passes over a growing corpus: the accumulated
-    deduped output must equal the whole-corpus single_hop survivor set
-    (monotone doc ids), with the band index persisted between passes."""
-    from timeperiods_spark.operators.dedup import minhash_dedup
-    from timeperiods_spark.streaming.stream_ingest import stream_dedup_ingest
-
-    base = [
-        "the quick brown fox jumps over the lazy dog in the park",
-        "a completely different document about spark query engines",
-        "numbers and symbols 123 456 !!! ??? mixed into text here",
-    ]
-    rows = []
-    for i, t in enumerate(base):
-        rows.append((i * 10, t))
-        rows.append((i * 10 + 1, t + " extra tail words"))
-    rows.append((99, base[0]))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    src = str(tmp_path / "dsrc")
-    docs.filter("doc_id < 20").write.mode("append").parquet(src)
-    args = dict(
-        id_col="doc_id", text_col="text",
-        index_dir=str(tmp_path / "didx"), out_dir=str(tmp_path / "dout"),
-        checkpoint_dir=str(tmp_path / "dck"), verify_threshold=0.4,
-    )
-    stream_dedup_ingest(spark, src, docs.schema, **args).awaitTermination()
-    docs.filter("doc_id >= 20").write.mode("append").parquet(src)
-    stream_dedup_ingest(spark, src, docs.schema, **args).awaitTermination()
-
-    got = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "dout")).collect()}
-    want = {
-        r["doc_id"]
-        for r in minhash_dedup(docs, "doc_id", "text", verify_threshold=0.4)
-        .select("doc_id").collect()
-    }
-    assert got == want
-
-
-def test_dedup_ingest_epoch_replay_idempotent(spark, tmp_path):
-    """A crash-replayed foreachBatch epoch must not grow the persisted
-    index or the survivor output: epoch-keyed overwrite writes make the
-    replay rewrite its own files (round-4 ADVICE — append-mode index
-    writes duplicated (id, band) rows on every replay, inflating all
-    future candidate fan-out)."""
-    from timeperiods_spark.streaming.stream_ingest import dedup_ingest_epoch
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "the quick brown fox jumps over the lazy dog today"),
-            (3, "an entirely different document about streaming replay"),
-        ],
-        "doc_id long, text string",
-    )
-    args = dict(
-        id_col="doc_id", text_col="text",
-        index_dir=str(tmp_path / "idx"), out_dir=str(tmp_path / "out"),
-        verify_threshold=0.4,
-    )
-    dedup_ingest_epoch(spark, docs, 0, **args)
-
-    def snapshot():
-        bands = spark.read.parquet(str(tmp_path / "idx" / "bands"))
-        out = spark.read.parquet(str(tmp_path / "out"))
-        return (
-            sorted((r["id"], r["band"]) for r in bands.collect()),
-            sorted(r["doc_id"] for r in out.collect()),
-        )
-
-    first = snapshot()
-    # replay the SAME epoch (same batch, same epoch_id), as Structured
-    # Streaming does after a crash between the writes and the commit
-    dedup_ingest_epoch(spark, docs, 0, **args)
-    assert snapshot() == first
-    # no duplicate (id, band) index rows either
-    bands, survivors = first
-    assert len(bands) == len(set(bands))
-    assert survivors == [1, 3]
-
-
-def test_dedup_index_compaction(spark, tmp_path):
-    """VERDICT r4 item 4: N epoch dirs → compact → 1 base + tail
-    epochs; index content identical; replay of a compacted epoch is a
-    full no-op; the next incremental batch probes the base correctly."""
-    import os
-
-    from timeperiods_spark.streaming import dedup_index as dix
-    from timeperiods_spark.streaming.stream_ingest import dedup_ingest_epoch
-
-    texts = [
-        "the quick brown fox jumps over the lazy dog in the park today",
-        "an entirely different document about streaming compaction and manifests",
-        "numbers and symbols 123 456 mixed into this third document here",
-        "yet another unrelated text about spark query planning internals",
-    ]
-    idx = str(tmp_path / "idx")
-    out = str(tmp_path / "out")
-    args = dict(id_col="doc_id", text_col="text", index_dir=idx,
-                out_dir=out, verify_threshold=0.4)
-
-    # epochs 0..3: one new doc each plus a near-dup of an older doc
-    for e in range(4):
-        rows = [(e * 10, texts[e])]
-        if e > 0:
-            rows.append((e * 10 + 1, texts[e - 1] + " tail"))
-        batch = spark.createDataFrame(rows, "doc_id long, text string")
-        dedup_ingest_epoch(spark, batch, e, **args)
-
-    bands_root = os.path.join(idx, "bands")
-
-    def index_rows():
-        df = dix.read_live(spark, bands_root)
-        return sorted((r["id"], r["band"], r["bsig"]) for r in df.collect())
-
-    def survivors():
-        return sorted(
-            r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()
-        )
-
-    before_rows, before_surv = index_rows(), survivors()
-    assert len(dix.live_dirs(bands_root)) == 4
-
-    # compact through epoch 2 (e.g. the last checkpointed one)
-    res = dix.compact_index(spark, idx, through_epoch=2)
-    assert res["bands"] and res["bands"].startswith("__base")
-    assert sorted(dix.live_dirs(bands_root)) == [res["bands"], "__epoch=3"]
-    assert index_rows() == before_rows  # content unchanged
-    assert dix.compacted_through(bands_root) == 2
-
-    # replay of a compacted epoch: full no-op (no dirs, no rows)
-    replay = spark.createDataFrame([(10, texts[1])], "doc_id long, text string")
-    dedup_ingest_epoch(spark, replay, 1, **args)
-    assert sorted(dix.live_dirs(bands_root)) == [res["bands"], "__epoch=3"]
-    assert not os.path.isdir(os.path.join(bands_root, "__epoch=1"))
-    assert index_rows() == before_rows and survivors() == before_surv
-
-    # next batch probes the compacted base: near-dup of epoch-0 doc drops
-    nxt = spark.createDataFrame(
-        [(50, texts[0] + " tiny suffix"), (51, "completely novel fifth text about gardens")],
-        "doc_id long, text string",
-    )
-    dedup_ingest_epoch(spark, nxt, 4, **args)
-    surv = survivors()
-    assert 51 in surv and 50 not in surv
-
-    # second compaction folds base + tail into a new generation
-    res2 = dix.compact_index(spark, idx, through_epoch=4)
-    assert res2["bands"] != res["bands"]
-    assert dix.live_dirs(bands_root) == [res2["bands"]]
-    # all rows preserved across two generations
-    ids = {i for i, _, _ in index_rows()}
-    assert {0, 10, 11, 20, 21, 30, 31, 50, 51} <= ids
-
-
-def test_epoch_manifest_concurrent_register_and_compact(spark, tmp_path):
-    """ADVICE r5: register_epoch and compact_root are both manifest
-    writers; unserialized, a stale register write could drop a
-    just-swapped __base from the live set. With the manifest lock +
-    re-read-merge swap, every epoch registered WHILE a compaction runs
-    survives in the final live set alongside the new base — under any
-    interleaving."""
-    import threading
-
-    from timeperiods_spark.streaming import dedup_index as dix
-
-    root = str(tmp_path / "bands")
-    small = spark.range(4).selectExpr("id", "id AS band", "array(id) AS bsig")
-    for e in range(3):
-        small.write.parquet(os.path.join(root, f"__epoch={e}"))
-        dix.register_epoch(root, e)
-
-    err: list = []
-
-    def compact():
-        try:
-            dix.compact_root(spark, root, through_epoch=1)
-        except Exception as exc:  # pragma: no cover - surfaced below
-            err.append(exc)
-
-    t = threading.Thread(target=compact)
-    t.start()
-    registered = []
-    for e in range(10, 40):
-        dix.register_epoch(root, e)
-        registered.append(e)
-    t.join()
-    assert not err, err
-    live = dix.live_dirs(root)
-    assert any(d.startswith("__base") for d in live), live
-    for e in registered:
-        assert f"__epoch={e}" in live, (e, live)
-    assert "__epoch=2" in live and "__epoch=0" not in live
-
-
-def test_vacuum_spares_inflight_epoch_dirs(spark, tmp_path):
-    """An epoch dir whose data files landed but whose register_epoch
-    commit has not run (id > compacted_through, not live) must survive
-    vacuum — deleting it would race the ingest thread. Stale dirs at or
-    below the watermark are reclaimed."""
-    from timeperiods_spark.streaming import dedup_index as dix
-
-    root = str(tmp_path / "bands")
-    small = spark.range(2).selectExpr("id", "id AS band", "array(id) AS bsig")
-    for e in range(3):
-        small.write.parquet(os.path.join(root, f"__epoch={e}"))
-        dix.register_epoch(root, e)
-    dix.compact_root(spark, root, through_epoch=2, remove_old=True)
-
-    # in-flight: data landed, not yet registered, id above the watermark
-    small.write.parquet(os.path.join(root, "__epoch=7"))
-    # stale replay of a compacted epoch: id at/below the watermark
-    small.write.parquet(os.path.join(root, "__epoch=1"))
-    dropped = dix.vacuum_root(root)
-    assert "__epoch=1" in dropped and "__epoch=7" not in dropped
-    assert os.path.isdir(os.path.join(root, "__epoch=7"))
-    # once registered it joins the live set and is never vacuumable
-    assert dix.register_epoch(root, 7)
-    assert "__epoch=7" in dix.live_dirs(root)
-
-
-def test_compact_reserves_base_and_vacuum_spares_pending(spark, tmp_path):
-    """ADVICE r6: (a) a concurrent compactor mid-merge is visible as an
-    empty reserved base dir + __pending marker — a second compact_root
-    must pick the NEXT generation name, and vacuum_root must not rmtree
-    the in-flight base; (b) once the marker is gone (crashed compactor,
-    never swapped) the dead dir is reclaimable."""
-    from timeperiods_spark.streaming import dedup_index as dix
-
-    root = str(tmp_path / "bands")
-    small = spark.range(4).selectExpr("id", "id AS band", "array(id) AS bsig")
-    for e in range(3):
-        small.write.parquet(os.path.join(root, f"__epoch={e}"))
-        dix.register_epoch(root, e)
-
-    # simulate compactor A between its reservation and its swap
-    pending = os.path.join(root, "__base0")
-    os.makedirs(pending)
-    open(dix._pending_marker(root, "__base0"), "w").close()
-
-    # a pending base is invisible to legacy discovery readers
-    assert "__base0" not in dix.live_dirs(root)
-
-    # compactor B: skips the reserved name, completes, and its vacuum
-    # (remove_old=True) spares the in-flight base
-    name = dix.compact_root(spark, root, through_epoch=2, remove_old=True)
-    assert name == "__base1"
-    assert dix.live_dirs(root) == ["__base1"]
-    assert os.path.isdir(pending)
-    assert os.path.isfile(dix._pending_marker(root, "__base0"))
-
-    # marker gone (compactor A crashed pre-swap): now it is dead
-    os.remove(dix._pending_marker(root, "__base0"))
-    assert "__base0" in dix.vacuum_root(root)
-    assert not os.path.isdir(pending)
-
-
-def test_concurrent_compactors_exactly_one_wins(spark, tmp_path):
-    """ADVICE r6: two compact_root callers racing on one root never
-    share a base dir and never publish duplicate rows — the loser
-    (fold set already swapped away, or nothing left to merge) returns
-    None and its reserved dir is reclaimed."""
-    import threading
-
-    from timeperiods_spark.streaming import dedup_index as dix
-
-    root = str(tmp_path / "bands")
-    small = spark.range(4).selectExpr("id", "id AS band", "array(id) AS bsig")
-    for e in range(3):
-        small.write.parquet(os.path.join(root, f"__epoch={e}"))
-        dix.register_epoch(root, e)
-
-    results: list = [None, None]
-    errs: list = []
-
-    def compact(slot):
-        try:
-            results[slot] = dix.compact_root(spark, root, through_epoch=2)
-        except Exception as exc:  # pragma: no cover - surfaced below
-            errs.append(exc)
-
-    ts = [threading.Thread(target=compact, args=(i,)) for i in range(2)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join()
-    assert not errs, errs
-    winners = [r for r in results if r is not None]
-    assert len(winners) == 1, results
-    assert dix.live_dirs(root) == [winners[0]]
-    rows = sorted(
-        (r["id"], r["band"]) for r in dix.read_live(spark, root).collect()
-    )
-    # 3 epochs x 4 distinct rows, no duplication from a double-publish
-    assert len(rows) == 12 and len(set(rows)) == 4
-
-
 def test_distinct_rollup_stream_matches_batch_sketch(spark, tmp_path):
     """Streaming HLL window partials == the batch sketch of the same
     windows, and they cascade with the batch distinct machinery."""

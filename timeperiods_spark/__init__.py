@@ -54,9 +54,6 @@ from .operators.distinct import (
     distinct_rollup,
     finalize_distinct,
 )
-from .operators.lines import dedup_lines, filter_lines
-from .operators.textops import gopher_quality, scrub_pii
-from .operators.tokenize import tokenize_vocab
 from .operators.anomaly import seasonal_adjust, zscore_anomaly
 from .operators.trend import cusum, ewma, holt
 from .operators.tokenstats import (
@@ -140,11 +137,6 @@ __all__ = [
     "exact_dedup",
     "duplicate_spans",
     "duplicate_span_stats",
-    "scrub_pii",
-    "gopher_quality",
-    "tokenize_vocab",
-    "dedup_lines",
-    "filter_lines",
     "distinct_rollup",
     "distinct_cascade",
     "finalize_distinct",

@@ -392,8 +392,7 @@ def minhash_dedup_incremental(
     if cache:
         # the batch shingle frame feeds banding, the pair verify, and
         # the returned new_shingles; managed, so repeated batches hold
-        # at most one cached frame (stream_dedup_ingest additionally
-        # unpersists eagerly once the epoch is materialized)
+        # at most one cached frame
         from ..plans.cachectl import managed_persist_percall
 
         batch_sh = managed_persist_percall(

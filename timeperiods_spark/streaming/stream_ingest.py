@@ -348,142 +348,3 @@ def sessionized_rollup_stream(
         )
     )
 
-
-def dedup_ingest_epoch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    epoch_id: int,
-    *,
-    id_col: str,
-    text_col: str,
-    index_dir: str,
-    out_dir: str,
-    k: int = 5,
-    n_hashes: int = 12,
-    bands: int = 4,
-    verify_threshold: float = 0.7,
-) -> None:
-    """One micro-batch of incremental near-dup ingestion, IDEMPOTENT
-    under crash replay: every write (survivors, band index, shingle
-    index) lands under an ``__epoch=<id>`` subdirectory with
-    ``mode("overwrite")``, so a replayed epoch overwrites its own files
-    instead of appending a second copy. Without this a replay would
-    permanently duplicate the epoch's index rows — the index grows and
-    the candidate/verify fan-out inflates on every future batch.
-    (Iceberg equivalent: MERGE on (id, band) or a snapshot-id commit
-    check.) Replay also re-runs the dedup against an index that may
-    already contain this batch's signatures, which only ADDS
-    self-matches with id_a < id_b — all batch-internal pairs already
-    found — so the survivor set is unchanged too.
-
-    Index reads and the epoch lifecycle go through
-    ``streaming.dedup_index``: each sub-index keeps a ``_epochs.json``
-    live-set manifest, an epoch becomes reader-visible only at its
-    ``register_epoch`` commit, and ``compact_index`` (run from the
-    maintenance cadence, through the last CHECKPOINTED epoch) folds old
-    epochs into a ``__base<gen>`` dir so the directory count stays
-    bounded. A replay of an already-compacted epoch is a full no-op —
-    its rows are in the base and re-registering is refused."""
-    import os
-
-    from ..operators.dedup import minhash_dedup_incremental
-    from . import dedup_index as dix
-
-    bands_path = os.path.join(index_dir, "bands")
-    shingles_path = os.path.join(index_dir, "shingles")
-
-    if int(epoch_id) <= dix.compacted_through(bands_path):
-        # this epoch was folded into a compacted base: its index rows
-        # and survivors are already durable — rewriting the epoch dir
-        # would resurrect rows the manifest no longer references
-        return
-
-    def _epoch_write(df: DataFrame, root: str) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(root, f"__epoch={int(epoch_id)}")
-        )
-
-    r = minhash_dedup_incremental(
-        batch_df,
-        id_col,
-        text_col,
-        index_bands=dix.read_live(spark, bands_path),
-        index_shingles=dix.read_live(spark, shingles_path),
-        k=k,
-        n_hashes=n_hashes,
-        bands=bands,
-        verify_threshold=verify_threshold,
-        broadcast_batch=True,
-    )
-    _epoch_write(r["deduped"], out_dir)
-    _epoch_write(r["new_bands"], bands_path)
-    _epoch_write(r["new_shingles"], shingles_path)
-    # commit point: the epoch enters the live set only after its data
-    # files are fully on disk (a crash before here leaves invisible
-    # dirs that the replay overwrites, a crash after is idempotent)
-    dix.register_epoch(bands_path, int(epoch_id))
-    dix.register_epoch(shingles_path, int(epoch_id))
-    # release the per-batch shingle cache: a long-running stream would
-    # otherwise accumulate one persisted frame per epoch
-    r["new_shingles"].unpersist()
-
-
-def stream_dedup_ingest(
-    spark: SparkSession,
-    source_path: str,
-    schema,
-    *,
-    id_col: str,
-    text_col: str,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    k: int = 5,
-    n_hashes: int = 12,
-    bands: int = 4,
-    verify_threshold: float = 0.7,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming incremental near-dup ingestion: every micro-batch is
-    deduplicated against the PERSISTED MinHash band index (plus itself)
-    via ``operators.dedup.minhash_dedup_incremental``, survivors land
-    in ``out_dir``, and the batch's signatures (survivors AND dropped —
-    required for whole-corpus equivalence) extend the index. The
-    streaming checkpoint gives exactly-once file consumption, and every
-    write is epoch-keyed (see ``dedup_ingest_epoch``) so a crash-replayed
-    epoch overwrites its own output instead of duplicating index rows;
-    with monotone doc ids the accumulated output equals the
-    whole-corpus single_hop dedup at every point in time.
-
-    Index layout: ``<index_dir>/bands`` (id, band, bsig) and
-    ``<index_dir>/shingles`` (id, hashes), one ``__epoch=<id>`` dir per
-    micro-batch under a ``_epochs.json`` live-set manifest — partition/
-    bucket by (band, hash(bsig)) at real scale. Run
-    ``streaming.dedup_index.compact_index(spark, index_dir,
-    through_epoch=<last checkpointed>)`` on a maintenance cadence to
-    fold old epochs into a base dir; otherwise the directory count
-    grows one per batch forever.
-    """
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        dedup_ingest_epoch(
-            spark,
-            batch_df,
-            epoch_id,
-            id_col=id_col,
-            text_col=text_col,
-            index_dir=index_dir,
-            out_dir=out_dir,
-            k=k,
-            n_hashes=n_hashes,
-            bands=bands,
-            verify_threshold=verify_threshold,
-        )
-
-    stream = spark.readStream.schema(schema).parquet(source_path)
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

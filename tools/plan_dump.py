@@ -2,17 +2,13 @@
 
 Plan evidence for the optimization rounds: runs each named query's
 builder from __spark_entry__.queries() at a small sf dir (plan shape is
-scale-independent) and writes plans/<round>/<name>_<suffix>.txt. Run it
+scale-independent) and writes <out>/<name>_<suffix>.txt. Run it
 from a worktree at an older sha with --suffix before to capture the
 pre-change plans, and from HEAD with --suffix after.
 
 Usage:
   python tools/plan_dump.py --names a,b,c --suffix after \
-      [--sf /root/testdata/sf0.01] [--out plans/r07] [--hashed-contam]
-
---hashed-contam additionally dumps the ngram_contamination
-hash_grams=True formulation (not a declared query; the production
-8-byte-key setting) as ngram_contamination_hashed_<suffix>.txt.
+      [--sf SF_DIR] [--out DIR]
 """
 
 from __future__ import annotations
@@ -42,8 +38,7 @@ def main() -> None:
     ap.add_argument("--names", required=True)
     ap.add_argument("--suffix", required=True)
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default=os.path.join(REPO, "plans", "r07"))
-    ap.add_argument("--hashed-contam", action="store_true")
+    ap.add_argument("--out", default=os.path.join(REPO, "plans"))
     args = ap.parse_args()
 
     os.makedirs(args.out, exist_ok=True)
@@ -59,28 +54,6 @@ def main() -> None:
             fh.write(explain_str(df))
         print(f"wrote {path}")
 
-    if args.hashed_contam:
-        from pyspark.sql import functions as F  # noqa: F401
-
-        from timeperiods_spark.operators.tokenstats import ngram_contamination
-
-        # same corpus construction as the declared query, production
-        # hash_grams=True — evidence for the 8-byte-key exchanges
-        import __spark_entry__ as e
-
-        t = e.token_table(spark, e.N_TOKEN_DOCS, with_interval=False)
-        t = t.withColumn("did", F.col("doc_id").cast("long"))
-        train = t.filter(F.col("did") < 1500)
-        test = t.filter(F.col("did") >= 1500).select("doc_id", "tokens")
-        df = ngram_contamination(
-            test, train, "tokens", "doc_id", n=8, hash_grams=True
-        )
-        path = os.path.join(
-            args.out, f"ngram_contamination_hashed_{args.suffix}.txt"
-        )
-        with open(path, "w") as fh:
-            fh.write(explain_str(df))
-        print(f"wrote {path}")
     spark.stop()
 
 

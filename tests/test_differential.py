@@ -4,6 +4,8 @@ interval_weighted_avg_slow_f the same way; README.md:283-291)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 
 from timeperiods_spark import interval_weighted_avg
@@ -177,3 +179,62 @@ def test_iwa_extra_stats_matches_rollup_variance(spark):
 
     for k in a:
         assert a[k] == _pytest.approx(b[k], rel=1e-9, abs=1e-9)
+
+
+def _coverage_frames(spark, date_typed):
+    """y rows no x row reaches: a y group with no x rows, periods
+    wholly before and wholly after their group's x range, a NULL group
+    key, and duplicate y rows (deduplicated with a warning)."""
+    x = spark.createDataFrame(
+        [("a", 10, 14, 1.0), ("a", 15, 19, 2.0), (None, 12, 16, 3.0)],
+        "g string, s int, e int, v double",
+    )
+    y = spark.createDataFrame(
+        [
+            ("a", 0, 5), ("a", 30, 40), ("a", 12, 17), ("a", 12, 17),
+            (None, 0, 3), (None, 14, 20), ("b", 10, 15), ("b", 10, 15),
+        ],
+        "g string, s int, e int",
+    )
+    if date_typed:
+        day = "date_add(DATE'2020-01-01', {})"
+        x = x.selectExpr("g", f"{day.format('s')} AS s", f"{day.format('e')} AS e", "v")
+        y = y.selectExpr("g", f"{day.format('s')} AS s", f"{day.format('e')} AS e")
+    return x, y
+
+
+@pytest.mark.parametrize("date_typed", [False, True])
+@pytest.mark.parametrize("empty_x", [False, True])
+@pytest.mark.parametrize("strategy", ["group_equi", "bin", "broadcast_y"])
+def test_uncovered_periods_come_back_once_zero_filled(
+    spark, strategy, empty_x, date_typed
+):
+    """Every distinct y row comes back exactly once; one that no x
+    interval overlaps carries xduration 0, nobs 0, a NULL mean and NULL
+    xminstart/xmaxend — the same rows the expansion oracle gives."""
+    x, y = _coverage_frames(spark, date_typed)
+    if empty_x:
+        x = x.where("false")
+    kw = {"bin_width": 4} if strategy == "bin" else {}
+    with pytest.warns(UserWarning, match="duplicate"):
+        fast = interval_weighted_avg(
+            x, y, ("s", "e"), ("v",), ("g",), join_strategy=strategy, **kw
+        )
+        slow = interval_weighted_avg_slow(x, y, ("s", "e"), ("v",), ("g",))
+    assert_df_equal(fast, slow, ["g", "s", "e"])
+
+    day = (lambda n: dt.date(2020, 1, 1) + dt.timedelta(n)) if date_typed else int
+    uncovered = {("a", 0, 5), ("a", 30, 40), (None, 0, 3), ("b", 10, 15)}
+    if empty_x:
+        uncovered |= {("a", 12, 17), (None, 14, 20)}
+    uncovered = {(g, day(s), day(e)) for g, s, e in uncovered}
+    rows = fast.collect()
+    keys = [(r["g"], r["s"], r["e"]) for r in rows]
+    assert len(keys) == len(set(keys)) == 6
+    assert uncovered <= set(keys)
+    for r in rows:
+        if (r["g"], r["s"], r["e"]) in uncovered:
+            assert (r["xduration"], r["nobs_v"], r["v"]) == (0, 0, None), r
+            assert (r["xminstart"], r["xmaxend"]) == (None, None), r
+        else:
+            assert r["xduration"] > 0 and r["xminstart"] is not None, r

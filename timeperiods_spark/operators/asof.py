@@ -36,7 +36,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import RoleValidationError
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 
 
 def asof_join(
@@ -192,15 +192,7 @@ def asof_join(
     # by the leading __ot field, skips the NULL structs on query rows,
     # and every non-empty bucket keeps a frame row (so buckets holding
     # only queries still receive the chain).
-    stitched = attach_carry(
-        plan,
-        [F.max("__obs").alias("__bobs")],
-        lambda wg: [
-            F.max("__bobs")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__carry")
-        ],
-    )
+    stitched = attach_carry(plan, [Carry("__carry", "max", "__obs")])
     w = (
         Window.partitionBy(*group_vars, "__bk")
         # third sort key: duplicate observation times within a bucket

@@ -16,8 +16,10 @@ The implementation is Spark-first, NOT a port: the reference's
 range-join (with a selectable physical strategy, see
 :mod:`timeperiods_spark.plans.strategy`) followed by a hash aggregate
 that Catalyst executes with partial (map-side) + final aggregation and
-whole-stage codegen. All expressions are native ``pyspark.sql.functions``
-— no Python UDFs anywhere on this path.
+whole-stage codegen. All expressions are native Spark SQL — no Python
+UDFs anywhere on this path — and each stage is one projection built from
+SQL expression strings (plans/sql.py): composing ``Column`` objects call
+by call costs a py4j round trip per call.
 
 Closed-interval arithmetic: a unit difference is the smallest observable
 increment; duration = end - start + 1 (reference
@@ -31,7 +33,7 @@ import warnings
 from typing import Optional, Sequence
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..errors import (
@@ -41,6 +43,7 @@ from ..errors import (
     RoleValidationError,
 )
 from ..plans.carry import plan_buckets
+from ..plans.sql import ident, sql
 from ..plans.strategy import RequestStats, build_overlap_pairs, request_stats
 
 #: Output column names reserved by the operator
@@ -64,15 +67,20 @@ def _is_intervalish(dtype: T.DataType) -> bool:
     return isinstance(dtype, _INT_TYPES) or isinstance(dtype, T.DateType)
 
 
-def _grid(colname: str, dtype: T.DataType) -> Column:
-    """Normalize an interval endpoint to long grid units.
+def _fields(df: DataFrame) -> dict:
+    """``{column name: data type}``, from one read of ``df``'s schema."""
+    return {f.name: f.dataType for f in df.schema.fields}
+
+
+def _grid(colname: str, dtype: T.DataType) -> str:
+    """SQL normalizing an interval endpoint column to long grid units.
 
     Dates become day counts since 1970-01-01 (the reference treats Date
     as its integer day count, timeperiod_functions.R:52, :491-494)."""
-    c = F.col(colname)
+    c = ident(colname)
     if isinstance(dtype, T.DateType):
-        return F.datediff(c, F.lit(_EPOCH).cast("date")).cast("long")
-    return c.cast("long")
+        return f"CAST(datediff({c}, DATE'{_EPOCH}') AS BIGINT)"
+    return f"CAST({c} AS BIGINT)"
 
 
 def _sweep_checked_end(gs: Column, ge: Column, op: str) -> Column:
@@ -97,21 +105,22 @@ def _sweep_checked_end(gs: Column, ge: Column, op: str) -> Column:
     ).otherwise(ge)
 
 
-def _ungrid(col: Column, dtype: T.DataType) -> Column:
-    """Restore a long grid value to the user-facing endpoint type."""
+def _ungrid(expr: str, dtype: T.DataType) -> str:
+    """SQL restoring a long grid value to the user-facing endpoint type."""
     if isinstance(dtype, T.DateType):
-        return F.date_add(F.lit(_EPOCH).cast("date"), col.cast("int"))
-    return col.cast(dtype)
+        return f"date_add(DATE'{_EPOCH}', CAST({expr} AS INT))"
+    return f"CAST({expr} AS {dtype.simpleString()})"
 
 
 def _validate_roles(
-    x: DataFrame,
-    y: DataFrame,
+    xf: dict,
+    yf: dict,
     interval_vars: Sequence[str],
     value_vars: Sequence[str],
     group_vars: Sequence[str],
 ) -> T.DataType:
-    """Schema-only validation (no Spark action). Returns the interval dtype.
+    """Schema-only validation (no Spark action) against the field maps
+    of x and y (:func:`_fields`). Returns the interval dtype.
 
     Mirrors the reference's checks at timeperiod_functions.R:126-187
     (reserved names, column existence, role disjointness, endpoint types).
@@ -127,19 +136,17 @@ def _validate_roles(
             f"column(s) {reserved} are reserved for the output "
             f"(yduration/xduration/xminstart/xmaxend); rename them"
         )
-    for name, need, df in (
-        ("x", list(group_vars) + list(interval_vars) + list(value_vars), x),
-        ("y", list(group_vars) + list(interval_vars), y),
+    for name, need, fields in (
+        ("x", list(group_vars) + list(interval_vars) + list(value_vars), xf),
+        ("y", list(group_vars) + list(interval_vars), yf),
     ):
-        missing = [c for c in need if c not in df.columns]
+        missing = [c for c in need if c not in fields]
         if missing:
             raise RoleValidationError(f"columns {missing} not present in {name}")
     if len(set(roles)) != len(roles):
         raise RoleValidationError(
             "interval_vars, value_vars and group_vars must be pairwise disjoint"
         )
-    xf = dict(zip(x.schema.names, [f.dataType for f in x.schema.fields]))
-    yf = dict(zip(y.schema.names, [f.dataType for f in y.schema.fields]))
     xs_t, xe_t = xf[interval_vars[0]], xf[interval_vars[1]]
     ys_t, ye_t = yf[interval_vars[0]], yf[interval_vars[1]]
     for t, where in ((xs_t, "x"), (xe_t, "x"), (ys_t, "y"), (ye_t, "y")):
@@ -165,20 +172,19 @@ def _canonical(
     frames — collision-free, side-disjoint names (x ``__g*, __xs, __xe,
     __v*``; y ``__yg*, __ys, __ye``) in long grid units, as the
     reference renames to placeholders (timeperiod_functions.R:229-255)."""
-    ivl_dtype = _validate_roles(x, y, interval_vars, value_vars, group_vars)
+    xf, yf = _fields(x), _fields(y)
+    ivl_dtype = _validate_roles(xf, yf, interval_vars, value_vars, group_vars)
     s, e = interval_vars
-    xf = {f.name: f.dataType for f in x.schema.fields}
-    yf = {f.name: f.dataType for f in y.schema.fields}
-    xw = x.select(
-        *[F.col(g).alias(f"__g{i}") for i, g in enumerate(group_vars)],
-        _grid(s, xf[s]).alias("__xs"),
-        _grid(e, xf[e]).alias("__xe"),
-        *[F.col(v).cast("double").alias(f"__v{i}") for i, v in enumerate(value_vars)],
+    xw = x.selectExpr(
+        *[f"{ident(g)} AS __g{i}" for i, g in enumerate(group_vars)],
+        f"{_grid(s, xf[s])} AS __xs",
+        f"{_grid(e, xf[e])} AS __xe",
+        *[f"CAST({ident(v)} AS DOUBLE) AS __v{i}" for i, v in enumerate(value_vars)],
     )
-    yw = y.select(
-        *[F.col(g).alias(f"__yg{i}") for i, g in enumerate(group_vars)],
-        _grid(s, yf[s]).alias("__ys"),
-        _grid(e, yf[e]).alias("__ye"),
+    yw = y.selectExpr(
+        *[f"{ident(g)} AS __yg{i}" for i, g in enumerate(group_vars)],
+        f"{_grid(s, yf[s])} AS __ys",
+        f"{_grid(e, yf[e])} AS __ye",
     )
     return ivl_dtype, xw, yw
 
@@ -201,26 +207,27 @@ def _overlap_scan(
     ungrouped; bucket boundaries are checked by a lag over the tiny
     per-bucket frame of (first start, max end) — no join back onto x.
     """
-    gcols = list(gcols)
     plan = plan_buckets(
-        xw.where(F.col("__xe") >= F.col("__xs")), gcols, "__xs",
+        xw.where("__xe >= __xs"), gcols, "__xs",
         bounds_hint=bounds_hint, group_count_hint=group_count_hint,
     )
-    w = Window.partitionBy(*gcols, "__bk").orderBy("__xs", "__xe")
-    buckets = (
-        plan.df.withColumn("__o", F.col("__xs") <= F.lag("__xe").over(w))
-        .groupBy(*gcols, "__bk")
-        .agg(
-            F.min("__xs").alias("__fs"),
-            F.max("__xe").alias("__me"),
-            F.count_if("__o").alias("__o"),
-        )
+    keys = ", ".join(gcols)
+    across = (
+        # the bucket's first start against the group's earlier buckets
+        f" + coalesce(CAST(min(__xs) <= lag(max(__xe)) OVER "
+        f"(PARTITION BY {keys or '1'} ORDER BY __bk) AS BIGINT), 0)"
+        if plan.bucketed else ""
     )
-    if plan.bucketed:
-        wb = Window.partitionBy(*(gcols or [F.lit(1)])).orderBy("__bk")
-        across = (F.col("__fs") <= F.lag("__me").over(wb)).cast("long")
-        buckets = buckets.withColumn("__o", F.col("__o") + F.coalesce(across, F.lit(0)))
-    return buckets.agg(F.coalesce(F.sum("__o"), F.lit(0)).alias("ovl"))
+    return sql(
+        f"""SELECT coalesce(sum(__o), 0) AS ovl FROM (
+            SELECT count_if(__o){across} AS __o FROM (
+                SELECT *, __xs <= lag(__xe) OVER (
+                    PARTITION BY {keys + ", " if keys else ""}__bk
+                    ORDER BY __xs, __xe) AS __o
+                FROM {{xs}})
+            GROUP BY {keys + ", " if keys else ""}__bk)""",
+        xs=plan.df,
+    )
 
 
 def _vlog(verbose: bool, msg: str) -> None:
@@ -355,7 +362,7 @@ def interval_weighted_avg(
 
     # Size-gated per-call persists (pure plan reuse, no semantic
     # effect on any VALUE — but see the gate below). yd always has TWO
-    # consumers — the overlap join and the completion join — so
+    # consumers — the overlap join and the filler rows — so
     # unpersisted, the whole y subtree (dedup shuffle included)
     # executes twice. xw gains a second consumer whenever the bin
     # strategy must run its own stats pass to pick a width (no
@@ -409,123 +416,76 @@ def interval_weighted_avg(
         auto_stats=stats or join_stats,
     )
 
-    # clip (O3), weight (O4), per-value weights/products (O5, O6)
-    cs = F.greatest("__xs", "__ys")
-    ce = F.least("__xe", "__ye")
-    dur = (ce - cs + F.lit(1)).alias("__dur")
-    enriched = pairs.select(
-        *ygcols,
-        "__ys",
-        "__ye",
-        cs.alias("__cs"),
-        ce.alias("__ce"),
-        dur,
-        *vcols,
-    ).select(
-        *ygcols,
-        "__ys",
-        "__ye",
-        "__cs",
-        "__ce",
-        "__dur",
-        *[
-            F.when(F.col(vc).isNotNull(), F.col("__dur")).otherwise(F.lit(0)).alias(f"__nm{i}")
-            for i, vc in enumerate(vcols)
-        ],
-        *[(F.col(vc) * F.col("__dur")).alias(f"__p{i}") for i, vc in enumerate(vcols)],
-        *(
-            [
-                (F.col(vc) * F.col(vc) * F.col("__dur")).alias(f"__q{i}")
-                for i, vc in enumerate(vcols)
-            ]
-            if extra_stats
-            else []
-        ),
-    )
-
-    # grouped hash aggregation (O7) — partial+final, whole-stage codegen
-    agg = enriched.groupBy(*ygcols, "__ys", "__ye").agg(
-        F.sum("__dur").alias("__xdur"),
-        *[F.sum(f"__nm{i}").alias(f"__nobs{i}") for i in range(n_v)],
-        *[F.sum(f"__p{i}").alias(f"__sp{i}") for i in range(n_v)],
-        *(
-            [F.sum(f"__q{i}").alias(f"__sq{i}") for i in range(n_v)]
-            if extra_stats
-            else []
-        ),
-        F.min("__cs").alias("__minstart"),
-        F.max("__ce").alias("__maxend"),
-    )
-
-    # completion join (O10): every deduped y row survives, zero-filled.
-    # The agg side is keyed identically; rename to avoid ambiguity.
-    agg_r = agg.select(
-        *[F.col(g).alias(f"__a{g}") for g in ygcols],
-        F.col("__ys").alias("__as"),
-        F.col("__ye").alias("__ae"),
-        "__xdur",
-        *[F.col(f"__nobs{i}") for i in range(n_v)],
-        *[F.col(f"__sp{i}") for i in range(n_v)],
-        *([F.col(f"__sq{i}") for i in range(n_v)] if extra_stats else []),
-        "__minstart",
-        "__maxend",
-    )
-    cond = (F.col("__ys") == F.col("__as")) & (F.col("__ye") == F.col("__ae"))
-    for g in ygcols:
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__a{g}"))
-    joined = yd.join(agg_r, cond, "left")
-
-    ydur = (F.col("__ye") - F.col("__ys") + F.lit(1)).cast("double")
-    # O11 sanity invariant (reference stopifnot, timeperiod_functions.R:337):
-    # overlapped duration can never exceed the period length. Threaded
-    # through the output column (a dropped assert would be pruned); fires
-    # at runtime, e.g. if a caller bypasses the overlap check on
-    # overlapping x. Costs one comparison per output row.
-    xdur_raw = F.coalesce(F.col("__xdur"), F.lit(0)).cast("long")
-    xdur = F.when(
-        F.assert_true(
-            xdur_raw <= ydur,
-            F.lit("internal invariant violated: xduration > yduration "
-                  "(overlapping x intervals slipped past the check?)"),
-        ).isNull(),
-        xdur_raw,
-    )
-    req = F.lit(float(required_percentage))
-
-    out_cols: list[Column] = []
-    for g, orig in zip(ygcols, group_vars):
-        out_cols.append(F.col(g).alias(orig))
-    out_cols.append(_ungrid(F.col("__ys"), ivl_dtype).alias(interval_vars[0]))
-    out_cols.append(_ungrid(F.col("__ye"), ivl_dtype).alias(interval_vars[1]))
-    for i, v in enumerate(value_vars):
-        nobs = F.coalesce(F.col(f"__nobs{i}"), F.lit(0))
-        mean = F.col(f"__sp{i}") / nobs  # 0/0 and NULL/0 → NULL (R NaN→NULL)
-        masked = F.when(F.lit(100.0) * nobs / ydur < req, F.lit(None)).otherwise(mean)
-        out_cols.append(masked.cast("double").alias(v))
+    # One statement from the pairs to the output: clip (O3), weight
+    # (O4), per-value weights/products (O5, O6); every deduped y row
+    # joins as a zero-weight filler (O10), so an uncovered period comes
+    # out of the grouped hash aggregation (O7, partial+final, codegen)
+    # with xduration/nobs 0 and NULL sums and bounds — no completion
+    # join; then the output projection.
+    keys = ", ".join([*ygcols, "__ys", "__ye"])
+    moments = [("nm", "IF({v} IS NULL, 0, __dur)"), ("p", "{v} * __dur")]
     if extra_stats:
+        moments.append(("q", "{v} * {v} * __dur"))
+    weighted = [
+        f"{expr.format(v=v)} AS __{m}{i}" for m, expr in moments
+        for i, v in enumerate(vcols)
+    ]
+    fillers = ["0" if m == "nm" else "NULL" for m, _ in moments for _ in vcols]
+    sums = ["sum(__dur) AS __xdur"] + [
+        f"sum(__{m}{i}) AS __s{m}{i}" for m, _ in moments for i in range(n_v)
+    ]
+
+    ydur = "CAST(__ye - __ys + 1 AS DOUBLE)"
+
+    def masked(stat: str, name: str, i: int) -> str:
+        # masked NULL below required_percentage coverage
+        return f"IF(100.0D * __snm{i} / {ydur} < :req, NULL, {stat}) AS {ident(name)}"
+
+    # 0/0 and NULL/0 → NULL (R NaN→NULL)
+    means = [f"(__sp{i} / __snm{i})" for i in range(n_v)]
+    out_cols = [
+        *[f"__yg{i} AS {ident(g)}" for i, g in enumerate(group_vars)],
+        f"{_ungrid('__ys', ivl_dtype)} AS {ident(interval_vars[0])}",
+        f"{_ungrid('__ye', ivl_dtype)} AS {ident(interval_vars[1])}",
+        *[masked(m, v, i) for i, (m, v) in enumerate(zip(means, value_vars))],
         # time-weighted population variance from the second moment,
         # masked identically to the mean (beyond-reference; the tier
         # path's rollup_regular(extra_stats=) is the regular-grid twin)
-        for i, v in enumerate(value_vars):
-            nobs = F.coalesce(F.col(f"__nobs{i}"), F.lit(0))
-            mean = F.col(f"__sp{i}") / nobs
-            var = F.col(f"__sq{i}") / nobs - mean * mean
-            out_cols.append(
-                F.when(F.lit(100.0) * nobs / ydur < req, F.lit(None))
-                .otherwise(var)
-                .cast("double")
-                .alias(f"{v}_var")
-            )
-    out_cols.append(ydur.alias("yduration"))
-    out_cols.append(xdur.alias("xduration"))
-    for i, v in enumerate(value_vars):
-        out_cols.append(
-            F.coalesce(F.col(f"__nobs{i}"), F.lit(0)).cast("long").alias(f"nobs_{v}")
-        )
-    out_cols.append(_ungrid(F.col("__minstart"), ivl_dtype).alias("xminstart"))
-    out_cols.append(_ungrid(F.col("__maxend"), ivl_dtype).alias("xmaxend"))
-
-    out = joined.select(*out_cols)
+        *[
+            masked(f"__sq{i} / __snm{i} - {m} * {m}", f"{v}_var", i)
+            for i, (m, v) in enumerate(zip(means, value_vars))
+            if extra_stats
+        ],
+        f"{ydur} AS yduration",
+        # O11 sanity invariant (reference stopifnot,
+        # timeperiod_functions.R:337): overlapped duration can never
+        # exceed the period length. Threaded through the output column
+        # (a dropped assert would be pruned); fires at runtime, e.g. if
+        # a caller bypasses the overlap check on overlapping x.
+        f"IF(assert_true(__xdur <= {ydur}, 'internal invariant violated: "
+        "xduration > yduration (overlapping x intervals slipped past the "
+        "check?)') IS NULL, __xdur, NULL) AS xduration",
+        *[f"__snm{i} AS {ident('nobs_' + v)}" for i, v in enumerate(value_vars)],
+        f"{_ungrid('__minstart', ivl_dtype)} AS xminstart",
+        f"{_ungrid('__maxend', ivl_dtype)} AS xmaxend",
+    ]
+    out = sql(
+        f"""SELECT {", ".join(out_cols)} FROM (
+            SELECT {keys}, {", ".join(sums)},
+                   min(__cs) AS __minstart, max(__ce) AS __maxend
+            FROM (
+                SELECT {keys}, __cs, __ce, __dur, {", ".join(weighted)} FROM (
+                    SELECT *, greatest(__xs, __ys) AS __cs,
+                           least(__xe, __ye) AS __ce,
+                           least(__xe, __ye) - greatest(__xs, __ys) + 1 AS __dur
+                    FROM {{pairs}})
+                UNION ALL
+                SELECT {keys}, NULL, NULL, 0, {", ".join(fillers)} FROM {{yd}})
+            GROUP BY {keys})""",
+        {"req": float(required_percentage)},
+        pairs=pairs,
+        yd=yd,
+    )
     if sort_output:
         # O14: the reference returns keyed by (group, start, end)
         # (timeperiod_functions.R:310, :521). Opt-in here — a global

@@ -73,8 +73,8 @@ def interval_weighted_avg_slow(
     out_cols: list[Column] = []
     for g, orig in zip(ygcols, group_vars):
         out_cols.append(F.col(g).alias(orig))
-    out_cols.append(_ungrid(F.col("__ys"), ivl_dtype).alias(interval_vars[0]))
-    out_cols.append(_ungrid(F.col("__ye"), ivl_dtype).alias(interval_vars[1]))
+    out_cols.append(F.expr(_ungrid("__ys", ivl_dtype)).alias(interval_vars[0]))
+    out_cols.append(F.expr(_ungrid("__ye", ivl_dtype)).alias(interval_vars[1]))
     ydur = F.col("__ydur").cast("double")
     for i, v in enumerate(value_vars):
         masked = F.when(
@@ -85,6 +85,6 @@ def interval_weighted_avg_slow(
     out_cols.append(F.col("__xdur").cast("long").alias("xduration"))
     for i, v in enumerate(value_vars):
         out_cols.append(F.col(f"__nobs{i}").cast("long").alias(f"nobs_{v}"))
-    out_cols.append(_ungrid(F.col("__minstart"), ivl_dtype).alias("xminstart"))
-    out_cols.append(_ungrid(F.col("__maxend"), ivl_dtype).alias("xmaxend"))
+    out_cols.append(F.expr(_ungrid("__minstart", ivl_dtype)).alias("xminstart"))
+    out_cols.append(F.expr(_ungrid("__maxend", ivl_dtype)).alias("xmaxend"))
     return agg.select(*out_cols)

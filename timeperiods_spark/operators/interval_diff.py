@@ -22,7 +22,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import IntervalValidationError, RoleValidationError
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 from .interval_avg import _grid, _is_intervalish, _sweep_checked_end, _ungrid
 
 
@@ -30,12 +30,12 @@ def _deltas(df, interval_vars, group_vars, gcols, which: str):
     xf = {f.name: f.dataType for f in df.schema.fields}
     base = df.select(
         *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__s"),
+        F.expr(_grid(interval_vars[0], xf[interval_vars[0]])).alias("__s"),
         # row-local guard: NULL/reversed intervals raise in the first
         # scan instead of silently corrupting the coverage sweep
         _sweep_checked_end(
-            _grid(interval_vars[0], xf[interval_vars[0]]),
-            _grid(interval_vars[1], xf[interval_vars[1]]),
+            F.expr(_grid(interval_vars[0], xf[interval_vars[0]])),
+            F.expr(_grid(interval_vars[1], xf[interval_vars[1]])),
             "interval_difference",
         ).alias("__e"),
     )
@@ -100,14 +100,8 @@ def interval_difference(
         )
 
     plan = plan_buckets(deltas, gcols, "__pos", group_count_hint=group_count_hint)
-    excl = lambda wg: wg.rowsBetween(Window.unboundedPreceding, -1)  # noqa: E731
     stitched = attach_carry(
-        plan,
-        [F.sum("__dx").alias("__bx"), F.sum("__dy").alias("__by")],
-        lambda wg: [
-            F.sum("__bx").over(excl(wg)).alias("__cx"),
-            F.sum("__by").over(excl(wg)).alias("__cy"),
-        ],
+        plan, [Carry("__cx", "sum", "__dx"), Carry("__cy", "sum", "__dy")]
     )
     w = Window.partitionBy(*gcols, "__bk").orderBy("__pos")
     wsum = w.rowsBetween(Window.unboundedPreceding, 0)
@@ -130,11 +124,7 @@ def interval_difference(
         ),
         bounds_hint=(plan.lo, plan.hi) if plan.lo is not None else None,
     )
-    stitched2 = attach_carry(
-        plan2,
-        [F.sum("__st").alias("__bst")],
-        lambda wg: [F.sum("__bst").over(excl(wg)).alias("__cst")],
-    )
+    stitched2 = attach_carry(plan2, [Carry("__cst", "sum", "__st")])
     island = (
         F.sum("__st").over(
             Window.partitionBy(*gcols, "__bk").orderBy("__pos")
@@ -157,8 +147,8 @@ def interval_difference(
     )
     return out.select(
         *[F.col(gc).alias(g) for gc, g in zip(gcols, group_vars)],
-        _ungrid(F.col("__s"), s_t).alias(interval_vars[0]),
-        _ungrid(F.col("__e"), s_t).alias(interval_vars[1]),
+        F.expr(_ungrid("__s", s_t)).alias(interval_vars[0]),
+        F.expr(_ungrid("__e", s_t)).alias(interval_vars[1]),
     )
 
 
@@ -181,8 +171,8 @@ def find_gaps(
     # read off interval_difference's x side)
     s_t = {f.name: f.dataType for f in x.schema.fields}[interval_vars[0]]
     full = spark.range(1).select(
-        _ungrid(F.lit(lo), s_t).alias(interval_vars[0]),
-        _ungrid(F.lit(hi), s_t).alias(interval_vars[1]),
+        F.expr(_ungrid(str(lo), s_t)).alias(interval_vars[0]),
+        F.expr(_ungrid(str(hi), s_t)).alias(interval_vars[1]),
     )
     if group_vars:
         full = x.select(*group_vars).dropDuplicates().crossJoin(full)

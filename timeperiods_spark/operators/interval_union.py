@@ -23,7 +23,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import IntervalValidationError, RoleValidationError
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 from .interval_avg import _grid, _is_intervalish, _sweep_checked_end, _ungrid
 
 
@@ -54,10 +54,10 @@ def merge_intervals(
     gcols = [f"__g{i}" for i in range(len(group_vars))]
     base = x.select(
         *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
+        F.expr(_grid(interval_vars[0], xf[interval_vars[0]])).alias("__xs"),
         _sweep_checked_end(
-            _grid(interval_vars[0], xf[interval_vars[0]]),
-            _grid(interval_vars[1], xf[interval_vars[1]]),
+            F.expr(_grid(interval_vars[0], xf[interval_vars[0]])),
+            F.expr(_grid(interval_vars[1], xf[interval_vars[1]])),
             "merge_intervals",
         ).alias("__xe"),
     )
@@ -94,12 +94,7 @@ def merge_intervals(
     plan = plan_buckets(
         deltas, gcols, "__pos", group_count_hint=group_count_hint
     )
-    excl = lambda wg: wg.rowsBetween(Window.unboundedPreceding, -1)  # noqa: E731
-    stitched = attach_carry(
-        plan,
-        [F.sum("__d").alias("__bd")],
-        lambda wg: [F.sum("__bd").over(excl(wg)).alias("__cd")],
-    )
+    stitched = attach_carry(plan, [Carry("__cd", "sum", "__d")])
     w = Window.partitionBy(*gcols, "__bk").orderBy("__pos")
     wsum = w.rowsBetween(Window.unboundedPreceding, 0)
     rc = F.sum("__d").over(wsum) + F.coalesce("__cd", F.lit(0))
@@ -124,11 +119,7 @@ def merge_intervals(
         ),
         bounds_hint=(plan.lo, plan.hi) if plan.lo is not None else None,
     )
-    stitched2 = attach_carry(
-        plan2,
-        [F.sum("__st").alias("__bst")],
-        lambda wg: [F.sum("__bst").over(excl(wg)).alias("__cst")],
-    )
+    stitched2 = attach_carry(plan2, [Carry("__cst", "sum", "__st")])
     island = (
         F.sum("__st").over(
             Window.partitionBy(*gcols, "__bk").orderBy("__pos")
@@ -146,7 +137,7 @@ def merge_intervals(
     )
     return out.select(
         *[F.col(gc).alias(g) for gc, g in zip(gcols, group_vars)],
-        _ungrid(F.col("__s"), s_t).alias(interval_vars[0]),
-        _ungrid(F.col("__e"), s_t).alias(interval_vars[1]),
+        F.expr(_ungrid("__s", s_t)).alias(interval_vars[0]),
+        F.expr(_ungrid("__e", s_t)).alias(interval_vars[1]),
         "n_source_intervals",
     )

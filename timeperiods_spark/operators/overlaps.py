@@ -11,7 +11,8 @@ preprocessing step that turns overlapping raw measurements into legal
 
 Spark-first shape: the melt is a union of two projections, the sweep is
 a single window (one shuffle by group), and the join-back reuses the
-pluggable range-join strategies — every step is a native DataFrame op.
+pluggable range-join strategies — every step is native Spark SQL, built
+as one projection per stage from expression strings (plans/sql.py).
 """
 
 from __future__ import annotations
@@ -23,19 +24,18 @@ from pyspark.sql import DataFrame, Row, Window, functions as F
 from pyspark.sql import types as T
 
 from ..errors import IntervalValidationError, OverlapError, RoleValidationError
+from ..plans.sql import ident, sql
 from ..plans.strategy import build_overlap_pairs, request_stats
-from .interval_avg import _grid, _is_intervalish, _ungrid
+from .interval_avg import _fields, _grid, _is_intervalish, _ungrid
 
 
-def _normalize(
-    x: DataFrame, interval_vars: Sequence[str], group_vars: Sequence[str]
-):
+def _normalize(xf: dict, interval_vars: Sequence[str], group_vars: Sequence[str]):
+    """Validate the roles against x's field map; the interval dtype."""
     if len(interval_vars) != 2:
         raise RoleValidationError("interval_vars must name exactly (start, end)")
-    missing = [c for c in list(interval_vars) + list(group_vars) if c not in x.columns]
+    missing = [c for c in list(interval_vars) + list(group_vars) if c not in xf]
     if missing:
         raise RoleValidationError(f"columns {missing} not present in x")
-    xf = {f.name: f.dataType for f in x.schema.fields}
     s_t, e_t = xf[interval_vars[0]], xf[interval_vars[1]]
     if not (_is_intervalish(s_t) and _is_intervalish(e_t)):
         raise IntervalValidationError("interval_vars must be integer or date columns")
@@ -44,13 +44,20 @@ def _normalize(
     return s_t
 
 
-def _lead_with_boundary_handoff(
-    melted: DataFrame, gcols: Sequence[str], bounds_hint: tuple, group_count_hint: int
+def _atomic_pieces(
+    base: DataFrame, gcols: Sequence[str], bounds_hint: tuple, group_count_hint: int
 ) -> DataFrame:
-    """lead(__is_end), lead(__val) over (gcols…, __val, __is_end) order
-    WITHOUT a per-group window: bucket the value axis deterministically,
-    lead within (group, bucket), stitch bucket boundaries from each
-    bucket's first row.
+    """The atomic pieces of ``base``'s intervals as a y frame (``__yg*,
+    __ys, __ye``): melt (O21), sweep (O22) and boundary reconstruction
+    (O23).
+
+    The sweep leads (is_end, value) over (gcols…, value, is_end) order
+    WITHOUT a per-group window — a window partitioned by the group
+    columns caps the sweep at ONE TASK PER GROUP (one task total when
+    ungrouped), so a dense 5-group panel would serialize the whole
+    event stream. Instead it buckets the value axis deterministically,
+    leads within (group, bucket), and stitches bucket boundaries from
+    each bucket's first row.
 
     Buckets are ``floor((val - lo) / W)`` with W derived from the
     observed value range — purely a function of the ROW, unlike
@@ -63,9 +70,15 @@ def _lead_with_boundary_handoff(
     (each group's final event) are filtered, matching the plain-window
     formulation. Given the hints, planning runs no action; an empty or
     all-NULL stream flows through and yields no rows."""
-    from ..plans.carry import attach_carry, plan_buckets
+    from ..plans.carry import Carry, attach_carry, plan_buckets
 
     gcols = list(gcols)
+    keys = "".join(f"{g}, " for g in gcols)
+    melted = sql(
+        f"""SELECT {keys}__xs AS __val, false AS __is_end FROM {{base}}
+        UNION ALL SELECT {keys}__xe, true FROM {{base}}""",
+        base=base,
+    )
     plan = plan_buckets(
         melted, gcols, "__val",
         bounds_hint=bounds_hint, group_count_hint=group_count_hint,
@@ -81,25 +94,30 @@ def _lead_with_boundary_handoff(
     # Unpack via shiftright (floor-div-2, exact for negatives) and
     # bit 0. Bound: |val| < 2^62 or the *2 trips ANSI overflow — far
     # above the engine's stated exact grid range.
-    packed = F.col("__val") * F.lit(2) + F.col("__is_end").cast("long")
     stitched = attach_carry(
-        plan,
-        [F.min(packed).alias("__fp")],
-        lambda wg: [F.lead("__fp").over(wg).alias("__hp")],
+        plan, [Carry("__hp", "min", "__val * 2 + CAST(__is_end AS BIGINT)", "next")]
     )
-    h_end = F.when(
-        F.col("__hp").isNotNull(), F.col("__hp").bitwiseAND(F.lit(1)) == 1
+    # O22: False sorts before True, so a start at value v precedes an
+    # end at v, matching the reference's setorderv
+    # (timeperiod_functions.R:559). O23 (timeperiod_functions.R:568-573):
+    # piece start = value at a start-point, value+1 after an end-point;
+    # piece end = next_value-1 before a start-point, next_value at an end.
+    return sql(
+        f"""SELECT {"".join(f"__g{i} AS __yg{i}, " for i in range(len(gcols)))}__as AS __ys,
+               __ae AS __ye
+        FROM (
+            SELECT {keys}IF(__is_end, __val + 1, __val) AS __as,
+                   IF(__next_end, __next_val, __next_val - 1) AS __ae
+            FROM (
+                SELECT {keys}__val, __is_end,
+                       coalesce(lead(__is_end) OVER w, (__hp & 1) = 1) AS __next_end,
+                       coalesce(lead(__val) OVER w, shiftright(__hp, 1)) AS __next_val
+                FROM {{swept}}
+                WINDOW w AS (PARTITION BY {keys}__bk ORDER BY __val, __is_end))
+            WHERE __next_end IS NOT NULL)
+        WHERE __ae >= __as""",
+        swept=stitched,
     )
-    h_val = F.shiftright(F.col("__hp"), 1)
-    w = Window.partitionBy(*gcols, "__bk").orderBy("__val", "__is_end")
-    out = stitched.select(
-        *gcols,
-        "__val",
-        "__is_end",
-        F.coalesce(F.lead("__is_end").over(w), h_end).alias("__next_end"),
-        F.coalesce(F.lead("__val").over(w), h_val).alias("__next_val"),
-    )
-    return out.filter(F.col("__next_end").isNotNull())
 
 
 def remove_overlaps(
@@ -138,13 +156,13 @@ def remove_overlaps(
     high-cardinality, short-panel groups.
     """
     group_vars = list(group_vars or [])
-    ivl_dtype = _normalize(x, interval_vars, group_vars)
+    xf = _fields(x)
+    ivl_dtype = _normalize(xf, interval_vars, group_vars)
     n_g = len(group_vars)
     gcols = [f"__g{i}" for i in range(n_g)]
-    ygcols = [f"__yg{i}" for i in range(n_g)]
 
     payload = (
-        [c for c in x.columns if c not in group_vars and c not in interval_vars]
+        [c for c in xf if c not in group_vars and c not in interval_vars]
         if keep_values
         else []
     )
@@ -158,12 +176,12 @@ def remove_overlaps(
             "timeperiod_functions.R:534-539)"
         )
 
-    xf = {f.name: f.dataType for f in x.schema.fields}
-    base = x.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
-        _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
-        *[F.col(c).alias(f"__p{i}") for i, c in enumerate(payload)],
+    s, e = interval_vars
+    base = x.selectExpr(
+        *[f"{ident(g)} AS {gc}" for g, gc in zip(group_vars, gcols)],
+        f"{_grid(s, xf[s])} AS __xs",
+        f"{_grid(e, xf[e])} AS __xe",
+        *[f"{ident(c)} AS __p{i}" for i, c in enumerate(payload)],
     )
     # base feeds four subtrees (the stats pass, per-bucket leads, bucket
     # firsts, and the join-back): persist so the upstream input is
@@ -181,55 +199,25 @@ def remove_overlaps(
     stats = request_stats(base, None, n_g, distinct=False)
     x = stats.x
 
-    # O21 — melt endpoints into a long event stream
-    melted = base.select(*gcols, F.col("__xs").alias("__val"), F.lit(False).alias("__is_end")).unionByName(
-        base.select(*gcols, F.col("__xe").alias("__val"), F.lit(True).alias("__is_end"))
-    )
-
-    # O22 — order (value, is_end) within group; lead flag + value.
-    # False sorts before True, so a start at value v precedes an end at v,
-    # matching the reference's setorderv (timeperiod_functions.R:559).
-    #
-    # Parallelism: a window partitioned by the group columns caps the
-    # sweep at ONE TASK PER GROUP (and one task total when ungrouped) —
-    # a dense 5-group panel would serialize the whole event stream.
-    # Instead the lead() runs within (group…, value-bucket) and bucket
-    # boundaries are stitched from a tiny per-bucket handoff frame
-    # (_lead_with_boundary_handoff, built on plans/carry.py).
-    swept = _lead_with_boundary_handoff(melted, gcols, (x.lo or 0, x.hi or 0), x.groups)
-
-    # O23 — boundary reconstruction (timeperiod_functions.R:568-573):
-    # piece start = value at a start-point, value+1 after an end-point;
-    # piece end = next_value-1 before a start-point, next_value at an end.
-    atomic = swept.select(
-        *gcols,
-        F.when(~F.col("__is_end"), F.col("__val")).otherwise(F.col("__val") + 1).alias("__as"),
-        F.when(~F.col("__next_end"), F.col("__next_val") - 1).otherwise(F.col("__next_val")).alias("__ae"),
-    ).filter(F.col("__ae") >= F.col("__as"))
+    yw = _atomic_pieces(base, gcols, (x.lo or 0, x.hi or 0), x.groups)
 
     # O24 — tag each atomic piece with every original interval covering
     # it. Reuse the range-join strategies: originals are the x side,
     # atomic pieces the y side.
-    yw = atomic.select(
-        *[F.col(g).alias(yg) for g, yg in zip(gcols, ygcols)],
-        F.col("__as").alias("__ys"),
-        F.col("__ae").alias("__ye"),
-    )
     # <= 2 atomic pieces per original: ny is exact, trusted (no recheck)
     pairs = build_overlap_pairs(
         base, yw, n_g, strategy=join_strategy, bin_width=bin_width,
         auto_stats=replace(stats, y=Row(n=2 * x.n)),
     )
 
-    out = pairs.select(
-        *[F.col(yg).alias(orig) for yg, orig in zip(ygcols, group_vars)],
-        _ungrid(F.col("__ys"), ivl_dtype).alias(interval_vars[0]),
-        _ungrid(F.col("__ye"), ivl_dtype).alias(interval_vars[1]),
-        _ungrid(F.col("__xs"), ivl_dtype).alias(f"o_{interval_vars[0]}"),
-        _ungrid(F.col("__xe"), ivl_dtype).alias(f"o_{interval_vars[1]}"),
-        *[F.col(f"__p{i}").alias(c) for i, c in enumerate(payload)],
+    return pairs.selectExpr(
+        *[f"__yg{i} AS {ident(g)}" for i, g in enumerate(group_vars)],
+        f"{_ungrid('__ys', ivl_dtype)} AS {ident(s)}",
+        f"{_ungrid('__ye', ivl_dtype)} AS {ident(e)}",
+        f"{_ungrid('__xs', ivl_dtype)} AS {ident('o_' + s)}",
+        f"{_ungrid('__xe', ivl_dtype)} AS {ident('o_' + e)}",
+        *[f"__p{i} AS {ident(c)}" for i, c in enumerate(payload)],
     )
-    return out
 
 
 def check_no_overlaps(
@@ -248,13 +236,14 @@ def check_no_overlaps(
     endpoint IS an overlap). No join.
     """
     group_vars = list(group_vars or [])
-    _normalize(x, interval_vars, group_vars)
-    xf = {f.name: f.dataType for f in x.schema.fields}
+    xf = _fields(x)
+    _normalize(xf, interval_vars, group_vars)
     gcols = [f"__g{i}" for i in range(len(group_vars))]
-    base = x.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(interval_vars[0], xf[interval_vars[0]]).alias("__xs"),
-        _grid(interval_vars[1], xf[interval_vars[1]]).alias("__xe"),
+    s, e = interval_vars
+    base = x.selectExpr(
+        *[f"{ident(g)} AS {gc}" for g, gc in zip(group_vars, gcols)],
+        f"{_grid(s, xf[s])} AS __xs",
+        f"{_grid(e, xf[e])} AS __xe",
     )
     # bucketed adjacency scan (interval_avg._overlap_scan): parallelism
     # independent of group cardinality
@@ -317,7 +306,7 @@ def running_max(
         )
         return df.withColumn(out_name, F.max(col).over(w))
 
-    from ..plans.carry import attach_carry, plan_buckets
+    from ..plans.carry import Carry, attach_carry, plan_buckets
 
     grid_t = "__rm_t"
     # DATE->BIGINT casts are forbidden (ANSI); unix_date gives the
@@ -334,15 +323,7 @@ def running_max(
             Window.partitionBy(*(group_by or [F.lit(1)])).orderBy(*order_by)
             .rowsBetween(Window.unboundedPreceding, 0)
         ))
-    stitched = attach_carry(
-        plan,
-        [F.max(col).alias("__bmax")],
-        lambda wg: [
-            F.max("__bmax")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__carry_max")
-        ],
-    )
+    stitched = attach_carry(plan, [Carry("__carry_max", "max", ident(col))])
     w = Window.partitionBy(*group_by, "__bk").orderBy(*order_by).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -389,27 +370,26 @@ def overlap_join(
         if missing:
             raise RoleValidationError(f"{side} is missing columns {missing}")
     s_col, e_col = interval_vars
-    xf = {f.name: f.dataType for f in x.schema.fields}
-    yf = {f.name: f.dataType for f in y.schema.fields}
+    xf, yf = _fields(x), _fields(y)
     dtype = xf[s_col]
 
     n_g = len(group_vars)
     gcols = [f"__g{i}" for i in range(n_g)]
     ygcols = [f"__yg{i}" for i in range(n_g)]
-    x_pay = [c for c in x.columns if c not in (*interval_vars, *group_vars)]
-    y_pay = [c for c in y.columns if c not in (*interval_vars, *group_vars)]
+    x_pay = [c for c in xf if c not in (*interval_vars, *group_vars)]
+    y_pay = [c for c in yf if c not in (*interval_vars, *group_vars)]
 
-    xw = x.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, gcols)],
-        _grid(s_col, xf[s_col]).alias("__xs"),
-        _grid(e_col, xf[e_col]).alias("__xe"),
-        *[F.col(c).alias(f"__xp{i}") for i, c in enumerate(x_pay)],
+    xw = x.selectExpr(
+        *[f"{ident(g)} AS {gc}" for g, gc in zip(group_vars, gcols)],
+        f"{_grid(s_col, xf[s_col])} AS __xs",
+        f"{_grid(e_col, xf[e_col])} AS __xe",
+        *[f"{ident(c)} AS __xp{i}" for i, c in enumerate(x_pay)],
     )
-    yw = y.select(
-        *[F.col(g).alias(gc) for g, gc in zip(group_vars, ygcols)],
-        _grid(s_col, yf[s_col]).alias("__ys"),
-        _grid(e_col, yf[e_col]).alias("__ye"),
-        *[F.col(c).alias(f"__yp{i}") for i, c in enumerate(y_pay)],
+    yw = y.selectExpr(
+        *[f"{ident(g)} AS {gc}" for g, gc in zip(group_vars, ygcols)],
+        f"{_grid(s_col, yf[s_col])} AS __ys",
+        f"{_grid(e_col, yf[e_col])} AS __ye",
+        *[f"{ident(c)} AS __yp{i}" for i, c in enumerate(y_pay)],
     )
     pairs = build_overlap_pairs(
         xw, yw, n_g,
@@ -426,41 +406,30 @@ def overlap_join(
 
     # how="left": unmatched x rows reach here with NULL __ys/__ye (the
     # strategy layer preserves x inside the join itself — no anti join,
-    # no second scan of x; same completion shape as the rollup's O10,
-    # interval_avg.py). greatest/least IGNORE NULLs (they'd fabricate
-    # overlap bounds from the x side alone), so the clip columns are
-    # NULL-guarded on the unmatched sentinel.
-    unmatched = F.col("__ys").isNull()
-
-    def _clip(expr, out_type):
-        if how == "inner":
-            return expr.cast(out_type) if out_type == "long" else expr
-        guarded = F.when(unmatched, F.lit(None)).otherwise(expr)
-        return guarded.cast(out_type) if out_type == "long" else guarded
+    # no second scan of x). greatest/least IGNORE NULLs (they'd
+    # fabricate overlap bounds from the x side alone), so the clip
+    # columns are NULL-guarded on the unmatched sentinel.
+    def _clip(expr: str) -> str:
+        return expr if how == "inner" else f"IF(__ys IS NULL, NULL, {expr})"
 
     # interval columns always suffixed per side (they collide by
     # construction)
-    cols = [
-        *[F.col(gc).alias(g) for g, gc in zip(group_vars, ygcols)],
-        _ungrid(F.col("__xs"), dtype).alias(f"{s_col}{sx}"),
-        _ungrid(F.col("__xe"), dtype).alias(f"{e_col}{sx}"),
-        _ungrid(F.col("__ys"), dtype).alias(f"{s_col}{sy}"),
-        _ungrid(F.col("__ye"), dtype).alias(f"{e_col}{sy}"),
+    return pairs.selectExpr(
+        *[f"{gc} AS {ident(g)}" for g, gc in zip(group_vars, ygcols)],
+        f"{_ungrid('__xs', dtype)} AS {ident(s_col + sx)}",
+        f"{_ungrid('__xe', dtype)} AS {ident(e_col + sx)}",
+        f"{_ungrid('__ys', dtype)} AS {ident(s_col + sy)}",
+        f"{_ungrid('__ye', dtype)} AS {ident(e_col + sy)}",
         *[
-            F.col(f"__xp{i}").alias(_out_name(c, y_names, sx))
+            f"__xp{i} AS {ident(_out_name(c, y_names, sx))}"
             for i, c in enumerate(x_pay)
         ],
         *[
-            F.col(f"__yp{i}").alias(_out_name(c, x_names, sy))
+            f"__yp{i} AS {ident(_out_name(c, x_names, sy))}"
             for i, c in enumerate(y_pay)
         ],
-        _clip(_ungrid(F.greatest("__xs", "__ys"), dtype), "any")
-        .alias("overlap_start"),
-        _clip(_ungrid(F.least("__xe", "__ye"), dtype), "any")
-        .alias("overlap_end"),
-        _clip(
-            F.least("__xe", "__ye") - F.greatest("__xs", "__ys") + F.lit(1),
-            "long",
-        ).alias("overlap_duration"),
-    ]
-    return pairs.select(*cols)
+        _clip(_ungrid("greatest(__xs, __ys)", dtype)) + " AS overlap_start",
+        _clip(_ungrid("least(__xe, __ye)", dtype)) + " AS overlap_end",
+        _clip("CAST(least(__xe, __ye) - greatest(__xs, __ys) + 1 AS BIGINT)")
+        + " AS overlap_duration",
+    )

@@ -30,7 +30,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 
 
 def _sequence_offsets(
@@ -94,11 +94,7 @@ def _sequence_offsets(
         bounds_hint=hints.get("span"),
     )
     excl = lambda wg: wg.rowsBetween(Window.unboundedPreceding, -1)  # noqa: E731
-    stitched = attach_carry(
-        plan,
-        [F.sum("__len").alias("__bsum")],
-        lambda wg: [F.sum("__bsum").over(excl(wg)).alias("__carry")],
-    )
+    stitched = attach_carry(plan, [Carry("__carry", "sum", "__len")])
     order_keys = ["__t"]
     if tiebreak_col and tiebreak_col != order_col:
         order_keys.append(tiebreak_col)

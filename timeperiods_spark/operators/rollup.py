@@ -33,6 +33,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..errors import RoleValidationError
+from ..plans.sql import ident
 
 PARTIAL_COLS = ("xduration", "xminstart", "xmaxend")
 
@@ -579,7 +580,7 @@ def _rollup_sweep_unit(
     # per-bucket carries from plans/carry.py: running sums carry the
     # exclusive-prefix bucket totals, and each bucket's last row takes
     # its lead(period) from the next non-empty bucket's first period.
-    from ..plans.carry import attach_carry, plan_buckets
+    from ..plans.carry import Carry, attach_carry, plan_buckets
 
     sum_cols = ["__dc"] + [f"__dn_{v}" for v in value_vars] + [
         f"__ds_{v}" for v in value_vars
@@ -602,15 +603,10 @@ def _rollup_sweep_unit(
         # one row per (group, period) by construction (post-aggregate)
         rows_bounded_by_domain=True,
     )
-    excl = lambda wg: wg.rowsBetween(_W.unboundedPreceding, -1)  # noqa: E731
     stitched = attach_carry(
         plan,
-        [F.sum(c).alias(f"__b_{c}") for c in sum_cols]
-        + [F.min("period").alias("__bfirst")],
-        lambda wg: [
-            *[F.sum(f"__b_{c}").over(excl(wg)).alias(f"__c_{c}") for c in sum_cols],
-            F.lead("__bfirst").over(wg).alias("__h_next"),
-        ],
+        [Carry(f"__c_{c}", "sum", ident(c)) for c in sum_cols]
+        + [Carry("__h_next", "min", "period", "next")],
     )
     w = _W.partitionBy(*group_vars, "__bk").orderBy("period")
     wsum = w.rowsBetween(_W.unboundedPreceding, 0)
@@ -895,6 +891,14 @@ def _dense_scaffold_join(
     return joined, span
 
 
+def _obs_struct_sql(v: str) -> str:
+    """(period, value) struct of a non-NULL ``v``, else NULL (SQL)."""
+    return (
+        f"CASE WHEN {ident(v)} IS NOT NULL "
+        f"THEN named_struct('__p', period, '__v', {ident(v)}) END"
+    )
+
+
 def gap_fill_locf(
     rollup: DataFrame,
     value_vars: Sequence[str],
@@ -927,7 +931,7 @@ def gap_fill_locf(
     # (plans/carry.py) — a plain per-group window is one task per group
     # and one task TOTAL when ungrouped. Scaffold periods are unique
     # per group, so the struct max (ordered by period) is deterministic.
-    from ..plans.carry import attach_carry, plan_buckets
+    from ..plans.carry import Carry, attach_carry, plan_buckets
 
     # the scaffold fixes the period range, so the bucket bounds are
     # known without a stats pass; only the group cardinality may still
@@ -944,22 +948,7 @@ def gap_fill_locf(
         rows_bounded_by_domain=True,
     )
     stitched = attach_carry(
-        plan,
-        [
-            F.max(
-                F.when(
-                    F.col(v).isNotNull(),
-                    F.struct(F.col("period").alias("__p"), F.col(v).alias("__v")),
-                )
-            ).alias(f"__b_{v}")
-            for v in value_vars
-        ],
-        lambda wg: [
-            F.max(f"__b_{v}")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias(f"__c_{v}")
-            for v in value_vars
-        ],
+        plan, [Carry(f"__c_{v}", "max", _obs_struct_sql(v)) for v in value_vars]
     )
     w = (
         Window.partitionBy(*group_vars, "__bk")
@@ -1010,7 +999,7 @@ def gap_fill_interpolate(
     """
     from pyspark.sql import Window
 
-    from ..plans.carry import attach_carry, plan_buckets
+    from ..plans.carry import Carry, attach_carry, plan_buckets
 
     group_vars = list(group_vars or [])
     joined, span = _dense_scaffold_join(rollup, group_vars, width, origin, span)
@@ -1036,20 +1025,8 @@ def gap_fill_interpolate(
 
     stitched = attach_carry(
         plan,
-        [F.max(obs_struct(v)).alias(f"__bp_{v}") for v in value_vars]
-        + [F.min(obs_struct(v)).alias(f"__bn_{v}") for v in value_vars],
-        lambda wg: [
-            F.max(f"__bp_{v}")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias(f"__cp_{v}")
-            for v in value_vars
-        ]
-        + [
-            F.min(f"__bn_{v}")
-            .over(wg.rowsBetween(1, Window.unboundedFollowing))
-            .alias(f"__cn_{v}")
-            for v in value_vars
-        ],
+        [Carry(f"__cp_{v}", "max", _obs_struct_sql(v)) for v in value_vars]
+        + [Carry(f"__cn_{v}", "min", _obs_struct_sql(v), "after") for v in value_vars],
     )
     wprev = (
         Window.partitionBy(*group_vars, "__bk")

@@ -33,7 +33,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..errors import RoleValidationError
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 
 
 def sessionize(
@@ -72,15 +72,7 @@ def sessionize(
     )
 
     # stage 1: previous timestamp, stitched across buckets
-    stage1 = attach_carry(
-        plan,
-        [F.max("__t").alias("__bmax_t")],
-        lambda wg: [
-            F.max("__bmax_t")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__carry_t")
-        ],
-    )
+    stage1 = attach_carry(plan, [Carry("__carry_t", "max", "__t")])
     w = Window.partitionBy(*group_vars, "__bk").orderBy("__t", *tiebreak)
     prev_t = F.coalesce(F.lag("__t").over(w), F.col("__carry_t"))
     flagged = stage1.withColumn(
@@ -92,14 +84,7 @@ def sessionize(
 
     # stage 2: prefix-sum the flags (per-bucket totals carried)
     stitched = attach_carry(
-        plan,
-        [F.sum("__flag").alias("__bflags")],
-        lambda wg: [
-            F.sum("__bflags")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias("__carry_flags")
-        ],
-        df=flagged,
+        plan, [Carry("__carry_flags", "sum", "__flag")], df=flagged
     )
     wsum = w.rowsBetween(Window.unboundedPreceding, 0)
     sid = F.when(
@@ -110,5 +95,5 @@ def sessionize(
     )
     return (
         stitched.withColumn(session_col, sid)
-        .drop("__t", "__bk", "__carry_t", "__flag", "__carry_flags", "__bmax_t")
+        .drop("__t", "__bk", "__carry_t", "__flag", "__carry_flags")
     )

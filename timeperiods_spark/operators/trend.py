@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..errors import RoleValidationError
-from ..plans.carry import attach_carry, plan_buckets
+from ..plans.carry import Carry, attach_carry, plan_buckets
 
 
 def _order_long(df: DataFrame, t_col: str, op: str):
@@ -139,16 +139,7 @@ def cusum(
 
     # stage 1: prefix sum of each x stream (sum skips NULLs but NULL
     # rows keep their position in the order)
-    stitched = attach_carry(
-        plan,
-        [F.sum(c).alias(f"__bs_{c}") for c in xcols],
-        lambda wg: [
-            F.sum(f"__bs_{c}")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias(f"__cs_{c}")
-            for c in xcols
-        ],
-    )
+    stitched = attach_carry(plan, [Carry(f"__cs_{c}", "sum", c) for c in xcols])
     for c in xcols:
         stitched = stitched.withColumn(
             f"__P{c}",
@@ -159,15 +150,7 @@ def cusum(
     # stage 2: running min of each prefix stream — a chained scan over
     # the SAME buckets (attach_carry(df=) aggregates stage-1 output)
     stage2 = attach_carry(
-        plan,
-        [F.min(f"__P{c}").alias(f"__bm_{c}") for c in xcols],
-        lambda wg: [
-            F.min(f"__bm_{c}")
-            .over(wg.rowsBetween(Window.unboundedPreceding, -1))
-            .alias(f"__cm_{c}")
-            for c in xcols
-        ],
-        df=stitched,
+        plan, [Carry(f"__cm_{c}", "min", f"__P{c}") for c in xcols], df=stitched
     )
     # duplicate-order guard: equal t values always share a bucket
     # (buckets are pure value functions of t), so a within-bucket lag

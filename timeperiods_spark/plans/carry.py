@@ -34,9 +34,11 @@ callers that know their cardinality pass ``group_count_hint``.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from typing import Callable, Optional, Sequence
+from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from .sql import ident, sql
 
 #: bucket when estimated groups < GUARD_FACTOR * defaultParallelism
 GUARD_FACTOR = 4
@@ -48,6 +50,12 @@ CARRY_CAP_ROWS = 1_000_000
 #: extra stages (bucket agg + broadcast), which cost ~1s of fixed wall
 #: per job (measured on the tier sweep)
 SMALL_DOMAIN_ROWS = 1 << 18
+
+#: the frame over the group's buckets each carry direction aggregates
+_FRAMES = {
+    "before": "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING",
+    "after": "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING",
+}
 
 
 @dataclass
@@ -66,6 +74,30 @@ class CarryPlan:
     lo: Optional[int] = None
     hi: Optional[int] = None
     est_groups: Optional[int] = None
+
+
+@dataclass(frozen=True)
+class Carry:
+    """One carried column ``name``: ``fn`` (``sum``/``min``/``max``) of
+    the SQL expression ``expr`` over each (group…, bucket)'s rows, then
+    carried across the group's buckets in bucket order — ``before``: the
+    same ``fn`` over every earlier bucket (a prefix carry), ``after``:
+    over every later bucket, ``next``: the next non-empty bucket's value
+    (a forward handoff).
+
+    ``max``/``min`` over a struct order by its leading field, and skip
+    NULL structs — ``max(CASE WHEN cond THEN named_struct(t, …) END)``
+    is a conditional latest-row carry that still keeps a frame row for
+    every non-empty bucket."""
+
+    name: str
+    fn: str
+    expr: str
+    over: str = "before"
+
+
+def _bucket_only(df: DataFrame) -> DataFrame:
+    return df.withColumn("__bk", F.expr("CAST(0 AS BIGINT)"))
 
 
 def plan_buckets(
@@ -104,38 +136,34 @@ def plan_buckets(
     frames (the carry frame is just empty).
     """
     gcols = list(gcols)
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     guard = GUARD_FACTOR * par
     if gcols and group_count_hint is not None and int(group_count_hint) >= guard:
         # many groups: per-group windows are already parallel, and a
         # groups x buckets carry frame would be broadcast poison —
         # decidable from the hint alone, no action
         return CarryPlan(
-            df.withColumn("__bk", F.lit(0).cast("long")), gcols, False, False, 1,
-            est_groups=int(group_count_hint),
+            _bucket_only(df), gcols, False, False, 1, est_groups=int(group_count_hint)
         )
     need_bounds = bounds_hint is None
     need_groups = bool(gcols) and group_count_hint is None
     lo = hi = None
     est_groups = 0 if not gcols else group_count_hint
     if need_bounds or need_groups:
-        aggs = []
-        if need_bounds:
-            aggs += [F.min(t_col).alias("__lo"), F.max(t_col).alias("__hi")]
-        else:
-            aggs += [F.count(F.lit(1)).alias("__n")]
+        t = ident(t_col)
+        aggs = [f"min({t}) AS __lo", f"max({t}) AS __hi"] if need_bounds else [
+            "count(1) AS __n"
+        ]
         if need_groups:
             # struct(): approx_count_distinct over bare NULL-able
             # columns drops NULL-key rows; a struct row is never NULL
-            aggs.append(F.approx_count_distinct(F.struct(*gcols)).alias("__ng"))
-        row = df.agg(*aggs).first()
+            keys = ", ".join(ident(g) for g in gcols)
+            aggs.append(f"approx_count_distinct(struct({keys})) AS __ng")
+        row = df.selectExpr(*aggs).first()
         if row is None or (need_bounds and row["__lo"] is None) or (
             not need_bounds and row["__n"] == 0
         ):
-            return CarryPlan(
-                df.withColumn("__bk", F.lit(0).cast("long")), gcols, False, True, 1
-            )
+            return CarryPlan(_bucket_only(df), gcols, False, True, 1)
         if need_bounds:
             lo, hi = int(row["__lo"]), int(row["__hi"])
         if need_groups:
@@ -143,14 +171,11 @@ def plan_buckets(
     if lo is None:
         lo, hi = int(bounds_hint[0]), int(bounds_hint[1])
     est_groups = int(est_groups or 0)
-    if rows_bounded_by_domain and (hi - lo + 1) <= SMALL_DOMAIN_ROWS:
+    if (rows_bounded_by_domain and (hi - lo + 1) <= SMALL_DOMAIN_ROWS) or (
+        gcols and est_groups >= guard
+    ):
         return CarryPlan(
-            df.withColumn("__bk", F.lit(0).cast("long")), gcols, False, False, 1,
-            lo=lo, hi=hi, est_groups=est_groups,
-        )
-    if gcols and est_groups >= guard:
-        return CarryPlan(
-            df.withColumn("__bk", F.lit(0).cast("long")), gcols, False, False, 1,
+            _bucket_only(df), gcols, False, False, 1,
             lo=lo, hi=hi, est_groups=est_groups,
         )
     if n_buckets is None:
@@ -158,7 +183,7 @@ def plan_buckets(
     n_buckets = max(2, min(n_buckets, carry_cap_rows // max(1, est_groups)))
     width = max(1, (hi - lo) // n_buckets + 1)
     out = df.withColumn(
-        "__bk", ((F.col(t_col) - F.lit(lo)) / F.lit(width)).cast("long")
+        "__bk", F.expr(f"CAST(({ident(t_col)} - ({lo})) / {width} AS BIGINT)")
     )
     return CarryPlan(
         out, gcols, True, False, n_buckets, lo=lo, hi=hi, est_groups=est_groups
@@ -167,27 +192,22 @@ def plan_buckets(
 
 def attach_carry(
     plan: CarryPlan,
-    bucket_aggs: Sequence[Column],
-    carry_over: Callable[[WindowSpec], Sequence[Column]],
+    carries: Sequence[Carry],
     df: Optional[DataFrame] = None,
 ) -> DataFrame:
-    """Attach per-bucket carry columns to ``plan.df``.
+    """Attach each :class:`Carry` column to ``plan.df``.
 
-    ``bucket_aggs``: aliased aggregates over ALL rows of each
-    (group…, __bk) — use ``F.max(F.when(cond, F.struct(t, …)))`` for
-    conditional latest-row carries (skips non-matching rows, orders by
-    the leading time field) so every non-empty bucket keeps a frame row.
+    Bucketed plans build the carry frame — one row per (group…, bucket):
+    the bucket aggregates and the carry window over them in one
+    aggregate — and broadcast-join it back null-safely, all in one SQL
+    statement.
 
-    ``carry_over(wg)``: aliased window columns over the bucket frame;
-    ``wg`` is ordered by ``__bk`` within groups — apply
-    ``.rowsBetween(Window.unboundedPreceding, -1)`` for backward
-    (prefix) carries or ``F.lead`` for forward handoffs.
-
-    When the plan is unbucketed (many groups / guard tripped), the
-    carry columns are attached as typed NULL literals — the per-bucket
-    window at the call site is then exactly the per-group window and
-    coalescing with NULL carries is the identity. Same call-site code,
-    no broadcast.
+    When the plan is unbucketed (many groups / guard tripped), every
+    group is a single bucket, so every carry is NULL: the columns are
+    attached as NULLs typed like their ``expr`` (one projection, no
+    carry frame, no broadcast). The per-bucket window at the call site
+    is then exactly the per-group window, and coalescing with a NULL
+    carry is the identity. Same call-site code either way.
 
     ``df`` overrides the frame to aggregate/attach (must carry the
     plan's ``__bk`` column and group keys) — for multi-stage scans
@@ -195,33 +215,29 @@ def attach_carry(
     attach (e.g. sessionize: stage 1 carries the previous timestamp,
     stage 2 prefix-sums the session-start flags computed from it).
     """
-    gcols = plan.gcols
     src = plan.df if df is None else df
-    bdf = src.groupBy(*gcols, "__bk").agg(*bucket_aggs)
-    wg = (
-        Window.partitionBy(*gcols) if gcols else Window.partitionBy(F.lit(1))
-    ).orderBy("__bk")
-    carry_cols = list(carry_over(wg))
-    carry_frame = bdf.select(
-        *[F.col(g).alias(f"__h_{g}") for g in gcols],
-        F.col("__bk").alias("__hbk"),
-        *carry_cols,
-    )
-    key_names = {"__hbk"} | {f"__h_{g}" for g in gcols}
-    carry_names = [
-        f.name for f in carry_frame.schema.fields if f.name not in key_names
-    ]
     if not plan.bucketed:
-        # typed NULLs, types read off the (never-executed) carry plan
-        types = {f.name: f.dataType for f in carry_frame.schema.fields}
-        out = src
-        for name in carry_names:
-            out = out.withColumn(name, F.lit(None).cast(types[name]))
-        return out
-    cond = F.col("__bk") == F.col("__hbk")
-    for g in gcols:
-        cond = cond & F.col(g).eqNullSafe(F.col(f"__h_{g}"))
-    return (
-        src.join(F.broadcast(carry_frame), cond, "left")
-        .drop("__hbk", *[f"__h_{g}" for g in gcols])
+        return src.selectExpr(
+            "*", *[f"IF(false, {c.expr}, NULL) AS {ident(c.name)}" for c in carries]
+        )
+    keys = [ident(g) for g in plan.gcols]
+    w = f"PARTITION BY {', '.join(keys) or '1'} ORDER BY __bk"
+    over = [
+        f"lead({c.fn}({c.expr})) OVER ({w})" if c.over == "next"
+        else f"{c.fn}({c.fn}({c.expr})) OVER ({w} {_FRAMES[c.over]})"
+        for c in carries
+    ]
+    names = [ident(c.name) for c in carries]
+    on = " AND ".join(
+        ["s.__bk = c.__hbk"] + [f"s.{k} <=> c.__h{i}" for i, k in enumerate(keys)]
+    )
+    return sql(
+        f"""SELECT /*+ BROADCAST(c) */ s.*, {", ".join(f"c.{n}" for n in names)}
+        FROM {{src}} s LEFT JOIN (
+            SELECT {"".join(f"{k} AS __h{i}, " for i, k in enumerate(keys))}
+                   __bk AS __hbk,
+                   {", ".join(f"{o} AS {n}" for o, n in zip(over, names))}
+            FROM {{src}} GROUP BY {"".join(f"{k}, " for k in keys)}__bk
+        ) c ON {on}""",
+        src=src,
     )

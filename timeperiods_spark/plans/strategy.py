@@ -56,10 +56,11 @@ unambiguous even when y was derived from x (self-join lineage).
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import reduce
 from typing import Optional, Union
 
-from pyspark.sql import Column, DataFrame, Row, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
+
+from .sql import sql
 
 #: auto switches group_equi -> bin when the estimated per-group cross
 #: volume |x| * |y| / groups exceeds this. Calibrated on this host:
@@ -78,12 +79,8 @@ AUTO_BIN_PAIRS = 100_000_000
 AUTO_STATS_RECHECK_BAND = 4
 
 
-def _group_cond(n_groups: int) -> Optional[Column]:
-    cond = None
-    for i in range(n_groups):
-        c = F.col(f"__g{i}").eqNullSafe(F.col(f"__yg{i}"))
-        cond = c if cond is None else (cond & c)
-    return cond
+def _group_cond(n_groups: int) -> list[str]:
+    return [f"__g{i} <=> __yg{i}" for i in range(n_groups)]
 
 
 def _volume(auto_stats: tuple) -> int:
@@ -137,42 +134,40 @@ def request_stats(
     per distinct key (750 groups, 40k x rows, 4 local cores: over 200 s
     against 0.8 s for this pass).
     """
-    parts = [
-        df.select(
-            F.lit(side).alias("side"),
-            (F.struct(*[F.col(f"{p}{i}") for i in range(n_groups)]) if n_groups
-             else F.lit(0)).alias(f"__k{side}"),
-            F.col(s).alias("s"),
-            F.col(e).alias("e"),
+    frames = {side: df for side, df in (("x", xw), ("y", yw)) if df is not None}
+    parts = []
+    for side in frames:
+        prefix = "__g" if side == "x" else "__yg"
+        key = (
+            f"struct({', '.join(f'{prefix}{i}' for i in range(n_groups))})"
+            if n_groups else "0"
         )
-        for side, df, p, s, e in (
-            ("x", xw, "__g", "__xs", "__xe"), ("y", yw, "__yg", "__ys", "__ye")
+        kx, ky = (key, "NULL") if side == "x" else ("NULL", key)
+        parts.append(
+            f"SELECT '{side}' AS side, {kx} AS __kx, {ky} AS __ky, "
+            f"__{side}s AS s, __{side}e AS e FROM {{{side}}}"
         )
-        if df is not None
-    ]
-    union = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    union = " UNION ALL ".join(parts)
     if distinct:
-        union = union.groupBy(*union.columns).count()
-        n, nd = F.sum("count"), F.count(F.lit(1))
-    else:
-        n, nd = F.count(F.lit(1)), F.lit(None).cast("long")
-    s, e = F.col("s"), F.col("e")
-    rows = (
-        # rollup adds the both-sides row (side NULL) the bin width uses
-        union.rollup("side")
-        .agg(
-            n.alias("n"),
-            nd.alias("nd"),
-            F.count_if(s.isNull() | e.isNull()).alias("nulls"),
-            F.count_if(e < s).alias("rev"),
-            F.approx_count_distinct("__kx").alias("groups"),
-            # least/greatest skip a NULL endpoint
-            F.min(F.least(s, e)).alias("lo"),
-            F.max(F.greatest(s, e)).alias("hi"),
-            F.percentile_approx(e - s + F.lit(1), 0.9).alias("p90"),
+        union = (
+            f"SELECT side, __kx, count(1) AS __c, s, e FROM ({union}) "
+            "GROUP BY side, __kx, __ky, s, e"
         )
-        .collect()
-    )
+        n, nd = "sum(__c)", "count(1)"
+    else:
+        n, nd = "count(1)", "CAST(NULL AS BIGINT)"
+    rows = sql(
+        # rollup adds the both-sides row (side NULL) the bin width uses;
+        # least/greatest skip a NULL endpoint
+        f"""SELECT side, {n} AS n, {nd} AS nd,
+               count_if(s IS NULL OR e IS NULL) AS nulls,
+               count_if(e < s) AS rev,
+               approx_count_distinct(__kx) AS groups,
+               min(least(s, e)) AS lo, max(greatest(s, e)) AS hi,
+               percentile_approx(e - s + 1, 0.9) AS p90
+        FROM ({union}) GROUP BY ROLLUP(side)""",
+        **frames,
+    ).collect()
     by_side = {r["side"]: r for r in rows}
     both = by_side.get(None)
     return RequestStats(
@@ -196,7 +191,7 @@ def build_overlap_pairs(
     group keys, and ``__ys/__ye`` — one row per overlapping (x, y) pair:
     exactly the multiset ``foverlaps`` produces (reference
     timeperiod_functions.R:239-240) minus the unmatched y rows, which
-    the caller restores with a completion join.
+    ``interval_weighted_avg`` restores as zero-weight filler rows.
 
     ``how="left"`` additionally keeps every UNMATCHED x row exactly once
     with NULL ``__ys/__ye``/y-payload (data.table ``nomatch=NA``); the
@@ -219,14 +214,11 @@ def build_overlap_pairs(
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
-    overlap = (F.col("__xs") <= F.col("__ye")) & (F.col("__xe") >= F.col("__ys"))
-    ygcols = [f"__yg{i}" for i in range(n_groups)]
+    overlap = ["__xs <= __ye", "__xe >= __ys"]
     # for left output, y group keys come from the preserved x side
-    out_g = (
-        [F.col(f"__g{i}").alias(f"__yg{i}") for i in range(n_groups)]
-        if how == "left"
-        else [F.col(c) for c in ygcols]
-    )
+    out_g = [
+        f"__g{i} AS __yg{i}" if how == "left" else f"__yg{i}" for i in range(n_groups)
+    ]
     x_payload = [c for c in xw.columns if not c.startswith("__g")]
     # y-side payload beyond (group keys, __ys, __ye) carries through —
     # empty for the rollup callers, populated by overlap_join
@@ -234,6 +226,7 @@ def build_overlap_pairs(
         c for c in yw.columns
         if not c.startswith("__yg") and c not in ("__ys", "__ye")
     ]
+    out = [*out_g, *x_payload, "__ys", "__ye", *y_payload]
 
     stats = auto_stats if isinstance(auto_stats, RequestStats) else None
     if strategy == "auto" and n_groups:
@@ -252,8 +245,7 @@ def build_overlap_pairs(
         strategy = "bin"
 
     if strategy in ("group_equi", "broadcast_y", "broadcast_x"):
-        gc = _group_cond(n_groups)
-        cond = overlap if gc is None else (gc & overlap)
+        cond = F.expr(" AND ".join(_group_cond(n_groups) + overlap))
         if how == "left":
             # x is the preserved side. broadcast_x keeps its broadcast by
             # flipping to a right-outer join (BroadcastHashJoin supports
@@ -270,45 +262,33 @@ def build_overlap_pairs(
             elif strategy == "broadcast_x":
                 right = F.broadcast(xw)
             pairs = left.join(right, cond, "inner")
-        return pairs.select(*out_g, *x_payload, "__ys", "__ye", *y_payload)
+        return pairs.selectExpr(*out)
 
     if strategy == "bin":
-        w = bin_width or (stats or request_stats(xw, yw, n_groups, distinct=False)).bin_width
-        wl = F.lit(int(w))
-        xbin = xw.withColumn(
-            "__bin",
-            F.explode(
-                F.sequence(F.floor(F.col("__xs") / wl), F.floor(F.col("__xe") / wl))
-            ),
+        w = int(
+            bin_width
+            or (stats or request_stats(xw, yw, n_groups, distinct=False)).bin_width
         )
-        ybin = yw.withColumn(
-            "__ybin",
-            F.explode(
-                F.sequence(F.floor(F.col("__ys") / wl), F.floor(F.col("__ye") / wl))
-            ),
-        )
-        cond = (
-            (F.col("__ybin") == F.col("__bin"))
-            & overlap
-            # first-shared-bin: count each overlapping pair exactly once,
-            # so no post-join dedup — the §4.4 row-count invariant holds
-            # by construction.
-            & (F.col("__ybin") == F.floor(F.greatest("__xs", "__ys") / wl))
-        )
+        xbin = [f"explode(sequence(floor(__xs / {w}), floor(__xe / {w}))) AS __bin"]
+        ybin = [f"explode(sequence(floor(__ys / {w}), floor(__ye / {w}))) AS __ybin"]
+        # first-shared-bin: count each overlapping pair exactly once, so
+        # no post-join dedup — the §4.4 row-count invariant holds by
+        # construction.
+        cond = _group_cond(n_groups) + [
+            "__ybin = __bin", *overlap, f"__ybin = floor(greatest(__xs, __ys) / {w})"
+        ]
+        xb = xw.selectExpr("*", *xbin)
+        yb = yw.selectExpr("*", *ybin)
         if skew_salt and skew_salt > 1:
             # Salt hot (group, bin) keys: x rows pick a deterministic
             # salt; y rows replicate across all salts (y is the smaller
             # side for rollup workloads). Joining on (bin, salt) splits
             # a hot bin across skew_salt reducers.
-            s = F.lit(int(skew_salt))
-            xbin = xbin.withColumn("__salt", F.pmod(F.xxhash64("__xs", "__xe"), s))
-            ybin = ybin.withColumn(
-                "__ysalt", F.explode(F.sequence(F.lit(0), s - F.lit(1)))
-            )
-            cond = cond & (F.col("__ysalt") == F.col("__salt"))
-        gc = _group_cond(n_groups)
-        if gc is not None:
-            cond = gc & cond
+            s = int(skew_salt)
+            xb = xb.selectExpr("*", f"pmod(xxhash64(__xs, __xe), {s}) AS __salt")
+            yb = yb.selectExpr("*", f"explode(sequence(0, {s - 1})) AS __ysalt")
+            cond.append("__ysalt = __salt")
+        cond = F.expr(" AND ".join(cond))
         if how == "left":
             # Preserve x: a left-outer join over the EXPLODED x emits one
             # NULL row per (x, bin) slot with no bin-local match, so
@@ -317,23 +297,17 @@ def build_overlap_pairs(
             # (b) resolve "matched somewhere else?" with a single
             # max(matched) window over the x identity — one extra
             # exchange vs the inner plan, no anti join, x scanned once.
-            from pyspark.sql import Window
-
-            joined = xbin.join(ybin, cond, "left")
-            first_bin = F.col("__bin") == F.floor(F.col("__xs") / wl)
-            matched = F.col("__ys").isNotNull()
-            cand = joined.filter(matched | first_bin)
-            wx = Window.partitionBy(
-                *[f"__g{i}" for i in range(n_groups)], "__xs", "__xe"
-            )
-            keep = (
-                cand.withColumn(
-                    "__has", F.max(matched.cast("int")).over(wx)
+            wx = ", ".join([f"__g{i}" for i in range(n_groups)] + ["__xs", "__xe"])
+            return (
+                xb.join(yb, cond, "left")
+                .where(f"__ys IS NOT NULL OR __bin = floor(__xs / {w})")
+                .selectExpr(
+                    *out,
+                    f"max(CAST(__ys IS NOT NULL AS INT)) OVER (PARTITION BY {wx}) AS __has",
                 )
-                .filter(matched | (F.col("__has") == 0))
+                .where("__ys IS NOT NULL OR __has = 0")
+                .drop("__has")
             )
-            return keep.select(*out_g, *x_payload, "__ys", "__ye", *y_payload)
-        pairs = ybin.join(xbin, cond, "inner")
-        return pairs.select(*out_g, *x_payload, "__ys", "__ye", *y_payload)
+        return yb.join(xb, cond, "inner").selectExpr(*out)
 
     raise ValueError(f"unknown join strategy: {strategy!r}")

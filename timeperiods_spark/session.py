@@ -5,6 +5,17 @@ its memory; arguments and the SPARK_GRAFT_* variables override); on a
 real cluster the same options apply, with shuffle partitions sized to
 ~2-3x total cores and AQE left on to coalesce and to split skewed
 partitions at runtime.
+
+PySpark's DataFrame call-site capture
+(``spark.python.sql.dataFrameDebugging.enabled``) is off by default
+here: with it on, every ``pyspark.sql.functions`` call and ``Column``
+method inspects the Python stack and makes about five extra py4j round
+trips. The operators build their plans from SQL expression strings, so
+the saving falls mostly on Column-built code around them. It only adds the Python call site to Spark's error context; the typed
+``TimeperiodsError`` checks do not depend on it. Turn it back on with
+``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+"true"})``. It is a static conf: a session built by hand keeps
+PySpark's default (on).
 """
 
 from __future__ import annotations
@@ -66,6 +77,8 @@ def get_spark(
     extra_conf.setdefault(
         "spark.driver.extraJavaOptions", "-XX:+UseParallelGC"
     )
+    # no Python call-site capture per DataFrame/Column call (see above)
+    extra_conf.setdefault("spark.python.sql.dataFrameDebugging.enabled", "false")
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

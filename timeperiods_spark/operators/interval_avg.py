@@ -362,7 +362,7 @@ def interval_weighted_avg(
 
     # Size-gated per-call persists (pure plan reuse, no semantic
     # effect on any VALUE — but see the gate below). yd always has TWO
-    # consumers — the overlap join and the filler rows — so
+    # consumers — the overlap join and the completion join — so
     # unpersisted, the whole y subtree (dedup shuffle included)
     # executes twice. xw gains a second consumer whenever the bin
     # strategy must run its own stats pass to pick a width (no
@@ -417,11 +417,10 @@ def interval_weighted_avg(
     )
 
     # One statement from the pairs to the output: clip (O3), weight
-    # (O4), per-value weights/products (O5, O6); every deduped y row
-    # joins as a zero-weight filler (O10), so an uncovered period comes
-    # out of the grouped hash aggregation (O7, partial+final, codegen)
-    # with xduration/nobs 0 and NULL sums and bounds — no completion
-    # join; then the output projection.
+    # (O4), per-value weights/products (O5, O6), the grouped hash
+    # aggregation (O7, partial+final, codegen), the completion join
+    # (O10: every deduped y row survives, zero-filled; group keys match
+    # null-safe) and the output projection.
     keys = ", ".join([*ygcols, "__ys", "__ye"])
     moments = [("nm", "IF({v} IS NULL, 0, __dur)"), ("p", "{v} * __dur")]
     if extra_stats:
@@ -430,10 +429,17 @@ def interval_weighted_avg(
         f"{expr.format(v=v)} AS __{m}{i}" for m, expr in moments
         for i, v in enumerate(vcols)
     ]
-    fillers = ["0" if m == "nm" else "NULL" for m, _ in moments for _ in vcols]
     sums = ["sum(__dur) AS __xdur"] + [
         f"sum(__{m}{i}) AS __s{m}{i}" for m, _ in moments for i in range(n_v)
     ]
+    # the agg side of the completion join; covered counts default to 0
+    agg_cols = ["coalesce(a.__xdur, 0) AS __xdur"] + [
+        f"coalesce(a.__snm{i}, 0) AS __snm{i}" if m == "nm" else f"a.__s{m}{i}"
+        for m, _ in moments for i in range(n_v)
+    ]
+    on = " AND ".join(
+        ["y.__ys = a.__ys", "y.__ye = a.__ye"] + [f"y.{g} <=> a.{g}" for g in ygcols]
+    )
 
     ydur = "CAST(__ye - __ys + 1 AS DOUBLE)"
 
@@ -471,17 +477,18 @@ def interval_weighted_avg(
     ]
     out = sql(
         f"""SELECT {", ".join(out_cols)} FROM (
-            SELECT {keys}, {", ".join(sums)},
-                   min(__cs) AS __minstart, max(__ce) AS __maxend
-            FROM (
-                SELECT {keys}, __cs, __ce, __dur, {", ".join(weighted)} FROM (
-                    SELECT *, greatest(__xs, __ys) AS __cs,
-                           least(__xe, __ye) AS __ce,
-                           least(__xe, __ye) - greatest(__xs, __ys) + 1 AS __dur
-                    FROM {{pairs}})
-                UNION ALL
-                SELECT {keys}, NULL, NULL, 0, {", ".join(fillers)} FROM {{yd}})
-            GROUP BY {keys})""",
+            SELECT y.*, {", ".join(agg_cols)}, a.__minstart, a.__maxend
+            FROM {{yd}} y LEFT JOIN (
+                SELECT {keys}, {", ".join(sums)},
+                       min(__cs) AS __minstart, max(__ce) AS __maxend
+                FROM (
+                    SELECT {keys}, __cs, __ce, __dur, {", ".join(weighted)} FROM (
+                        SELECT *, greatest(__xs, __ys) AS __cs,
+                               least(__xe, __ye) AS __ce,
+                               least(__xe, __ye) - greatest(__xs, __ys) + 1 AS __dur
+                        FROM {{pairs}}))
+                GROUP BY {keys}) a
+            ON {on})""",
         {"req": float(required_percentage)},
         pairs=pairs,
         yd=yd,

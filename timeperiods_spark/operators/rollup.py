@@ -1017,12 +1017,6 @@ def gap_fill_interpolate(
         rows_bounded_by_domain=True,
     )
 
-    def obs_struct(v):
-        return F.when(
-            F.col(v).isNotNull(),
-            F.struct(F.col("period").alias("__p"), F.col(v).alias("__v")),
-        )
-
     stitched = attach_carry(
         plan,
         [Carry(f"__cp_{v}", "max", _obs_struct_sql(v)) for v in value_vars]
@@ -1045,8 +1039,9 @@ def gap_fill_interpolate(
     for v in value_vars:
         if f"nobs_{v}" in out.columns:
             out = out.withColumn(f"nobs_{v}", F.coalesce(f"nobs_{v}", F.lit(0)))
-        prev = F.coalesce(F.max(obs_struct(v)).over(wprev), F.col(f"__cp_{v}"))
-        nxt = F.coalesce(F.min(obs_struct(v)).over(wnext), F.col(f"__cn_{v}"))
+        obs = F.expr(_obs_struct_sql(v))
+        prev = F.coalesce(F.max(obs).over(wprev), F.col(f"__cp_{v}"))
+        nxt = F.coalesce(F.min(obs).over(wnext), F.col(f"__cn_{v}"))
         pp, pv = prev.getField("__p"), prev.getField("__v")
         np_, nv = nxt.getField("__p"), nxt.getField("__v")
         interp = F.when(F.col(v).isNotNull(), F.col(v).cast("double")).otherwise(

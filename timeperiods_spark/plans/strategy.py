@@ -191,7 +191,7 @@ def build_overlap_pairs(
     group keys, and ``__ys/__ye`` — one row per overlapping (x, y) pair:
     exactly the multiset ``foverlaps`` produces (reference
     timeperiod_functions.R:239-240) minus the unmatched y rows, which
-    ``interval_weighted_avg`` restores as zero-weight filler rows.
+    the caller restores with a completion join.
 
     ``how="left"`` additionally keeps every UNMATCHED x row exactly once
     with NULL ``__ys/__ye``/y-payload (data.table ``nomatch=NA``); the

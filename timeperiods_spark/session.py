@@ -11,7 +11,8 @@ PySpark's DataFrame call-site capture
 here: with it on, every ``pyspark.sql.functions`` call and ``Column``
 method inspects the Python stack and makes about five extra py4j round
 trips. The operators build their plans from SQL expression strings, so
-the saving falls mostly on Column-built code around them. It only adds the Python call site to Spark's error context; the typed
+the saving falls mostly on Column-built code around them. It only
+adds the Python call site to Spark's error context; the typed
 ``TimeperiodsError`` checks do not depend on it. Turn it back on with
 ``get_spark(extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
 "true"})``. It is a static conf: a session built by hand keeps

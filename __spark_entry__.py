@@ -2102,580 +2102,8 @@ def oracle_sql() -> dict[str, str]:
 
 
 # --------------------------------------------------------------------
-# training-data pipeline queries (documents / embeddings tables)
+# training-data pipeline queries (documents / token tables)
 # --------------------------------------------------------------------
-
-from timeperiods_spark.functions import texthash as _TH  # noqa: E402
-from timeperiods_spark.operators.dedup import (  # noqa: E402
-    connected_components,
-    exact_dedup,
-    minhash_candidate_pairs,
-    ngram_jaccard_pairs,
-    simhash_frame,
-    simhash_pairs,
-)
-from timeperiods_spark.operators.similarity import (  # noqa: E402
-    cosine_topk,
-    cosine_topk_lsh,
-    srp_bucket_sql,
-    srp_probe_buckets_sql,
-)
-
-
-def q_exact_dedup(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    return exact_dedup(docs, ["text"], order_cols=["doc_id"]).select(
-        "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
-    )
-
-
-SQL_EXACT_DEDUP = """
-SELECT doc_id, source, CAST(n_chars AS BIGINT) AS n_chars
-FROM documents
-QUALIFY ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) = 1
-"""
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    out = ngram_jaccard_pairs(docs, "doc_id", "text", k=5, threshold=0.4)
-    return out.select("id_a", "id_b", F.round("jaccard", _R).alias("jaccard"))
-
-
-SQL_NGRAM_JACCARD = f"""
-WITH sh AS (
-  SELECT doc_id, {_TH.shingle_hashes_sql('text', 5)} AS hashes FROM documents
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       ROUND(len(list_intersect(a.hashes, b.hashes)) /
-             (CASE WHEN len(list_distinct(a.hashes || b.hashes)) > 0
-                   THEN len(list_distinct(a.hashes || b.hashes)) END), 6) AS jaccard
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE len(list_intersect(a.hashes, b.hashes)) /
-      (CASE WHEN len(list_distinct(a.hashes || b.hashes)) > 0
-            THEN len(list_distinct(a.hashes || b.hashes)) END) >= 0.4
-"""
-
-
-def q_minhash_pairs(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    out = minhash_candidate_pairs(
-        docs, "doc_id", "text", k=5, n_hashes=12, bands=4, verify_threshold=0.4
-    )
-    return out.select("id_a", "id_b", F.round("jaccard", _R).alias("jaccard"))
-
-
-SQL_MINHASH_PAIRS = f"""
-WITH sh AS (
-  SELECT doc_id, {_TH.shingle_hashes_sql('text', 5)} AS hashes FROM documents
-),
-nz AS (SELECT * FROM sh WHERE len(hashes) > 0),
-sig AS (
-  SELECT doc_id, hashes,
-         {_TH.minhash_signature_sql('hashes', 12)} AS sig
-  FROM nz
-),
-banded AS (
-  SELECT doc_id, hashes, band, sig[band*3+1 : band*3+3] AS bsig
-  FROM sig CROSS JOIN (SELECT CAST(range AS INT) AS band FROM range(4))
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.bsig = b.bsig AND a.doc_id < b.doc_id
-),
-withsets AS (
-  SELECT c.id_a, c.id_b, sa.hashes AS h_a, sb.hashes AS h_b
-  FROM cand c JOIN sh sa ON sa.doc_id = c.id_a JOIN sh sb ON sb.doc_id = c.id_b
-)
-SELECT id_a, id_b,
-       ROUND(len(list_intersect(h_a, h_b)) /
-             (CASE WHEN len(list_distinct(h_a || h_b)) > 0
-                   THEN len(list_distinct(h_a || h_b)) END), 6) AS jaccard
-FROM withsets
-WHERE len(list_intersect(h_a, h_b)) /
-      (CASE WHEN len(list_distinct(h_a || h_b)) > 0
-            THEN len(list_distinct(h_a || h_b)) END) >= 0.4
-"""
-
-
-def q_minhash_dedup_cc(spark, sf_dir):
-    """Connected-components canonicalization over the verified MinHash
-    pairs: every document labeled with the min doc_id of its duplicate
-    component (its own id when unpaired). The DuckDB twin walks the
-    same pair graph with a recursive CTE."""
-    docs = _read(spark, sf_dir, "documents")
-    pairs = minhash_candidate_pairs(
-        docs, "doc_id", "text", k=5, n_hashes=12, bands=4, verify_threshold=0.4
-    )
-    cc = connected_components(pairs)
-    out = docs.select("doc_id").join(
-        cc.select(F.col("id").alias("doc_id"), F.col("comp").alias("component")),
-        "doc_id",
-        "left",
-    )
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.coalesce("component", F.col("doc_id")).cast("long").alias("component"),
-    )
-
-
-SQL_MINHASH_CC = f"""
-WITH RECURSIVE p AS (
-  SELECT id_a, id_b FROM ({SQL_MINHASH_PAIRS}) t
-),
-e AS (
-  SELECT id_a AS a, id_b AS b FROM p
-  UNION
-  SELECT id_b AS a, id_a AS b FROM p
-),
-walk(id, comp) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT e.b AS id, w.comp FROM walk w JOIN e ON e.a = w.id
-)
-SELECT CAST(id AS BIGINT) AS doc_id, CAST(MIN(comp) AS BIGINT) AS component
-FROM walk GROUP BY id
-"""
-
-
-def q_simhash(spark, sf_dir):
-    docs = _read(spark, sf_dir, "documents")
-    return simhash_frame(docs, "doc_id", "text", k=5, bits=64).select(
-        F.col("id").alias("doc_id"), F.col("simhash").cast("long").alias("simhash")
-    )
-
-
-SQL_SIMHASH = f"""
-SELECT doc_id, {_TH.simhash_sql(_TH.shingle_hashes_sql('text', 5), 64)} AS simhash
-FROM documents
-"""
-
-
-def q_simhash_pairs(spark, sf_dir):
-    """Banded SimHash join at the 64-bit default: recall for hamming <
-    bands is guaranteed by pigeonhole, so with max_hamming = bands - 1
-    the output is EXACTLY the set of pairs within that distance — which
-    the oracle states as a brute-force O(n^2) SQL (fine at oracle
-    scale; the Spark path never materializes the n^2 space)."""
-    docs = _read(spark, sf_dir, "documents")
-    out = simhash_pairs(
-        docs, "doc_id", "text", k=5, bits=64, bands=8, max_hamming=7
-    )
-    return out.select(
-        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
-    )
-
-
-SQL_SIMHASH_PAIRS = f"""
-WITH s AS (
-  SELECT doc_id, {_TH.simhash_sql(_TH.shingle_hashes_sql('text', 5), 64)} AS sh
-  FROM documents
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.sh, b.sh)) AS BIGINT) AS hamming
-FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.sh, b.sh)) <= 7
-"""
-
-
-def q_cosine_topk(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = cosine_topk(emb, queries_df, k=10)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-SQL_COSINE_TOPK = """
-WITH q AS (
-  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-  FROM embeddings WHERE vec_id < 5
-),
-scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_dot_product(CAST(c.embedding AS DOUBLE[]), q.qv) /
-         (CASE WHEN sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(q.qv, q.qv)) > 0
-               THEN sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]), CAST(c.embedding AS DOUBLE[])))
-                  * sqrt(list_dot_product(q.qv, q.qv)) END) AS cosine
-  FROM embeddings c CROSS JOIN q
-)
-SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 10
-"""
-
-
-def q_cosine_lsh(spark, sf_dir):
-    emb = _read(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # probes=2 is the (measured-recall) library default — stated
-    # explicitly so the oracle's probe set below can never drift
-    out = cosine_topk_lsh(emb, queries_df, k=10, dim=64, n_planes=6, probes=2)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-SQL_COSINE_LSH = f"""
-WITH c AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
-         {srp_bucket_sql('CAST(embedding AS DOUBLE[])', 64, 6)} AS bucket
-  FROM embeddings
-),
-q AS (
-  SELECT vec_id AS query_id, v AS qv, bucket FROM c WHERE vec_id < 5
-),
-qp AS (
-  SELECT query_id, qv, unnest({srp_probe_buckets_sql('bucket', 6, 2)}) AS pb FROM q
-),
-scored AS (
-  SELECT DISTINCT q.query_id, c.vec_id,
-         list_dot_product(c.v, q.qv) /
-         (CASE WHEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv)) > 0
-               THEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv)) END) AS cosine
-  FROM c JOIN qp q ON c.bucket = q.pb
-)
-SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 10
-"""
-
-
-def _wide_embeddings(spark, sf_dir):
-    """Deterministic 1024-dim vectors: 16 integer-scaled copies of the
-    64-dim embedding, tiled — exact in both engines (x * j for small
-    int j is exact float arithmetic)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    wide = emb.select(
-        "vec_id",
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.lit(16)),
-                lambda j: F.transform(
-                    F.col("embedding").cast("array<double>"), lambda x: x * j
-                ),
-            )
-        ).alias("embedding"),
-    )
-    # materialize the synthetic widening through an exchange: without
-    # it CollapseProject inlines the flatten/transform into every
-    # downstream consumer (16 plane dots + cosine + norms re-derive the
-    # 1024-array per use — measured 4x slower). A real pipeline reads
-    # the wide column from storage and has no such artifact.
-    return wide.repartition("vec_id")
-
-
-def q_cosine_lsh_highdim(spark, sf_dir):
-    """SRP LSH at real embedding width (dim=1024, n_planes=16): pins
-    that the plane expressions stay O(n_planes) plan nodes (array
-    literals + zip_with dots), not an unrolled 16k-term sum."""
-    wide = _wide_embeddings(spark, sf_dir)
-    queries_df = wide.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    # probes=0 explicitly: this query pins the O(n_planes) plan shape
-    # at real width, not recall (the library default is probes=2)
-    out = cosine_topk_lsh(wide, queries_df, k=10, dim=1024, n_planes=16, probes=0)
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-_WIDE_SQL = (
-    "SELECT vec_id, flatten(list_transform(range(1, 17), "
-    "j -> list_transform(CAST(embedding AS DOUBLE[]), x -> x * j))) AS v "
-    "FROM embeddings"
-)
-
-SQL_COSINE_LSH_HIGHDIM = f"""
-WITH w AS ({_WIDE_SQL}),
-c AS (
-  SELECT vec_id, v, {srp_bucket_sql('v', 1024, 16)} AS bucket FROM w
-),
-q AS (
-  SELECT vec_id AS query_id, v AS qv, bucket FROM c WHERE vec_id < 5
-),
-scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_dot_product(c.v, q.qv) /
-         (CASE WHEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv)) > 0
-               THEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv)) END) AS cosine
-  FROM c JOIN q ON c.bucket = q.bucket
-)
-SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 10
-"""
-
-
-def q_cosine_ivf(spark, sf_dir):
-    """IVF approximate top-k: one deterministic-centroid cell per corpus
-    vector, n_probe nearest cells scanned per query. The oracle derives
-    the same cells/probes from the identical centroid arithmetic via
-    unnest + window ranking."""
-    from timeperiods_spark.operators.similarity import cosine_topk_ivf
-
-    emb = _read(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = cosine_topk_ivf(
-        emb, queries_df, k=10, dim=64, n_centroids=16, n_probe=8
-    )
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def _ivf_sql(dim: int, n_centroids: int, n_probe: int) -> str:
-    from timeperiods_spark.operators.similarity import (
-        _ivf_centroid,
-        _ivf_centroid_norm,
-    )
-
-    cents = "[" + ", ".join(
-        "[" + ", ".join(repr(v) for v in _ivf_centroid(c, dim)) + "]"
-        for c in range(n_centroids)
-    ) + "]"
-    norms = "[" + ", ".join(
-        repr(_ivf_centroid_norm(c, dim)) for c in range(n_centroids)
-    ) + "]"
-    return f"""
-WITH c0 AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-),
-cs AS (
-  SELECT vec_id, v, CAST(cl AS INT) AS cell,
-         list_dot_product(v, ({cents})[CAST(cl AS INT) + 1]) /
-         (({norms})[CAST(cl AS INT) + 1]) AS s
-  FROM c0, unnest(range({n_centroids})) AS t(cl)
-),
-c AS (
-  SELECT vec_id, v, cell FROM cs
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell ASC) = 1
-),
-q AS (
-  SELECT vec_id AS query_id, v, cell FROM cs
-  WHERE vec_id < 5
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cell DESC) <= {n_probe}
-),
-scored AS (
-  SELECT q.query_id, c.vec_id,
-         list_dot_product(c.v, q.v) /
-         (CASE WHEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.v, q.v)) > 0
-               THEN sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.v, q.v)) END) AS cosine
-  FROM c JOIN q ON c.cell = q.cell
-)
-SELECT query_id, vec_id, ROUND(cosine, 6) AS cosine,
-       CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 10
-"""
-
-
-SQL_COSINE_IVF = _ivf_sql(64, 16, 8)
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (the fifth dedup mode): the
-    corpus plus exact scaled copies (cosine 1.0 by construction) of the
-    first 20 vectors; SRP multi-probe candidates verified by exact
-    cosine. The oracle replays the identical bucket/probe arithmetic."""
-    from timeperiods_spark.operators.dedup import embedding_neardup_pairs
-
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    copies = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 2).alias("embedding"),
-    )
-    allv = emb.unionByName(copies)
-    out = embedding_neardup_pairs(
-        allv, "vec_id", "embedding", dim=64, n_planes=8, threshold=0.6, probes=1
-    )
-    return out.select("id_a", "id_b", F.round("cosine", _R).alias("cosine"))
-
-
-SQL_EMBEDDING_NEARDUP = f"""
-WITH allv AS (
-  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-  UNION ALL
-  SELECT vec_id + 100000 AS id,
-         list_transform(CAST(embedding AS DOUBLE[]), x -> x * 2) AS v
-  FROM embeddings WHERE vec_id < 20
-),
-b AS (SELECT id, v, {srp_bucket_sql('v', 64, 8)} AS bk FROM allv),
-probed AS (
-  SELECT id AS id_a, unnest({srp_probe_buckets_sql('bk', 8)}) AS pb FROM b
-),
-cand AS (
-  SELECT DISTINCT p.id_a, r.id AS id_b
-  FROM probed p JOIN b r ON p.pb = r.bk AND p.id_a < r.id
-),
-wv AS (
-  SELECT c.id_a, c.id_b,
-         list_dot_product(a.v, bb.v) /
-         (CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(bb.v, bb.v)) > 0
-               THEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(bb.v, bb.v)) END) AS cos
-  FROM cand c JOIN b a ON a.id = c.id_a JOIN b bb ON bb.id = c.id_b
-)
-SELECT id_a, id_b, ROUND(cos, 6) AS cosine FROM wv WHERE cos >= 0.6
-"""
-
-
-def q_simhash_incremental(spark, sf_dir):
-    """Incremental SimHash dedup against a persisted chunk index
-    (VERDICT r3 item 5 family): docs below 250 bootstrap the index;
-    the batch above probes it plus itself. With max_hamming=7 <
-    bands=8 the banded candidate join is EXACT (pigeonhole), so the
-    DuckDB twin states whole-corpus survivors brute-force over full
-    fingerprints (union formulation, monotone ids)."""
-    from timeperiods_spark.operators.dedup import (
-        build_simhash_index,
-        simhash_dedup_incremental,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    idx_c, idx_f = build_simhash_index(
-        docs.filter(F.col("doc_id") < 250), "doc_id", "text",
-        k=5, bits=64, bands=8,
-    )
-    r = simhash_dedup_incremental(
-        docs.filter(F.col("doc_id") >= 250), "doc_id", "text",
-        index_chunks=idx_c, index_fingerprints=idx_f,
-        k=5, bits=64, bands=8, max_hamming=7, broadcast_batch=True,
-    )
-    return r["deduped"].select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-SQL_SIMHASH_INCREMENTAL = f"""
-WITH pr AS ({SQL_SIMHASH_PAIRS})
-SELECT CAST(doc_id AS BIGINT) AS doc_id
-FROM documents
-WHERE doc_id >= 250
-  AND doc_id NOT IN (SELECT id_b FROM pr)
-"""
-
-
-def q_embedding_incremental(spark, sf_dir):
-    """Incremental embedding dedup against a persisted SRP index
-    (VERDICT r3 item 5, the embedding mirror of
-    minhash_dedup_incremental): originals below vec_id 250 bootstrap
-    the index (ALL buckets+vectors, survivors and dropped); the batch
-    (originals >= 250 plus scaled near-dup copies at +100000) probes
-    it plus itself. With monotone ids this reproduces EXACTLY the
-    whole-corpus embedding_neardup_pairs single-hop survivor set —
-    which is what the DuckDB twin computes (union formulation: all
-    pairs over the full corpus, batch ids minus pair losers)."""
-    from timeperiods_spark.operators.dedup import (
-        build_embedding_index,
-        embedding_dedup_incremental,
-    )
-
-    emb = _read(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    copies = emb.filter(F.col("vec_id") < 20).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 2).alias("embedding"),
-    )
-    idx_b, idx_v = build_embedding_index(
-        emb.filter(F.col("vec_id") < 250), "vec_id", "embedding",
-        dim=64, n_planes=8,
-    )
-    batch = emb.filter(F.col("vec_id") >= 250).unionByName(copies)
-    r = embedding_dedup_incremental(
-        batch, "vec_id", "embedding",
-        index_buckets=idx_b, index_vectors=idx_v,
-        dim=64, n_planes=8, threshold=0.6, probes=1,
-        broadcast_batch=True,
-    )
-    return r["deduped"].select(F.col("vec_id").cast("long").alias("vec_id"))
-
-
-SQL_EMBEDDING_INCREMENTAL = f"""
-WITH pr AS ({SQL_EMBEDDING_NEARDUP})
-SELECT CAST(bid AS BIGINT) AS vec_id FROM (
-  SELECT vec_id AS bid FROM embeddings WHERE vec_id >= 250
-  UNION ALL
-  SELECT vec_id + 100000 AS bid FROM embeddings WHERE vec_id < 20
-)
-WHERE bid NOT IN (SELECT id_b FROM pr)
-"""
-
-
-def q_cosine_ivf_via_index(spark, sf_dir):
-    """IVF top-k against the PERSISTED index path (build_ivf_index +
-    cosine_topk_ivf_index): same semantics as cosine_topk_ivf, so the
-    SAME oracle SQL pins both — at 100 TB the index is written
-    partitioned by cell and the probe filter prunes at the file level
-    (pinned in tests)."""
-    from timeperiods_spark import build_ivf_index, cosine_topk_ivf_index
-
-    emb = _read(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx = build_ivf_index(emb, dim=64, n_centroids=16)
-    out = cosine_topk_ivf_index(
-        idx, queries_df, k=10, dim=64, n_centroids=16, n_probe=8
-    )
-    return out.select(
-        "query_id", "vec_id", F.round("cosine", _R).alias("cosine"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def q_minhash_incremental(spark, sf_dir):
-    """Incremental dedup against a persisted band index (VERDICT r2
-    item 5): docs below the split bootstrap the index (ALL signatures,
-    survivors and dropped); the batch above the split probes it plus
-    itself. With monotone doc ids this reproduces EXACTLY the
-    whole-corpus single_hop survivor set — which is what the DuckDB
-    twin computes (union formulation: all pairs over the full corpus,
-    batch docs minus pair losers)."""
-    from timeperiods_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_incremental,
-    )
-
-    docs = _read(spark, sf_dir, "documents")
-    split = 250
-    idx_b, idx_s = build_minhash_index(
-        docs.filter(F.col("doc_id") < split), "doc_id", "text",
-        k=5, n_hashes=12, bands=4,
-    )
-    r = minhash_dedup_incremental(
-        docs.filter(F.col("doc_id") >= split), "doc_id", "text",
-        index_bands=idx_b, index_shingles=idx_s,
-        k=5, n_hashes=12, bands=4, verify_threshold=0.4,
-        broadcast_batch=True,
-    )
-    return r["deduped"].select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-SQL_MINHASH_INCREMENTAL = f"""
-WITH pr AS ({SQL_MINHASH_PAIRS})
-SELECT CAST(doc_id AS BIGINT) AS doc_id
-FROM documents
-WHERE doc_id >= 250
-  AND doc_id NOT IN (SELECT id_b FROM pr)
-"""
 
 
 def q_pack_spans(spark, sf_dir):
@@ -3374,20 +2802,6 @@ LEFT JOIN cov c ON d.doc_id = c.doc_id AND ns.n = c.n
 
 
 _PIPELINE_QUERIES = {
-    "exact_dedup_docs": q_exact_dedup,
-    "ngram_jaccard_pairs": q_ngram_jaccard,
-    "minhash_lsh_pairs": q_minhash_pairs,
-    "minhash_dedup_cc": q_minhash_dedup_cc,
-    "minhash_dedup_incremental": q_minhash_incremental,
-    "simhash_fingerprints": q_simhash,
-    "simhash_pairs": q_simhash_pairs,
-    "simhash_dedup_incremental": q_simhash_incremental,
-    "cosine_topk_bruteforce": q_cosine_topk,
-    "cosine_topk_lsh": q_cosine_lsh,
-    "cosine_topk_lsh_highdim": q_cosine_lsh_highdim,
-    "cosine_topk_ivf": q_cosine_ivf,
-    "embedding_neardup_pairs": q_embedding_neardup,
-    "embedding_dedup_incremental": q_embedding_incremental,
     "pack_sequences_spans": q_pack_spans,
     "pack_chunks_by_source": q_pack_chunks,
     "token_histogram_by_source": q_token_histogram,
@@ -3400,27 +2814,12 @@ _PIPELINE_QUERIES = {
     "ngram_repetition_docs": q_ngram_repetition,
     "quality_weighted_sample": q_quality_sample,
     "hash_sample_n_per_source": q_hash_sample_n,
-    "cosine_topk_ivf_index": q_cosine_ivf_via_index,
     "ngram_logprob_tokens": q_ngram_logprob,
     "tfidf_topk_tokens": q_tfidf,
     "vocab_coverage_docs": q_vocab_coverage,
 }
 
 _PIPELINE_ORACLES = {
-    "exact_dedup_docs": SQL_EXACT_DEDUP,
-    "ngram_jaccard_pairs": SQL_NGRAM_JACCARD,
-    "minhash_lsh_pairs": SQL_MINHASH_PAIRS,
-    "minhash_dedup_cc": SQL_MINHASH_CC,
-    "minhash_dedup_incremental": SQL_MINHASH_INCREMENTAL,
-    "simhash_fingerprints": SQL_SIMHASH,
-    "simhash_pairs": SQL_SIMHASH_PAIRS,
-    "simhash_dedup_incremental": SQL_SIMHASH_INCREMENTAL,
-    "cosine_topk_bruteforce": SQL_COSINE_TOPK,
-    "cosine_topk_lsh": SQL_COSINE_LSH,
-    "cosine_topk_lsh_highdim": SQL_COSINE_LSH_HIGHDIM,
-    "cosine_topk_ivf": SQL_COSINE_IVF,
-    "embedding_neardup_pairs": SQL_EMBEDDING_NEARDUP,
-    "embedding_dedup_incremental": SQL_EMBEDDING_INCREMENTAL,
     "pack_sequences_spans": SQL_PACK_SPANS,
     "pack_chunks_by_source": SQL_PACK_CHUNKS,
     "token_histogram_by_source": SQL_TOKEN_HISTOGRAM,
@@ -3433,7 +2832,6 @@ _PIPELINE_ORACLES = {
     "ngram_repetition_docs": SQL_NGRAM_REPETITION,
     "quality_weighted_sample": SQL_QUALITY_SAMPLE,
     "hash_sample_n_per_source": SQL_HASH_SAMPLE_N,
-    "cosine_topk_ivf_index": SQL_COSINE_IVF,
     "ngram_logprob_tokens": SQL_NGRAM_LOGPROB,
     "tfidf_topk_tokens": SQL_TFIDF,
     "vocab_coverage_docs": SQL_VOCAB_COVERAGE,

@@ -87,13 +87,12 @@ def main(argv=None) -> dict:
 
     t0 = time.time()
     per = args.n_docs // args.batches
-    total_rows = 0
     for i in range(args.batches):
         lo, hi = i * per, (i + 1) * per if i < args.batches - 1 else args.n_docs
         batch = token_table(
             spark, args.n_docs, partitions=n_parts, doc_range=(lo, hi)
         )
-        counts = ingest_batch(
+        ingest_batch(
             catalog,
             batch,
             ("start_hour", "end_hour"),
@@ -121,7 +120,6 @@ def main(argv=None) -> dict:
             # stats action (another full pass otherwise)
             carry_hints={"span": (0, 365 * 24 + 64), "groups": 11},
         )
-        total_rows += sum(counts.values())
     if args.compact:
         for tier in catalog.tiers:
             catalog.compact(spark, tier)

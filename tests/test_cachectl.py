@@ -168,3 +168,30 @@ def test_trend_two_call_pipeline_keeps_both_caches(spark, clean_caches):
     assert not msgs, msgs
     tags = [t for t in cachectl.managed_tags() if t.startswith("holt.local#")]
     assert len(tags) == 2
+
+
+def test_interval_avg_with_join_stats_caches_nothing(spark, clean_caches):
+    """A caller-provided join_stats is a planning hint only: the call
+    persists no intermediate, so the partition layout feeding the
+    weighted-mean aggregate is the same with or without it."""
+    from timeperiods_spark import interval_weighted_avg
+
+    x = spark.range(60).select(
+        (F.col("id") % 3).cast("int").alias("g"),
+        (F.floor(F.col("id") / 3) * 10).cast("int").alias("s"),
+        (F.floor(F.col("id") / 3) * 10 + 9).cast("int").alias("e"),
+        F.col("id").cast("double").alias("v"),
+    )
+    y = spark.range(12).select(
+        (F.col("id") % 3).cast("int").alias("g"),
+        (F.col("id") * 15).cast("int").alias("s"),
+        (F.col("id") * 15 + 24).cast("int").alias("e"),
+    )
+    before = _n_cached(spark)
+    rows = interval_weighted_avg(
+        x, y, ("s", "e"), ("v",), ("g",), validate=False, join_stats=(60, 12, 3)
+    ).collect()
+    assert len(rows) == 12
+    tags = cachectl.managed_tags()
+    assert not [t for t in tags if t.startswith("interval_weighted_avg.")], tags
+    assert _n_cached(spark) <= before

@@ -1,502 +1,7 @@
-"""Training-data pipeline operators: dedup and similarity search."""
+"""Engine operators with no dedicated module: grouped cartesian,
+sessionize, M4 downsampling and rolling-window aggregates."""
 
 from __future__ import annotations
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
-
-from timeperiods_spark.operators.dedup import (
-    exact_dedup,
-    minhash_candidate_pairs,
-    minhash_dedup,
-    ngram_jaccard_pairs,
-    simhash_pairs,
-)
-from timeperiods_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_lsh,
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    base = [
-        "the quick brown fox jumps over the lazy dog in the park",
-        "a completely different document about spark query engines",
-        "numbers and symbols 123 456 !!! ??? mixed into text here",
-        "der hund und die katze sind nicht der beste freund",
-    ]
-    rows = []
-    for i, t in enumerate(base):
-        rows.append((i * 10, t))
-        rows.append((i * 10 + 1, t + " extra tail words"))  # near-dup
-    rows.append((99, base[0]))  # exact dup of doc 0 text
-    return spark.createDataFrame(rows, "doc_id long, text string").cache()
-
-
-def test_exact_dedup_deterministic(spark):
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (2, "a", 3.0), (3, "b", 1.0)], "id long, k string, v double"
-    )
-    out = exact_dedup(df, ["k"], order_cols=["v", "id"]).orderBy("k").collect()
-    assert [(r["id"], r["k"]) for r in out] == [(2, "a"), (3, "b")]
-
-
-def test_ngram_jaccard_finds_neardups(docs):
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
-    got = {(r["id_a"], r["id_b"]) for r in pairs}
-    # each doc and its +1 variant; doc 0 and its exact copy 99
-    assert (0, 1) in got and (10, 11) in got and (0, 99) in got and (1, 99) in got
-    exact = [r for r in pairs if (r["id_a"], r["id_b"]) == (0, 99)]
-    assert exact[0]["jaccard"] == pytest.approx(1.0)
-    # unrelated docs don't pair
-    assert not any(a // 10 != b // 10 and b != 99 for a, b in got)
-
-
-def test_minhash_recall_and_verify(docs):
-    cand = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_candidate_pairs(docs, "doc_id", "text").collect()
-    }
-    assert (0, 99) in cand  # identical docs always collide
-    verified = minhash_candidate_pairs(
-        docs, "doc_id", "text", verify_threshold=0.5
-    ).collect()
-    vd = {(r["id_a"], r["id_b"]): r["jaccard"] for r in verified}
-    assert vd[(0, 99)] == pytest.approx(1.0)
-    for (a, b), j in vd.items():
-        assert j >= 0.5
-
-
-def test_minhash_hot_bucket_cap(spark):
-    """max_bucket_size drops over-popular (band, bsig) buckets before
-    the self join: pairs matched ONLY through the hot boilerplate
-    bucket disappear, genuine near-dup pairs outside it survive."""
-    boiler = "shared numeric boilerplate 1234567890 " * 4
-    rows = [(i, boiler) for i in range(30)]          # one hot bucket
-    rows += [(100, "a genuinely unique document about spark engines x"),
-             (101, "a genuinely unique document about spark engines y")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = minhash_candidate_pairs(df, "doc_id", "text").count()
-    capped = minhash_candidate_pairs(
-        df, "doc_id", "text", max_bucket_size=10
-    )
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    # 30 identical docs contribute 435 pairs uncapped; all gone
-    assert uncapped >= 435 + 1
-    assert (100, 101) in got        # real near-dup pair survives
-    assert all(a >= 100 for a, _ in got), got
-
-
-def test_minhash_template_corpus_variance_and_cap(spark):
-    """Template corpora (every doc drawn from a small shared shingle
-    pool) make the RAW candidate count hash-draw-sensitive: when a
-    permutation's globally minimal hash lands on a common shingle, one
-    (band, bsig) bucket captures a large fraction of the corpus and
-    contributes a pair clique — re-hashing the same similarity
-    structure (a character-bijected corpus, jaccard exactly invariant)
-    measured 5x the candidates. max_bucket_size collapses the clique
-    while every verified true pair survives; hash_fn='xxhash64' is the
-    production hash (the portable poly hash exists for oracle parity
-    only)."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    alpha = "abcdefghijklmnopqrstuvwxyz"
-    rot = alpha[7:] + alpha[:7]
-    # a bijection on characters: shingle-set similarity is EXACTLY
-    # invariant, only the hash draw changes
-    rehashed = docs.withColumn(
-        "text",
-        F.translate("text", alpha + alpha.upper(), rot + rot.upper()),
-    )
-    capped_a = minhash_candidate_pairs(
-        docs, "doc_id", "text", hash_fn="xxhash64", max_bucket_size=20
-    ).count()
-    capped_b = minhash_candidate_pairs(
-        rehashed, "doc_id", "text", hash_fn="xxhash64", max_bucket_size=20
-    ).count()
-    # capped counts are draw-stable (same order of magnitude)
-    assert capped_b <= 2 * capped_a + 10, (capped_a, capped_b)
-    # every TRUE >=0.5-jaccard pair survives the cap, both draws
-    truth = ngram_jaccard_pairs(
-        docs, "doc_id", "text", threshold=0.5
-    ).count()
-    for frame in (docs, rehashed):
-        v = minhash_candidate_pairs(
-            frame, "doc_id", "text", verify_threshold=0.5,
-            hash_fn="xxhash64", max_bucket_size=20,
-        ).count()
-        assert v == truth, (v, truth)
-
-
-def test_simhash_embedding_hot_bucket_cap(spark):
-    """The cap generalizes to the other two LSH families."""
-    from timeperiods_spark.operators.dedup import (
-        embedding_neardup_pairs,
-        simhash_pairs,
-    )
-
-    boiler = "shared numeric boilerplate 1234567890 " * 4
-    rows = [(i, boiler) for i in range(30)]
-    rows += [(100, "a genuinely unique document about spark engines x"),
-             (101, "a genuinely unique document about spark engines y")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = {
-        (r["id_a"], r["id_b"])
-        for r in simhash_pairs(
-            df, "doc_id", "text", max_hamming=7, max_bucket_size=10
-        ).collect()
-    }
-    assert (100, 101) in capped
-    assert all(a >= 100 for a, _ in capped), capped
-
-    # 30 copies land in SRP bucket 0 (hot); the near-dup pair lives in
-    # bucket 8 (precomputed from the deterministic planes)
-    vecs = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(30)]
-    vecs += [(100, [0.0, 0.0, 0.0, 1.0]), (101, [0.0, 0.02, 0.0, 1.0])]
-    vdf = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    vp = {
-        (r["id_a"], r["id_b"])
-        for r in embedding_neardup_pairs(
-            vdf, "vec_id", "embedding", dim=4, n_planes=4,
-            threshold=0.9, probes=0, max_bucket_size=10,
-        ).collect()
-    }
-    assert (100, 101) in vp
-    assert all(a >= 100 for a, _ in vp), vp
-
-
-def test_minhash_incremental_hot_bucket_cap(spark):
-    """The incremental probe honors max_bucket_size over the COMBINED
-    index+batch bucket population, while new_bands stays complete."""
-    from timeperiods_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_incremental,
-    )
-
-    boiler = "shared numeric boilerplate 1234567890 " * 4
-    idx_docs = spark.createDataFrame(
-        [(i, boiler) for i in range(20)], "doc_id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(100, boiler), (101, "a unique doc about engines")],
-        "doc_id long, text string",
-    )
-    ib, ish = build_minhash_index(idx_docs, "doc_id", "text")
-    capped = minhash_dedup_incremental(
-        batch, "doc_id", "text", index_bands=ib, index_shingles=ish,
-        verify_threshold=0.5, max_bucket_size=10,
-    )
-    # the boilerplate batch doc survives (its only matches ride the
-    # hot bucket), and the index rows it returns are unfiltered
-    kept = {r["doc_id"] for r in capped["deduped"].collect()}
-    assert kept == {100, 101}
-    assert capped["new_bands"].count() == 2 * 4
-    uncapped = minhash_dedup_incremental(
-        batch, "doc_id", "text", index_bands=ib, index_shingles=ish,
-        verify_threshold=0.5,
-    )
-    assert {r["doc_id"] for r in uncapped["deduped"].collect()} == {101}
-
-
-def test_minhash_dedup_drops_copies(docs):
-    kept = minhash_dedup(docs, "doc_id", "text", verify_threshold=0.9)
-    ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    assert 0 in ids and 99 not in ids  # canonical smallest id survives
-
-
-def test_simhash_pairs(docs):
-    pairs = simhash_pairs(docs, "doc_id", "text", max_hamming=4).collect()
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs}
-    assert got.get((0, 99)) == 0  # identical text -> identical simhash
-
-
-def _embeddings(spark, n=80, dim=8, seed=190):
-    rng = np.random.default_rng(seed)
-    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_cosine_topk_exact(spark):
-    corpus = _embeddings(spark)
-    queries = corpus.limit(3).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = cosine_topk(corpus, queries, k=5).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_id"], []).append(r)
-    for q, rows in by_q.items():
-        rows.sort(key=lambda r: r["rank"])
-        assert len(rows) == 5
-        # a vector's own nearest neighbor is itself, cosine 1
-        assert rows[0]["vec_id"] == q and rows[0]["cosine"] == pytest.approx(1.0)
-        cos = [r["cosine"] for r in rows]
-        assert cos == sorted(cos, reverse=True)
-
-
-def test_cosine_lsh_subset_of_exact_bucket(spark):
-    corpus = _embeddings(spark, dim=8)
-    queries = corpus.limit(2).select(F.col("vec_id").alias("query_id"), "embedding")
-    approx = cosine_topk_lsh(corpus, queries, k=5, dim=8, n_planes=4).collect()
-    # self-match always lands in its own bucket
-    selfs = {r["query_id"] for r in approx if r["vec_id"] == r["query_id"]}
-    assert selfs == {0, 1}
-    # approx scores must be a subset of exact scores per query
-    exact = cosine_topk(corpus, queries, k=80).collect()
-    exact_scores = {(r["query_id"], r["vec_id"]): r["cosine"] for r in exact}
-    for r in approx:
-        assert exact_scores[(r["query_id"], r["vec_id"])] == pytest.approx(r["cosine"])
-
-
-def test_connected_components_chain_and_clusters(spark):
-    from timeperiods_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        # chain 1-2-3-4 (no direct 1~4 edge), separate pair 10-11,
-        # and a triangle 20-21-22
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22)],
-        "id_a long, id_b long",
-    )
-    cc = {r["id"]: r["comp"] for r in connected_components(pairs).collect()}
-    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_minhash_dedup_components_vs_single_hop(docs):
-    both = {}
-    for method in ("single_hop", "components"):
-        kept = minhash_dedup(docs, "doc_id", "text",
-                             verify_threshold=0.5, method=method)
-        both[method] = {r["doc_id"] for r in kept.select("doc_id").collect()}
-    # min id of each duplicate cluster survives either way; 99 is an
-    # exact copy of 0 and must be dropped by both
-    for ids in both.values():
-        assert 0 in ids and 99 not in ids
-    # components can only keep FEWER-or-equal docs than single_hop
-    # never more (transitive closure merges chains)
-    assert both["components"] <= both["single_hop"]
-
-
-def test_cosine_lsh_multiprobe_superset(spark):
-    corpus = _embeddings(spark, n=100, dim=8)
-    queries = corpus.limit(3).select(F.col("vec_id").alias("query_id"), "embedding")
-    base = cosine_topk_lsh(corpus, queries, k=50, dim=8, n_planes=4, probes=0)
-    multi = cosine_topk_lsh(corpus, queries, k=50, dim=8, n_planes=4, probes=1)
-    seen0 = {(r["query_id"], r["vec_id"]) for r in base.collect()}
-    seen1 = {(r["query_id"], r["vec_id"]) for r in multi.collect()}
-    # multi-probe candidates strictly include the exact-bucket ones
-    # (k is large enough that ranking doesn't evict them here)
-    assert seen0 <= seen1 and len(seen1) > len(seen0)
-
-
-def test_embedding_neardup_finds_scaled_copies(spark):
-    from timeperiods_spark.operators.dedup import embedding_neardup_pairs
-
-    base = _embeddings(spark, n=40, dim=8)
-    copies = base.filter("vec_id < 10").selectExpr(
-        "vec_id + 1000 AS vec_id",
-        "transform(embedding, x -> x * 3.0) AS embedding",
-    )
-    out = embedding_neardup_pairs(
-        base.unionByName(copies), "vec_id", "embedding",
-        dim=8, n_planes=4, threshold=0.99, probes=1,
-    ).collect()
-    got = {(r["id_a"], r["id_b"]) for r in out}
-    # a positively-scaled copy shares the exact bucket -> always found
-    for i in range(10):
-        assert (i, i + 1000) in got
-    for r in out:
-        assert r["cosine"] >= 0.99
-
-
-def test_simhash_incremental_equals_whole_corpus(docs):
-    """batch1 → chunk index → batch2 probe reproduces the whole-corpus
-    SimHash single-hop survivor set. With max_hamming < bands the
-    banded join is EXACT (pigeonhole), so whole-corpus survivors are
-    computable brute-force here."""
-    from timeperiods_spark.operators.dedup import (
-        simhash_dedup_incremental,
-        simhash_frame,
-    )
-
-    fp = {r["id"]: r["simhash"] for r in simhash_frame(docs, "doc_id", "text").collect()}
-    ids = sorted(fp)
-    losers = {
-        b
-        for i, a in enumerate(ids)
-        for b in ids[i + 1:]
-        if bin(fp[a] ^ fp[b]).count("1") <= 7
-    }
-    whole = set(ids) - losers
-
-    b1 = docs.filter("doc_id < 20")
-    b2 = docs.filter("doc_id >= 20")
-    r1 = simhash_dedup_incremental(b1, "doc_id", "text", max_hamming=7)
-    r2 = simhash_dedup_incremental(
-        b2, "doc_id", "text",
-        index_chunks=r1["new_chunks"],
-        index_fingerprints=r1["new_fingerprints"],
-        max_hamming=7, broadcast_batch=True,
-    )
-    inc = {
-        r["doc_id"]
-        for r in r1["deduped"].select("doc_id").unionByName(
-            r2["deduped"].select("doc_id")
-        ).collect()
-    }
-    assert inc == whole
-    assert r1["new_fingerprints"].count() == b1.count()
-    assert r2["new_chunks"].count() == b2.count() * 8
-
-
-def test_simhash_index_bootstrap_matches_incremental_frames(docs):
-    from timeperiods_spark.operators.dedup import (
-        build_simhash_index,
-        simhash_dedup_incremental,
-    )
-
-    idx_c, idx_f = build_simhash_index(docs, "doc_id", "text")
-    r = simhash_dedup_incremental(docs, "doc_id", "text")
-    assert sorted(tuple(x) for x in idx_c.collect()) == sorted(
-        tuple(x) for x in r["new_chunks"].collect()
-    )
-    assert sorted(tuple(x) for x in idx_f.collect()) == sorted(
-        tuple(x) for x in r["new_fingerprints"].collect()
-    )
-
-
-def test_embedding_incremental_equals_whole_corpus(spark):
-    """batch1 → SRP index → batch2 probe reproduces EXACTLY the
-    whole-corpus embedding single-hop survivor set (monotone ids;
-    VERDICT r3 item 5 — the embedding mirror of the MinHash test).
-    Probe symmetry: hamming(b_a, b_b) <= probes is symmetric, so
-    probing from the batch side finds the same pairs the whole-corpus
-    one-sided probe finds."""
-    from timeperiods_spark.operators.dedup import (
-        embedding_dedup_incremental,
-        embedding_neardup_pairs,
-    )
-
-    base = _embeddings(spark, n=60, dim=8)
-    copies = base.filter("vec_id < 15").selectExpr(
-        "vec_id + 1000 AS vec_id",
-        "transform(embedding, x -> x * 2.0) AS embedding",
-    )
-    allv = base.unionByName(copies)
-    pairs = embedding_neardup_pairs(
-        allv, "vec_id", "embedding", dim=8, n_planes=4,
-        threshold=0.8, probes=1,
-    )
-    losers = {r["id_b"] for r in pairs.collect()}
-    whole = {
-        r["vec_id"] for r in allv.select("vec_id").collect()
-    } - losers
-
-    b1 = allv.filter("vec_id < 30")
-    b2 = allv.filter("vec_id >= 30")
-    r1 = embedding_dedup_incremental(
-        b1, "vec_id", "embedding", dim=8, n_planes=4,
-        threshold=0.8, probes=1,
-    )
-    r2 = embedding_dedup_incremental(
-        b2, "vec_id", "embedding",
-        index_buckets=r1["new_buckets"], index_vectors=r1["new_vectors"],
-        dim=8, n_planes=4, threshold=0.8, probes=1, broadcast_batch=True,
-    )
-    inc = {
-        r["vec_id"]
-        for r in r1["deduped"].select("vec_id").unionByName(
-            r2["deduped"].select("vec_id")
-        ).collect()
-    }
-    assert inc == whole
-    # index frames cover EVERY batch vector, survivors and dropped
-    assert r1["new_vectors"].count() == b1.count()
-    assert r2["new_buckets"].count() == b2.count()
-
-
-def test_embedding_index_bootstrap_matches_incremental_frames(spark):
-    from timeperiods_spark.operators.dedup import (
-        build_embedding_index,
-        embedding_dedup_incremental,
-    )
-
-    base = _embeddings(spark, n=30, dim=8)
-    idx_b, idx_v = build_embedding_index(
-        base, "vec_id", "embedding", dim=8, n_planes=4
-    )
-    r = embedding_dedup_incremental(
-        base, "vec_id", "embedding", dim=8, n_planes=4, threshold=0.95
-    )
-    assert sorted(tuple(x) for x in idx_b.collect()) == sorted(
-        tuple(x) for x in r["new_buckets"].collect()
-    )
-
-
-def test_cosine_ivf_self_match_and_exact_scores(spark):
-    from timeperiods_spark.operators.similarity import cosine_topk_ivf
-
-    corpus = _embeddings(spark, n=120, dim=8)
-    queries = corpus.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = cosine_topk_ivf(corpus, queries, k=5, dim=8, n_centroids=8, n_probe=2).collect()
-    # a query's own vector lives in its nearest cell, which is always probed
-    selfs = {r["query_id"] for r in out if r["vec_id"] == r["query_id"]}
-    assert selfs == {0, 1, 2, 3}
-    exact = cosine_topk(corpus, queries, k=120).collect()
-    escore = {(r["query_id"], r["vec_id"]): r["cosine"] for r in exact}
-    for r in out:
-        assert escore[(r["query_id"], r["vec_id"])] == pytest.approx(r["cosine"])
-
-
-def test_minhash_incremental_equals_whole_corpus(docs):
-    """batch1 → index → batch2 probe reproduces EXACTLY the whole-corpus
-    single_hop survivor set (monotone ids; VERDICT r2 item 5)."""
-    from timeperiods_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_incremental,
-    )
-
-    whole = {
-        r["doc_id"]
-        for r in minhash_dedup(
-            docs, "doc_id", "text", verify_threshold=0.4
-        ).select("doc_id").collect()
-    }
-    b1 = docs.filter("doc_id < 20")
-    b2 = docs.filter("doc_id >= 20")
-    # batch 1 cold-starts (dedups against nothing + itself)
-    r1 = minhash_dedup_incremental(b1, "doc_id", "text", verify_threshold=0.4)
-    # index holds ALL of batch 1's signatures (survivors AND dropped)
-    idx_b, idx_s = r1["new_bands"], r1["new_shingles"]
-    r2 = minhash_dedup_incremental(
-        b2, "doc_id", "text",
-        index_bands=idx_b, index_shingles=idx_s, verify_threshold=0.4,
-    )
-    inc = {
-        r["doc_id"]
-        for r in r1["deduped"].select("doc_id").unionByName(
-            r2["deduped"].select("doc_id")
-        ).collect()
-    }
-    assert inc == whole
-    # the index-building frames cover every batch doc, not just survivors
-    assert r1["new_shingles"].count() == b1.count()
-    assert r2["new_shingles"].count() == b2.count()
-
-
-def test_minhash_index_bootstrap_matches_incremental_frames(docs):
-    from timeperiods_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_incremental,
-    )
-
-    bands_df, sh_df = build_minhash_index(docs, "doc_id", "text")
-    r = minhash_dedup_incremental(docs, "doc_id", "text", verify_threshold=0.4)
-    assert sorted([tuple(x) for x in bands_df.collect()]) == sorted(
-        [tuple(x) for x in r["new_bands"].collect()]
-    )
 
 
 def test_grouped_cartesian_rename_dodges_own_columns(spark):
@@ -621,105 +126,3 @@ def test_rolling_window_agg_matches_range_window(spark):
         ).collect()
     }
     assert got == want
-
-
-def test_minhash_index_roundtrips_through_parquet(spark, docs, tmp_path):
-    """The persisted-index workflow end to end: write the band index +
-    shingles to parquet, read them back, and dedup a new batch against
-    the STORED index — same survivors as the in-memory path."""
-    from timeperiods_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_incremental,
-    )
-
-    b1, b2 = docs.filter("doc_id < 20"), docs.filter("doc_id >= 20")
-    bands, shingles = build_minhash_index(b1, "doc_id", "text")
-    bands.write.parquet(str(tmp_path / "idx_bands"))
-    shingles.write.parquet(str(tmp_path / "idx_shingles"))
-
-    mem = minhash_dedup_incremental(
-        b2, "doc_id", "text",
-        index_bands=bands, index_shingles=shingles, verify_threshold=0.4,
-    )["deduped"]
-    stored = minhash_dedup_incremental(
-        b2, "doc_id", "text",
-        index_bands=spark.read.parquet(str(tmp_path / "idx_bands")),
-        index_shingles=spark.read.parquet(str(tmp_path / "idx_shingles")),
-        verify_threshold=0.4,
-    )["deduped"]
-    assert {r["doc_id"] for r in mem.select("doc_id").collect()} == {
-        r["doc_id"] for r in stored.select("doc_id").collect()
-    }
-
-
-def test_minhash_hot_bucket_warns_without_cap(spark):
-    """VERDICT r4 finding 2: with max_bucket_size=None a boilerplate
-    corpus silently pays m^2/2 from one over-popular bucket — the
-    operator must measure the skew and warn, without changing results."""
-    import warnings as w
-
-    from timeperiods_spark.operators.dedup import minhash_candidate_pairs
-
-    # 80 near-identical docs → giant (band,bsig) buckets, plus a few
-    # distinct ones so the mean stays low
-    rows = [(i, "the same boilerplate template text repeated here") for i in range(80)]
-    rows += [(100 + i, f"unique document number {i} about topic {i * 7}") for i in range(10)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        n_uncapped = minhash_candidate_pairs(
-            docs, "doc_id", "text", verify_threshold=0.9
-        ).count()
-        msgs = [str(x.message) for x in rec if "hottest" in str(x.message)]
-    assert len(msgs) == 1 and "max_bucket_size" in msgs[0]
-    assert n_uncapped >= 80 * 79 // 2  # the clique really is quadratic
-
-    # warning is suppressible, and the capped path does not warn
-    with w.catch_warnings(record=True) as rec2:
-        w.simplefilter("always")
-        minhash_candidate_pairs(
-            docs, "doc_id", "text", verify_threshold=0.9, hot_bucket_warn=False
-        ).count()
-        minhash_candidate_pairs(
-            docs, "doc_id", "text", verify_threshold=0.9, max_bucket_size=16
-        ).count()
-        assert not [x for x in rec2 if "hottest" in str(x.message)]
-
-
-def test_ivf_index_roundtrip_and_equality(spark, tmp_path):
-    """Persisted IVF index == direct IVF, through a cell-partitioned
-    parquet round-trip; probing prunes partitions at the scan."""
-    from timeperiods_spark import (
-        build_ivf_index,
-        cosine_topk_ivf,
-        cosine_topk_ivf_index,
-    )
-
-    rng = __import__("random").Random(12)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(400)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    kw = dict(k=8, dim=16, n_centroids=8, n_probe=3)
-    direct = cosine_topk_ivf(emb, queries, **kw).collect()
-
-    idx = build_ivf_index(emb, dim=16, n_centroids=8)
-    p = str(tmp_path / "ivf")
-    idx.write.partitionBy("cell").parquet(p)
-    back = spark.read.parquet(p)
-    via_index = cosine_topk_ivf_index(back, queries, **kw)
-    got = via_index.collect()
-    dm = {(r["query_id"], r["vec_id"]): (r["rank"], round(r["cosine"], 9))
-          for r in direct}
-    gm = {(r["query_id"], r["vec_id"]): (r["rank"], round(r["cosine"], 9))
-          for r in got}
-    assert dm == gm and len(dm) > 0
-
-    # partition pruning: probing a SINGLE known cell must plan a scan
-    # with a partition filter on cell (file-level pruning at 100 TB)
-    one = back.filter(F.col("cell") == 3)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(cell" in plan.replace("#", "")[:10**6] or \
-        "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:120]

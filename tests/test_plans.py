@@ -11,7 +11,6 @@ from __future__ import annotations
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from timeperiods_spark import (
     TierCatalog,
@@ -146,61 +145,6 @@ def test_catalog_read_pushes_down(spark, tmp_path):
     assert "xminstart" not in cols and "xmaxend" not in cols, cols
 
 
-def test_minhash_band_join_ships_no_arrays(spark):
-    """The band self-join + pair dedup must shuffle only (id, band,
-    bsig): carrying the shingle-hash arrays (~doc length) through the
-    band exchange, multiplied by `bands`, is the shuffle-bloat
-    anti-pattern this pins against. Shingle sets re-attach to unique
-    candidate pairs via id-equi joins instead."""
-    from timeperiods_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = spark.createDataFrame(
-        [(i, f"document number {i} with some shared text") for i in range(6)],
-        "doc_id long, text string",
-    )
-    # hot_bucket_warn=False: the warn path's stats action materializes
-    # the shingle cache, after which AQE broadcasts this tiny band join
-    # and the exchange under inspection disappears — the pin is about
-    # the lazy plan's shuffle payload
-    out = minhash_candidate_pairs(
-        docs, "doc_id", "text", verify_threshold=0.1, hot_bucket_warn=False
-    )
-    formatted = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    # formatted explain lists every node's Input/Output columns: no
-    # Exchange that partitions by the band signature may carry a
-    # shingle-hashes array column
-    exchanges = re.findall(
-        r"\(\d+\) Exchange\s*\nInput \[\d+\]: \[([^\]]*)\]\s*\n"
-        r"Arguments: hashpartitioning\(([^)]*)\)",
-        formatted,
-    )
-    band_exchanges = [cols for cols, keys in exchanges if "bsig" in keys]
-    assert band_exchanges, formatted[:2000]  # the band join must exist
-    for cols in band_exchanges:
-        assert "hashes" not in cols, cols
-
-
-def test_minhash_hot_bucket_probe_fills_banded_cache(spark):
-    """The default-on hot-bucket skew probe is an eager action; the
-    banded frame must be persisted FIRST so the probe materializes the
-    cache and the self join's two sides read it back — otherwise the
-    dominant shingle→minhash→banding stage runs once for the probe and
-    again on consumption (~2x at corpus scale, ADVICE r5)."""
-    from timeperiods_spark.operators.dedup import minhash_candidate_pairs
-
-    docs = spark.createDataFrame(
-        [(i, f"document number {i} with some shared text") for i in range(6)],
-        "doc_id long, text string",
-    )
-    out = minhash_candidate_pairs(docs, "doc_id", "text")
-    plan = _plan(out)
-    # both self-join sides come from the cache, and no live banding
-    # (posexplode of the signature slices) survives outside it
-    assert plan.count("InMemoryTableScan") >= 2, plan[:2000]
-
-
 def test_ungrouped_validation_is_not_single_partition(spark):
     """With group_vars=[] the integrity scan must window by the
     deterministic start-bucket — not funnel everything through one
@@ -214,37 +158,6 @@ def test_ungrouped_validation_is_not_single_partition(spark):
     )
     p = _plan(_overlap_scan(xw, []))
     assert "hashpartitioning(__bk" in p, p[:1500]
-
-
-def test_cosine_topk_preaggregates_before_rank_exchange(spark):
-    """The rank window's exchange must sit ABOVE the per-partition
-    top-k reduction (MapInPandas), so only |Q| x k x partitions rows are
-    shuffled — never the full |Q| x |C| scored set."""
-    from timeperiods_spark.operators.similarity import cosine_topk
-
-    corpus = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(50)], "vec_id long, embedding array<double>"
-    )
-    q = corpus.limit(2).selectExpr("vec_id AS query_id", "embedding")
-    p = _plan(cosine_topk(corpus, q, k=3))
-    i_exchange = p.index("Exchange hashpartitioning(query_id")
-    i_map = p.index("MapInPandas")
-    assert i_exchange < i_map, p[:1500]  # exchange consumes the reduced set
-
-
-def test_srp_bucket_plan_is_compact_at_high_dim(spark):
-    """dim=1024, n_planes=16 must compile to O(n_planes) plan nodes
-    (array literals + zip_with dots), not an unrolled 16k-term sum of
-    element_at calls that breaks codegen."""
-    from timeperiods_spark.operators.similarity import srp_bucket
-
-    df = spark.range(4).selectExpr(
-        "transform(sequence(1, 1024), i -> CAST(i * (id + 1) AS DOUBLE)) AS v"
-    )
-    out = df.select(srp_bucket(F.col("v"), 1024, 16).alias("b"))
-    analyzed = out._jdf.queryExecution().optimizedPlan().toString()
-    assert "element_at" not in analyzed
-    out.collect()  # and it actually runs
 
 
 def test_iwa_projection_prunes_value_columns(spark, xy):

@@ -16,7 +16,7 @@ from .errors import (
     TimeperiodsError,
 )
 from .functions.compression import compress_series, decompress_series
-from .functions.grid import salted_repartition, spread_input, timestamp_to_grid
+from .functions.grid import salted_repartition, timestamp_to_grid
 from .operators.cross import grouped_cartesian
 from .operators.downsample import downsample_m4, rollup_ohlc
 from .operators.correlate import cross_correlation
@@ -29,22 +29,6 @@ from .operators.rolling import rolling_window_agg
 from .operators.interval_diff import find_gaps, interval_difference
 from .operators.interval_union import merge_intervals
 from .operators.sessions import sessionize
-from .operators.dedup import (
-    build_embedding_index,
-    build_minhash_index,
-    connected_components,
-    embedding_dedup_incremental,
-    embedding_neardup_pairs,
-    exact_dedup,
-    minhash_candidate_pairs,
-    minhash_dedup,
-    minhash_dedup_incremental,
-    build_simhash_index,
-    ngram_jaccard_pairs,
-    simhash_dedup_incremental,
-    simhash_frame,
-    simhash_pairs,
-)
 from .operators.asof import asof_join
 from .operators.packing import pack_chunks, pack_sequences
 from .operators.sampling import hash_sample, hash_sample_n, source_mix
@@ -67,14 +51,6 @@ from .operators.tokenstats import (
     vocab_coverage,
 )
 from .plans.cachectl import release as release_caches
-from .operators.similarity import (
-    build_ivf_index,
-    cosine,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_ivf_index,
-    cosine_topk_lsh,
-)
 from .operators.rollup import (
     cascade,
     finalize_rollup,
@@ -132,9 +108,7 @@ __all__ = [
     "ResumableJob",
     "ingest_batch",
     "salted_repartition",
-    "spread_input",
     "timestamp_to_grid",
-    "exact_dedup",
     "duplicate_spans",
     "duplicate_span_stats",
     "distinct_rollup",
@@ -145,19 +119,7 @@ __all__ = [
     "holt",
     "zscore_anomaly",
     "seasonal_adjust",
-    "ngram_jaccard_pairs",
-    "minhash_candidate_pairs",
-    "minhash_dedup",
-    "minhash_dedup_incremental",
-    "build_minhash_index",
-    "build_embedding_index",
-    "embedding_dedup_incremental",
     "release_caches",
-    "connected_components",
-    "simhash_frame",
-    "simhash_pairs",
-    "build_simhash_index",
-    "simhash_dedup_incremental",
     "pack_sequences",
     "pack_chunks",
     "token_histogram",
@@ -170,13 +132,6 @@ __all__ = [
     "hash_sample",
     "hash_sample_n",
     "source_mix",
-    "embedding_neardup_pairs",
-    "cosine",
-    "cosine_topk",
-    "cosine_topk_ivf",
-    "cosine_topk_ivf_index",
-    "build_ivf_index",
-    "cosine_topk_lsh",
     "asof_join",
     "get_spark",
     "RESERVED_OUTPUT_NAMES",

@@ -68,18 +68,3 @@ def salted_repartition(
         else salted.repartition(*parts)
     )
     return out.drop("__salt")
-
-
-def spread_input(df: DataFrame, min_partitions: Optional[int] = None) -> DataFrame:
-    """Round-robin repartition when the input has too few partitions.
-
-    Compute-heavy map-side operators (shingling, hashing, per-plane
-    dots) inherit the INPUT's partitioning: a small parquet file is one
-    split, so the whole fan-out runs on one core no matter how many the
-    cluster has. At real scale inputs arrive well-split and this is a
-    no-op (the partition-count check is driver-side plan metadata, no
-    job)."""
-    want = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= want:
-        return df
-    return df.repartition(want)

@@ -32,7 +32,6 @@ import time
 import warnings
 from typing import Optional, Sequence
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
@@ -53,14 +52,6 @@ RESERVED_OUTPUT_NAMES = ("yduration", "xduration", "xminstart", "xmaxend")
 _EPOCH = "1970-01-01"
 
 _INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-
-#: per-call persist gates for the double-consumed join inputs (rows).
-#: xw is ~40 B/row after projection, so the cap bounds the cache at a
-#: couple of GB cluster-wide — far cheaper than re-running the upstream
-#: pipeline for the bin-width stats pass; above the cap the persist is
-#: skipped and behavior is unchanged.
-_X_PERSIST_MAX_ROWS = 50_000_000
-_Y_PERSIST_MAX_ROWS = 100_000_000
 
 
 def _is_intervalish(dtype: T.DataType) -> bool:
@@ -360,44 +351,6 @@ def interval_weighted_avg(
     y_distinct = assume_y_distinct or (stats is not None and stats.y.n == stats.y.nd)
     yd = yw if y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
 
-    # Size-gated per-call persists (pure plan reuse, no semantic
-    # effect on any VALUE — but see the gate below). yd always has TWO
-    # consumers — the overlap join and the completion join — so
-    # unpersisted, the whole y subtree (dedup shuffle included)
-    # executes twice. xw gains a second consumer whenever the bin
-    # strategy must run its own stats pass to pick a width (no
-    # bin_width, no stats here): that pass otherwise
-    # re-executes the full upstream x pipeline (measured: the r6
-    # iwa_orders plan held two live copies of the y distinct+cross
-    # subtree). Gated on CALLER-provided join_stats only, never on the
-    # auto-computed ones: a persist changes the partition layout
-    # feeding the weighted-mean aggregate, which reorders float partial
-    # sums — measured flipping a 6dp-boundary mean (2-decimal prices x
-    # integer durations land exactly on rounding boundaries) against a
-    # differential oracle. Callers that pass join_stats are hot-path
-    # production callers opting into physical tuning; size caps keep a
-    # 100 TB x from being spooled to cache to save one stats pass.
-    if join_stats is not None:
-        from ..plans.cachectl import managed_persist_percall
-
-        _nx = join_stats[0] if len(join_stats) > 0 else None
-        _ny = join_stats[1] if len(join_stats) > 1 else None
-        if (
-            _nx is not None
-            and int(_nx) <= _X_PERSIST_MAX_ROWS
-            and bin_width is None
-            and stats is None
-            and join_strategy in ("auto", "bin")
-        ):
-            xw = managed_persist_percall(
-                xw, "interval_weighted_avg.x", keep=2,
-                storage_level=StorageLevel.DISK_ONLY,
-            )
-        if _ny is not None and int(_ny) <= _Y_PERSIST_MAX_ROWS:
-            yd = managed_persist_percall(
-                yd, "interval_weighted_avg.y", keep=2,
-                storage_level=StorageLevel.DISK_ONLY,
-            )
     _vlog(
         verbose,
         f"plan: join_strategy={join_strategy!r} n_groups={n_g} "

@@ -43,7 +43,6 @@ def _nullsafe_broadcast_join(
     dim: DataFrame,
     keys: Sequence[str],
     *,
-    drop_keys: bool = True,
     require_match_col: Optional[str] = None,
 ) -> DataFrame:
     """Broadcast-join ``dim`` onto ``left`` matching NULL keys to NULL.
@@ -85,8 +84,7 @@ def _nullsafe_broadcast_join(
             require_match_col,
             F.when(guard.isNull(), F.col(require_match_col)),
         ).drop("__dim_ok")
-    out = out.drop(*[f"__dk_{k}" for k in keys])
-    return out.drop(*keys) if drop_keys else out
+    return out.drop(*[f"__dk_{k}" for k in keys], *keys)
 
 
 def period_scaffold(
@@ -126,7 +124,6 @@ def rollup_regular(
     origin: int = 0,
     required_percentage: float = 100.0,
     partial: bool = False,
-    dict_encode_groups: bool = False,
     group_encoders: Optional[dict] = None,
     algorithm: str = "explode",
     validate: bool = True,
@@ -207,16 +204,12 @@ def rollup_regular(
     # String group keys keep Spark's hash aggregate off the fixed-width
     # fast map (UnsafeFixedWidthAggregationMap needs fixed-width keys),
     # which measured 4x slower and ANTI-scaling at 16 threads on the
-    # 256M-doc hourly rollup. Two remedies, both exact:
-    # - group_encoders={"col": int_expression}: swap the string for an
-    #   expression-derived int key (the caller knows its id scheme —
-    #   e.g. source 'src_7' -> 7); cheapest, pure map-side. The original
-    #   values are re-attached by joining the tiny distinct dim onto the
-    #   AGGREGATED output (96k rows, not 1.2B).
-    # - dict_encode_groups=True: no encoder known -> build the dim from
-    #   a distinct pass and broadcast-swap before the aggregate. Exact
-    #   but pays a per-row string join probe; still ~2x at high thread
-    #   counts. Opt-in: a high-cardinality group would bloat the dim.
+    # 256M-doc hourly rollup. The exact remedy is
+    # group_encoders={"col": int_expression}: swap the string for an
+    # expression-derived int key (the caller knows its id scheme — e.g.
+    # source 'src_7' -> 7); pure map-side. The original values are
+    # re-attached by joining the tiny distinct dim onto the AGGREGATED
+    # output (96k rows, not 1.2B).
     dim = None
     user_group_vars = list(group_vars)
     if group_vars and group_encoders:
@@ -256,24 +249,6 @@ def rollup_regular(
                 F.col(first_enc),
             ),
         )
-    elif dict_encode_groups and group_vars and any(
-        f.name in group_vars and f.dataType.simpleString() == "string"
-        for f in x.schema.fields
-    ):
-        from pyspark.sql import Window as _W
-
-        dim = (
-            x.select(*group_vars)
-            .dropDuplicates()
-            .withColumn(
-                "__gid",
-                F.row_number().over(_W.partitionBy(F.lit(1)).orderBy(*group_vars)),
-            )
-        )
-        # null-safe: a NULL group key is a legal group (tests.R:564-580)
-        # and must not silently vanish in the encode join
-        x = _nullsafe_broadcast_join(x, dim, list(group_vars))
-        group_vars = ["__gid"]
 
     # Endpoint validation (parity with interval_weighted_avg, which
     # raises IntervalValidationError for the same inputs): NULL
@@ -435,11 +410,7 @@ def rollup_regular(
             F.max("__ce").alias("xmaxend"),
         )
     if dim is not None:
-        decode_keys = (
-            [f"__e_{c}" for c in user_group_vars if c in (group_encoders or {})]
-            if group_encoders
-            else ["__gid"]
-        )
+        decode_keys = [f"__e_{c}" for c in user_group_vars if c in group_encoders]
         agg = (
             # null-safe: a group_encoders expression may yield NULL for
             # some group value — that encoded key must still decode
@@ -670,11 +641,7 @@ def _rollup_sweep_unit(
     out = cells.withColumn("xminstart", cell).withColumn("xmaxend", cell)
 
     if dim is not None:
-        decode_keys = (
-            [f"__e_{c}" for c in user_group_vars if c in (group_encoders or {})]
-            if group_encoders
-            else ["__gid"]
-        )
+        decode_keys = [f"__e_{c}" for c in user_group_vars if c in group_encoders]
         out = _nullsafe_broadcast_join(
             out, dim, decode_keys,
             require_match_col="period" if dim_user_supplied else None,

@@ -1,7 +1,7 @@
 """Substring-level (span) deduplication: find duplicated token runs.
 
-Document-level dedup (exact / MinHash / SimHash — operators/dedup.py)
-removes whole near-copies; training corpora additionally carry
+Document-level dedup (exact / MinHash / SimHash) removes whole
+near-copies; training corpora additionally carry
 SUBSTRING duplication — boilerplate headers, licenses, templated
 paragraphs — repeated across otherwise-distinct documents. The
 published treatment (Lee et al., "Deduplicating Training Data Makes

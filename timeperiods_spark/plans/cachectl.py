@@ -2,7 +2,7 @@
 
 Several operators persist an intermediate frame that is consumed more
 than once downstream (the as-of union frame, the overlap melt, the
-interval-algebra delta frame, the dedup shingle/batch frames). A bare
+interval-algebra delta frame). A bare
 ``.persist()`` there leaks in long-lived sessions: nothing ever
 unpersists, and repeated operator calls grow the storage pool without
 bound (VERDICT r3 item 6).

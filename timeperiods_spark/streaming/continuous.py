@@ -33,34 +33,31 @@ def ingest_batch(
     base_tier: str = "hourly",
     job: Optional[ResumableJob] = None,
     batch_id: Optional[str] = None,
-    collect_counts: bool = False,
     group_encoders: Optional[dict] = None,
     algorithm: str = "explode",
     validate: bool = True,
-    parallel_cascades: bool = True,
     group_dim=None,
     carry_hints: Optional[dict] = None,
-) -> dict[str, int]:
+) -> None:
     """Roll one batch into every tier of the catalog.
 
     With ``job``/``batch_id``, each (batch, tier) pair is a resumable
     lineage unit. Re-running any unit is idempotent: the catalog stores
     each batch's contribution as its own delta partition, so a crash
     after commit but before the lineage record simply rewrites the same
-    delta. Returns per-tier row counts.
+    delta. Each unit's lineage record names its tier.
 
     ``validate=False`` skips the endpoint asserts inside rollup_regular
-    for pre-validated sources. ``parallel_cascades=True`` runs the
-    coarser tiers' cascade+write concurrently (they are independent
-    given the base tier's committed delta; Spark's scheduler interleaves
-    the jobs, overlapping each write's I/O tail with the other's
-    compute) — lineage stays per-(batch, tier).
+    for pre-validated sources. Unless resuming past the base tier, the
+    coarser tiers' cascade+write run concurrently with the base write
+    (they are independent given the materialized base partials; Spark's
+    scheduler interleaves the jobs, overlapping each write's I/O tail
+    with the other's compute) — lineage stays per-(batch, tier).
     """
     value_vars = list(catalog.value_vars)
     group_vars = list(catalog.group_vars)
     base_width = catalog.tiers[base_tier]
     spark = batch.sparkSession
-    counts: dict[str, int] = {}
     bid = batch_id or "adhoc"
 
     ordered = sorted(catalog.tiers, key=catalog.tiers.get)
@@ -101,17 +98,16 @@ def ingest_batch(
     # writes' I/O tails overlap each other instead of serializing.
     # Skipped when resuming past the base tier (the cache would redo
     # the raw scan the resume exists to avoid) — cascades then re-bin
-    # the already-committed base delta, which is also the fallback
-    # whenever the cache isn't built.
+    # the already-committed base delta.
     cached = None
-    if parallel_cascades and coarser and not base_done:
+    if coarser and not base_done:
         cached = base_partials.persist()
         # eager materialization; submitting the three tier jobs over an
         # unmaterialized cache (per-partition block locking) measured
         # no faster — the barrier tail is ordinary compute, not waste
         cached.count()
 
-    def upsert_tier(tier: str) -> dict[str, int]:
+    def upsert_tier(tier: str) -> dict[str, str]:
         width = catalog.tiers[tier]
         if tier == base_tier:
             tier_partials = cached if cached is not None else base_partials
@@ -121,7 +117,7 @@ def ingest_batch(
                 fine_width=base_width, coarse_width=width,
             )
         else:
-            # resumed (or serial) path: re-bin the committed base delta
+            # resumed path: re-bin the committed base delta
             # (tiny, partition-pruned parquet read) — raw data is never
             # rescanned for coarser tiers.
             tier_partials = cascade(
@@ -131,18 +127,8 @@ def ingest_batch(
                 fine_width=base_width,
                 coarse_width=width,
             )
-        import os
-        import time as _t
-
-        _t0 = _t.time()
         catalog.upsert(tier_partials, tier, bid)
-        if os.environ.get("SPARK_GRAFT_DEBUG_PHASES"):
-            print(f"[phase] {bid}:{tier} upsert {_t.time() - _t0:.1f}s", flush=True)
-        # counting re-executes the tier plan; only pay for it when
-        # lineage metrics explicitly ask (collect_counts)
-        n = tier_partials.count() if collect_counts else -1
-        counts[tier] = n
-        return {"rows": n, "tier": tier}
+        return {"tier": tier}
 
     def run_tier(tier: str) -> None:
         if job is not None and batch_id is not None:
@@ -163,4 +149,3 @@ def ingest_batch(
     finally:
         if cached is not None:
             cached.unpersist()
-    return counts

@@ -1,17 +1,18 @@
 """Single-block Gorilla codec microbench — driver-local, no Spark.
 
-The bulk bench (bench.py `gorilla_bulk_throughput`) measures the
-end-to-end Spark path where blocks decode in parallel; THIS tool
-records the per-block single-thread floor per stream shape, which is
-what a latency-sensitive point read pays. Shapes cover the codec's
-regimes:
+The end-to-end Spark path, where blocks encode and decode in parallel,
+is measured by perfbench's tier_ingest retention op
+(functions.compression.* metrics); THIS tool records the per-block
+single-thread floor per stream shape, which is what a
+latency-sensitive point read pays. Shapes cover the codec's regimes:
 
   regular+const       run-A stream ('0','0' pairs)        — vector fill
   regular+dense       smooth values, per-segment windows  — run B
   regular+random      wide xors, near-64-bit windows      — run B wide
   jitter+dense        '10'+7 timestamps break run shape   — scalar-ish
   regular+5pct-nan    NULL bitmap + xor-0 singletons      — mixed
-  bulkbench           the bench.py bulk series shape
+  bulkbench           hashed-integer values on a regular grid (the
+                      series shape of BENCH_r*.json's gorilla_bulk rows)
 
 Prints ONE JSON line {shape: {mpts_per_sec, bits_per_point}, ...}.
 """

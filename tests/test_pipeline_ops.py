@@ -1,7 +1,18 @@
-"""Engine operators with no dedicated module: grouped cartesian,
-sessionize, M4 downsampling and rolling-window aggregates."""
+"""Operators with no dedicated test module: grouped cartesian,
+sessionize, M4 downsampling, rolling-window aggregates and exact
+dedup."""
 
 from __future__ import annotations
+
+
+def test_exact_dedup_deterministic(spark):
+    from timeperiods_spark.operators.spandedup import exact_dedup
+
+    df = spark.createDataFrame(
+        [(1, "a", 5.0), (2, "a", 3.0), (3, "b", 1.0)], "id long, k string, v double"
+    )
+    out = exact_dedup(df, ["k"], order_cols=["v", "id"]).orderBy("k").collect()
+    assert [(r["id"], r["k"]) for r in out] == [(2, "a"), (3, "b")]
 
 
 def test_grouped_cartesian_rename_dodges_own_columns(spark):

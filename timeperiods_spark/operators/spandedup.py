@@ -1,7 +1,7 @@
 """Substring-level (span) deduplication: find duplicated token runs.
 
-Document-level dedup (exact / MinHash / SimHash) removes whole
-near-copies; training corpora additionally carry
+Document-level dedup (``exact_dedup`` below keeps one row per key)
+removes whole copies; training corpora additionally carry
 SUBSTRING duplication — boilerplate headers, licenses, templated
 paragraphs — repeated across otherwise-distinct documents. The
 published treatment (Lee et al., "Deduplicating Training Data Makes
@@ -54,7 +54,7 @@ key so the DuckDB oracle twin is bit-identical.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -63,6 +63,23 @@ from .interval_union import merge_intervals
 
 #: unit separator — cannot occur in whitespace-split tokens
 _SEP = "\x1f"
+
+
+def exact_dedup(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    order_cols: Optional[Sequence[str]] = None,
+) -> DataFrame:
+    """Keep exactly one row per key; survivor chosen by ``order_cols``
+    (deterministic, unlike dropDuplicates' arbitrary first-seen row)."""
+    key_cols = list(key_cols)
+    order_cols = list(order_cols or df.columns)
+    w = Window.partitionBy(*key_cols).orderBy(*order_cols)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def _window_positions(

@@ -31,9 +31,6 @@ from timeperiods_spark import (  # noqa: E402
     finalize_rollup,
 )
 from timeperiods_spark.sources.tokens import (  # noqa: E402
-    H1,
-    N_TOK,
-    VOCAB,
     token_table,
     token_table_oracle_sql,
 )
@@ -2106,411 +2103,6 @@ def oracle_sql() -> dict[str, str]:
 # --------------------------------------------------------------------
 
 
-def q_pack_spans(spark, sf_dir):
-    """Concat-and-chunk span table over the deterministic token table:
-    each document's token interval [offset, offset+n_tok) clipped to
-    the 512-token training-window grid. The offset prefix-sum rides
-    the bucketed carry planner (no global window task); the oracle is
-    the same arithmetic as a DuckDB window sum + range unnest."""
-    from timeperiods_spark.operators.packing import pack_sequences
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False)
-    out = pack_sequences(t, "doc_id", "n_tok", chunk_len=512)
-    return out.select(
-        "doc_id",
-        F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.col("seq_start").cast("long").alias("seq_start"),
-        F.col("seq_len").cast("long").alias("seq_len"),
-        F.col("chunk_off").cast("long").alias("chunk_off"),
-    )
-
-
-SQL_PACK_SPANS = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-o AS (
-  SELECT doc_id, n_tok,
-         COALESCE(SUM(CAST(n_tok AS BIGINT)) OVER (
-           ORDER BY CAST(doc_id AS BIGINT)
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-  FROM tok
-),
-s AS (
-  SELECT doc_id, n_tok, off,
-         unnest(range(CAST(off // 512 AS BIGINT),
-                      CAST((off + n_tok - 1) // 512 + 1 AS BIGINT))) AS chunk_id
-  FROM o WHERE n_tok > 0
-)
-SELECT doc_id,
-       CAST(chunk_id AS BIGINT) AS chunk_id,
-       CAST(GREATEST(0, chunk_id * 512 - off) AS BIGINT) AS seq_start,
-       CAST(LEAST(n_tok, (chunk_id + 1) * 512 - off)
-            - GREATEST(0, chunk_id * 512 - off) AS BIGINT) AS seq_len,
-       CAST(off + GREATEST(0, chunk_id * 512 - off)
-            - chunk_id * 512 AS BIGINT) AS chunk_off
-FROM s
-"""
-
-
-def q_pack_chunks(spark, sf_dir):
-    """Assembled 256-token training windows packed PER SOURCE (grouped
-    independent streams). Array columns don't ship to the comparator:
-    the window content is pinned by its token sum, first/last token,
-    length, and contributing-doc count."""
-    from timeperiods_spark.operators.packing import pack_chunks
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False)
-    out = pack_chunks(
-        t, "doc_id", "tokens", "n_tok", chunk_len=256, group_by=["source"]
-    )
-    return out.select(
-        "source",
-        F.col("chunk_id").cast("long").alias("chunk_id"),
-        F.aggregate("tokens", F.lit(0).cast("long"), lambda a, x: a + x).alias(
-            "tok_sum"
-        ),
-        F.element_at("tokens", 1).cast("long").alias("first_tok"),
-        F.element_at("tokens", -1).cast("long").alias("last_tok"),
-        F.col("n_tok").cast("long").alias("n_tok"),
-        F.col("n_docs").cast("long").alias("n_docs"),
-    )
-
-
-SQL_PACK_CHUNKS = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-o AS (
-  SELECT source, doc_id, n_tok, tokens,
-         COALESCE(SUM(CAST(n_tok AS BIGINT)) OVER (
-           PARTITION BY source ORDER BY CAST(doc_id AS BIGINT)
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS off
-  FROM tok
-),
-s AS (
-  SELECT source, doc_id, n_tok, tokens, off,
-         unnest(range(CAST(off // 256 AS BIGINT),
-                      CAST((off + n_tok - 1) // 256 + 1 AS BIGINT))) AS chunk_id
-  FROM o WHERE n_tok > 0
-),
-sp AS (
-  SELECT source, chunk_id,
-         CAST(GREATEST(0, chunk_id * 256 - off) AS BIGINT) AS seq_start,
-         CAST(LEAST(n_tok, (chunk_id + 1) * 256 - off)
-           - GREATEST(0, chunk_id * 256 - off) AS BIGINT) AS seq_len,
-         CAST(off + GREATEST(0, chunk_id * 256 - off)
-           - chunk_id * 256 AS BIGINT) AS chunk_off,
-         tokens
-  FROM s
-)
-SELECT source, CAST(chunk_id AS BIGINT) AS chunk_id,
-       CAST(SUM(list_aggregate(tokens[(seq_start + 1):(seq_start + seq_len)],
-                               'sum')) AS BIGINT) AS tok_sum,
-       CAST(arg_min(tokens[seq_start + 1], chunk_off) AS BIGINT) AS first_tok,
-       CAST(arg_max(tokens[seq_start + seq_len],
-                    chunk_off + seq_len) AS BIGINT) AS last_tok,
-       CAST(SUM(seq_len) AS BIGINT) AS n_tok,
-       CAST(COUNT(*) AS BIGINT) AS n_docs
-FROM sp
-GROUP BY source, chunk_id
-"""
-
-
-def q_token_histogram(spark, sf_dir):
-    """Vocab frequency per source (map-side explode + one combined
-    hash-agg exchange); the comparator sees the token<500 slice so the
-    row volume stays bounded while the counts still pin the corpus."""
-    from timeperiods_spark.operators.tokenstats import token_histogram
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False).withColumn(
-        # fold the vocab to 101 buckets so frequencies are meaningful
-        # (raw generator tokens are near-unique) and rows stay bounded
-        "tokens", F.transform("tokens", lambda x: x % 101)
-    )
-    out = token_histogram(t, "tokens", group_by=["source"])
-    return out.select(
-        "source",
-        F.col("token").cast("long").alias("token"),
-        F.col("count").cast("long").alias("count"),
-    )
-
-
-SQL_TOKEN_HISTOGRAM = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)})
-SELECT source, CAST(token AS BIGINT) AS token,
-       CAST(COUNT(*) AS BIGINT) AS count
-FROM (SELECT source, unnest(list_transform(tokens, x -> x % 101)) AS token
-      FROM tok)
-GROUP BY source, token
-"""
-
-
-def q_ngram_logprob(spark, sf_dir):
-    """CCNet-style LM quality signal from corpus self-statistics:
-    per-doc average add-1-smoothed bigram log-likelihood + perplexity.
-    Tokens folded to 101 buckets so counts are meaningful (same
-    convention as the histogram query)."""
-    from timeperiods_spark import ngram_logprob
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False).withColumn(
-        "tokens", F.transform("tokens", lambda x: x % 101)
-    )
-    out = ngram_logprob(t, "doc_id", "tokens", n=2)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_scored", "avg_logp", "ppl",
-    )
-
-
-SQL_NGRAM_LOGPROB = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-t AS (SELECT doc_id, list_transform(tokens, x -> x % 101) AS toks FROM tok),
-dg AS (
-  SELECT doc_id, list_slice(toks, i, i + 1) AS g, list_slice(toks, i, i) AS p
-  FROM (SELECT doc_id, toks, unnest(range(1, len(toks))) AS i
-        FROM t WHERE len(toks) >= 2)
-),
-cn AS (SELECT g, COUNT(*) AS c FROM dg GROUP BY g),
-cp AS (
-  SELECT list_slice(toks, i, i) AS p, COUNT(*) AS c
-  FROM (SELECT toks, unnest(range(1, len(toks) + 1)) AS i
-        FROM t WHERE len(toks) >= 1)
-  GROUP BY p
-),
-v AS (SELECT COUNT(DISTINCT x) AS vs FROM (SELECT unnest(toks) AS x FROM t)),
-scored AS (
-  SELECT dg.doc_id,
-         ln((cn.c + 1.0) / (cp.c + 1.0 * v.vs)) AS lp
-  FROM dg JOIN cn ON dg.g = cn.g JOIN cp ON dg.p = cp.p CROSS JOIN v
-),
-agg AS (SELECT doc_id, COUNT(*) AS n_scored, AVG(lp) AS a
-        FROM scored GROUP BY doc_id)
-SELECT CAST(t.doc_id AS BIGINT) AS doc_id,
-       CAST(COALESCE(agg.n_scored, 0) AS BIGINT) AS n_scored,
-       ROUND(agg.a, 6) AS avg_logp,
-       ROUND(EXP(-agg.a), 6) AS ppl
-FROM t LEFT JOIN agg ON t.doc_id = agg.doc_id
-"""
-
-
-def q_tfidf(spark, sf_dir):
-    """Top-5 characteristic tokens per doc by smoothed TF-IDF (the
-    sklearn formula); rank on the ROUNDED score with token-id
-    tie-break so both engines order identically."""
-    from timeperiods_spark import tfidf_topk
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False).withColumn(
-        "tokens", F.transform("tokens", lambda x: x % 101)
-    )
-    out = tfidf_topk(t, "doc_id", "tokens", k=5)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("token").cast("long").alias("token"),
-        "tf", "idf", "tfidf", "rank",
-    )
-
-
-SQL_TFIDF = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-t AS (SELECT doc_id, list_transform(tokens, x -> x % 101) AS toks FROM tok),
-b AS (SELECT doc_id, unnest(toks) AS tkn FROM t),
-pd AS (SELECT doc_id, tkn, COUNT(*) AS c FROM b GROUP BY doc_id, tkn),
-dl AS (SELECT doc_id, SUM(c) AS len FROM pd GROUP BY doc_id),
-dfreq AS (SELECT tkn, CAST(COUNT(*) AS DOUBLE) AS dfc FROM pd GROUP BY tkn),
-nn AS (SELECT CAST(COUNT(DISTINCT doc_id) AS DOUBLE) AS N FROM t),
-s AS (
-  SELECT pd.doc_id, pd.tkn,
-         pd.c / CAST(dl.len AS DOUBLE) AS tf,
-         ln((nn.N + 1.0) / (dfreq.dfc + 1.0)) + 1.0 AS idf,
-         ROUND(pd.c / CAST(dl.len AS DOUBLE)
-               * (ln((nn.N + 1.0) / (dfreq.dfc + 1.0)) + 1.0), 6) AS tfidf
-  FROM pd JOIN dl USING (doc_id) JOIN dfreq ON pd.tkn = dfreq.tkn CROSS JOIN nn
-),
-r AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-                               ORDER BY tfidf DESC, tkn) AS rnk
-  FROM s
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(tkn AS BIGINT) AS token,
-       ROUND(tf, 6) AS tf, ROUND(idf, 6) AS idf, tfidf,
-       CAST(rnk AS BIGINT) AS rank
-FROM r WHERE rnk <= 5
-"""
-
-
-def q_vocab_coverage(spark, sf_dir):
-    """Tokenizer-sizing curve: corpus coverage of the top-v vocabulary
-    for four sizes. Tie-robust by construction — equal-count tokens at
-    a rank boundary contribute the same count whichever side wins, so
-    the covered SUM (and the coverage ratio of two exact longs) is
-    engine-order independent even where binary collations differ."""
-    from timeperiods_spark import vocab_coverage
-
-    docs = _read(spark, sf_dir, "documents").select(
-        F.split("text", " ").alias("tokens")
-    )
-    out = vocab_coverage(docs, "tokens", vocab_sizes=[10, 50, 200, 1000])
-    return out.select(
-        F.col("vocab_size").cast("int").alias("vocab_size"),
-        "tokens_covered",
-        "total_tokens",
-        "distinct_tokens",
-        F.round("coverage", _R).alias("coverage"),
-    )
-
-
-SQL_VOCAB_COVERAGE = """
-WITH tok AS (
-  SELECT unnest(string_split(text, ' ')) AS token FROM documents
-),
-counts AS (SELECT token, COUNT(*) AS c FROM tok GROUP BY 1),
-tot AS (
-  SELECT CAST(SUM(c) AS BIGINT) AS total_tokens,
-         COUNT(*) AS distinct_tokens
-  FROM counts
-),
-ranked AS (
-  SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, token ASC) AS rn
-  FROM counts
-),
-sizes(vocab_size) AS (VALUES (10), (50), (200), (1000))
-SELECT s.vocab_size,
-       CAST(COALESCE(SUM(r.c), 0) AS BIGINT) AS tokens_covered,
-       (SELECT total_tokens FROM tot) AS total_tokens,
-       (SELECT distinct_tokens FROM tot) AS distinct_tokens,
-       ROUND(CAST(COALESCE(SUM(r.c), 0) AS BIGINT)
-             / CAST((SELECT total_tokens FROM tot) AS DOUBLE), 6) AS coverage
-FROM sizes s LEFT JOIN ranked r ON r.rn <= s.vocab_size
-GROUP BY 1
-"""
-
-
-def q_topk_tokens(spark, sf_dir):
-    """Exact per-source heavy hitters (two-phase rank: per-partition
-    pre-top-k then the output-domain window)."""
-    from timeperiods_spark.operators.tokenstats import (
-        token_histogram,
-        topk_per_group,
-    )
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False).withColumn(
-        "tokens", F.transform("tokens", lambda x: x % 101)
-    )
-    hist = token_histogram(t, "tokens", group_by=["source"])
-    out = topk_per_group(
-        hist, ["token"], F.sum("count"), group_by=["source"], k=5
-    )
-    return out.select(
-        "source",
-        F.col("token").cast("long").alias("token"),
-        F.col("measure").cast("long").alias("measure"),
-        F.col("rank").cast("long").alias("rank"),
-    )
-
-
-SQL_TOPK_TOKENS = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-hist AS (
-  SELECT source, token, CAST(COUNT(*) AS BIGINT) AS cnt
-  FROM (SELECT source, unnest(list_transform(tokens, x -> x % 101)) AS token
-        FROM tok)
-  GROUP BY source, token
-)
-SELECT source, CAST(token AS BIGINT) AS token, cnt AS measure,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY source ORDER BY cnt DESC, token) AS BIGINT) AS rank
-FROM hist
-QUALIFY rank <= 5
-"""
-
-
-def q_contamination(spark, sf_dir):
-    """Train/test 8-gram decontamination (docs < 1500 train). The raw
-    generator can't exercise this: all docs share one token step, so
-    an 8-gram is determined by its start value and 1500 train docs
-    saturate the 50257-value space (everything reads contaminated).
-    The test split is therefore constructed: did%4==0 docs are EXACT
-    train-doc copies (frac_hit 1.0), did%4==1 docs take their first 16
-    tokens from a train doc and scramble the rest (partial hits), the
-    rest are fully scrambled (position-quadratic + doc-keyed, so no
-    arithmetic-progression gram can match: ~0 hits). Both engines
-    build the identical split from the same integer arithmetic."""
-    from timeperiods_spark.operators.tokenstats import ngram_contamination
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False).withColumn(
-        "did", F.col("doc_id").cast("long")
-    )
-    train = t.filter(F.col("did") < 1500)
-    src_tok = (
-        f"transform(sequence(1, {N_TOK}), "
-        f"i -> CAST((({H1}) + i * 69621) % {VOCAB} AS INT))"
-    ).replace("doc_id", "src_did")
-    scr = (
-        "transform(sequence(1, CAST(n_tok AS INT)), "
-        "i -> CAST((CAST(element_at(tokens, i) AS BIGINT) * 7 + i * i + did)"
-        " % 50257 AS INT))"
-    )
-    test = (
-        t.filter(F.col("did") >= 1500)
-        .withColumn("src_did", F.col("did") - 1400)
-        .selectExpr(
-            "doc_id",
-            f"CASE WHEN did % 4 = 0 THEN {src_tok} "
-            f"WHEN did % 4 = 1 THEN concat(slice({src_tok}, 1, 16), "
-            f"slice({scr}, 17, CAST(n_tok AS INT))) "
-            f"ELSE {scr} END AS tokens",
-        )
-    )
-    out = ngram_contamination(test, train, "tokens", "doc_id", n=8)
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("n_grams").cast("long").alias("n_grams"),
-        F.col("n_hit").cast("long").alias("n_hit"),
-        F.round("frac_hit", _R).alias("frac_hit"),
-    )
-
-
-_DUCK_SRC_TOK = (
-    f"list_transform(range(1, {N_TOK} + 1), "
-    f"i -> CAST((({H1}) + i * 69621) % {VOCAB} AS INT))"
-).replace("doc_id", "src_did")
-_DUCK_SCR = (
-    "list_transform(range(1, CAST(n_tok AS BIGINT) + 1), "
-    "i -> CAST((CAST(tokens[i] AS BIGINT) * 7 + i * i + did)"
-    " % 50257 AS INT))"
-)
-
-SQL_CONTAMINATION = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-tok2 AS (SELECT *, CAST(doc_id AS BIGINT) AS did FROM tok),
-train AS (SELECT tokens FROM tok2 WHERE did < 1500),
-test AS (
-  SELECT doc_id,
-         CASE WHEN did % 4 = 0 THEN {_DUCK_SRC_TOK}
-              WHEN did % 4 = 1 THEN list_concat(
-                  ({_DUCK_SRC_TOK})[1:16],
-                  ({_DUCK_SCR})[17:CAST(n_tok AS BIGINT)])
-              ELSE {_DUCK_SCR} END AS tokens
-  FROM (SELECT *, did - 1400 AS src_did FROM tok2 WHERE did >= 1500)
-),
-tg AS (
-  SELECT DISTINCT doc_id, tokens[g:(g + 7)] AS ngram
-  FROM test, LATERAL unnest(range(1, CAST(len(tokens) AS BIGINT) - 6)) AS u(g)
-  WHERE len(tokens) >= 8
-),
-trg AS (
-  SELECT DISTINCT tokens[g:(g + 7)] AS ngram
-  FROM train, LATERAL unnest(range(1, CAST(len(tokens) AS BIGINT) - 6)) AS u(g)
-  WHERE len(tokens) >= 8
-)
-SELECT CAST(tg.doc_id AS BIGINT) AS doc_id,
-       CAST(COUNT(*) AS BIGINT) AS n_grams,
-       CAST(SUM(CASE WHEN trg.ngram IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit,
-       ROUND(SUM(CASE WHEN trg.ngram IS NOT NULL THEN 1 ELSE 0 END)
-             / COUNT(*)::DOUBLE, 6) AS frac_hit
-FROM tg LEFT JOIN trg ON tg.ngram = trg.ngram
-GROUP BY tg.doc_id
-"""
-
-
 def q_hash_sample(spark, sf_dir):
     """Deterministic partition-independent Bernoulli sample: the
     membership predicate is a pure row expression both engines compute
@@ -2728,111 +2320,20 @@ FROM documents d LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-def q_ngram_repetition(spark, sf_dir):
-    """Gopher-style repetition quality signals (Rae et al. 2021
-    SSA1.1), long format per (doc, n): top-n-gram token fraction and
-    duplicated-n-gram coverage fraction. Coverage union rides the
-    merge_intervals carried sweep; the twin re-forms the same islands
-    with running-max SQL."""
-    from timeperiods_spark import ngram_repetition
-
-    docs = _read(spark, sf_dir, "documents")
-    out = ngram_repetition(docs, "doc_id", text_col="text", ns=(2, 3, 5))
-    return out.select(
-        "doc_id",
-        F.col("n").cast("int").alias("n"),
-        F.col("n_tok").cast("long").alias("n_tok"),
-        F.round("top_frac", 6).alias("top_frac"),
-        F.round("dup_frac", 6).alias("dup_frac"),
-    )
-
-
-SQL_NGRAM_REPETITION = """
-WITH ns AS (SELECT CAST(unnest([2,3,5]) AS INT) AS n),
-toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tok,
-         len(string_split(text, ' ')) AS ntok
-  FROM documents
-),
-pos AS (
-  SELECT t.doc_id, ns.n, CAST(g.i - 1 AS BIGINT) AS pos,
-         array_to_string(list_slice(t.tok, g.i, g.i + ns.n - 1), chr(31))
-           AS gram
-  FROM toks t, ns, unnest(generate_series(1, t.ntok - ns.n + 1)) AS g(i)
-  WHERE t.ntok >= ns.n
-),
-cnt AS (
-  SELECT doc_id, n, gram, COUNT(*) AS c FROM pos GROUP BY doc_id, n, gram
-),
-top AS (SELECT doc_id, n, MAX(c) AS topc FROM cnt GROUP BY doc_id, n),
-dp AS (
-  SELECT p.doc_id, p.n, p.pos AS s, p.pos + p.n - 1 AS e
-  FROM pos p JOIN cnt ON p.doc_id = cnt.doc_id AND p.n = cnt.n
-                      AND p.gram = cnt.gram
-  WHERE cnt.c >= 2
-),
-ord AS (
-  SELECT doc_id, n, s, e,
-         MAX(e) OVER (PARTITION BY doc_id, n ORDER BY s
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_max
-  FROM dp
-),
-isl AS (
-  SELECT doc_id, n, s, e,
-         SUM(CASE WHEN prev_max IS NULL OR s > prev_max + 1
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id, n ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM ord
-),
-mrg AS (
-  SELECT doc_id, n, MIN(s) AS s, MAX(e) AS e
-  FROM isl GROUP BY doc_id, n, island
-),
-cov AS (SELECT doc_id, n, SUM(e - s + 1) AS cov FROM mrg GROUP BY doc_id, n)
-SELECT d.doc_id, ns.n, CAST(d.ntok AS BIGINT) AS n_tok,
-       ROUND(COALESCE(t.topc, 0) * ns.n / GREATEST(d.ntok, 1), 6)
-         AS top_frac,
-       ROUND(COALESCE(c.cov, 0) / GREATEST(d.ntok, 1), 6) AS dup_frac
-FROM toks d CROSS JOIN ns
-LEFT JOIN top t ON d.doc_id = t.doc_id AND ns.n = t.n
-LEFT JOIN cov c ON d.doc_id = c.doc_id AND ns.n = c.n
-"""
-
-
 _PIPELINE_QUERIES = {
-    "pack_sequences_spans": q_pack_spans,
-    "pack_chunks_by_source": q_pack_chunks,
-    "token_histogram_by_source": q_token_histogram,
-    "topk_tokens_per_source": q_topk_tokens,
-    "ngram_contamination_check": q_contamination,
     "hash_sample_docs": q_hash_sample,
     "source_mix_tokens": q_source_mix,
     "duplicate_spans_docs": q_duplicate_spans,
     "duplicate_span_stats_docs": q_duplicate_span_stats,
-    "ngram_repetition_docs": q_ngram_repetition,
     "quality_weighted_sample": q_quality_sample,
     "hash_sample_n_per_source": q_hash_sample_n,
-    "ngram_logprob_tokens": q_ngram_logprob,
-    "tfidf_topk_tokens": q_tfidf,
-    "vocab_coverage_docs": q_vocab_coverage,
 }
 
 _PIPELINE_ORACLES = {
-    "pack_sequences_spans": SQL_PACK_SPANS,
-    "pack_chunks_by_source": SQL_PACK_CHUNKS,
-    "token_histogram_by_source": SQL_TOKEN_HISTOGRAM,
-    "topk_tokens_per_source": SQL_TOPK_TOKENS,
-    "ngram_contamination_check": SQL_CONTAMINATION,
     "hash_sample_docs": SQL_HASH_SAMPLE,
     "source_mix_tokens": SQL_SOURCE_MIX,
     "duplicate_spans_docs": SQL_DUPLICATE_SPANS,
     "duplicate_span_stats_docs": SQL_DUPLICATE_SPAN_STATS,
-    "ngram_repetition_docs": SQL_NGRAM_REPETITION,
     "quality_weighted_sample": SQL_QUALITY_SAMPLE,
     "hash_sample_n_per_source": SQL_HASH_SAMPLE_N,
-    "ngram_logprob_tokens": SQL_NGRAM_LOGPROB,
-    "tfidf_topk_tokens": SQL_TFIDF,
-    "vocab_coverage_docs": SQL_VOCAB_COVERAGE,
 }

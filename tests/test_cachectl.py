@@ -80,47 +80,13 @@ def test_repeated_calls_bounded_storage(spark, clean_caches):
 
 def test_release_single_tag(spark, clean_caches):
     df = spark.range(10).select(F.col("id").alias("x"))
-    cachectl.managed_persist(df, "t.a").count()
-    cachectl.managed_persist(df.select("x"), "t.b").count()
-    assert cachectl.release("t.a") == 1
-    assert cachectl.managed_tags() == ["t.b"]
+    cachectl.managed_persist_percall(df, "t.a").count()
+    cachectl.managed_persist_percall(df.select("x"), "t.b").count()
+    ta, tb = cachectl.managed_tags()
+    assert ta.startswith("t.a#") and tb.startswith("t.b#")
+    assert cachectl.release(ta) == 1
+    assert cachectl.managed_tags() == [tb]
     assert cachectl.release() == 1
-
-
-def test_managed_persist_replaces_previous(spark, clean_caches):
-    a = spark.range(50).select(F.col("id").alias("x"))
-    first = cachectl.managed_persist(a, "t.replace")
-    first.count()
-    second = cachectl.managed_persist(
-        spark.range(60).select(F.col("id").alias("x")), "t.replace"
-    )
-    second.count()
-    assert cachectl.managed_tags() == ["t.replace"]
-    # the replaced frame is scheduled for unpersist; only the new one stays
-    assert _wait_cached_at_most(spark, 1) == 1
-
-
-def test_eviction_thrash_warns_once(spark, clean_caches):
-    """Evicting the same tag repeatedly (concurrent or lazily-consumed
-    same-tag pipelines) emits one warning — silent cache-benefit loss
-    was the round-4 advice finding."""
-    import warnings as w
-
-    tag = "test/thrash"
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        for i in range(cachectl.EVICTION_WARN_THRESHOLD + 3):
-            cachectl.managed_persist(_intervals(spark, i), tag)
-        msgs = [str(x.message) for x in rec if "cachectl" in str(x.message)]
-    assert len(msgs) == 1 and tag in msgs[0]
-    # release() resets the accounting: a fresh burst warns again
-    cachectl.release(tag)
-    with w.catch_warnings(record=True) as rec2:
-        w.simplefilter("always")
-        for i in range(cachectl.EVICTION_WARN_THRESHOLD + 1):
-            cachectl.managed_persist(_intervals(spark, 100 + i), tag)
-        msgs2 = [str(x.message) for x in rec2 if "cachectl" in str(x.message)]
-    assert len(msgs2) == 1
 
 
 def test_percall_tags_fifo_bound(spark, clean_caches):

@@ -1,10 +1,10 @@
-"""Value semantics for rollup_ohlc, cross_correlation, vocab_coverage."""
+"""Value semantics for rollup_ohlc and cross_correlation."""
 
 from __future__ import annotations
 
 import pytest
 
-from timeperiods_spark import cross_correlation, rollup_ohlc, vocab_coverage
+from timeperiods_spark import cross_correlation, rollup_ohlc
 from timeperiods_spark.errors import RoleValidationError
 
 
@@ -99,40 +99,3 @@ def test_xcorr_validation(spark):
     with pytest.raises(RoleValidationError):
         cross_correlation(df, "p", "v", "s", pairs=[("a", "a")], lags=[0],
                           min_overlap=1)
-
-
-def test_vocab_coverage_counts_and_ties(spark):
-    # counts: x:4, y:3, z:3, w:1  (y/z tie — covered SUM at k=2 is the
-    # same whichever wins the tie-break)
-    df = spark.createDataFrame(
-        [(["x", "x", "y", "z"],), (["x", "y", "z", "w"],),
-         (["x", "y", "z"],)],
-        "tokens array<string>",
-    )
-    out = {r["vocab_size"]: r
-           for r in vocab_coverage(df, vocab_sizes=[1, 2, 4]).collect()}
-    assert out[1]["tokens_covered"] == 4
-    assert out[2]["tokens_covered"] == 7
-    assert out[4]["tokens_covered"] == 11
-    assert out[4]["coverage"] == pytest.approx(1.0)
-    assert out[1]["total_tokens"] == 11 and out[1]["distinct_tokens"] == 4
-    assert out[2]["coverage"] == pytest.approx(7 / 11)
-
-
-def test_vocab_coverage_weighted(spark):
-    df = spark.createDataFrame(
-        [(["a", "b"], 10), (["b"], 1)], "tokens array<string>, w int"
-    )
-    out = {r["vocab_size"]: r
-           for r in vocab_coverage(df, vocab_sizes=[1], weight_col="w").collect()}
-    # weighted counts: b = 11, a = 10 -> top-1 is b
-    assert out[1]["tokens_covered"] == 11
-    assert out[1]["total_tokens"] == 21
-
-
-def test_vocab_coverage_validation(spark):
-    df = spark.createDataFrame([(["a"],)], "tokens array<string>")
-    with pytest.raises(RoleValidationError):
-        vocab_coverage(df, vocab_sizes=[])
-    with pytest.raises(RoleValidationError):
-        vocab_coverage(df, vocab_sizes=[0, 5])

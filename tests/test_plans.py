@@ -364,38 +364,6 @@ def test_xcorr_equi_join_no_range_predicate(spark):
     assert "BroadcastHashJoin" in plan  # the literal pair table
 
 
-def test_vocab_coverage_preaggregates_before_rank(spark):
-    """vocab_coverage: the token explode collapses through a hash
-    aggregate BEFORE any window (the rank runs over aggregated counts
-    with the shared per-partition pre-top-k), and the totals attach by
-    broadcast — no full-vocabulary global sort."""
-    from timeperiods_spark import vocab_coverage
-
-    df = spark.createDataFrame(
-        [([f"t{i % 37}" for i in range(j, j + 20)],) for j in range(30)],
-        "tokens array<string>",
-    )
-    plan = _plan(vocab_coverage(df, vocab_sizes=[5, 10]))
-    assert "CartesianProduct" not in plan
-    # the token explode feeds a PARTIAL hash aggregate before the
-    # token-keyed exchange (map-side combine collapses the fan-out)
-    assert re.search(
-        r"HashAggregate\(keys=\[token[^\n]*partial_sum[\s\S]*?"
-        r"Generate explode\(tokens",
-        plan,
-    )
-    # the corpus-sized counts subtree is persisted and BOTH consumers
-    # (rank + totals) read the cache — the plan string prints the
-    # cached subtree per occurrence, so pin the InMemoryTableScan count
-    # (2 = both reads hit the cache), not the explode count
-    assert plan.count("InMemoryTableScan") == 2
-    # pre-top-k prunes before the global rank (WindowGroupLimit both
-    # sides of the partition exchange)
-    assert "WindowGroupLimit" in plan
-    # totals attach by broadcast (1-row side)
-    assert "BroadcastExchange" in plan
-
-
 def _jobs_run_by(spark, fn) -> int:
     """Number of Spark jobs ``fn()`` runs, read from a job group."""
     import uuid

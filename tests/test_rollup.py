@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from timeperiods_spark import interval_weighted_avg
+from timeperiods_spark import RoleValidationError, interval_weighted_avg
 from timeperiods_spark.operators.rollup import (
     cascade,
     finalize_rollup,
@@ -234,6 +234,11 @@ def test_group_encoders_exact_and_guarded(spark, tok):
             tok, ("start_hour", "end_hour"), ("n_tok",), ("source",),
             width=24, partial=True, group_encoders={"source": F.lit(1)},
         ).count()
+    with pytest.raises(RoleValidationError, match="'h'"):
+        rollup_regular(
+            tok, ("start_hour", "end_hour"), ("n_tok",), ("source",),
+            width=24, group_encoders={"h": F.lit(1)},
+        )
 
 
 def test_sweep_algorithm_parity(spark, tok):

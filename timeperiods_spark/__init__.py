@@ -30,7 +30,6 @@ from .operators.interval_diff import find_gaps, interval_difference
 from .operators.interval_union import merge_intervals
 from .operators.sessions import sessionize
 from .operators.asof import asof_join
-from .operators.packing import pack_chunks, pack_sequences
 from .operators.sampling import hash_sample, hash_sample_n, source_mix
 from .operators.spandedup import duplicate_span_stats, duplicate_spans
 from .operators.distinct import (
@@ -40,16 +39,6 @@ from .operators.distinct import (
 )
 from .operators.anomaly import seasonal_adjust, zscore_anomaly
 from .operators.trend import cusum, ewma, holt
-from .operators.tokenstats import (
-    ngram_contamination,
-    ngram_logprob,
-    ngram_repetition,
-    tfidf_topk,
-    token_histogram,
-    token_ngram_counts,
-    topk_per_group,
-    vocab_coverage,
-)
 from .plans.cachectl import release as release_caches
 from .operators.rollup import (
     cascade,
@@ -92,7 +81,6 @@ __all__ = [
     "downsample_m4",
     "rollup_ohlc",
     "cross_correlation",
-    "vocab_coverage",
     "rolling_window_agg",
     "rollup_histogram",
     "merge_histograms",
@@ -120,15 +108,6 @@ __all__ = [
     "zscore_anomaly",
     "seasonal_adjust",
     "release_caches",
-    "pack_sequences",
-    "pack_chunks",
-    "token_histogram",
-    "token_ngram_counts",
-    "topk_per_group",
-    "ngram_contamination",
-    "ngram_logprob",
-    "ngram_repetition",
-    "tfidf_topk",
     "hash_sample",
     "hash_sample_n",
     "source_mix",

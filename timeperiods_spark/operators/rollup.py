@@ -197,6 +197,11 @@ def rollup_regular(
                     )
     if width <= 0:
         raise RoleValidationError("width must be a positive number of grid units")
+    unknown = sorted(set(group_encoders or ()) - set(group_vars))
+    if unknown:
+        raise RoleValidationError(
+            f"group_encoders keys {unknown} are not in group_vars {group_vars}"
+        )
     s, e = interval_vars
     w = F.lit(int(width))
     o = F.lit(int(origin))

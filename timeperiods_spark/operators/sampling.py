@@ -124,11 +124,10 @@ def hash_sample_n(
     resolution) break by the key ascending, so the selection is a pure
     function of the data.
 
-    Scale shape: two-phase rank, same as ``topk_per_group`` — a
-    per-partition pre-top-n bounds the final rank window's input to
-    ``n x partitions`` candidate rows, so an ungrouped call never
-    funnels the corpus through one window task. No full sort, no
-    reservoir state.
+    Scale shape: two-phase rank — a per-partition pre-top-n bounds the
+    final rank window's input to ``n x partitions`` candidate rows, so
+    an ungrouped call never funnels the corpus through one window task.
+    No full sort, no reservoir state.
     """
     if n < 0:
         raise ValueError("n must be >= 0")

@@ -51,7 +51,7 @@ def _order_long(df: DataFrame, t_col: str, op: str):
     """Order column as a non-NULL long (epoch days for dates,
     microseconds for timestamps), with a row-local raise on NULL — a
     NULL order key would silently corrupt the prefix scans (same
-    contract as pack_sequences / running_max)."""
+    contract as running_max)."""
     t_type = df.schema[t_col].dataType
     if isinstance(t_type, T.DateType):
         # DATE->BIGINT casts are forbidden under ANSI; unix_date gives

@@ -66,7 +66,6 @@ def main():
         srows = [tuple(r) for r in sdf.collect()]
         t1 = time.time()
         if name not in oracles:
-            bad = [r for r in srows if None in r and name == "gorilla_roundtrip"]
             status = "ROWS-ONLY"
             extra = f"rows={len(srows)}"
             if name == "gorilla_roundtrip":

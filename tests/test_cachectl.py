@@ -56,8 +56,8 @@ def test_repeated_calls_bounded_storage(spark, clean_caches):
 
     high_water = 0
     for i in range(4):
-        remove_overlaps(
-            _intervals(spark, i), ["s", "e"], group_vars=["g"]
+        remove_overlaps(  # the SQL sweep, which persists its base
+            _intervals(spark, i), ["s", "e"], group_vars=["g"], join_strategy="bin"
         ).count()
         merge_intervals(
             _intervals(spark, i), ["s", "e"], group_vars=["g"]

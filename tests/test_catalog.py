@@ -223,3 +223,19 @@ def test_compact_tolerates_foreign_base_dirs(spark, catalog, tmp_path):
     assert name == "__base0"
     ingest_batch(catalog, batches[1], IVARS, batch_id="b1")
     assert catalog.compact(spark, "daily") == "__base1"
+
+
+def test_ingest_jobs_keep_the_callers_job_group(spark, catalog):
+    """The tier writes run on a thread pool; their jobs must still carry
+    the caller's job group, so an ingest adds no job without one."""
+    batches, _ = _batches(spark)
+    sc, group = spark.sparkContext, "ingest-under-a-group"
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    sc.setJobGroup(group, "ingest")
+    try:
+        ingest_batch(catalog, batches[0], IVARS, batch_id="b0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(sc.statusTracker().getJobIdsForGroup(None)) - before == set()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3  # one per tier write

@@ -140,7 +140,7 @@ def test_remove_overlaps_sweep_buckets_stay_bounded(spark, monkeypatch):
     x = spark.createDataFrame(
         [(g, 0, e) for g in (1, 2) for e in range(10, 2000, 10)], "g int, s int, e int"
     )
-    out = remove_overlaps(x, ("s", "e"), ("g",))
+    out = remove_overlaps(x, ("s", "e"), ("g",), join_strategy="bin")  # the SQL sweep
     # piece k of a group's 199 is covered by the 200 - k longest
     assert out.count() == 2 * sum(range(1, 200))
     (plan,) = plans

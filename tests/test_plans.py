@@ -39,7 +39,8 @@ def test_group_equi_is_hash_or_merge_join(xy):
     x, y = xy
     p = _plan(
         interval_weighted_avg(
-            x, y, ("s", "e"), ("v",), ("g",), validate=False, assume_y_distinct=True
+            x, y, ("s", "e"), ("v",), ("g",), validate=False, assume_y_distinct=True,
+            join_strategy="group_equi",
         )
     )
     assert "CartesianProduct" not in p
@@ -397,6 +398,60 @@ def test_eager_work_is_one_stats_pass_and_one_scan(spark):
         spark, lambda: interval_weighted_avg(x, y, ("s", "e"), ("v",), ("g",))
     )
     assert 0 < n <= 10, n
+
+
+def test_validated_grouped_call_is_one_eager_action(spark):
+    """On the same panel, a validated grouped call that ``auto`` sends
+    to the Arrow sweep runs one eager action, which checks x and y and
+    sizes the groups: at most 5 jobs, where the stats pass and the
+    overlap scan ran 7."""
+    x = spark.range(600).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 10 AS INT) AS s",
+        "CAST(id DIV 3 * 10 + 6 AS INT) AS e", "CAST(id AS DOUBLE) AS v",
+    )
+    y = spark.range(300).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 20 AS INT) AS s",
+        "CAST(id DIV 3 * 20 + 14 AS INT) AS e",
+    )
+    out = []
+    n = _jobs_run_by(
+        spark, lambda: out.append(interval_weighted_avg(x, y, ("s", "e"), ("v",), ("g",)))
+    )
+    assert "MapInArrow" in _plan(out[0])
+    assert 0 < n <= 5, n
+
+
+@pytest.mark.parametrize("kw, patch, bound", [
+    ({"join_strategy": "group_equi"}, {}, 10),
+    ({}, {"AUTO_SWEEP_ROWS": 100}, 5),
+    ({}, {"AUTO_SWEEP_ROWS": 100, "AUTO_BIN_PAIRS": 1000}, 5),
+])
+def test_pair_path_eager_work(spark, monkeypatch, kw, patch, bound):
+    """The same panel on the pair join. An explicit strategy runs the
+    stats pass and the overlap scan (7 jobs). ``auto`` with the largest
+    group over the sweep's row budget plans the join, group_equi or
+    bin with its width, from the one check action: no other pass."""
+    from timeperiods_spark.plans import strategy
+
+    for name, value in patch.items():
+        monkeypatch.setattr(strategy, name, value)
+    x = spark.range(600).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 10 AS INT) AS s",
+        "CAST(id DIV 3 * 10 + 6 AS INT) AS e", "CAST(id AS DOUBLE) AS v",
+    )
+    y = spark.range(300).selectExpr(
+        "CAST(id % 3 AS INT) AS g", "CAST(id DIV 3 * 20 AS INT) AS s",
+        "CAST(id DIV 3 * 20 + 14 AS INT) AS e",
+    )
+    out = []
+    n = _jobs_run_by(
+        spark,
+        lambda: out.append(interval_weighted_avg(x, y, ("s", "e"), ("v",), ("g",), **kw)),
+    )
+    plan = _plan(out[0])
+    assert "MapInArrow" not in plan
+    assert ("__bin" in plan) == ("AUTO_BIN_PAIRS" in patch)
+    assert 0 < n <= bound, n
 
 
 def test_build_overlap_pairs_with_hints_runs_no_job(spark):

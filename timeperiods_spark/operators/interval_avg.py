@@ -11,15 +11,17 @@ each value column plus coverage metadata (yduration, xduration,
 nobs_<v>, xminstart, xmaxend) and a ``required_percentage`` coverage
 mask.
 
-The implementation is Spark-first, NOT a port: the reference's
-``foverlaps`` binary-search join + GForce group-by become a
-range-join (with a selectable physical strategy, see
-:mod:`timeperiods_spark.plans.strategy`) followed by a hash aggregate
-that Catalyst executes with partial (map-side) + final aggregation and
-whole-stage codegen. All expressions are native Spark SQL — no Python
-UDFs anywhere on this path — and each stage is one projection built from
-SQL expression strings (plans/sql.py): composing ``Column`` objects call
-by call costs a py4j round trip per call.
+The implementation is Spark-first, NOT a port. Grouped input whose
+largest group fits ``plans.strategy.AUTO_SWEEP_ROWS`` runs the
+reference's per-group binary search as the grouped Arrow sweep
+(:mod:`timeperiods_spark.plans.kernel`): one ``mapInArrow`` call per
+partition, no join. Everything else takes a range join (with a
+selectable physical strategy, see :mod:`timeperiods_spark.plans.strategy`)
+followed by a hash aggregate that Catalyst executes with partial
+(map-side) + final aggregation and whole-stage codegen, all native Spark
+SQL. Each stage is one projection built from SQL expression strings
+(plans/sql.py): composing ``Column`` objects call by call costs a py4j
+round trip per call.
 
 Closed-interval arithmetic: a unit difference is the smallest observable
 increment; duration = end - start + 1 (reference
@@ -43,7 +45,14 @@ from ..errors import (
 )
 from ..plans.carry import plan_buckets
 from ..plans.sql import ident, sql
-from ..plans.strategy import RequestStats, build_overlap_pairs, request_stats
+from ..plans.kernel import grouped_checks, iwa_sweep, sweepable
+from ..plans.strategy import (
+    RequestStats,
+    build_overlap_pairs,
+    group_sizes,
+    request_stats,
+    sweep_fits,
+)
 
 #: Output column names reserved by the operator
 #: (reference timeperiod_functions.R:126-130).
@@ -228,17 +237,24 @@ def _vlog(verbose: bool, msg: str) -> None:
 
 def _validate(
     xw: DataFrame, yw: DataFrame, n_groups: int, skip_overlap_check: bool,
-    verbose: bool = False,
+    verbose: bool = False, *, grouped: bool = False,
 ) -> RequestStats:
     """Eager checks of one request, in this order: y NULL, y reversed,
     y duplicates (a warning), x NULL, x reversed, x duplicates, then
-    x overlaps (the scan; unless ``skip_overlap_check``). Returns the
-    stats pass for planning."""
+    x overlaps (unless ``skip_overlap_check``). Returns the stats for
+    planning.
+
+    ``grouped`` runs every check, the group count and the largest
+    group's rows in one action (plans.kernel.grouped_checks); otherwise
+    the stats pass is followed by the overlap scan."""
     t0 = time.time()
-    stats = request_stats(xw, yw, n_groups)
+    if grouped:
+        stats = grouped_checks(xw, yw, n_groups)
+    else:
+        stats = request_stats(xw, yw, n_groups)
     x, y = stats.x, stats.y
-    _vlog(verbose, f"request stats (one pass) nx={x.n} ny={y.n} groups~{x.groups} "
-                   f"bin_width~{stats.bin_width}: {time.time() - t0:.2f}s")
+    _vlog(verbose, f"request stats (one pass) nx={x.n} ny={y.n} groups~{x.groups}: "
+                   f"{time.time() - t0:.2f}s")
     if y.nulls:
         raise IntervalValidationError("interval_vars columns cannot be NULL in y")
     if y.rev:
@@ -266,11 +282,16 @@ def _validate(
         )
     if skip_overlap_check or not x.n:
         return stats
-    t0 = time.time()
-    gcols = [f"__g{i}" for i in range(n_groups)]
-    scan = _overlap_scan(xw, gcols, bounds_hint=(x.lo, x.hi), group_count_hint=x.groups)
-    n_ovl = scan.first()["ovl"]
-    _vlog(verbose, f"x integrity (overlap scan): {time.time() - t0:.2f}s")
+    if grouped:
+        n_ovl = x.ovl
+    else:
+        t0 = time.time()
+        gcols = [f"__g{i}" for i in range(n_groups)]
+        scan = _overlap_scan(
+            xw, gcols, bounds_hint=(x.lo, x.hi), group_count_hint=x.groups
+        )
+        n_ovl = scan.first()["ovl"]
+        _vlog(verbose, f"x integrity (overlap scan): {time.time() - t0:.2f}s")
     if n_ovl:
         raise OverlapError(
             "overlapping intervals within groups of x (closed intervals: "
@@ -278,6 +299,55 @@ def _validate(
             "remove_overlaps() first."
         )
     return stats
+
+
+def _pair_sums(
+    pairs: DataFrame, yd: DataFrame, n_g: int, n_v: int, extra_stats: bool
+) -> DataFrame:
+    """The sums the output projection reads, from the pair join: one
+    row per row of ``yd`` (``__yg*, __ys, __ye, __xdur, __snm*, __sp*,
+    [__sq*], __minstart, __maxend``). One statement: clip (O3), weight
+    (O4), per-value weights/products (O5, O6), the grouped hash
+    aggregation (O7, partial+final, codegen) and the completion join
+    (O10: every deduped y row survives, zero-filled; group keys match
+    null-safe)."""
+    ygcols = [f"__yg{i}" for i in range(n_g)]
+    vcols = [f"__v{i}" for i in range(n_v)]
+    keys = ", ".join([*ygcols, "__ys", "__ye"])
+    moments = [("nm", "IF({v} IS NULL, 0, __dur)"), ("p", "{v} * __dur")]
+    if extra_stats:
+        moments.append(("q", "{v} * {v} * __dur"))
+    weighted = [
+        f"{expr.format(v=v)} AS __{m}{i}" for m, expr in moments
+        for i, v in enumerate(vcols)
+    ]
+    sums = ["sum(__dur) AS __xdur"] + [
+        f"sum(__{m}{i}) AS __s{m}{i}" for m, _ in moments for i in range(n_v)
+    ]
+    # the agg side of the completion join; covered counts default to 0
+    agg_cols = ["coalesce(a.__xdur, 0) AS __xdur"] + [
+        f"coalesce(a.__snm{i}, 0) AS __snm{i}" if m == "nm" else f"a.__s{m}{i}"
+        for m, _ in moments for i in range(n_v)
+    ]
+    on = " AND ".join(
+        ["y.__ys = a.__ys", "y.__ye = a.__ye"] + [f"y.{g} <=> a.{g}" for g in ygcols]
+    )
+    return sql(
+        f"""SELECT y.*, {", ".join(agg_cols)}, a.__minstart, a.__maxend
+        FROM {{yd}} y LEFT JOIN (
+            SELECT {keys}, {", ".join(sums)},
+                   min(__cs) AS __minstart, max(__ce) AS __maxend
+            FROM (
+                SELECT {keys}, __cs, __ce, __dur, {", ".join(weighted)} FROM (
+                    SELECT *, greatest(__xs, __ys) AS __cs,
+                           least(__xe, __ye) AS __ce,
+                           least(__xe, __ye) - greatest(__xs, __ys) + 1 AS __dur
+                    FROM {{pairs}}))
+            GROUP BY {keys}) a
+        ON {on}""",
+        pairs=pairs,
+        yd=yd,
+    )
 
 
 def interval_weighted_avg(
@@ -318,7 +388,23 @@ def interval_weighted_avg(
     - ``join_strategy``/``bin_width``/``skew_salt`` select the physical
       range-join plan (see plans.strategy.build_overlap_pairs).
 
-    Eager work is one fused stats pass over x and y
+    With ``join_strategy="auto"`` on grouped input (keys of integer,
+    decimal, string, binary, boolean, date or timestamp type, the same
+    in x and y), eager work is ONE action
+    (plans.kernel.grouped_checks): every check below, the group count
+    and the largest group's rows. When that group fits
+    ``plans.strategy.AUTO_SWEEP_ROWS``, the result is the grouped Arrow
+    sweep (plans.kernel.iwa_sweep): each period's sums run in one fixed
+    order, x start descending, so they do not depend on partitioning,
+    caching or AQE; y needs no dedup shuffle. With ``validate=False``
+    the action is a group-size aggregate (plans.strategy.group_sizes).
+    A larger group takes the pair join, planned from the action's
+    stats with no other pass (with ``validate=False``, a bin join's
+    width costs one more stats pass: the group-size aggregate has no
+    length percentile).
+
+    Ungrouped input and the other strategies keep the pair join, whose
+    eager work is one fused stats pass over x and y
     (plans.strategy.request_stats), which validates and plans the join,
     plus one overlap scan of x. With ``validate=False`` the pass only
     plans (no distinct count, so y keeps its dedup), and
@@ -334,64 +420,33 @@ def interval_weighted_avg(
     ivl_dtype, xw, yw = _canonical(x, y, interval_vars, value_vars, group_vars)
     n_g, n_v = len(group_vars), len(value_vars)
     ygcols = [f"__yg{i}" for i in range(n_g)]
-    vcols = [f"__v{i}" for i in range(n_v)]
+    # auto may take the grouped Arrow sweep: its keys are checked here,
+    # its largest group by the one stats action below
+    grouped = join_strategy == "auto" and sweepable(xw, yw, n_g)
 
     if validate:
-        stats = _validate(xw, yw, n_g, skip_overlap_check, verbose)
+        stats = _validate(xw, yw, n_g, skip_overlap_check, verbose, grouped=grouped)
     else:
         _vlog(verbose, "validation skipped (validate=False)")
-        # planning-only stats (nothing shuffled; y keeps its dedup) on
-        # the pre-dedup y: ny is an upper bound, which can only steer
-        # the pick toward the bin join, safe at any size
-        need = (join_strategy == "auto" and join_stats is None) or (
+        # planning-only stats (y keeps its dedup) on the pre-dedup y: ny
+        # is an upper bound, which can only steer the pick toward the
+        # bin join, safe at any size
+        if grouped and join_stats is None:
+            stats = group_sizes(xw, yw, n_g)
+        elif (join_strategy == "auto" and join_stats is None) or (
             join_strategy == "bin" and bin_width is None
-        )
-        stats = request_stats(xw, yw, n_g, distinct=False) if need else None
+        ):
+            stats = request_stats(xw, yw, n_g, distinct=False)
+        else:
+            stats = None
+    sweep = grouped and stats is not None and sweep_fits(stats)
 
     y_distinct = assume_y_distinct or (stats is not None and stats.y.n == stats.y.nd)
-    yd = yw if y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
-
     _vlog(
         verbose,
-        f"plan: join_strategy={join_strategy!r} n_groups={n_g} "
-        f"n_values={n_v} y_dedup={not y_distinct} "
+        f"plan: join_strategy={'sweep' if sweep else join_strategy!r} n_groups={n_g} "
+        f"n_values={n_v} y_dedup={not (sweep or y_distinct)} "
         f"required_percentage={required_percentage}"
-    )
-
-    # --- pair stage: every (y period, x interval) overlap, inner ---
-    pairs = build_overlap_pairs(
-        xw,
-        yd,
-        n_g,
-        strategy=join_strategy,
-        bin_width=bin_width,
-        skew_salt=skew_salt,
-        auto_stats=stats or join_stats,
-    )
-
-    # One statement from the pairs to the output: clip (O3), weight
-    # (O4), per-value weights/products (O5, O6), the grouped hash
-    # aggregation (O7, partial+final, codegen), the completion join
-    # (O10: every deduped y row survives, zero-filled; group keys match
-    # null-safe) and the output projection.
-    keys = ", ".join([*ygcols, "__ys", "__ye"])
-    moments = [("nm", "IF({v} IS NULL, 0, __dur)"), ("p", "{v} * __dur")]
-    if extra_stats:
-        moments.append(("q", "{v} * {v} * __dur"))
-    weighted = [
-        f"{expr.format(v=v)} AS __{m}{i}" for m, expr in moments
-        for i, v in enumerate(vcols)
-    ]
-    sums = ["sum(__dur) AS __xdur"] + [
-        f"sum(__{m}{i}) AS __s{m}{i}" for m, _ in moments for i in range(n_v)
-    ]
-    # the agg side of the completion join; covered counts default to 0
-    agg_cols = ["coalesce(a.__xdur, 0) AS __xdur"] + [
-        f"coalesce(a.__snm{i}, 0) AS __snm{i}" if m == "nm" else f"a.__s{m}{i}"
-        for m, _ in moments for i in range(n_v)
-    ]
-    on = " AND ".join(
-        ["y.__ys = a.__ys", "y.__ye = a.__ye"] + [f"y.{g} <=> a.{g}" for g in ygcols]
     )
 
     ydur = "CAST(__ye - __ys + 1 AS DOUBLE)"
@@ -428,23 +483,25 @@ def interval_weighted_avg(
         f"{_ungrid('__minstart', ivl_dtype)} AS xminstart",
         f"{_ungrid('__maxend', ivl_dtype)} AS xmaxend",
     ]
+    if sweep:
+        # one partitioned pass: every distinct y row, zero-filled
+        sums = iwa_sweep(xw, yw, n_g, n_v, extra_stats)
+    else:
+        yd = yw if y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
+        pairs = build_overlap_pairs(
+            xw,
+            yd,
+            n_g,
+            strategy=join_strategy,
+            bin_width=bin_width,
+            skew_salt=skew_salt,
+            auto_stats=stats or join_stats,
+        )
+        sums = _pair_sums(pairs, yd, n_g, n_v, extra_stats)
     out = sql(
-        f"""SELECT {", ".join(out_cols)} FROM (
-            SELECT y.*, {", ".join(agg_cols)}, a.__minstart, a.__maxend
-            FROM {{yd}} y LEFT JOIN (
-                SELECT {keys}, {", ".join(sums)},
-                       min(__cs) AS __minstart, max(__ce) AS __maxend
-                FROM (
-                    SELECT {keys}, __cs, __ce, __dur, {", ".join(weighted)} FROM (
-                        SELECT *, greatest(__xs, __ys) AS __cs,
-                               least(__xe, __ye) AS __ce,
-                               least(__xe, __ye) - greatest(__xs, __ys) + 1 AS __dur
-                        FROM {{pairs}}))
-                GROUP BY {keys}) a
-            ON {on})""",
+        f"SELECT {', '.join(out_cols)} FROM {{sums}}",
         {"req": float(required_percentage)},
-        pairs=pairs,
-        yd=yd,
+        sums=sums,
     )
     if sort_output:
         # O14: the reference returns keyed by (group, start, end)

@@ -9,10 +9,13 @@ tagged with every original interval covering it. It is the
 preprocessing step that turns overlapping raw measurements into legal
 ``interval_weighted_avg`` input (reference pipeline tests.R:433-470).
 
-Spark-first shape: the melt is a union of two projections, the sweep is
-a single window (one shuffle by group), and the join-back reuses the
-pluggable range-join strategies — every step is native Spark SQL, built
-as one projection per stage from expression strings (plans/sql.py).
+Spark-first shape: grouped input whose largest group fits
+``plans.strategy.AUTO_SWEEP_ROWS`` runs as the grouped Arrow sweep
+(plans/kernel.py), one ``mapInArrow`` call per partition. Otherwise the
+melt is a union of two projections, the sweep is a single window (one
+shuffle by group), and the join-back reuses the pluggable range-join
+strategies — every step is native Spark SQL, built as one projection per
+stage from expression strings (plans/sql.py).
 """
 
 from __future__ import annotations
@@ -25,7 +28,8 @@ from pyspark.sql import types as T
 
 from ..errors import IntervalValidationError, OverlapError, RoleValidationError
 from ..plans.sql import ident, sql
-from ..plans.strategy import build_overlap_pairs, request_stats
+from ..plans.kernel import arrow_ok, pieces_sweep, sweepable
+from ..plans.strategy import build_overlap_pairs, group_sizes, request_stats, sweep_fits
 from .interval_avg import _fields, _grid, _is_intervalish, _ungrid
 
 
@@ -125,7 +129,7 @@ def remove_overlaps(
     interval_vars: Sequence[str],
     group_vars: Optional[Sequence[str]] = None,
     *,
-    join_strategy: str = "bin",
+    join_strategy: str = "auto",
     bin_width: Optional[int] = None,
     keep_values: bool = True,
     cache: bool = True,
@@ -147,13 +151,23 @@ def remove_overlaps(
     duplicate intervals. Pass ``keep_values=False`` to shuffle only the
     keys when the payload is wide and unneeded.
 
-    ``join_strategy`` defaults to the bucketized bin join, NOT
-    group_equi: the decomposition is typically applied to dense
-    low-cardinality panels where an equi-only join degenerates into a
-    per-group cartesian product (each group's originals x its atomic
-    pieces). The bin join keeps candidate pairs local to a time bucket
-    regardless of group cardinality. Pass ``group_equi`` only for
-    high-cardinality, short-panel groups.
+    ``join_strategy="auto"`` (the default) runs grouped input through
+    the Arrow sweep (plans.kernel.pieces_sweep) when one group-size
+    action finds its largest group within
+    ``plans.strategy.AUTO_SWEEP_ROWS``: each partition's groups are cut
+    at starts ∪ (ends + 1) in one Python call, with no melt, window
+    sweep, join-back or persist. Ungrouped input, larger groups and
+    payload types Arrow cannot carry take the SQL sweep below with the
+    bucketized bin join-back, NOT group_equi: the decomposition is
+    typically applied to dense low-cardinality panels where an
+    equi-only join degenerates into a per-group cartesian product (each
+    group's originals x its atomic pieces). The bin join keeps
+    candidate pairs local to a time bucket regardless of group
+    cardinality. So ``auto`` here never hands the pick to
+    build_overlap_pairs' own ``auto`` (which may choose group_equi), as
+    an explicit ``auto`` did before the sweep existed. Any other
+    ``join_strategy`` forces the SQL sweep with that join-back; pass
+    ``group_equi`` only for high-cardinality, short-panel groups.
     """
     group_vars = list(group_vars or [])
     xf = _fields(x)
@@ -183,6 +197,20 @@ def remove_overlaps(
         f"{_grid(e, xf[e])} AS __xe",
         *[f"{ident(c)} AS __p{i}" for i, c in enumerate(payload)],
     )
+    out = [
+        *[f"__yg{i} AS {ident(g)}" for i, g in enumerate(group_vars)],
+        f"{_ungrid('__ys', ivl_dtype)} AS {ident(s)}",
+        f"{_ungrid('__ye', ivl_dtype)} AS {ident(e)}",
+        f"{_ungrid('__xs', ivl_dtype)} AS {ident('o_' + s)}",
+        f"{_ungrid('__xe', ivl_dtype)} AS {ident('o_' + e)}",
+        *[f"__p{i} AS {ident(c)}" for i, c in enumerate(payload)],
+    ]
+    if join_strategy == "auto":
+        join_strategy = "bin"
+        if sweepable(base, None, n_g) and arrow_ok(base):
+            if sweep_fits(group_sizes(base, None, n_g)):
+                return pieces_sweep(base, n_g).selectExpr(*out)
+
     # base feeds four subtrees (the stats pass, per-bucket leads, bucket
     # firsts, and the join-back): persist so the upstream input is
     # computed once — at corpus scale it's (groups, 2 longs, payload)
@@ -210,14 +238,7 @@ def remove_overlaps(
         auto_stats=replace(stats, y=Row(n=2 * x.n)),
     )
 
-    return pairs.selectExpr(
-        *[f"__yg{i} AS {ident(g)}" for i, g in enumerate(group_vars)],
-        f"{_ungrid('__ys', ivl_dtype)} AS {ident(s)}",
-        f"{_ungrid('__ye', ivl_dtype)} AS {ident(e)}",
-        f"{_ungrid('__xs', ivl_dtype)} AS {ident('o_' + s)}",
-        f"{_ungrid('__xe', ivl_dtype)} AS {ident('o_' + e)}",
-        *[f"__p{i} AS {ident(c)}" for i, c in enumerate(payload)],
-    )
+    return pairs.selectExpr(*out)
 
 
 def check_no_overlaps(

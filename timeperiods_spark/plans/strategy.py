@@ -30,9 +30,15 @@ no custom Catalyst rules — into one of four shapes:
     (group, bin[, salt]), which partitions evenly and is skew-saltable.
 
 ``auto``
-    Data-aware pick. Ungrouped → bin. Grouped → estimate the equi
-    join's candidate volume ``|x| x |y| / groups`` and switch to bin
-    above ``AUTO_BIN_PAIRS``. Rationale: group_equi's SMJ applies the
+    Data-aware pick. Ungrouped → bin. Grouped → the operators first
+    try the grouped Arrow sweep (:mod:`timeperiods_spark.plans.kernel`),
+    which needs no pair join at all: ``interval_weighted_avg`` and
+    ``remove_overlaps`` take it when their stats action finds the
+    largest group (x rows + y rows) within ``AUTO_SWEEP_ROWS``
+    (:func:`sweep_fits`). Larger groups, and callers of the
+    pair join itself, estimate the equi join's candidate volume
+    ``|x| x |y| / groups`` and switch to bin above ``AUTO_BIN_PAIRS``.
+    Rationale: group_equi's SMJ applies the
     range predicate AFTER the per-group cross, so its cost is the
     candidate volume, not the match volume — few groups x long panels
     degenerates quadratically (measured: the sf1.0 bench's 20-group x
@@ -77,6 +83,16 @@ AUTO_BIN_PAIRS = 100_000_000
 #: blowout). Hints far below the cliff stay action-free; hints above
 #: it pick bin, the direction that is safe even when stale.
 AUTO_STATS_RECHECK_BAND = 4
+#: auto runs the grouped Arrow sweep when the largest group holds at
+#: most this many rows (x and y together). A Python call holds one open
+#: group plus one Arrow batch, so this bounds a worker's memory: one
+#: group at the bound (900k x + 100k y rows, 2 value columns) peaked at
+#: 0.26 GB above its input batches, measured on a 4-core host. Larger
+#: groups keep the pair join, which is also faster there: one group is
+#: one sweep task, while the bin join spreads it over every core (a
+#: 5M-row group: sweep 8.1–9.7 s and 1.33 GB per worker, bin join
+#: 7.9–8.9 s and 0.13 GB, same host).
+AUTO_SWEEP_ROWS = 1_000_000
 
 
 def _group_cond(n_groups: int) -> list[str]:
@@ -98,7 +114,10 @@ class RequestStats:
     """Per side (``x``/``y``): ``n`` rows, ``nd`` distinct (group, start,
     end) rows or None, ``nulls``/``rev`` rows with a NULL endpoint / end
     < start, approx ``groups`` (x only), ``lo``/``hi`` over starts AND
-    ends, approx ``p90`` length; ``p90`` pools both sides."""
+    ends, approx ``p90`` length; ``p90`` pools both sides. The grouped
+    passes (``plans.kernel.grouped_checks``, :func:`group_sizes`) also
+    give ``top``, the rows of the side's largest group, and exact
+    ``groups``."""
 
     x: Row
     y: Row
@@ -112,6 +131,39 @@ class RequestStats:
     def bin_width(self) -> int:
         # any width is correct; it only tunes the bin join's fan-out
         return max(1, int(self.p90 or 1))
+
+
+def sweep_fits(stats: RequestStats) -> bool:
+    """Does the largest group (x rows + y rows) fit ``AUTO_SWEEP_ROWS``?
+    ``stats`` must carry ``top`` (from ``plans.kernel.grouped_checks``
+    or :func:`group_sizes`)."""
+    return (stats.x.top or 0) + (stats.y.top or 0) <= AUTO_SWEEP_ROWS
+
+
+def group_sizes(
+    xw: DataFrame, yw: Optional[DataFrame], n_groups: int
+) -> RequestStats:
+    """Per side ``n`` rows (``nd`` None), exact ``groups`` and ``top``,
+    the rows of its largest group, of the x (``__g*``) and y
+    (``__yg*``) frames in one Spark action, for planning without
+    validation: the partial aggregate shuffles one row per (group,
+    input partition). There is no ``p90``, so a bin join planned from
+    these stats measures its width in one more pass."""
+    frames = {side: df for side, df in (("x", xw), ("y", yw)) if df is not None}
+    union = " UNION ALL ".join(
+        f"SELECT '{side}' AS side, count(1) AS c FROM {{{side}}} GROUP BY "
+        + ", ".join(f"{'__g' if side == 'x' else '__yg'}{i}" for i in range(n_groups))
+        for side in frames
+    )
+    rows = sql(
+        f"""SELECT side, sum(c) AS n, CAST(NULL AS BIGINT) AS nd,
+               count(1) AS groups, max(c) AS top
+        FROM ({union}) GROUP BY side""",
+        **frames,
+    ).collect()
+    by_side = {r["side"]: r for r in rows}
+    none = Row(n=0, nd=None, groups=0, top=0)
+    return RequestStats(by_side.get("x", none), by_side.get("y", none), None)
 
 
 def request_stats(
@@ -153,15 +205,15 @@ def request_stats(
             f"SELECT side, __kx, count(1) AS __c, s, e FROM ({union}) "
             "GROUP BY side, __kx, __ky, s, e"
         )
-        n, nd = "sum(__c)", "count(1)"
+        n, nd, w = "sum(__c)", "count(1)", "__c"
     else:
-        n, nd = "count(1)", "CAST(NULL AS BIGINT)"
+        n, nd, w = "count(1)", "CAST(NULL AS BIGINT)", "1"
     rows = sql(
         # rollup adds the both-sides row (side NULL) the bin width uses;
         # least/greatest skip a NULL endpoint
         f"""SELECT side, {n} AS n, {nd} AS nd,
-               count_if(s IS NULL OR e IS NULL) AS nulls,
-               count_if(e < s) AS rev,
+               sum(IF(s IS NULL OR e IS NULL, {w}, 0)) AS nulls,
+               sum(IF(e < s, {w}, 0)) AS rev,
                approx_count_distinct(__kx) AS groups,
                min(least(s, e)) AS lo, max(greatest(s, e)) AS hi,
                percentile_approx(e - s + 1, 0.9) AS p90
@@ -209,8 +261,9 @@ def build_overlap_pairs(
     ``auto_stats=(nx, ny, n_groups_distinct)`` feeds the auto picker
     without its stats action (hot paths that know their sizes; the
     numbers only steer the strategy choice, never correctness). A
-    :class:`RequestStats` is trusted as fresh (no recheck) and also
-    gives the bin width; without either, both share one action.
+    :class:`RequestStats` is trusted as fresh (no recheck) and, when it
+    has a ``p90``, also gives the bin width; without either, both share
+    one action.
     """
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
@@ -265,10 +318,9 @@ def build_overlap_pairs(
         return pairs.selectExpr(*out)
 
     if strategy == "bin":
-        w = int(
-            bin_width
-            or (stats or request_stats(xw, yw, n_groups, distinct=False)).bin_width
-        )
+        if not (bin_width or (stats and stats.p90)):
+            stats = request_stats(xw, yw, n_groups, distinct=False)
+        w = int(bin_width or stats.bin_width)
         xbin = [f"explode(sequence(floor(__xs / {w}), floor(__xe / {w}))) AS __bin"]
         ybin = [f"explode(sequence(floor(__ys / {w}), floor(__ye / {w}))) AS __ybin"]
         # first-shared-bin: count each overlapping pair exactly once, so

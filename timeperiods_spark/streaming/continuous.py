@@ -140,8 +140,13 @@ def ingest_batch(
         if cached is not None:
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # the pool's jobs keep the caller's job group, local
+            # properties and session tags (thread-local in the JVM)
+            task = inheritable_thread_target(spark)(run_tier)
             with ThreadPoolExecutor(max_workers=len(ordered)) as pool:
-                for fut in [pool.submit(run_tier, t) for t in ordered]:
+                for fut in [pool.submit(task, t) for t in ordered]:
                     fut.result()
         else:
             for tier in ordered:  # base first: cascades read its delta

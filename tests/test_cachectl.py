@@ -4,6 +4,7 @@ repeated calls in a long-lived session."""
 
 from __future__ import annotations
 
+import gc
 import time
 
 import pytest
@@ -29,11 +30,25 @@ def _wait_cached_at_most(spark, n: int, timeout: float = 10.0) -> int:
     return _n_cached(spark)
 
 
+def _collect_until_cached_at_most(spark, n: int, timeout: float = 30.0) -> int:
+    """Run Python and JVM GCs until at most ``n`` RDDs hold storage:
+    Spark's ContextCleaner frees the blocks of a dropped frame's local
+    checkpoint (a validated grouped interval_weighted_avg's result)
+    only once the JVM has collected the frame."""
+    deadline = time.monotonic() + timeout
+    while _n_cached(spark) > n and time.monotonic() < deadline:
+        gc.collect()
+        spark.sparkContext._jvm.System.gc()
+        time.sleep(0.5)
+    return _n_cached(spark)
+
+
 @pytest.fixture()
 def clean_caches(spark):
     cachectl.release()
     spark.catalog.clearCache()
-    _wait_cached_at_most(spark, 0)
+    # results that earlier tests dropped are freed by GC, not clearCache
+    _collect_until_cached_at_most(spark, 0, timeout=10.0)
     yield
     cachectl.release()
     spark.catalog.clearCache()
@@ -161,3 +176,33 @@ def test_interval_avg_with_join_stats_caches_nothing(spark, clean_caches):
     tags = cachectl.managed_tags()
     assert not [t for t in tags if t.startswith("interval_weighted_avg.")], tags
     assert _n_cached(spark) <= before
+
+
+def test_validated_grouped_results_are_freed(spark, clean_caches):
+    """A validated grouped ``interval_weighted_avg`` call computes its
+    sums and holds them (a local checkpoint), through no registry:
+    once the frames that read them are dropped, Spark's ContextCleaner
+    frees the blocks, so after N calls a Python and a JVM GC bring the
+    storage back to its baseline."""
+    from timeperiods_spark import interval_weighted_avg
+
+    x = spark.range(60).select(
+        (F.col("id") % 3).cast("int").alias("g"),
+        (F.floor(F.col("id") / 3) * 10).cast("int").alias("s"),
+        (F.floor(F.col("id") / 3) * 10 + 9).cast("int").alias("e"),
+        F.col("id").cast("double").alias("v"),
+    )
+    y = spark.range(12).select(
+        (F.col("id") % 3).cast("int").alias("g"),
+        (F.col("id") * 15).cast("int").alias("s"),
+        (F.col("id") * 15 + 24).cast("int").alias("e"),
+    )
+    before = _n_cached(spark)
+    outs = [
+        interval_weighted_avg(x, y.where(f"s >= {i}"), ("s", "e"), ("v",), ("g",))
+        for i in range(3)
+    ]
+    assert _n_cached(spark) == before + 3
+    assert [o.orderBy("g", "s").count() for o in outs] == [12, 11, 11]
+    del outs
+    assert _collect_until_cached_at_most(spark, before) == before

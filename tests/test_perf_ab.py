@@ -86,3 +86,33 @@ def test_failed_runs_leave_their_pair_out(ab, tmp_path):
     assert ab.main(["--from", str(log), "--bench", str(bench)]) == 1
     text = ab.report([rows])
     assert "wins 0/2" in text and "moved worse" in text
+
+
+def test_cpu_readout(ab, tmp_path):
+    """run_one records the CPU time of the run's process tree, a child
+    process of the run included; the readout prints it per side with
+    no verdict, and records without it still summarize."""
+    bench = tmp_path / "perfbench"
+    bench.mkdir()
+    (bench / "run.py").write_text(
+        "import json, subprocess, sys\n"
+        "burn = 'import time\\nt = time.process_time()\\n"
+        "while time.process_time() - t < 0.3: pass'\n"
+        "subprocess.run([sys.executable, '-c', burn], check=True)\n"
+        "print(json.dumps({'failed': 0, 'metrics': {}}))\n"
+    )
+    result = ab.run_one(str(tmp_path), "panel_rollup", 1, 1, 0)
+    assert result["failed"] == 0 and result["cpu_s"] >= 0.3
+    recs = _records({"parent": [{"rows_per_s": 100.0}] * 3, "change": [{"rows_per_s": 90.0}] * 3})
+    for r, cpu in zip(recs, (40.0, 44.0, None, 30.0, 33.0, 36.0)):
+        if cpu is not None:
+            r["result"]["cpu_s"] = cpu
+    (rows,) = ab.summarize(recs, METRICS[:1])
+    assert rows["pairs"] == 3
+    text = ab.cpu_readout(recs)
+    assert "no bound" in text and "verdict" not in text
+    lines = text.splitlines()
+    assert lines[2].split() == ["1", "40", "30"]
+    assert lines[4].split() == ["3", "-", "36"]
+    assert lines[5].split() == ["median", "42", "33"]
+    assert ab.cpu_readout(_records({"parent": [{"rows_per_s": 1.0}]})) == ""

@@ -1,5 +1,6 @@
 """The grouped Arrow sweep (plans/kernel.py): the ``auto`` pick, its
-row budget, the one-action checks and layout-independent sums."""
+row budget, the checks counted in the sweep's pass and
+layout-independent sums."""
 
 from __future__ import annotations
 
@@ -17,7 +18,11 @@ from timeperiods_spark.errors import (
 )
 from timeperiods_spark.operators.interval_avg import _canonical, _overlap_scan
 from timeperiods_spark.plans import strategy
-from timeperiods_spark.plans.kernel import grouped_checks
+from timeperiods_spark.plans import kernel
+
+#: what the result of a request that took the sweep scans: a validated
+#: call computed the sums already, an unvalidated one runs the sweep
+_SWEPT = {True: "Scan ExistingRDD", False: "MapInArrow"}
 
 
 def _plan(df) -> str:
@@ -54,11 +59,11 @@ def test_auto_takes_the_sweep_within_the_row_budget(spark, panel, monkeypatch, v
         )
 
     swept = run()
-    assert "MapInArrow" in _plan(swept)
+    assert _SWEPT[validate] in _plan(swept)
     monkeypatch.setattr(strategy, "AUTO_SWEEP_ROWS", 100)  # < the largest group
     joined = run()
     plan = _plan(joined)
-    assert "MapInArrow" not in plan
+    assert not any(s in plan for s in _SWEPT.values())
     assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan) or (
         "BroadcastHashJoin" in plan
     )
@@ -113,7 +118,7 @@ def test_sweep_matches_the_pair_join_on_nullable_string_keys(spark):
         for req in (100.0, 50.0, 0.0):
             args = (x, y, ("s", "e"), ("v",), ("g1", "g2"), req)
             swept = interval_weighted_avg(*args, extra_stats=True)
-            assert "MapInArrow" in _plan(swept)
+            assert _SWEPT[True] in _plan(swept)
             joined = interval_weighted_avg(*args, extra_stats=True, join_strategy="group_equi")
             a, b = _rows(swept), _rows(joined)
             assert len(a) == len(b) == len(set(yr))
@@ -174,10 +179,10 @@ def _old_checks(spark, xw, yw, n_groups):
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
 def test_one_action_checks_match_the_stats_pass_and_scan(spark, seed):
-    """Every count of the one-action checks against the stats pass,
-    the overlap scan and exact group sizes, on data whose few large
-    groups span several range partitions (runs, duplicates and
-    overlaps are stitched across partition boundaries)."""
+    """Every count of the checked sweep against the stats pass, the
+    overlap scan and exact group sizes, on data with a NULL group key,
+    duplicate y rows and (seed 3) NULL x endpoints, each group counted
+    over several Arrow batches."""
     rnd = random.Random(seed)
     xr, yr = [], []
     for g in (1, 2, None):
@@ -193,7 +198,13 @@ def test_one_action_checks_match_the_stats_pass_and_scan(spark, seed):
     x = spark.createDataFrame(xr, "g int, s long, e long").selectExpr("*", "1.0D AS v")
     y = spark.createDataFrame(yr, "g int, s long, e long")
     _, xw, yw = _canonical(x, y, ("s", "e"), ("v",), ("g",))
-    new = grouped_checks(xw, yw, 1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "64")  # every group spans several batches
+    try:
+        _, new = kernel.checked_sweep(xw, yw, 1, 1, False)
+    finally:
+        spark.conf.set(key, saved)
     old, ovl = _old_checks(spark, xw, yw, 1)
     for side, o in (("x", old.x), ("y", old.y)):
         n = getattr(new, side)
@@ -245,7 +256,7 @@ def test_grouped_duplicate_y_warns_at_the_caller(spark, panel):
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         out = interval_weighted_avg(x, y.union(y), ("s", "e"), ("v",), ("g",))
-    assert "MapInArrow" in _plan(out)
+    assert _SWEPT[True] in _plan(out)
     assert out.count() == 300
     assert any("duplicate" in str(m.message) for m in w)
     assert any(m.filename == __file__ for m in w), [m.filename for m in w]
@@ -255,33 +266,49 @@ def _nulls_first(r):
     return tuple(v for c in r for v in (c is not None, c or 0))
 
 
+
+class _Acc:
+    """An accumulator's driver side, for partition functions run locally."""
+
+    def __init__(self):
+        self.value = {}
+
+    def add(self, term):
+        self.value.update(term)
+
+
 @pytest.mark.parametrize("seed", range(4))
 def test_check_summaries_stitch_across_any_split(monkeypatch, seed):
-    """The per-partition summaries stitch to the counts of the whole
-    sorted stream, wherever the range partitions and Arrow batches cut
-    it (no Spark: the partition function runs on local batches)."""
+    """The sweep's check counters against brute-force counts, wherever
+    hash partitions cut the stream between groups and Arrow batches cut
+    it anywhere (no Spark: the partition function runs on local
+    batches). Rows hold NULL keys, NULL endpoints and duplicates; one
+    group passes a small row budget partway through its partition: it
+    is still counted exactly and gets no sums, and the groups after it
+    keep theirs."""
     import pyarrow as pa
     import pyspark
-    from pyspark.sql import types as T
-
-    from timeperiods_spark.plans import kernel
 
     rnd = random.Random(seed)
+    big, budget = 2, 70
     rows = []
-    for side in (0, 1):
-        for k in (None, 1, 2, 3):
+    for k in (None, 1, 2, 3):
+        for side in (0, 1):
             t = 0
-            for _ in range(rnd.randint(0, 30)):
+            for _ in range(rnd.randint(40, 60) if k == big else rnd.randint(0, 30)):
                 t += rnd.randint(0, 4)
                 s = None if rnd.random() < 0.03 else t
-                rows.append((side, k, s, t + rnd.randint(-1, 3)))
+                e = None if rnd.random() < 0.03 else t + rnd.randint(-1, 3)
+                rows.append((k, side, s, e, 1.0))
+    rows += rnd.sample(rows, 3)
     rows.sort(key=_nulls_first)
-    names = ["__side", "__k0", "__s", "__e"]
-    types = [pa.int32(), pa.int32(), pa.int64(), pa.int64()]
+    types = [pa.int32(), pa.int32(), pa.int64(), pa.int64(), pa.float64()]
+    out_names = ["__yg0", "__ys", "__ye", "__xdur", "__snm0", "__sp0", "__minstart", "__maxend"]
 
     def batch(part):
         return pa.RecordBatch.from_arrays(
-            [pa.array([r[i] for r in part], t) for i, t in enumerate(types)], names=names
+            [pa.array([r[i] for r in part], t) for i, t in enumerate(types)],
+            names=["__k0", "__side", "__s", "__e", "__v0"],
         )
 
     class Task:
@@ -292,44 +319,48 @@ def test_check_summaries_stitch_across_any_split(monkeypatch, seed):
             return Task.part
 
     monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Task))
-    out_names = kernel._summary_schema([T.IntegerType()] * 2).names
+    groups_start = [i for i in range(1, len(rows)) if rows[i][0] != rows[i - 1][0]]
 
-    def stats(cuts):
-        summaries = []
+    def run(cap):
+        acc, out = _Acc(), []
+        cuts = sorted(rnd.sample(groups_start, rnd.randint(0, len(groups_start))))
         for p, (a, b) in enumerate(zip([0, *cuts], [*cuts, len(rows)])):
-            Task.part = p
-            part = rows[a:b]
-            inner = sorted(rnd.sample(range(1, len(part)), min(2, max(0, len(part) - 1))))
+            Task.part, part = p, rows[a:b]
+            inner = sorted(rnd.sample(range(1, len(part)), min(5, len(part) - 1)))
             batches = [batch(part[i:j]) for i, j in zip([0, *inner], [*inner, len(part)])]
-            for rb in kernel._scan_partition(2, out_names, iter(batches)):
-                summaries.append(rb.to_pylist()[0])
-        return kernel._stitch(summaries, 2)
+            for rb in kernel._iwa_partition(1, 1, False, out_names, cap, acc, iter(batches)):
+                out += rb.to_pylist()
+        return kernel._stats(list(acc.value.values())), out
 
-    whole = stats([])
+    whole, sums = run(math.inf)
     for side, got in ((0, whole.x), (1, whole.y)):
-        mine = [r for r in rows if r[0] == side]
+        mine = [r for r in rows if r[1] == side]  # in (key, start, end) order
         sizes = {}
         for r in mine:
-            sizes[r[1]] = sizes.get(r[1], 0) + 1
+            sizes[r[0]] = sizes.get(r[0], 0) + 1
+        ok = [r for r in mine if None not in r[2:4]]
         ovl = sum(
             1 for p, r in zip(mine, mine[1:])
-            if p[1] == r[1] and None not in (p[2], p[3], r[2], r[3])
-            and side == 0 and r[2] <= p[3]
+            if side == 0 and p[0] == r[0] and None not in (p[2], p[3], r[2], r[3])
+            and r[2] <= p[3]
         )
-        assert got.n == len(mine)
-        assert got.nd == len(set(mine))
-        assert got.nulls == sum(1 for r in mine if None in r[2:])
-        assert got.rev == sum(1 for r in mine if None not in r[2:] and r[3] < r[2])
+        assert (got.n, got.nd) == (len(mine), len({r[:4] for r in mine}))
+        assert (got.nulls, got.rev) == (len(mine) - len(ok), sum(r[3] < r[2] for r in ok))
         assert (got.groups, got.top) == (len(sizes), max(sizes.values(), default=0))
         assert got.ovl == ovl
-        ends = [v for r in mine if None not in r[2:] for v in r[2:]]
+        ends = [v for r in ok for v in r[2:4]]
         assert (got.lo, got.hi) == (min(ends, default=None), max(ends, default=None))
     # p90: the smallest length of the 1/8-doubling bucket holding it
-    lengths = sorted(r[3] - r[2] + 1 for r in rows if None not in r[2:] and r[3] >= r[2])
+    lengths = sorted(r[3] - r[2] + 1 for r in rows if None not in r[2:4] and r[3] >= r[2])
     exact = lengths[math.ceil(0.9 * len(lengths)) - 1]
     assert whole.p90 <= exact < whole.p90 * 2 ** (1 / 8) + 1, (whole.p90, exact)
-    # a range partitioner never splits equal rows
-    between = [i for i in range(1, len(rows)) if rows[i - 1] != rows[i]]
-    for _ in range(20):
-        cuts = sorted(rnd.sample(between, rnd.randint(1, 6)))
-        assert stats(cuts) == whole, cuts
+    for _ in range(10):
+        assert run(math.inf) == (whole, sums)
+    # the group over the budget: exact counts, no sums; the rest unchanged
+    assert sum(r[0] == big for r in rows) > budget
+    assert max(sum(r[0] == k for r in rows) for k in (None, 1, 3)) <= budget
+    assert {r["__yg0"] for r in sums} >= {big, 3}
+    for _ in range(10):
+        capped, kept = run(budget)
+        assert capped == whole
+        assert kept == [r for r in sums if r["__yg0"] != big]

@@ -45,7 +45,7 @@ from ..errors import (
 )
 from ..plans.carry import plan_buckets
 from ..plans.sql import ident, sql
-from ..plans.kernel import grouped_checks, iwa_sweep, sweepable
+from ..plans.kernel import checked_sweep, iwa_sweep, sweepable
 from ..plans.strategy import (
     RequestStats,
     build_overlap_pairs,
@@ -236,25 +236,15 @@ def _vlog(verbose: bool, msg: str) -> None:
 
 
 def _validate(
-    xw: DataFrame, yw: DataFrame, n_groups: int, skip_overlap_check: bool,
-    verbose: bool = False, *, grouped: bool = False,
-) -> RequestStats:
-    """Eager checks of one request, in this order: y NULL, y reversed,
-    y duplicates (a warning), x NULL, x reversed, x duplicates, then
-    x overlaps (unless ``skip_overlap_check``). Returns the stats for
-    planning.
-
-    ``grouped`` runs every check, the group count and the largest
-    group's rows in one action (plans.kernel.grouped_checks); otherwise
-    the stats pass is followed by the overlap scan."""
-    t0 = time.time()
-    if grouped:
-        stats = grouped_checks(xw, yw, n_groups)
-    else:
-        stats = request_stats(xw, yw, n_groups)
+    stats: RequestStats, xw: DataFrame, n_groups: int, skip_overlap_check: bool,
+    verbose: bool = False,
+) -> None:
+    """Raise the typed error of the first check of one request that
+    fails, in this order: y NULL, y reversed, y duplicates (a warning),
+    x NULL, x reversed, x duplicates, then x overlaps (unless
+    ``skip_overlap_check``): ``stats.x.ovl`` when the stats count them
+    (plans.kernel.checked_sweep), else one overlap scan of x."""
     x, y = stats.x, stats.y
-    _vlog(verbose, f"request stats (one pass) nx={x.n} ny={y.n} groups~{x.groups}: "
-                   f"{time.time() - t0:.2f}s")
     if y.nulls:
         raise IntervalValidationError("interval_vars columns cannot be NULL in y")
     if y.rev:
@@ -281,10 +271,9 @@ def _validate(
             "together first (reference timeperiod_functions.R:198-202)"
         )
     if skip_overlap_check or not x.n:
-        return stats
-    if grouped:
-        n_ovl = x.ovl
-    else:
+        return
+    n_ovl = getattr(x, "ovl", None)  # the stats pass does not count it
+    if n_ovl is None:
         t0 = time.time()
         gcols = [f"__g{i}" for i in range(n_groups)]
         scan = _overlap_scan(
@@ -298,7 +287,6 @@ def _validate(
             "a shared endpoint is an overlap). Decompose with "
             "remove_overlaps() first."
         )
-    return stats
 
 
 def _pair_sums(
@@ -390,18 +378,19 @@ def interval_weighted_avg(
 
     With ``join_strategy="auto"`` on grouped input (keys of integer,
     decimal, string, binary, boolean, date or timestamp type, the same
-    in x and y), eager work is ONE action
-    (plans.kernel.grouped_checks): every check below, the group count
-    and the largest group's rows. When that group fits
-    ``plans.strategy.AUTO_SWEEP_ROWS``, the result is the grouped Arrow
-    sweep (plans.kernel.iwa_sweep): each period's sums run in one fixed
+    in x and y), the result is the grouped Arrow sweep
+    (plans.kernel.iwa_sweep): each period's sums run in one fixed
     order, x start descending, so they do not depend on partitioning,
-    caching or AQE; y needs no dedup shuffle. With ``validate=False``
-    the action is a group-size aggregate (plans.strategy.group_sizes).
-    A larger group takes the pair join, planned from the action's
-    stats with no other pass (with ``validate=False``, a bin join's
-    width costs one more stats pass: the group-size aggregate has no
-    length percentile).
+    caching or AQE; y needs no dedup shuffle. A validated call computes
+    and holds that result in ONE action with one shuffle
+    (plans.kernel.checked_sweep: every check below, the group count,
+    the largest group's rows and the sums, kept as a local checkpoint
+    that Spark frees once no frame reads it). When that group is over
+    ``plans.strategy.AUTO_SWEEP_ROWS``, the pass is dropped and the
+    pair join is planned from its stats, with no other pass. With
+    ``validate=False`` the action is a group-size aggregate
+    (plans.strategy.group_sizes) and the sweep runs with the result (a
+    bin join's width then costs one more stats pass).
 
     Ungrouped input and the other strategies keep the pair join, whose
     eager work is one fused stats pass over x and y
@@ -424,8 +413,17 @@ def interval_weighted_avg(
     # its largest group by the one stats action below
     grouped = join_strategy == "auto" and sweepable(xw, yw, n_g)
 
+    sums = None
     if validate:
-        stats = _validate(xw, yw, n_g, skip_overlap_check, verbose, grouped=grouped)
+        t0 = time.time()
+        if grouped:
+            # one action: the sweep, materialized, checks the request too
+            sums, stats = checked_sweep(xw, yw, n_g, n_v, extra_stats)
+        else:
+            stats = request_stats(xw, yw, n_g)
+        _vlog(verbose, f"request stats (one pass) nx={stats.x.n} ny={stats.y.n} "
+                       f"groups~{stats.x.groups}: {time.time() - t0:.2f}s")
+        _validate(stats, xw, n_g, skip_overlap_check, verbose)
     else:
         _vlog(verbose, "validation skipped (validate=False)")
         # planning-only stats (y keeps its dedup) on the pre-dedup y: ny
@@ -485,7 +483,8 @@ def interval_weighted_avg(
     ]
     if sweep:
         # one partitioned pass: every distinct y row, zero-filled
-        sums = iwa_sweep(xw, yw, n_g, n_v, extra_stats)
+        if sums is None:
+            sums = iwa_sweep(xw, yw, n_g, n_v, extra_stats)
     else:
         yd = yw if y_distinct else yw.dropDuplicates(ygcols + ["__ys", "__ye"])
         pairs = build_overlap_pairs(

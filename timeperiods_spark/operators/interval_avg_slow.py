@@ -15,6 +15,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..plans.strategy import request_stats
 from .interval_avg import _canonical, _ungrid, _validate
 
 
@@ -39,7 +40,7 @@ def interval_weighted_avg_slow(
     vcols = [f"__v{i}" for i in range(n_v)]
     if validate:
         # the engine's own checks: both reject exactly the same inputs
-        _validate(xw, yw, n_g, skip_overlap_check)
+        _validate(request_stats(xw, yw, n_g), xw, n_g, skip_overlap_check)
     yd = yw.dropDuplicates(ygcols + ["__ys", "__ye"])
 
     # O16: one row per grid unit; values repeated; measurement marker

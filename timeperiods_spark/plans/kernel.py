@@ -21,11 +21,15 @@ this path only when the largest group fits
 - :func:`pieces_sweep`: cuts each group at starts ∪ (ends + 1) and
   tags each atomic piece with every original covering it, by the same
   ``searchsorted``.
-- :func:`grouped_checks`: a validated request's one eager action. It
-  range-sorts the x and y endpoints and streams each partition in
-  (side, group, start, end) order, carrying the previous row; the
-  driver stitches the per-partition summaries into the stats that
-  decide the sweep, or plan the pair join when a group is too large.
+- :func:`checked_sweep`: a validated request's one eager action. The
+  sweep's own pass also counts every check per partition
+  (:class:`_Checks`: per incoming batch, carrying the previous row), an
+  accumulator collects one counter vector per partition, and the sums
+  are materialized (``localCheckpoint``), so the result only scans
+  computed rows. Hash partitioning keeps each group whole in one
+  partition, so the vectors just add up. A group over
+  ``AUTO_SWEEP_ROWS`` is counted but gets no sums; the caller plans
+  the pair join from the counts instead.
 
 A (group, value) pair becomes one sortable int64, ``gid * R + rank``,
 where ``gid`` numbers the groups of a chunk in order and ``rank`` is
@@ -35,14 +39,15 @@ serves every group of a chunk at once.
 
 from __future__ import annotations
 
-import itertools
 import math
 from functools import partial
 from typing import Iterator, Optional, Sequence
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import types as T
 
+from . import strategy
 from .sql import sql
 from .strategy import RequestStats
 
@@ -127,30 +132,127 @@ def _starts(keys: list, prev):
     return out
 
 
-def _whole_groups(batches: Iterator, nk: int) -> Iterator:
+def _whole_groups(
+    batches: Iterator, nk: int, budget: float = math.inf, checks: Optional[_Checks] = None
+) -> Iterator:
     """Re-cut a partition's batches, sorted by their first ``nk``
     columns, into tables of whole groups, in order. Only the open
-    (last) group is carried from batch to batch."""
+    (last) group is carried from batch to batch, and a group of more
+    than ``budget`` rows is left out: once the open group passes it,
+    its rows are no longer kept. ``checks`` counts every batch."""
     import numpy as np
     import pyarrow as pa
 
-    pending, prev = [], None
+    pending, prev, size = [], None, 0  # size: rows of the open group so far
     for b in batches:
-        if not b.num_rows:
+        m = b.num_rows
+        if not m:
             continue
         keys = b.columns[:nk]
-        opens = np.flatnonzero(_starts(keys, prev))
-        prev = [k.slice(b.num_rows - 1, 1) for k in keys]
-        if not opens.size:
-            pending.append(b)
+        opens = _starts(keys, prev)
+        if checks is not None:
+            checks.add(b, opens)
+        prev = [k.slice(m - 1, 1) for k in keys]
+        at = np.flatnonzero(opens)
+        if not at.size:
+            size += m
+            pending = pending + [b] if size <= budget else []
             continue
-        done = pending + [b.slice(0, int(opens[-1]))]
-        pending = [b.slice(int(opens[-1]))]
-        t = pa.Table.from_batches(done)
-        if t.num_rows:
-            yield t.combine_chunks()
+        first, last = int(at[0]), int(at[-1])
+        done = pending + [b.slice(0, first)] if size + first <= budget else []
+        lens = np.diff(at)  # the groups that open and close within b
+        if (lens > budget).any():
+            done += [b.slice(int(a), int(n)) for a, n in zip(at, lens) if n <= budget]
+        else:
+            done.append(b.slice(first, last - first))
+        size = m - last
+        pending = [b.slice(last)] if size <= budget else []
+        if done:
+            t = pa.Table.from_batches(done)
+            if t.num_rows:
+                yield t.combine_chunks()
     if pending:
         yield pa.Table.from_batches(pending).combine_chunks()
+
+
+#: per side, a partition's check counters, in the order of its vector;
+#: the vector ends with the length histogram of both sides
+_COUNTS = ("n", "nulls", "rev", "dup", "ovl", "groups", "top", "lo", "hi")
+#: the counters before ``top`` add up across batches and partitions
+_TOP, _LO, _HI = (_COUNTS.index(c) for c in ("top", "lo", "hi"))
+#: interval lengths are counted in buckets of 1/8 of a doubling, enough
+#: for every int64 length; the pooled 90th percentile sizes a bin join
+_HIST = 512
+
+
+class _Checks:
+    """A partition's check counters, counted batch by batch over rows
+    sorted by (keys…, side, start, end) (side in column ``nk``). Per
+    side, in ``vec``: the counters of ``_COUNTS`` — ``dup``: rows equal
+    to the row before; ``ovl``: x rows that overlap the row before in
+    their group (sorted by (start, end), the first row that overlaps
+    any predecessor overlaps that one); ``groups``/``top``: the
+    (group, side) runs and the longest; ``lo``/``hi`` over the starts
+    and ends — then the histogram of the lengths of both sides. Only
+    the last row and the open run are carried between batches."""
+
+    def __init__(self, nk: int):
+        import numpy as np
+
+        w = len(_COUNTS)
+        self.nk = nk
+        self.vec = np.zeros(2 * w + _HIST, np.int64)
+        self.vec[[_LO, w + _LO]] = np.iinfo(np.int64).max
+        self.vec[[_HI, w + _HI]] = np.iinfo(np.int64).min
+        self.last = None  # (side, s, e, sv, ev) of the last row
+        self.run = self.run_side = 0  # the open run's rows and side
+
+    def add(self, b, opens) -> None:
+        """Count batch ``b``, whose group opens are ``opens``."""
+        import numpy as np
+
+        nk, w, v = self.nk, len(_COUNTS), self.vec
+        side = b.column(nk).to_numpy(zero_copy_only=False)
+        (s, sv), (e, ev) = _ints(b.column(nk + 1)), _ints(b.column(nk + 2))
+        cur = (side, s, e, sv, ev)
+        # the row before each row (row 0: the last of the previous batch)
+        psd, ps, pe, psv, pev = before = [np.roll(a, 1) for a in cur]
+        if self.last is not None:
+            for a, z in zip(before, self.last):
+                a[0] = z
+        self.last = tuple(a[-1] for a in cur)
+        runs = opens | (side != psd)
+        ok = sv & ev
+        dup = ~runs & (s == ps) & (e == pe) & (sv == psv) & (ev == pev)
+        ovl = ~runs & (side == 0) & ok & psv & pev & (s <= pe)
+        for sd in (0, 1):
+            at, base = side == sd, sd * w
+            good = at & ok
+            v[base:base + _TOP] += [
+                at.sum(), (at & ~ok).sum(), (good & (e < s)).sum(),
+                (at & dup).sum(), (at & ovl).sum(), (at & runs).sum(),
+            ]
+            if good.any():
+                lo, hi = base + _LO, base + _HI
+                v[lo] = min(v[lo], np.minimum(s, e)[good].min())
+                v[hi] = max(v[hi], np.maximum(s, e)[good].max())
+        fwd = ok & (e >= s)
+        v[2 * w:] += np.bincount(
+            (8 * np.log2((e - s + 1)[fwd])).astype(np.int64), minlength=_HIST)
+        # the open run closes at the first run that opens in b
+        idx = np.flatnonzero(runs)
+        if not idx.size:
+            self.run += len(side)
+            return
+        lens = np.append(self.run + idx[0], np.diff(idx))
+        np.maximum.at(v, np.append(self.run_side, side[idx[:-1]]) * w + _TOP, lens)
+        self.run, self.run_side = len(side) - int(idx[-1]), int(side[idx[-1]])
+
+    def close(self):
+        """The counter vector, the open run closed."""
+        top = self.run_side * len(_COUNTS) + _TOP
+        self.vec[top] = max(self.vec[top], self.run)
+        return self.vec
 
 
 def _gid(t, nk: int):
@@ -281,9 +383,17 @@ def _iwa_chunk(t, nk: int, nv: int, extra: bool, names: list):
     return pa.RecordBatch.from_arrays(cols, names=names)
 
 
-def _iwa_partition(nk: int, nv: int, extra: bool, names: list, batches):
-    for t in _whole_groups(batches, nk):
+def _iwa_partition(nk: int, nv: int, extra: bool, names: list, budget: float, acc, batches):
+    """The sums of one partition's groups; groups over ``budget`` rows
+    get none. With ``acc``, every row is also checked and the counter
+    vector added to ``acc`` under the partition's id."""
+    from pyspark import TaskContext
+
+    checks = None if acc is None else _Checks(nk)
+    for t in _whole_groups(batches, nk, budget, checks):
         yield _iwa_chunk(t, nk, nv, extra, names)
+    if checks is not None:
+        acc.add({TaskContext.get().partitionId(): checks.close()})
 
 
 def _pieces_chunk(t, nk: int, names: list):
@@ -326,14 +436,16 @@ def _long(name: str) -> T.StructField:
 
 
 def iwa_sweep(
-    xw: DataFrame, yd: DataFrame, n_groups: int, n_values: int, extra_stats: bool
+    xw: DataFrame, yd: DataFrame, n_groups: int, n_values: int, extra_stats: bool,
+    budget: float = math.inf, acc=None,
 ) -> DataFrame:
     """Per distinct y row of ``yd`` (``__yg*, __ys, __ye``): ``__xdur``,
     ``__snm{i}``, ``__sp{i}`` (``__sq{i}`` with ``extra_stats``),
     ``__minstart``, ``__maxend`` over the x rows of ``xw`` (``__g*,
     __xs, __xe, __v*``) that overlap it — what the pair join, its
     aggregate and the completion join produce, zero-filled. x and y
-    group keys must share their types."""
+    group keys must share their types. ``budget`` and ``acc``: see
+    :func:`checked_sweep`."""
     ks = [f"__k{i}" for i in range(n_groups)]
     vs = [f"__v{i}" for i in range(n_values)]
     u = sql(
@@ -358,7 +470,8 @@ def iwa_sweep(
         u.repartition(*ks)
         .sortWithinPartitions(*ks, "__side", "__s", "__e")
         .mapInArrow(
-            partial(_iwa_partition, n_groups, n_values, extra_stats, schema.names), schema
+            partial(_iwa_partition, n_groups, n_values, extra_stats, schema.names, budget, acc),
+            schema,
         )
     )
 
@@ -380,191 +493,70 @@ def pieces_sweep(base: DataFrame, n_groups: int) -> DataFrame:
     )
 
 
-#: per-side counters of the check pass, in output order
-_COUNTS = ("n", "nulls", "rev", "dup", "ovl", "runs", "top")
-#: interval lengths are counted in buckets of 1/8 of a doubling, enough
-#: for every int64 length; the pooled 90th percentile sizes a bin join
-_HIST = 512
+class _ByPartition(AccumulatorParam):
+    """Accumulates ``{partition id: counter vector}``: a task that runs
+    again replaces its partition's vector instead of adding to it."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        a.update(b)
+        return a
 
 
-def _scan_partition(nk: int, names: list, batches):
-    """One summary row of a range partition of (side, keys…, s, e)
-    rows sorted in that order: per side the counters of ``_COUNTS``
-    (``top``: the longest run that is neither the partition's first nor
-    its last), ``lo``/``hi`` over the starts and ends, and the first and
-    last row, for the driver to stitch runs across partitions; for both
-    sides a histogram of the interval lengths (``_HIST`` buckets)."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark import TaskContext
+def checked_sweep(
+    xw: DataFrame, yw: DataFrame, n_groups: int, n_values: int, extra_stats: bool
+) -> tuple[DataFrame, RequestStats]:
+    """(sums, stats): :func:`iwa_sweep` over ``yw`` (duplicates
+    included) materialized in ONE Spark action (``localCheckpoint``),
+    which also checks x and y. The stats are :class:`RequestStats`:
+    per side the rows, distinct (group, start, end) rows, rows with a
+    NULL endpoint, reversed rows, the exact group count, ``lo``/``hi``
+    and ``top``, the largest group's rows, and for x ``ovl``, the rows
+    that overlap an earlier row of their group. The pooled ``p90``
+    length is the smallest length of the histogram bucket that holds
+    it (within 9% below the exact one), so a pair join planned from
+    these stats needs no other pass.
 
-    c = {(name, sd): 0 for name in _COUNTS for sd in (0, 1)}
-    lo, hi = [None, None], [None, None]
-    hist = np.zeros(_HIST, np.int64)
-    prev = first = None
-    first_len = None  # length of the partition's first run, once closed
-    run_len = run_side = 0  # the open run
-    for b in batches:
-        m = b.num_rows
-        if not m:
-            continue
-        keys = b.columns[:nk]
-        side = keys[0].to_numpy(zero_copy_only=False)
-        (s, sv), (e, ev) = _ints(b.column(nk)), _ints(b.column(nk + 1))
-        opens = _starts(keys, None if prev is None else prev[0])
-        ok = sv & ev
-        # the previous row of each row (row 0: the last of the previous batch)
-        ps, pe, pok, pv = (np.empty_like(a) for a in (s, e, ok, sv))
-        pev = np.empty_like(ev)
-        ps[1:], pe[1:], pok[1:], pv[1:], pev[1:] = s[:-1], e[:-1], ok[:-1], sv[:-1], ev[:-1]
-        if prev is not None:
-            ps[0], pe[0], pok[0], pv[0], pev[0] = prev[1:]
-        same = ~opens
-        dup = same & (s == ps) & (e == pe) & (sv == pv) & (ev == pev)
-        # sorted by (start, end), the first row that overlaps any
-        # predecessor also overlaps its immediate one
-        ovl = same & ok & pok & (s <= pe) & (side == 0)
-        for sd in (0, 1):
-            at = side == sd
-            c["n", sd] += int(at.sum())
-            c["nulls", sd] += int((at & ~ok).sum())
-            c["rev", sd] += int((at & ok & (e < s)).sum())
-            c["dup", sd] += int((at & dup).sum())
-            c["ovl", sd] += int((at & ovl).sum())
-            c["runs", sd] += int((at & opens).sum())
-            if (at & ok).any():
-                a, z = int(np.minimum(s, e)[at & ok].min()), int(np.maximum(s, e)[at & ok].max())
-                lo[sd] = a if lo[sd] is None else min(lo[sd], a)
-                hi[sd] = z if hi[sd] is None else max(hi[sd], z)
-        fwd = ok & (e >= s)
-        hist += np.bincount(
-            (8 * np.log2((e - s + 1)[fwd])).astype(np.int64), minlength=_HIST)
-        idx = np.flatnonzero(opens)
-        if idx.size:
-            closed = np.diff(idx)
-            closed_side = side[idx[:-1]]
-            if first is not None:  # the open run closes at idx[0]
-                closed = np.concatenate([[run_len + idx[0]], closed])
-                closed_side = np.concatenate([[run_side], closed_side])
-            if first_len is None and closed.size:
-                first_len = int(closed[0])
-                closed, closed_side = closed[1:], closed_side[1:]
-            for sd in (0, 1):
-                sel = closed[closed_side == sd]
-                if sel.size:
-                    c["top", sd] = max(c["top", sd], int(sel.max()))
-            run_len, run_side = m - int(idx[-1]), int(side[idx[-1]])
-        else:
-            run_len += m
-        if first is None:
-            first = [k.slice(0, 1) for k in keys] + [
-                pa.array([int(s[0])]), pa.array([bool(ok[0])])
-            ]
-        prev = ([k.slice(m - 1, 1) for k in keys], s[-1], e[-1], ok[-1], sv[-1], ev[-1])
-    if first is None:
-        return
-    last = prev[0] + [pa.array([int(prev[2])]), pa.array([bool(prev[3])])]
-    single = first_len is None
-    cols = [pa.array([TaskContext.get().partitionId()], pa.int32())]
-    cols += [pa.array([c[key]], pa.int64()) for key in c]
-    cols += first + [pa.array([run_len if single else first_len], pa.int64())]
-    cols += [pa.array([single])]
-    cols += last + [pa.array([run_len], pa.int64())]
-    cols += [pa.array([v[sd]], pa.int64()) for v in (lo, hi) for sd in (0, 1)]
-    cols += [pa.array([hist.tolist()], pa.list_(pa.int64()))]
-    yield pa.RecordBatch.from_arrays(cols, names=names)
-
-
-def _summary_schema(key_types: list) -> T.StructType:
-    """The columns of :func:`_scan_partition`'s summary row."""
-    fields = [T.StructField("part", T.IntegerType())]
-    fields += [_long(f"{name}{sd}") for name in _COUNTS for sd in (0, 1)]
-    for end, edge in (("first", "s"), ("last", "e")):
-        fields += [T.StructField(f"{end}_k{i}", t) for i, t in enumerate(key_types)]
-        fields += [_long(f"{end}_{edge}"), T.StructField(f"{end}_ok", T.BooleanType())]
-        fields += [_long(f"{end}_len")]
-        if end == "first":
-            fields += [T.StructField("single", T.BooleanType())]
-    fields += [_long(f"{b}{sd}") for b in ("lo", "hi") for sd in (0, 1)]
-    fields += [T.StructField("hist", T.ArrayType(T.LongType()))]
-    return T.StructType(fields)
-
-
-def grouped_checks(xw: DataFrame, yw: DataFrame, n_groups: int) -> RequestStats:
-    """:class:`RequestStats` of x (``__g*, __xs, __xe``) and y (``__yg*,
-    __ys, __ye``, keys of x's types) in ONE Spark action: per side the
-    rows, distinct (group, start, end) rows, rows with a NULL endpoint,
-    reversed rows, the exact group count, ``lo``/``hi`` and ``top``, the
-    largest group's rows, and for x ``ovl``, the rows that overlap an
-    earlier row of their group. The pooled ``p90`` length is the
-    smallest length of the histogram bucket that holds it (within 9%
-    below the exact one), so a pair join planned from these stats
-    needs no other pass.
-
-    The endpoints are range-sorted by (side, keys…, start, end), so a
-    few large groups still spread over every partition, and each
-    partition streams through one Python call.
+    A group of more than ``plans.strategy.AUTO_SWEEP_ROWS`` rows (x and
+    y) is counted exactly but gets no sums, and stops being buffered
+    once past the budget: the sums are then incomplete, which
+    ``sweep_fits(stats)`` reports. The checkpointed rows are freed by
+    Spark's ContextCleaner once no frame refers to them.
     """
-    ks = [f"__k{i}" for i in range(n_groups)]
-    u = sql(
-        f"""SELECT 0 AS __side, {"".join(f"__g{i} AS {k}, " for i, k in enumerate(ks))}
-               __xs AS __s, __xe AS __e FROM {{x}}
-        UNION ALL
-        SELECT 1, {"".join(f"__yg{i}, " for i in range(n_groups))}__ys, __ye FROM {{y}}""",
-        x=xw, y=yw,
-    )
-    key_types = [T.IntegerType()] + _types(xw, [f"__g{i}" for i in range(n_groups)])
-    nk = len(key_types)
-    schema = _summary_schema(key_types)
-    rows = (
-        u.orderBy("__side", *ks, "__s", "__e")
-        .mapInArrow(partial(_scan_partition, nk, schema.names), schema)
-        .collect()
-    )
-    return _stitch(sorted(rows, key=lambda r: r["part"]), nk)
+    acc = xw.sparkSession.sparkContext.accumulator({}, _ByPartition())
+    sums = iwa_sweep(
+        xw, yw, n_groups, n_values, extra_stats, strategy.AUTO_SWEEP_ROWS, acc
+    ).localCheckpoint(eager=True)
+    vecs = list(acc.value.values())
+    acc.value = {}  # PySpark keeps every accumulator it made
+    return sums, _stats(vecs)
 
 
-def _stitch(rows: list, nk: int) -> RequestStats:
-    """Combine the partition summaries, in range order: a run that
-    continues from one partition into the next is one group, and its
-    first row there is checked against the last row before."""
-    c = {(name, sd): 0 for name in _COUNTS for sd in (0, 1)}
-    last = None  # (keys, e, ok) of the previous partition's last row
-    run = 0  # rows of the open run so far
-    for r in rows:
-        for name, sd in c:
-            v = r[f"{name}{sd}"]
-            c[name, sd] = max(c[name, sd], v) if name == "top" else c[name, sd] + v
-        fk = tuple(r[f"first_k{i}"] for i in range(nk))
-        sd = fk[0]
-        if last is not None and fk == last[0]:
-            c["runs", sd] -= 1
-            if sd == 0 and r["first_ok"] and last[2] and r["first_s"] <= last[1]:
-                c["ovl", 0] += 1
-            run += r["first_len"]
-        else:
-            if last is not None:
-                c["top", last[0][0]] = max(c["top", last[0][0]], run)
-            run = r["first_len"]
-        if not r["single"]:
-            c["top", sd] = max(c["top", sd], run)
-            run = r["last_len"]
-        last = (tuple(r[f"last_k{i}"] for i in range(nk)), r["last_e"], r["last_ok"])
-    if last is not None:
-        c["top", last[0][0]] = max(c["top", last[0][0]], run)
+def _stats(vecs: list) -> RequestStats:
+    """:class:`RequestStats` from the partitions' counter vectors
+    (:class:`_Checks`): no group spans two partitions, so the counts
+    add up."""
+    import numpy as np
+
+    w = len(_COUNTS)
+    a = np.array(vecs, np.int64).reshape(-1, 2 * w + _HIST)
 
     def side(sd: int) -> Row:
-        lo = [r[f"lo{sd}"] for r in rows if r[f"lo{sd}"] is not None]
-        hi = [r[f"hi{sd}"] for r in rows if r[f"hi{sd}"] is not None]
+        c = a[:, sd * w:(sd + 1) * w]
+        n, nulls, rev, dup, ovl, groups = (int(t) for t in c[:, :_TOP].sum(axis=0))
+        any_ok = n > nulls  # lo/hi come from rows with both endpoints
         return Row(
-            n=c["n", sd], nd=c["n", sd] - c["dup", sd], nulls=c["nulls", sd],
-            rev=c["rev", sd], ovl=c["ovl", sd], groups=c["runs", sd], top=c["top", sd],
-            lo=min(lo, default=None), hi=max(hi, default=None),
+            n=n, nd=n - dup, nulls=nulls, rev=rev, ovl=ovl, groups=groups,
+            top=int(c[:, _TOP].max(initial=0)),
+            lo=int(c[:, _LO].min()) if any_ok else None,
+            hi=int(c[:, _HI].max()) if any_ok else None,
         )
 
-    hist = [sum(col) for col in zip(*(r["hist"] for r in rows))]
-    total, p90 = sum(hist), None
+    hist = a[:, 2 * w:].sum(axis=0)
+    total, p90 = int(hist.sum()), None
     if total:
-        b = next(i for i, n in enumerate(itertools.accumulate(hist)) if n >= 0.9 * total)
+        b = int(np.searchsorted(np.cumsum(hist), 0.9 * total))
         p90 = math.ceil(2 ** (b / 8))
     return RequestStats(side(0), side(1), p90)

@@ -33,7 +33,7 @@ no custom Catalyst rules — into one of four shapes:
     Data-aware pick. Ungrouped → bin. Grouped → the operators first
     try the grouped Arrow sweep (:mod:`timeperiods_spark.plans.kernel`),
     which needs no pair join at all: ``interval_weighted_avg`` and
-    ``remove_overlaps`` take it when their stats action finds the
+    ``remove_overlaps`` take it when their one action finds the
     largest group (x rows + y rows) within ``AUTO_SWEEP_ROWS``
     (:func:`sweep_fits`). Larger groups, and callers of the
     pair join itself, estimate the equi join's candidate volume
@@ -91,7 +91,14 @@ AUTO_STATS_RECHECK_BAND = 4
 #: groups keep the pair join, which is also faster there: one group is
 #: one sweep task, while the bin join spreads it over every core (a
 #: 5M-row group: sweep 8.1–9.7 s and 1.33 GB per worker, bin join
-#: 7.9–8.9 s and 0.13 GB, same host).
+#: 7.9–8.9 s and 0.13 GB, same host). A validated request still counts
+#: a larger group in the sweep's one checked pass, which stops buffering
+#: it here: the group costs one hash partition there. With a 3M- or
+#: 5M-row group (beside 3 groups of 1,000; parquet input; local[4]) the
+#: call took 12.0–12.3 s / 11.1–12.3 s, and call plus result 17.8–18.1 s
+#: / 18.6–20.9 s, where a separate range-sorted check action took
+#: 9.3–9.7 s / 10.7–11.1 s and 15.2–16.5 s / 17.3–19.4 s; the Python
+#: worker peaked at 0.15 GB.
 AUTO_SWEEP_ROWS = 1_000_000
 
 
@@ -115,9 +122,10 @@ class RequestStats:
     end) rows or None, ``nulls``/``rev`` rows with a NULL endpoint / end
     < start, approx ``groups`` (x only), ``lo``/``hi`` over starts AND
     ends, approx ``p90`` length; ``p90`` pools both sides. The grouped
-    passes (``plans.kernel.grouped_checks``, :func:`group_sizes`) also
-    give ``top``, the rows of the side's largest group, and exact
-    ``groups``."""
+    passes (``plans.kernel.checked_sweep``, which computes the sweep's
+    sums in the same action, and :func:`group_sizes`) also give
+    ``top``, the rows of the side's largest group, and exact
+    ``groups``; the checked sweep also counts ``ovl``."""
 
     x: Row
     y: Row
@@ -135,8 +143,9 @@ class RequestStats:
 
 def sweep_fits(stats: RequestStats) -> bool:
     """Does the largest group (x rows + y rows) fit ``AUTO_SWEEP_ROWS``?
-    ``stats`` must carry ``top`` (from ``plans.kernel.grouped_checks``
-    or :func:`group_sizes`)."""
+    ``stats`` must carry ``top`` (from ``plans.kernel.checked_sweep``
+    or :func:`group_sizes`). After the checked sweep, False also means
+    its sums are incomplete: a group over the budget got none."""
     return (stats.x.top or 0) + (stats.y.top or 0) <= AUTO_SWEEP_ROWS
 
 

@@ -22,8 +22,12 @@ metric's bound:
 - ``within``: otherwise.
 
 It also says whether the gap between the medians exceeds the parent's
-IQR. ``--log FILE`` appends every result as a JSON line; ``--from
-FILE`` summarises such a file without running anything.
+IQR. Each run's ``cpu_s`` is the CPU time of its process tree (the
+delta of ``RUSAGE_CHILDREN`` around it, which takes in the JVM and
+Python workers once they are reaped); it is printed per side as a
+readout, with no verdict. ``--log FILE`` appends every result as a
+JSON line; ``--from FILE`` summarises such a file without running
+anything (records without ``cpu_s`` still count).
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import resource
 import statistics
 import subprocess
 import sys
@@ -61,15 +66,22 @@ def last_json(stdout: str) -> Optional[dict]:
     return None
 
 
+def _children_cpu_s() -> float:
+    """User + system CPU seconds of this process's reaped children."""
+    r = resource.getrusage(resource.RUSAGE_CHILDREN)
+    return r.ru_utime + r.ru_stime
+
+
 def run_one(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace),
     ]
-    t0 = time.perf_counter()
+    t0, cpu0 = time.perf_counter(), _children_cpu_s()
     proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     result = last_json(proc.stdout) or {"failed": None, "metrics": {}}
     result["wall_s"] = round(time.perf_counter() - t0, 1)
+    result["cpu_s"] = round(_children_cpu_s() - cpu0, 1)
     if proc.returncode:
         result["error"] = proc.stderr.strip().splitlines()[-1:] or [f"exit {proc.returncode}"]
     return result
@@ -163,6 +175,31 @@ def report(summaries: list[dict]) -> str:
     return "\n".join(lines)
 
 
+def cpu_readout(records: list[dict]) -> str:
+    """Per seed and side, the ``cpu_s`` of each run that has it, and
+    each side's median: a readout, judged against no bound."""
+    by_seed: dict[int, dict] = {}
+    for rec in records:
+        cpu = rec["result"].get("cpu_s")
+        if cpu is not None:
+            by_seed.setdefault(rec["seed"], {})[rec["side"]] = cpu
+    if not by_seed:
+        return ""
+    lines = [
+        "cpu_s (s, CPU time of each run's process tree; a readout, no bound)",
+        f"  {'seed':>4}  {'parent':>10}  {'change':>10}",
+    ]
+    for seed, sides in sorted(by_seed.items()):
+        cells = [_fmt(sides[s]) if s in sides else "-" for s in SIDES]
+        lines.append(f"  {seed:>4}  {cells[0]:>10}  {cells[1]:>10}")
+    medians = [
+        [v[s] for v in by_seed.values() if s in v] for s in SIDES
+    ]
+    cells = [_fmt(statistics.median(m)) if m else "-" for m in medians]
+    lines += [f"  {'median':>4}  {cells[0]:>10}  {cells[1]:>10}", ""]
+    return "\n".join(lines)
+
+
 def _metrics(bench_path: str, trace: int) -> list[dict]:
     with open(bench_path) as f:
         bench = json.load(f)
@@ -212,6 +249,7 @@ def main(argv: Optional[list[str]] = None) -> int:
         print(f"excluded: seed {r['seed']} {r['side']} failed={r['result'].get('failed')} "
               f"{r['result'].get('error', '')}")
     print(report(summarize(records, metrics)))
+    print(cpu_readout(records))
     return 1 if bad else 0
 
 

@@ -1265,59 +1265,6 @@ FROM a
 SQL_TIER_VARIANCE = SQL_TIER_VARIANCE.format(tok=token_table_oracle_sql(N_TOKEN_DOCS))
 
 
-def q_tier_quantiles(spark, sf_dir):
-    """Exact daily P50/P90/P99 of token counts from additive long-form
-    histogram partials (bin_width=1 over integer n_tok): quantiles that
-    MERGE across tiers/batches, unlike classic quantile state."""
-    from timeperiods_spark import histogram_quantiles, rollup_histogram
-
-    t = token_table(spark, N_TOKEN_DOCS)
-    daily = rollup_histogram(
-        t, ("start_hour", "end_hour"), "n_tok", ("source",), width=24
-    )
-    out = histogram_quantiles(daily, [0.5, 0.9, 0.99], ("source",))
-    return out.select(
-        "source",
-        F.col("period").cast("long").alias("period"),
-        F.round("p", 2).alias("p"),
-        F.round("value", 6).alias("value"),
-    )
-
-
-SQL_TIER_QUANTILES = f"""
-WITH tok AS ({{tok}}),
-per AS (
-  SELECT range AS period, CAST(24*range AS BIGINT) AS ps,
-         CAST(24*range + 23 AS BIGINT) AS pe
-  FROM range(CAST(CEIL(8784.0 / 24) AS BIGINT))
-),
-j AS (
-  SELECT t.source, per.period, CAST(t.n_tok AS BIGINT) AS bin,
-         LEAST(t.end_hour, per.pe) - GREATEST(t.start_hour, per.ps) + 1 AS dur
-  FROM tok t JOIN per ON t.start_hour <= per.pe AND t.end_hour >= per.ps
-),
-h AS (
-  SELECT source, CAST(period AS BIGINT) AS period, bin, SUM(dur) AS cnt
-  FROM j GROUP BY source, period, bin
-),
-c AS (
-  SELECT source, period, bin,
-         SUM(cnt) OVER (PARTITION BY source, period ORDER BY bin
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(cnt) OVER (PARTITION BY source, period) AS tot
-  FROM h
-)
-SELECT source, period, ROUND(CAST(pr.p AS DOUBLE), 2) AS p,
-       ROUND(CAST(MIN(bin) AS DOUBLE), 6) AS value
-FROM c CROSS JOIN (VALUES (0.5), (0.9), (0.99)) pr(p)
-WHERE cum >= CEIL(pr.p * tot)
-GROUP BY source, period, pr.p
-"""
-SQL_TIER_QUANTILES = SQL_TIER_QUANTILES.format(
-    tok=token_table_oracle_sql(N_TOKEN_DOCS)
-)
-
-
 def q_merge_intervals(spark, sf_dir):
     """Interval union (gaps-and-islands coverage): merge overlapping or
     closed-grid-adjacent measurement intervals per group. The Spark
@@ -1491,9 +1438,9 @@ SQL_TIER_COVARIANCE = SQL_TIER_COVARIANCE.format(
 
 
 def _daily_means(spark, sf_dir):
-    """Shared scaffold for the recurrence queries: one row per
-    (event_type, day) with the 6dp-rounded daily mean — rounded BEFORE
-    the recurrence so both engines feed bit-identical inputs."""
+    """Shared scaffold for the overlap-join queries: one row per
+    (event_type, day) with the 6dp-rounded daily mean — rounded first
+    so both engines feed bit-identical inputs."""
     ev = _read(spark, sf_dir, "events")
     return (
         ev.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
@@ -1506,110 +1453,6 @@ _SQL_DAILY_MEANS = """
   SELECT event_type, CAST(ts AS DATE) AS day, ROUND(AVG(value), 6) AS v
   FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
   GROUP BY 1, 2
-"""
-
-
-def q_ewma_daily(spark, sf_dir):
-    """EWMA (pandas adjust=False recurrence, init=first) over daily
-    event means. Spark computes the two-level scan (per-bucket Arrow
-    `ewm` + exact HOF composition across buckets); the oracle computes
-    the same statistic via the O(n^2) closed-form weighted sum — tiny
-    at oracle scale, and the float gap between the two assemblies is
-    O(eps/alpha), far below the shared 6dp output grid."""
-    from timeperiods_spark import ewma
-
-    return ewma(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"], alpha=0.3
-    )
-
-
-SQL_EWMA_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-idx AS (
-  SELECT event_type, day, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) - 1 AS i
-  FROM daily
-)
-SELECT a.event_type, a.day, a.v,
-       ROUND(SUM(CASE WHEN b.i = 0 THEN POWER(0.7, a.i - b.i) * b.v
-                 ELSE 0.3 * POWER(0.7, a.i - b.i) * b.v END), 6) AS ewma
-FROM idx a JOIN idx b
-  ON a.event_type IS NOT DISTINCT FROM b.event_type AND b.i <= a.i
-GROUP BY a.event_type, a.day, a.v
-"""
-
-
-def q_holt_daily(spark, sf_dir):
-    """Holt linear-trend smoothing (alpha=.3, beta=.2, h=7 forecast)
-    over daily event means. Spark runs the generalized 2-dim linear
-    recurrence scan (matrix-kernel convolution per bucket + exact
-    matrix composition); the oracle is the recurrence ITSELF via a
-    recursive CTE — sequential per group, fine at oracle scale."""
-    from timeperiods_spark import holt
-
-    return holt(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        alpha=0.3, beta=0.2, forecast=7,
-    )
-
-
-SQL_HOLT_DAILY = f"""
-WITH RECURSIVE daily AS ({_SQL_DAILY_MEANS}),
-idx AS (
-  SELECT event_type, day, v,
-         ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS i
-  FROM daily
-),
-rec AS (
-  SELECT event_type, day, v, i, v AS l, CAST(0.0 AS DOUBLE) AS b
-  FROM idx WHERE i = 1
-  UNION ALL
-  SELECT idx.event_type, idx.day, idx.v, idx.i,
-         0.3 * idx.v + 0.7 * (rec.l + rec.b) AS l,
-         0.2 * (0.3 * idx.v + 0.7 * (rec.l + rec.b) - rec.l) + 0.8 * rec.b AS b
-  FROM idx JOIN rec
-    ON idx.event_type IS NOT DISTINCT FROM rec.event_type
-   AND idx.i = rec.i + 1
-)
-SELECT event_type, day, v,
-       ROUND(l, 6) AS holt_level,
-       ROUND(b, 6) AS holt_trend,
-       ROUND(l + 7 * b, 6) AS holt_forecast
-FROM rec
-"""
-
-
-def q_cusum_daily(spark, sf_dir):
-    """Two-sided tabular CUSUM over daily event means (target 50,
-    slack 1, alarm threshold 25) — exact closed prefix form
-    (P_i - min(0, running min P)) via two chained bucketed-carry
-    scans; the oracle is the identical arithmetic as window sums."""
-    from timeperiods_spark import cusum
-
-    return cusum(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        target=50.0, slack=1.0, threshold=25.0,
-    )
-
-
-SQL_CUSUM_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-p AS (
-  SELECT event_type, day, v,
-         SUM(v - 50.0 - 1.0) OVER w AS P,
-         SUM(-(v - 50.0) - 1.0) OVER w AS Pn
-  FROM daily
-  WINDOW w AS (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT event_type, day, v,
-       ROUND(P - LEAST(0, MIN(P) OVER w2), 6) AS cusum_pos,
-       ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) AS cusum_neg,
-       (ROUND(P - LEAST(0, MIN(P) OVER w2), 6) > 25.0
-        OR ROUND(Pn - LEAST(0, MIN(Pn) OVER w2), 6) > 25.0) AS alarm
-FROM p
-WINDOW w2 AS (PARTITION BY event_type ORDER BY day
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
 
 
@@ -1707,73 +1550,6 @@ SELECT event_type,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
        TRUE AS est_ok
 FROM ev GROUP BY event_type, FLOOR(day / 7)
-"""
-
-
-def q_zscore_anomaly(spark, sf_dir):
-    """Trailing z-score anomaly flags over daily event means: baseline
-    = the 7 strictly-preceding days (fan-out + hash agg in Spark; a
-    RANGE window in the oracle — same arithmetic)."""
-    from timeperiods_spark import zscore_anomaly
-
-    return zscore_anomaly(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"], k=7, z=2.0
-    )
-
-
-_ZN = "SUM(v) OVER win"
-_ZSS = "SUM(v*v) OVER win"
-_ZC = "COUNT(v) OVER win"
-_ZMEAN = f"({_ZN}) / ({_ZC})"
-_ZSTD = f"sqrt(greatest(({_ZSS}) / ({_ZC}) - ({_ZMEAN}) * ({_ZMEAN}), 0.0))"
-_ZSCORE = (
-    f"CASE WHEN ({_ZC}) >= 3 AND ROUND({_ZSTD}, 6) > 0.0 "
-    f"THEN ROUND((v - ({_ZMEAN})) / ({_ZSTD}), 6) END"
-)
-
-SQL_ZSCORE_ANOMALY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type, day, v,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
-  FROM daily
-)
-SELECT event_type, day, v,
-       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZMEAN}, 6) END AS base_mean,
-       CASE WHEN ({_ZC}) > 0 THEN ROUND({_ZSTD}, 6) END AS base_std,
-       {_ZSCORE} AS zscore,
-       COALESCE(ABS({_ZSCORE}) > 2.0, FALSE) AS is_anomaly
-FROM d2
-WINDOW win AS (PARTITION BY event_type ORDER BY dl
-               RANGE BETWEEN 7 PRECEDING AND 1 PRECEDING)
-"""
-
-
-def q_seasonal_adjust(spark, sf_dir):
-    """Additive day-of-week adjustment of daily event means: subtract
-    the (type, weekday) mean, re-center on the type mean."""
-    from timeperiods_spark import seasonal_adjust
-
-    return seasonal_adjust(
-        _daily_means(spark, sf_dir), "day", "v", ["event_type"],
-        season_length=7,
-    )
-
-
-SQL_SEASONAL_ADJUST = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-d2 AS (
-  SELECT event_type, day, v,
-         CAST(date_diff('day', DATE '1970-01-01', day) AS BIGINT) AS dl
-  FROM daily
-)
-SELECT event_type, day, v,
-       CAST(((dl % 7) + 7) % 7 AS BIGINT) AS season,
-       ROUND(AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7), 6)
-         AS seasonal_mean,
-       ROUND(v - AVG(v) OVER (PARTITION BY event_type, ((dl % 7) + 7) % 7)
-             + AVG(v) OVER (PARTITION BY event_type), 6) AS v_adj
-FROM d2
 """
 
 
@@ -1949,57 +1725,6 @@ FROM r GROUP BY 1, 2
 """
 
 
-def q_xcorr_daily(spark, sf_dir):
-    """Lagged cross-correlation between event-type daily-mean series
-    (lead/lag discovery; the (error, error) pair is the ACF). The
-    lagged pairing is an EQUI join — (series, period + lag) keys — so
-    the plan is one shuffle join + one tiny hash aggregate; the twin
-    spells the identical join. Inputs round to 6dp first; Pearson on
-    ~30 shared points compares clean at 6dp."""
-    from timeperiods_spark import cross_correlation
-
-    base = _daily_means(spark, sf_dir).select(
-        "event_type", F.unix_date("day").alias("p"), "v"
-    )
-    out = cross_correlation(
-        base,
-        "p",
-        "v",
-        "event_type",
-        pairs=[("click", "purchase"), ("view", "click"), ("error", "error")],
-        lags=[-3, -1, 0, 1, 3],
-    )
-    return out.select(
-        "series_a",
-        "series_b",
-        F.col("lag").cast("int").alias("lag"),
-        "n_overlap",
-        F.round("xcorr", _R).alias("xcorr"),
-    )
-
-
-SQL_XCORR_DAILY = f"""
-WITH daily AS ({_SQL_DAILY_MEANS}),
-g AS (
-  SELECT event_type, date_diff('day', DATE '1970-01-01', day) AS p, v
-  FROM daily
-),
-pairs(series_a, series_b) AS (
-  VALUES ('click', 'purchase'), ('view', 'click'), ('error', 'error')
-),
-lags(lag) AS (VALUES (-3), (-1), (0), (1), (3))
-SELECT pr.series_a, pr.series_b, CAST(l.lag AS INTEGER) AS lag,
-       COUNT(*) AS n_overlap,
-       ROUND(CORR(a.v, b.v), 6) AS xcorr
-FROM pairs pr
-CROSS JOIN lags l
-JOIN g a ON a.event_type = pr.series_a
-JOIN g b ON b.event_type = pr.series_b AND b.p = a.p + l.lag
-GROUP BY 1, 2, 3
-HAVING COUNT(*) >= 2
-"""
-
-
 # --------------------------------------------------------------------
 # driver contract
 # --------------------------------------------------------------------
@@ -2033,23 +1758,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_events_forward": q_asof_forward,
         "rolling_7d_stats": q_rolling_7d,
         "tier_variance_daily": q_tier_variance,
-        "tier_quantiles_daily": q_tier_quantiles,
         "tier_covariance_daily": q_tier_covariance,
         "merge_intervals_events": q_merge_intervals,
         "interval_difference_events": q_interval_difference,
         "iwa_sorted_validated": q_iwa_sorted_validated,
-        "ewma_daily_events": q_ewma_daily,
-        "cusum_daily_events": q_cusum_daily,
-        "holt_daily_events": q_holt_daily,
         "distinct_users_daily": q_distinct_daily,
         "distinct_users_weekly_cascade": q_distinct_weekly,
-        "zscore_anomaly_daily": q_zscore_anomaly,
-        "seasonal_adjust_daily": q_seasonal_adjust,
         "overlap_join_weeks": q_overlap_join,
         "overlap_join_bin_left": q_overlap_join_bin_left,
         "asof_events_tolerance": q_asof_tolerance,
         "rollup_ohlc_weekly": q_ohlc_weekly,
-        "xcorr_daily_events": q_xcorr_daily,
         **_PIPELINE_QUERIES,
     }
 
@@ -2077,23 +1795,16 @@ def oracle_sql() -> dict[str, str]:
         "asof_events_forward": SQL_ASOF_FORWARD,
         "rolling_7d_stats": SQL_ROLLING_7D,
         "tier_variance_daily": SQL_TIER_VARIANCE,
-        "tier_quantiles_daily": SQL_TIER_QUANTILES,
         "tier_covariance_daily": SQL_TIER_COVARIANCE,
         "merge_intervals_events": SQL_MERGE_INTERVALS,
         "interval_difference_events": SQL_INTERVAL_DIFFERENCE,
         "iwa_sorted_validated": SQL_IWA_SORTED,
-        "ewma_daily_events": SQL_EWMA_DAILY,
-        "cusum_daily_events": SQL_CUSUM_DAILY,
-        "holt_daily_events": SQL_HOLT_DAILY,
         "distinct_users_daily": SQL_DISTINCT_DAILY,
         "distinct_users_weekly_cascade": SQL_DISTINCT_WEEKLY,
-        "zscore_anomaly_daily": SQL_ZSCORE_ANOMALY,
-        "seasonal_adjust_daily": SQL_SEASONAL_ADJUST,
         "overlap_join_weeks": SQL_OVERLAP_JOIN,
         "overlap_join_bin_left": SQL_OVERLAP_JOIN_BIN_LEFT,
         "asof_events_tolerance": SQL_ASOF_TOLERANCE,
         "rollup_ohlc_weekly": SQL_OHLC_WEEKLY,
-        "xcorr_daily_events": SQL_XCORR_DAILY,
         **_PIPELINE_ORACLES,
     }
 

@@ -1,14 +1,8 @@
 """Metric-monitoring walkthrough over one synthetic event stream: the
-read-side composition an operations dashboard runs on top of the tiers,
-here at demo scale.
+downsampling views an operations dashboard reads, here at demo scale.
 
     1. OHLC bars per (metric, hour) — the glance view (one aggregate);
-    2. M4 downsample next to it — the pixel-exact line for plots;
-    3. EWMA trend + trailing z-score anomaly flags on the daily grid;
-    4. lagged cross-correlation between the metrics (does errors' rise
-       LEAD latency's rise?) + the error ACF;
-    5. seasonal adjustment, then CUSUM change detection on the
-       deseasonalized series.
+    2. M4 downsample next to it — the pixel-exact line for plots.
 
 Run: python examples/example_monitoring.py
 """
@@ -22,25 +16,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from timeperiods_spark import (  # noqa: E402
-    cross_correlation,
-    cusum,
-    downsample_m4,
-    ewma,
-    get_spark,
-    rollup_ohlc,
-    seasonal_adjust,
-    zscore_anomaly,
-)
+from timeperiods_spark import downsample_m4, get_spark, rollup_ohlc  # noqa: E402
 
 
 def main() -> None:
     spark = get_spark("example-monitoring", master="local[4]",
                       shuffle_partitions=8)
 
-    # two correlated metrics at 1-minute cadence over 14 days: latency
-    # follows errors with a ~30-minute lag, both carry a daily season;
-    # a level shift lands mid-series for CUSUM to find
+    # two metrics at 1-minute cadence over 14 days: latency follows
+    # errors with a ~30-minute lag, both carry a daily season and a
+    # level shift mid-series
     n = 14 * 24 * 60
     base = spark.range(n).select(
         F.col("id").alias("minute"),
@@ -72,49 +57,6 @@ def main() -> None:
                        "minute", "value", ["metric"], bucket_width=60)
     print(f"   {m4.filter(F.col('bucket') < 24).count()} points "
           "reproduce the 1440-point line at hour resolution")
-
-    daily = (
-        events.groupBy("metric",
-                       F.floor(F.col("minute") / 1440).alias("day"))
-        .agg(F.round(F.avg("value"), 6).alias("v"))
-    )
-
-    print("== 3. EWMA trend + z-score anomalies (daily grid) ==")
-    trend = ewma(daily, "day", "v", ["metric"], alpha=0.4)
-    flags = zscore_anomaly(daily, "day", "v", ["metric"], k=5, z=2.0)
-    trend.join(flags.select("metric", "day", "zscore", "is_anomaly"),
-               ["metric", "day"]).orderBy("metric", "day").show(8)
-
-    print("== 4. who leads whom: xcorr at minute lags ==")
-    xc = cross_correlation(
-        events, "minute", "value", "metric",
-        pairs=[("errors", "latency_ms"), ("errors", "errors")],
-        lags=[0, 10, 30, 60],
-    )
-    xc.orderBy("series_a", "series_b", "lag").show()
-    best = (xc.filter(F.col("series_b") == "latency_ms")
-            .orderBy(F.desc("xcorr")).first())
-    print(f"   errors->latency correlation peaks at lag {best['lag']} "
-          f"(xcorr {best['xcorr']:.3f}) — the planted 30-minute lead")
-
-    print("== 5. deseasonalize + CUSUM change detection ==")
-    hourly = (
-        events.filter(F.col("metric") == "errors")
-        .groupBy(F.floor(F.col("minute") / 60).alias("hour"))
-        .agg(F.round(F.avg("value"), 6).alias("v"))
-        .withColumn("metric", F.lit("errors"))
-    )
-    des = seasonal_adjust(hourly, "hour", "v", ["metric"],
-                          season_length=24)
-    # CUSUM drifts against an in-control TARGET — calibrate it on the
-    # known-good head of the series (week one), as a deployment would
-    target = (des.filter(F.col("hour") < 24 * 7)
-              .agg(F.avg("v_adj")).first()[0])
-    ch = cusum(des, "hour", "v_adj", ["metric"],
-               target=round(target, 6), slack=1.0, threshold=10.0)
-    first_alarm = (ch.filter(F.col("alarm")).orderBy("hour").first())
-    print(f"   first CUSUM alarm at hour {first_alarm['hour']} "
-          f"(planted shift at hour {n // 2 // 60})")
 
     spark.stop()
 

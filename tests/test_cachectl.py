@@ -120,37 +120,6 @@ def test_percall_tags_fifo_bound(spark, clean_caches):
     assert _wait_cached_at_most(spark, 3) <= 3
 
 
-def test_trend_two_call_pipeline_keeps_both_caches(spark, clean_caches):
-    """VERDICT r5 finding 3: a pipeline building holt TWICE before
-    collecting either must not silently recompute the first call's
-    Arrow stage — per-call tags keep one materialization per call and
-    no cachectl thrash warning fires."""
-    import warnings as w
-
-    from timeperiods_spark import holt
-
-    df = _intervals(spark, 0).select("g", F.col("s").alias("t"), "v") \
-        .dropDuplicates(["g", "t"])
-    with w.catch_warnings(record=True) as rec:
-        w.simplefilter("always")
-        h1 = holt(df, "t", "v", ["g"], alpha=0.3, beta=0.2)
-        h2 = holt(df, "t", "v", ["g"], alpha=0.6, beta=0.4)
-        # pin on the PRE-execution plans (the post-AQE printout repeats
-        # the cached subtree's description per occurrence): both reads
-        # of each call's Arrow stage come through its own cache
-        for h in (h1, h2):
-            plan = h._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("InMemoryTableScan") >= plan.count(
-                "FlatMapGroupsInPandas"
-            ), plan[:1500]
-        n1, n2 = h1.count(), h2.count()
-        assert n1 == n2 > 0
-        msgs = [str(x.message) for x in rec if "cachectl" in str(x.message)]
-    assert not msgs, msgs
-    tags = [t for t in cachectl.managed_tags() if t.startswith("holt.local#")]
-    assert len(tags) == 2
-
-
 def test_interval_avg_with_join_stats_caches_nothing(spark, clean_caches):
     """A caller-provided join_stats is a planning hint only: the call
     persists no intermediate, so the partition layout feeding the

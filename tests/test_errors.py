@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+import uuid
 import warnings
 
 import pytest
@@ -12,7 +14,10 @@ from timeperiods_spark import (
     OverlapError,
     RoleValidationError,
     interval_weighted_avg,
+    overlap_join,
+    remove_overlaps,
 )
+from timeperiods_spark.plans import cachectl
 
 
 @pytest.fixture()
@@ -148,3 +153,65 @@ def test_overlap_across_scan_buckets_raises(spark):
     )
     with pytest.raises(DuplicateIntervalError):
         interval_weighted_avg(dup, y, ("s", "e"), ("v",), ("g",))
+
+
+@contextlib.contextmanager
+def _jobs(spark):
+    """Yields a list that holds, after the block, the ids of the Spark
+    jobs the block ran (read from a job group set around it)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    ids: list = []
+    sc.setJobGroup(group, "job count")
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "op", ["interval_weighted_avg", "remove_overlaps", "overlap_join"]
+)
+def test_unknown_join_strategy_is_rejected_before_spark_work(spark, op):
+    x = spark.createDataFrame(
+        [("a", 1, 7, 1.0), ("a", 8, 14, 2.0)], "g string, s int, e int, v double"
+    )
+    y = spark.createDataFrame([("a", 0, 13)], "g string, s int, e int")
+    call = {
+        "interval_weighted_avg": lambda: interval_weighted_avg(
+            x, y, ("s", "e"), ("v",), ("g",), join_strategy="bogus"
+        ),
+        "remove_overlaps": lambda: remove_overlaps(
+            x, ("s", "e"), ("g",), join_strategy="bogus"
+        ),
+        "overlap_join": lambda: overlap_join(
+            x, y, ("s", "e"), ("g",), join_strategy="bogus"
+        ),
+    }[op]
+    tags = cachectl.managed_tags()
+    with _jobs(spark) as jobs, pytest.raises(RoleValidationError, match="bogus"):
+        call()
+    assert jobs == []
+    assert cachectl.managed_tags() == tags
+
+
+def test_overlap_join_rejects_integer_against_date(spark):
+    import datetime as dt
+
+    x = spark.createDataFrame([(1, 7, 1.0)], "s int, e int, v double")
+    y = spark.createDataFrame(
+        [(dt.date(1970, 1, 5), dt.date(1970, 1, 9))], "s date, e date"
+    )
+    with _jobs(spark) as jobs, pytest.raises(IntervalValidationError):
+        overlap_join(x, y, ("s", "e"))
+    assert jobs == []
+
+
+def test_overlap_join_rejects_string_intervals(spark):
+    x = spark.createDataFrame([("1", "7", 1.0)], "s string, e string, v double")
+    y = spark.createDataFrame([("0", "9")], "s string, e string")
+    with _jobs(spark) as jobs, pytest.raises(IntervalValidationError):
+        overlap_join(x, y, ("s", "e"))
+    assert jobs == []

@@ -247,42 +247,6 @@ def test_auto_stats_near_threshold_triggers_recheck(xy):
     assert AUTO_BIN_PAIRS // AUTO_STATS_RECHECK_BAND < AUTO_BIN_PAIRS // 2
 
 
-def test_zscore_anomaly_two_exchanges_no_window_over_raw(spark):
-    """zscore_anomaly: baseline via explode + hash agg — no window
-    function over the raw rows (a RANGE window would serialize per
-    group), and the join back is an equi join."""
-    from timeperiods_spark import zscore_anomaly
-
-    df = spark.createDataFrame(
-        [("g", p, float(p)) for p in range(50)], "g string, p int, v double"
-    )
-    plan = _plan(zscore_anomaly(df, "p", "v", ["g"], k=7))
-    assert "Window" not in plan  # pure agg+join formulation
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_holt_single_arrow_stage_and_broadcast_composition(spark):
-    """holt (bucketed path): one FlatMapGroupsInPandas over the rows;
-    the cross-bucket carry joins back via broadcast."""
-    from timeperiods_spark import holt
-
-    df = spark.createDataFrame(
-        [("g", t, float(t % 13)) for t in range(4000)],
-        "g string, t int, v double",
-    )
-    plan = _plan(holt(df, "t", "v", ["g"], alpha=0.3, beta=0.2))
-    # the Arrow stage feeds two consumers (bucket stats + join-back);
-    # both reads must come through the managed cache — every
-    # FlatMapGroupsInPandas occurrence in the printout is the cached
-    # plan's description under an InMemoryTableScan, never a live
-    # recompute path
-    assert plan.count("InMemoryTableScan") >= 2
-    assert plan.count("InMemoryTableScan") >= plan.count("FlatMapGroupsInPandas")
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_overlap_join_bin_never_nested_loop(spark):
     """overlap_join inherits the rollup's physical guarantees: the
     bucketized strategy is an equi join on (bin, groups) — never a
@@ -344,25 +308,6 @@ def test_ohlc_single_aggregate_no_join_no_window(spark):
     assert "Join" not in plan
     assert "Window" not in plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
-
-
-def test_xcorr_equi_join_no_range_predicate(spark):
-    """cross_correlation: the lagged pairing must be an EQUI join
-    (Catalyst extracts (series, period + lag) as plain keys) and the
-    pair table must broadcast — never a nested-loop theta join."""
-    from timeperiods_spark import cross_correlation
-
-    df = spark.createDataFrame(
-        [("a", t, float(t)) for t in range(50)]
-        + [("b", t, float(t * 2)) for t in range(50)],
-        "s string, p long, v double",
-    )
-    plan = _plan(
-        cross_correlation(df, "p", "v", "s", pairs=[("a", "b")], lags=[0, 1])
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # the literal pair table
 
 
 def _jobs_run_by(spark, fn) -> int:

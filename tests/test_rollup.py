@@ -9,6 +9,7 @@ from timeperiods_spark import RoleValidationError, interval_weighted_avg
 from timeperiods_spark.operators.rollup import (
     cascade,
     finalize_rollup,
+    gap_fill_interpolate,
     gap_fill_locf,
     merge_partials,
     period_scaffold,
@@ -215,6 +216,22 @@ def test_gap_fill_locf_null_before_first(spark):
     rows = filled.collect()
     assert rows[0]["v_filled"] is None and rows[0]["gap_filled"]
     assert rows[2]["v_filled"] == 5.0
+
+
+@pytest.mark.parametrize(
+    "fill", [gap_fill_locf, gap_fill_interpolate], ids=lambda f: f.__name__
+)
+def test_gap_fill_empty_input_keeps_the_output_columns(spark, fill):
+    # an empty batch with no span gets the same columns and types as a
+    # non-empty one, so a downstream select of the filled columns works
+    x = spark.createDataFrame(
+        [("a", 0, 6, 10.0), ("a", 21, 27, 20.0)], "g string, s int, e int, v double"
+    )
+    rolled = rollup_regular(x, ("s", "e"), ("v",), ("g",), width=7)
+    full = fill(rolled, ("v",), ("g",), width=7)
+    empty = fill(rolled.filter(F.lit(False)), ("v",), ("g",), width=7)
+    assert empty.dtypes == full.dtypes
+    assert empty.count() == 0
 
 
 def test_group_encoders_exact_and_guarded(spark, tok):
@@ -449,67 +466,6 @@ def test_extra_stats_variance_exact_and_cascade_additive(spark):
          - F.pow(F.sum("v") / F.count("v"), 2)).alias("var")
     ).first()
     assert da[some] == pytest.approx(stats["var"], rel=1e-9)
-
-
-def test_histogram_partials_and_exact_quantiles(spark):
-    """Long-form histograms: duration-weighted counts, cascade
-    additivity, and exact type-1 quantiles for integer data."""
-    import pyspark.sql.functions as F
-
-    from timeperiods_spark import (
-        histogram_quantiles,
-        merge_histograms,
-        rollup_histogram,
-    )
-    from timeperiods_spark.sources.tokens import token_table
-
-    t = token_table(spark, 600)
-    hourly = rollup_histogram(
-        t, ("start_hour", "end_hour"), "n_tok", ("source",), width=1
-    )
-    # total mass == total overlapped grid units == sum of durations
-    total = hourly.agg(F.sum("count")).first()[0]
-    expect = t.select(
-        F.sum(F.col("end_hour") - F.col("start_hour") + 1)
-    ).first()[0]
-    assert total == expect
-
-    # cascade: daily from hourly == daily direct
-    daily_c = merge_histograms(
-        hourly, ("source",), period_expr=F.floor(F.col("period") / 24).cast("long")
-    )
-    daily_d = rollup_histogram(
-        t, ("start_hour", "end_hour"), "n_tok", ("source",), width=24
-    )
-    ka = {(r["source"], r["period"], r["bin"]): r["count"] for r in daily_c.collect()}
-    kb = {(r["source"], r["period"], r["bin"]): r["count"] for r in daily_d.collect()}
-    assert ka == kb
-
-    # exact quantiles vs brute force on one (source, day)
-    q = histogram_quantiles(daily_d, [0.5, 0.95, 1.0], ("source",))
-    src, per = sorted(ka)[0][:2]
-    got = {
-        r["p"]: r["value"]
-        for r in q.filter(
-            (F.col("source") == src) & (F.col("period") == per)
-        ).collect()
-    }
-    cells = (
-        t.filter(F.col("source") == src)
-        .select(
-            F.explode(F.sequence("start_hour", "end_hour")).alias("h"),
-            F.col("n_tok").cast("long").alias("v"),
-        )
-        .filter((F.col("h") >= per * 24) & (F.col("h") < (per + 1) * 24))
-        .orderBy("v")
-        .collect()
-    )
-    vals = [r["v"] for r in cells]
-    import math
-
-    for p in (0.5, 0.95, 1.0):
-        brute = vals[math.ceil(p * len(vals)) - 1]
-        assert got[p] == float(brute), (p, got[p], brute)
 
 
 def test_cross_stats_covariance_exact_and_cascade(spark):

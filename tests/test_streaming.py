@@ -285,56 +285,3 @@ def test_distinct_rollup_stream_matches_batch_sketch(spark, tmp_path):
         F.count_distinct("uid").alias("n")).collect()}
     for g, e in est.items():
         assert abs(e - exact[g]) <= 0.05 * exact[g]
-
-
-def test_ewma_stream_equals_batch_over_concatenation(spark, tmp_path):
-    """Streaming EWMA folds the recurrence across micro-batch
-    boundaries: feeding batches 1..k equals the batch operator over
-    the concatenation (same init, same rounding grid)."""
-    import pyspark.sql.types as T
-
-    from timeperiods_spark import ewma
-    from timeperiods_spark.streaming.stream_ingest import ewma_stream
-
-    src = str(tmp_path / "esrc")
-    ckpt = str(tmp_path / "eck")
-    out_dir = str(tmp_path / "eout")
-    schema = T.StructType([
-        T.StructField("g", T.StringType()),
-        T.StructField("t", T.LongType()),
-        T.StructField("v", T.DoubleType()),
-    ])
-
-    def run_once(rows, first):
-        mode = "overwrite" if first else "append"
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            mode).parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        sm = ewma_stream(stream, ["g"], "t", "v", alpha=0.3)
-        q = (
-            sm.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    b1 = [("a", 1, 10.0), ("a", 3, 20.0), ("b", 2, 5.0), ("a", 4, None)]
-    b2 = [("a", 7, 30.0), ("b", 9, 6.0), ("a", 2, 99.0)]  # a@2 is LATE
-    run_once(b1, first=True)
-    run_once(b2, first=False)
-
-    got = {(r["g"], r["t"]): r["ewma"]
-           for r in spark.read.parquet(out_dir).collect()}
-    all_rows = [r for r in b1 + b2 if r[2] is not None
-                and not (r[0] == "a" and r[1] == 2)]  # late row dropped
-    df = spark.createDataFrame(all_rows, schema)
-    want = {(r["g"], r["t"]): r["ewma"]
-            for r in ewma(df, "t", "v", ["g"], alpha=0.3).collect()}
-    assert got.keys() == want.keys()
-    for k in got:
-        assert abs(got[k] - want[k]) < 2e-6, k
-    # NULL value row emitted nothing
-    assert ("a", 4) not in got

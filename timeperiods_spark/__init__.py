@@ -19,12 +19,6 @@ from .functions.compression import compress_series, decompress_series
 from .functions.grid import salted_repartition, timestamp_to_grid
 from .operators.cross import grouped_cartesian
 from .operators.downsample import downsample_m4, rollup_ohlc
-from .operators.correlate import cross_correlation
-from .operators.histogram import (
-    histogram_quantiles,
-    merge_histograms,
-    rollup_histogram,
-)
 from .operators.rolling import rolling_window_agg
 from .operators.interval_diff import find_gaps, interval_difference
 from .operators.interval_union import merge_intervals
@@ -37,8 +31,6 @@ from .operators.distinct import (
     distinct_rollup,
     finalize_distinct,
 )
-from .operators.anomaly import seasonal_adjust, zscore_anomaly
-from .operators.trend import cusum, ewma, holt
 from .plans.cachectl import release as release_caches
 from .operators.rollup import (
     cascade,
@@ -80,11 +72,7 @@ __all__ = [
     "sessionize",
     "downsample_m4",
     "rollup_ohlc",
-    "cross_correlation",
     "rolling_window_agg",
-    "rollup_histogram",
-    "merge_histograms",
-    "histogram_quantiles",
     "merge_intervals",
     "interval_difference",
     "find_gaps",
@@ -102,11 +90,6 @@ __all__ = [
     "distinct_rollup",
     "distinct_cascade",
     "finalize_distinct",
-    "cusum",
-    "ewma",
-    "holt",
-    "zscore_anomaly",
-    "seasonal_adjust",
     "release_caches",
     "hash_sample",
     "hash_sample_n",

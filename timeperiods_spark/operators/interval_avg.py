@@ -49,6 +49,7 @@ from ..plans.kernel import checked_sweep, iwa_sweep, sweepable
 from ..plans.strategy import (
     RequestStats,
     build_overlap_pairs,
+    check_strategy,
     group_sizes,
     request_stats,
     sweep_fits,
@@ -405,6 +406,7 @@ def interval_weighted_avg(
     nobs_<v>…, xminstart, xmaxend`` (reference output contract
     timeperiod_functions.R:345-347, README.md:74-110).
     """
+    check_strategy(join_strategy)
     group_vars = list(group_vars or [])
     ivl_dtype, xw, yw = _canonical(x, y, interval_vars, value_vars, group_vars)
     n_g, n_v = len(group_vars), len(value_vars)

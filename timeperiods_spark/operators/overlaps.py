@@ -29,7 +29,13 @@ from pyspark.sql import types as T
 from ..errors import IntervalValidationError, OverlapError, RoleValidationError
 from ..plans.sql import ident, sql
 from ..plans.kernel import arrow_ok, pieces_sweep, sweepable
-from ..plans.strategy import build_overlap_pairs, group_sizes, request_stats, sweep_fits
+from ..plans.strategy import (
+    build_overlap_pairs,
+    check_strategy,
+    group_sizes,
+    request_stats,
+    sweep_fits,
+)
 from .interval_avg import _fields, _grid, _is_intervalish, _ungrid
 
 
@@ -169,6 +175,7 @@ def remove_overlaps(
     ``join_strategy`` forces the SQL sweep with that join-back; pass
     ``group_equi`` only for high-cardinality, short-panel groups.
     """
+    check_strategy(join_strategy)
     group_vars = list(group_vars or [])
     xf = _fields(x)
     ivl_dtype = _normalize(xf, interval_vars, group_vars)
@@ -390,9 +397,15 @@ def overlap_join(
                    if c not in df.columns]
         if missing:
             raise RoleValidationError(f"{side} is missing columns {missing}")
-    s_col, e_col = interval_vars
     xf, yf = _fields(x), _fields(y)
-    dtype = xf[s_col]
+    dtype = _normalize(xf, interval_vars, group_vars)
+    if isinstance(dtype, T.DateType) != isinstance(
+        _normalize(yf, interval_vars, group_vars), T.DateType
+    ):
+        raise IntervalValidationError(
+            "interval_vars must be the same class (all integer or all date) in x and y"
+        )
+    s_col, e_col = interval_vars
 
     n_g = len(group_vars)
     gcols = [f"__g{i}" for i in range(n_g)]

@@ -838,16 +838,16 @@ def _dense_scaffold_join(
     span: Optional[tuple[int, int]],
 ):
     """Left-join a dense (group x period) scaffold onto a rollup —
-    shared plumbing for the gap-fill family. Returns (joined, span),
-    or (None, None) when the rollup is empty and no span was given."""
+    shared plumbing for the gap-fill family. Returns (joined, span).
+    An empty rollup with no span gets an empty scaffold, so the
+    gap-filled output keeps its columns."""
     from functools import reduce
 
     spark = rollup.sparkSession
     if span is None:
         row = rollup.agg(F.min("start").alias("lo"), F.max("end").alias("hi")).first()
-        if row is None or row["lo"] is None:
-            return None, None
-        span = (int(row["lo"]), int(row["hi"]))
+        empty = row is None or row["lo"] is None
+        span = (origin, origin - 1) if empty else (int(row["lo"]), int(row["hi"]))
     groups_df = rollup.select(*group_vars).dropDuplicates() if group_vars else None
     scaffold = period_scaffold(spark, span[0], span[1], width, origin, groups_df)
 
@@ -895,8 +895,6 @@ def gap_fill_locf(
 
     group_vars = list(group_vars or [])
     joined, span = _dense_scaffold_join(rollup, group_vars, width, origin, span)
-    if joined is None:
-        return rollup
 
     # LOCF windows within (group…, period-bucket) with a per-bucket
     # carry of the latest non-null value from earlier buckets
@@ -975,8 +973,6 @@ def gap_fill_interpolate(
 
     group_vars = list(group_vars or [])
     joined, span = _dense_scaffold_join(rollup, group_vars, width, origin, span)
-    if joined is None:
-        return rollup
     p_lo = (span[0] - origin) // width
     p_hi = (span[1] - origin) // width
     plan = plan_buckets(

@@ -60,11 +60,11 @@ def managed_persist_percall(
     ``family#<n>`` and the oldest frames beyond ``keep`` are released
     FIFO. Use for operators whose intermediate is read MORE THAN ONCE
     per call and whose callers legitimately hold several lazy results
-    at once (the trend scans: a two-stage pipeline builds holt twice
-    before collecting either — a single shared tag would evict the
-    first call's Arrow stage and silently recompute it at collect time,
-    VERDICT r5 finding 3). The pool stays bounded at ``keep`` frames
-    per family instead of one. Returns the persisted frame."""
+    at once (a pipeline that builds ``remove_overlaps`` twice before
+    collecting either — a single shared tag would evict the first
+    call's base and silently recompute it at collect time). The pool
+    stays bounded at ``keep`` frames per family instead of one.
+    Returns the persisted frame."""
     out = df.persist(storage_level)
     with _LOCK:
         n = _FAMILY_SEQ[family] = _FAMILY_SEQ.get(family, 0) + 1

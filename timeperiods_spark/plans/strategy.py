@@ -66,7 +66,20 @@ from typing import Optional, Union
 
 from pyspark.sql import DataFrame, Row, functions as F
 
+from ..errors import RoleValidationError
 from .sql import sql
+
+#: the ``join_strategy`` names the operators accept
+JOIN_STRATEGIES = ("auto", "group_equi", "broadcast_y", "broadcast_x", "bin")
+
+
+def check_strategy(strategy: str) -> None:
+    """Reject an unknown ``join_strategy`` before any Spark work."""
+    if strategy not in JOIN_STRATEGIES:
+        raise RoleValidationError(
+            f"unknown join strategy {strategy!r}; expected one of {JOIN_STRATEGIES}"
+        )
+
 
 #: auto switches group_equi -> bin when the estimated per-group cross
 #: volume |x| * |y| / groups exceeds this. Calibrated on this host:
@@ -274,6 +287,7 @@ def build_overlap_pairs(
     has a ``p90``, also gives the bin width; without either, both share
     one action.
     """
+    check_strategy(strategy)
     if how not in ("inner", "left"):
         raise ValueError(f"how must be 'inner' or 'left', got {how!r}")
     overlap = ["__xs <= __ye", "__xe >= __ys"]
@@ -326,49 +340,46 @@ def build_overlap_pairs(
             pairs = left.join(right, cond, "inner")
         return pairs.selectExpr(*out)
 
-    if strategy == "bin":
-        if not (bin_width or (stats and stats.p90)):
-            stats = request_stats(xw, yw, n_groups, distinct=False)
-        w = int(bin_width or stats.bin_width)
-        xbin = [f"explode(sequence(floor(__xs / {w}), floor(__xe / {w}))) AS __bin"]
-        ybin = [f"explode(sequence(floor(__ys / {w}), floor(__ye / {w}))) AS __ybin"]
-        # first-shared-bin: count each overlapping pair exactly once, so
-        # no post-join dedup — the §4.4 row-count invariant holds by
-        # construction.
-        cond = _group_cond(n_groups) + [
-            "__ybin = __bin", *overlap, f"__ybin = floor(greatest(__xs, __ys) / {w})"
-        ]
-        xb = xw.selectExpr("*", *xbin)
-        yb = yw.selectExpr("*", *ybin)
-        if skew_salt and skew_salt > 1:
-            # Salt hot (group, bin) keys: x rows pick a deterministic
-            # salt; y rows replicate across all salts (y is the smaller
-            # side for rollup workloads). Joining on (bin, salt) splits
-            # a hot bin across skew_salt reducers.
-            s = int(skew_salt)
-            xb = xb.selectExpr("*", f"pmod(xxhash64(__xs, __xe), {s}) AS __salt")
-            yb = yb.selectExpr("*", f"explode(sequence(0, {s - 1})) AS __ysalt")
-            cond.append("__ysalt = __salt")
-        cond = F.expr(" AND ".join(cond))
-        if how == "left":
-            # Preserve x: a left-outer join over the EXPLODED x emits one
-            # NULL row per (x, bin) slot with no bin-local match, so
-            # (a) keep NULL candidates only at x's FIRST bin (one
-            # candidate per x row, mirroring the first-shared-bin dedup),
-            # (b) resolve "matched somewhere else?" with a single
-            # max(matched) window over the x identity — one extra
-            # exchange vs the inner plan, no anti join, x scanned once.
-            wx = ", ".join([f"__g{i}" for i in range(n_groups)] + ["__xs", "__xe"])
-            return (
-                xb.join(yb, cond, "left")
-                .where(f"__ys IS NOT NULL OR __bin = floor(__xs / {w})")
-                .selectExpr(
-                    *out,
-                    f"max(CAST(__ys IS NOT NULL AS INT)) OVER (PARTITION BY {wx}) AS __has",
-                )
-                .where("__ys IS NOT NULL OR __has = 0")
-                .drop("__has")
+    if not (bin_width or (stats and stats.p90)):
+        stats = request_stats(xw, yw, n_groups, distinct=False)
+    w = int(bin_width or stats.bin_width)
+    xbin = [f"explode(sequence(floor(__xs / {w}), floor(__xe / {w}))) AS __bin"]
+    ybin = [f"explode(sequence(floor(__ys / {w}), floor(__ye / {w}))) AS __ybin"]
+    # first-shared-bin: count each overlapping pair exactly once, so
+    # no post-join dedup — the §4.4 row-count invariant holds by
+    # construction.
+    cond = _group_cond(n_groups) + [
+        "__ybin = __bin", *overlap, f"__ybin = floor(greatest(__xs, __ys) / {w})"
+    ]
+    xb = xw.selectExpr("*", *xbin)
+    yb = yw.selectExpr("*", *ybin)
+    if skew_salt and skew_salt > 1:
+        # Salt hot (group, bin) keys: x rows pick a deterministic
+        # salt; y rows replicate across all salts (y is the smaller
+        # side for rollup workloads). Joining on (bin, salt) splits
+        # a hot bin across skew_salt reducers.
+        s = int(skew_salt)
+        xb = xb.selectExpr("*", f"pmod(xxhash64(__xs, __xe), {s}) AS __salt")
+        yb = yb.selectExpr("*", f"explode(sequence(0, {s - 1})) AS __ysalt")
+        cond.append("__ysalt = __salt")
+    cond = F.expr(" AND ".join(cond))
+    if how == "left":
+        # Preserve x: a left-outer join over the EXPLODED x emits one
+        # NULL row per (x, bin) slot with no bin-local match, so
+        # (a) keep NULL candidates only at x's FIRST bin (one
+        # candidate per x row, mirroring the first-shared-bin dedup),
+        # (b) resolve "matched somewhere else?" with a single
+        # max(matched) window over the x identity — one extra
+        # exchange vs the inner plan, no anti join, x scanned once.
+        wx = ", ".join([f"__g{i}" for i in range(n_groups)] + ["__xs", "__xe"])
+        return (
+            xb.join(yb, cond, "left")
+            .where(f"__ys IS NOT NULL OR __bin = floor(__xs / {w})")
+            .selectExpr(
+                *out,
+                f"max(CAST(__ys IS NOT NULL AS INT)) OVER (PARTITION BY {wx}) AS __has",
             )
-        return yb.join(xb, cond, "inner").selectExpr(*out)
-
-    raise ValueError(f"unknown join strategy: {strategy!r}")
+            .where("__ys IS NOT NULL OR __has = 0")
+            .drop("__has")
+        )
+    return yb.join(xb, cond, "inner").selectExpr(*out)

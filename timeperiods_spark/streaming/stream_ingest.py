@@ -229,89 +229,6 @@ def stateful_locf_stream(
     )
 
 
-def ewma_stream(
-    events: DataFrame,
-    group_cols: Sequence[str],
-    t_col: str,
-    value_col: str,
-    *,
-    alpha: float,
-    init: str = "first",
-) -> DataFrame:
-    """Streaming EWMA as a custom stateful operator — the continuous
-    front of ``operators.trend.ewma``. A recurrence cannot be a
-    windowed aggregate (each output needs the previous output), so the
-    state is O(1) per group: (last_t, last_e). Each micro-batch sorts
-    its rows per group, folds the recurrence from the carried state,
-    and emits one row per observation; rows at or before the carried
-    frontier are dropped (same late-data contract as the LOCF stream —
-    re-emitting would duplicate keys in append mode). A replay of the
-    same batch sequence reproduces the same outputs (state transitions
-    are pure).
-
-    Continuity guarantee (pytest-pinned): feeding batches 1..k through
-    the stream equals the batch ``ewma`` over the concatenation.
-    """
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    if not (0.0 < float(alpha) <= 1.0):
-        raise ValueError(f"ewma_stream: alpha must be in (0, 1], got {alpha}")
-    if init not in ("first", "zero"):
-        raise ValueError("ewma_stream: init must be 'first' or 'zero'")
-    a = float(alpha)
-    group_cols = list(group_cols)
-    gfields = [f for f in events.schema.fields if f.name in group_cols]
-    out_schema = T.StructType(
-        gfields
-        + [
-            T.StructField(t_col, T.LongType()),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("ewma", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_t", T.LongType()),
-            T.StructField("last_e", T.DoubleType()),
-        ]
-    )
-
-    def step(key, pdfs, state: GroupState):
-        chunks = [pdf for pdf in pdfs]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks) if len(chunks) > 1 else chunks[0]
-        pdf = pdf[[t_col, value_col]].dropna().sort_values(t_col)
-        last_t, e = state.get if state.exists else (None, None)
-        out_t, out_v, out_e = [], [], []
-        for t, v in zip(pdf[t_col], pdf[value_col]):
-            t, v = int(t), float(v)
-            if last_t is not None and t <= last_t:
-                continue  # late/duplicate: frontier already emitted
-            if e is None:
-                e = v if init == "first" else a * v
-            else:
-                e = (1.0 - a) * e + a * v
-            out_t.append(t)
-            out_v.append(v)
-            out_e.append(round(e, 6))
-            last_t = t
-        if out_t:
-            state.update((last_t, e))
-            frame = pd.DataFrame(
-                {t_col: out_t, value_col: out_v, "ewma": out_e}
-            )
-            for g, val in zip(group_cols, key):
-                frame[g] = val
-            yield frame[group_cols + [t_col, value_col, "ewma"]]
-
-    return events.groupBy(*group_cols).applyInPandasWithState(
-        step, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
 def sessionized_rollup_stream(
     events: DataFrame,
     ts_col: str,

@@ -765,48 +765,6 @@ FROM anchored
 """
 
 
-def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization of the events stream: per-user session
-    ordinal with a 30-minute inactivity gap. The carry-bucketed
-    prefix-sum must reproduce the plain windowed formulation the DuckDB
-    twin uses."""
-    from timeperiods_spark import sessionize
-
-    ev = _read(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.unix_timestamp("ts").cast("long").alias("tsec"),
-    )
-    out = sessionize(
-        ev, "tsec", 1800, ["user_id"], tiebreak=["event_id"]
-    )
-    return out.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col("session_id").cast("long").alias("session_id"),
-    )
-
-
-SQL_SESSIONIZE = """
-WITH e AS (
-  SELECT user_id, event_id, CAST(epoch(ts) AS BIGINT) AS tsec FROM events
-),
-flagged AS (
-  SELECT user_id, event_id, tsec,
-         CASE WHEN lag(tsec) OVER w IS NULL
-                   OR tsec - lag(tsec) OVER w > 1800
-              THEN 1 ELSE 0 END AS f
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY tsec, event_id)
-)
-SELECT user_id, event_id,
-       CAST(SUM(f) OVER (PARTITION BY user_id ORDER BY tsec, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS session_id
-FROM flagged
-"""
-
-
 #: non-leap calendar months as day offsets/lengths — the irregular
 #: schedule the regular-grid tiers cannot express
 _MONTH_CUM = [0, 31, 59, 90, 120, 151, 181, 212, 243, 273, 304, 334]
@@ -1038,176 +996,6 @@ SQL_IWA_SORTED = SQL_IWA_CORE.replace(
 )
 
 
-def q_asof_events(spark, sf_dir):
-    """As-of join: for each regular query time per group, the latest
-    event value at or before it. The oracle is DuckDB's NATIVE
-    ASOF LEFT JOIN — a fully independent implementation of the
-    semantics (the Spark side is a union + carry-forward window,
-    not a join at all)."""
-    from timeperiods_spark.operators.asof import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    obs = ev.select(
-        (F.col("user_id") % 7).cast("int").alias("g"),
-        F.col("event_id").alias("t"),
-        F.col("value").alias("v"),
-    )
-    q = obs.select("g").distinct().crossJoin(
-        spark.range(200).select((F.col("id") * 37).cast("long").alias("t"))
-    )
-    out = asof_join(q, obs, "t", ["v"], ["g"])
-    return out.select(
-        "g",
-        F.col("t").cast("long").alias("t"),
-        F.round("v", _R).alias("v"),
-        F.col("asof_t").cast("long").alias("asof_t"),
-    )
-
-
-SQL_ASOF_EVENTS = """
-WITH obs AS (
-  SELECT CAST(user_id % 7 AS INT) AS og, event_id AS ot, value AS v FROM events
-),
-q AS (
-  SELECT g, CAST(37*p AS BIGINT) AS t
-  FROM (SELECT DISTINCT CAST(user_id % 7 AS INT) AS g FROM events)
-  CROSS JOIN (SELECT range AS p FROM range(200))
-)
-SELECT q.g, q.t, ROUND(o.v, 6) AS v, o.ot AS asof_t
-FROM q ASOF LEFT JOIN obs o ON q.g = o.og AND q.t >= o.ot
-"""
-
-
-def q_asof_tolerance(spark, sf_dir):
-    """Backward as-of with a max-staleness window (tolerance=50):
-    matches older than t-50 are masked to NULL. Oracle = bounded
-    GROUP BY arg-max (obs times are unique event ids, so no ties)."""
-    from timeperiods_spark.operators.asof import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    obs = ev.select(
-        (F.col("user_id") % 7).cast("int").alias("g"),
-        F.col("event_id").alias("t"),
-        F.col("value").alias("v"),
-    )
-    q = obs.select("g").distinct().crossJoin(
-        spark.range(200).select((F.col("id") * 37).cast("long").alias("t"))
-    )
-    out = asof_join(q, obs, "t", ["v"], ["g"], tolerance=50)
-    return out.select(
-        "g",
-        F.col("t").cast("long").alias("t"),
-        F.round("v", _R).alias("v"),
-        F.col("asof_t").cast("long").alias("asof_t"),
-    )
-
-
-SQL_ASOF_TOLERANCE = """
-WITH obs AS (
-  SELECT CAST(user_id % 7 AS INT) AS og, event_id AS ot, value AS v FROM events
-),
-q AS (
-  SELECT g, CAST(37*p AS BIGINT) AS t
-  FROM (SELECT DISTINCT CAST(user_id % 7 AS INT) AS g FROM events)
-  CROSS JOIN (SELECT range AS p FROM range(200))
-)
-SELECT q.g, q.t, ROUND(MAX_BY(o.v, o.ot), 6) AS v, MAX(o.ot) AS asof_t
-FROM q LEFT JOIN obs o
-  ON q.g IS NOT DISTINCT FROM o.og
- AND o.ot <= q.t AND o.ot >= q.t - 50
-GROUP BY q.g, q.t
-"""
-
-
-def q_asof_forward(spark, sf_dir):
-    """Forward as-of join (earliest observation at or after each query
-    time) — DuckDB ASOF only supports the backward inequality, so the
-    twin negates both time axes, which is also exactly how the Spark
-    side reduces forward to its backward carry (one pass)."""
-    from timeperiods_spark.operators.asof import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    obs = ev.select(
-        (F.col("user_id") % 7).cast("int").alias("g"),
-        F.col("event_id").alias("t"),
-        F.col("value").alias("v"),
-    )
-    q = obs.select("g").distinct().crossJoin(
-        spark.range(200).select((F.col("id") * 37).cast("long").alias("t"))
-    )
-    out = asof_join(q, obs, "t", ["v"], ["g"], direction="forward")
-    return out.select(
-        "g",
-        F.col("t").cast("long").alias("t"),
-        F.round("v", _R).alias("v"),
-        F.col("asof_t").cast("long").alias("asof_t"),
-    )
-
-
-SQL_ASOF_FORWARD = """
-WITH obs AS (
-  SELECT CAST(user_id % 7 AS INT) AS og, -event_id AS ot, value AS v FROM events
-),
-q AS (
-  SELECT g, CAST(37*p AS BIGINT) AS t
-  FROM (SELECT DISTINCT CAST(user_id % 7 AS INT) AS g FROM events)
-  CROSS JOIN (SELECT range AS p FROM range(200))
-)
-SELECT q.g, q.t, ROUND(o.v, 6) AS v, -o.ot AS asof_t
-FROM q ASOF LEFT JOIN obs o ON q.g = o.og AND -q.t >= o.ot
-"""
-
-
-def q_rolling_7d(spark, sf_dir):
-    """Trailing 7-day rolling statistics over the daily token series —
-    the fan-out + hash-agg formulation (no RANGE window, no per-group
-    task ceiling) must equal the oracle's RANGE window exactly."""
-    from timeperiods_spark.operators.rolling import rolling_window_agg
-
-    t = token_table(spark, N_TOKEN_DOCS)
-    daily = rollup_regular(
-        t, ("start_hour", "end_hour"), ("n_tok",), ("source",),
-        width=24, required_percentage=0.0,
-    ).select(
-        "source", "period",
-        # same anchor-rounding parity as the other derived queries
-        F.round("n_tok", 6).alias("value"),
-    )
-    out = rolling_window_agg(daily, "period", "value", ["source"], k=7)
-    return out.select(
-        "source",
-        F.col("period").cast("long").alias("period"),
-        F.round("value", _R).alias("value"),
-        F.round("roll_sum", _R).alias("roll_sum"),
-        F.col("roll_count").cast("long").alias("roll_count"),
-        # mean re-derived from the 6dp-rounded sum on BOTH engines: the
-        # raw sums differ in low bits by summation order, and a
-        # division of near-.5-boundary floats flips the 6th decimal
-        F.round(F.round("roll_sum", _R) / F.col("roll_count"), _R).alias(
-            "roll_mean"
-        ),
-        F.round("roll_min", _R).alias("roll_min"),
-        F.round("roll_max", _R).alias("roll_max"),
-    )
-
-
-SQL_ROLLING_7D = f"""
-WITH daily AS ({_token_rollup_sql(24)}),
-s AS (SELECT source, period, n_tok AS value FROM daily)
-SELECT source, CAST(period AS BIGINT) AS period,
-       ROUND(value, 6) AS value,
-       ROUND(SUM(value) OVER w, 6) AS roll_sum,
-       CAST(COUNT(value) OVER w AS BIGINT) AS roll_count,
-       ROUND(ROUND(SUM(value) OVER w, 6) / COUNT(value) OVER w, 6)
-         AS roll_mean,
-       ROUND(MIN(value) OVER w, 6) AS roll_min,
-       ROUND(MAX(value) OVER w, 6) AS roll_max
-FROM s
-WINDOW w AS (PARTITION BY source ORDER BY period
-             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-"""
-
-
 def q_tier_variance(spark, sf_dir):
     """Exact time-weighted variance at the daily tier from ADDITIVE
     second-moment partials (sumsq) — cascade-exact like every other
@@ -1374,64 +1162,6 @@ FROM isl GROUP BY g, grp
 """
 
 
-def q_tier_covariance(spark, sf_dir):
-    """Exact time-weighted covariance between two value columns at the
-    daily tier from the additive sumxy partial (cross_stats=) — the
-    cross-moment member of the mergeable-statistics family. 4dp
-    rounding for the same E[xy]-E[x]E[y] cancellation reason as the
-    variance query."""
-    from timeperiods_spark.operators.rollup import finalize_rollup
-
-    t = token_table(spark, N_TOKEN_DOCS).withColumn(
-        "m", (F.col("n_tok") % 97).cast("double")
-    )
-    daily = rollup_regular(
-        t, ("start_hour", "end_hour"), ("n_tok", "m"), ("source",),
-        width=24, required_percentage=0.0, partial=True,
-        cross_stats=[("n_tok", "m")],
-    )
-    out = finalize_rollup(
-        daily, ("n_tok", "m"), ("source",), width=24, required_percentage=0.0
-    )
-    return out.select(
-        "source",
-        F.col("period").cast("long").alias("period"),
-        F.round("cov_n_tok_m", 4).alias("cov_n_tok_m"),
-        F.col("xduration").cast("long").alias("xduration"),
-    )
-
-
-SQL_TIER_COVARIANCE = f"""
-WITH tok AS ({{tok}}),
-p AS (
-  SELECT range AS period, CAST(24*range AS BIGINT) AS ps,
-         CAST(24*range + 23 AS BIGINT) AS pe
-  FROM range(CAST(CEIL(8784.0 / 24) AS BIGINT))
-),
-j AS (
-  SELECT t.source, p.period,
-         LEAST(t.end_hour, p.pe) - GREATEST(t.start_hour, p.ps) + 1 AS dur,
-         CAST(t.n_tok AS DOUBLE) AS x,
-         CAST(t.n_tok % 97 AS DOUBLE) AS y
-  FROM tok t JOIN p ON t.start_hour <= p.pe AND t.end_hour >= p.ps
-),
-a AS (
-  SELECT source, CAST(period AS BIGINT) AS period,
-         SUM(dur) AS n,
-         SUM(x * dur) AS sx, SUM(y * dur) AS sy,
-         SUM(x * y * dur) AS sxy
-  FROM j GROUP BY source, period
-)
-SELECT source, period,
-       ROUND(sxy / n - (sx / n) * (sy / n), 4) AS cov_n_tok_m,
-       CAST(n AS BIGINT) AS xduration
-FROM a
-"""
-SQL_TIER_COVARIANCE = SQL_TIER_COVARIANCE.format(
-    tok=token_table_oracle_sql(N_TOKEN_DOCS)
-)
-
-
 # --------------------------------------------------------------------
 # event-series queries (events table, daily means)
 # --------------------------------------------------------------------
@@ -1453,103 +1183,6 @@ _SQL_DAILY_MEANS = """
   SELECT event_type, CAST(ts AS DATE) AS day, ROUND(AVG(value), 6) AS v
   FROM events WHERE ts IS NOT NULL AND value IS NOT NULL
   GROUP BY 1, 2
-"""
-
-
-def _events_days(spark, sf_dir):
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
-        .select(
-            "event_type",
-            F.unix_date(F.col("ts").cast("date")).cast("long").alias("day"),
-            "user_id",
-        )
-    )
-
-
-_SQL_EVENTS_DAYS = """
-  SELECT event_type,
-         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-         user_id
-  FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL
-"""
-
-
-def q_distinct_daily(spark, sf_dir):
-    """Daily distinct users per event type through the HLL tier path.
-    The sketch itself has no cross-engine twin, so the query is
-    self-auditing: it emits the EXACT count (oracle-comparable) plus
-    ``est_ok`` = |HLL estimate − exact| / exact <= 5% computed in-band
-    (the oracle emits literal TRUE — a drifting sketch flips the flag
-    and fails the hash compare)."""
-    from timeperiods_spark import distinct_rollup, finalize_distinct
-
-    ev = _events_days(spark, sf_dir)
-    daily = distinct_rollup(ev, "day", "user_id", ["event_type"],
-                            width=1, exact=True)
-    fin = finalize_distinct(daily, "user_id", ["event_type"], width=1)
-    return fin.select(
-        "event_type",
-        F.col("period").alias("day"),
-        F.col("n_distinct").cast("long").alias("n_users"),
-        (
-            F.abs(F.col("n_distinct_est") - F.col("n_distinct"))
-            <= 0.05 * F.col("n_distinct")
-        ).alias("est_ok"),
-    )
-
-
-SQL_DISTINCT_DAILY = f"""
-WITH ev AS ({_SQL_EVENTS_DAYS})
-SELECT event_type, day,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-       TRUE AS est_ok
-FROM ev GROUP BY event_type, day
-"""
-
-
-def q_distinct_weekly(spark, sf_dir):
-    """Weekly distinct users derived by CASCADING the daily HLL
-    partials (hll_union_agg — no raw rescan), audited in-band against
-    the exact weekly distinct count."""
-    from timeperiods_spark import (
-        distinct_cascade,
-        distinct_rollup,
-        finalize_distinct,
-    )
-
-    ev = _events_days(spark, sf_dir)
-    daily = distinct_rollup(ev, "day", "user_id", ["event_type"], width=1)
-    weekly = finalize_distinct(
-        distinct_cascade(daily, "user_id", ["event_type"],
-                         fine_width=1, coarse_width=7),
-        "user_id", ["event_type"], width=7,
-    )
-    exact = (
-        ev.withColumn("period", F.floor(F.col("day") / 7).cast("long"))
-        .groupBy("event_type", "period")
-        .agg(F.count_distinct("user_id").cast("long").alias("n_users"))
-    )
-    j = weekly.join(exact, ["event_type", "period"], "inner")
-    return j.select(
-        "event_type",
-        F.col("period").alias("week"),
-        "n_users",
-        (
-            F.abs(F.col("n_distinct_est") - F.col("n_users"))
-            <= 0.05 * F.col("n_users")
-        ).alias("est_ok"),
-    )
-
-
-SQL_DISTINCT_WEEKLY = f"""
-WITH ev AS ({_SQL_EVENTS_DAYS})
-SELECT event_type,
-       CAST(FLOOR(day / 7) AS BIGINT) AS week,
-       CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-       TRUE AS est_ok
-FROM ev GROUP BY event_type, FLOOR(day / 7)
 """
 
 
@@ -1751,22 +1384,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gap_fill_interp_daily": q_gap_fill_interp,
         "iwa_monthly_schedule": q_iwa_monthly,
         "downsample_m4_daily": q_downsample_m4,
-        "sessionize_events": q_sessionize,
         "gorilla_roundtrip": q_gorilla_roundtrip,
         "running_max_events": q_running_max,
-        "asof_events": q_asof_events,
-        "asof_events_forward": q_asof_forward,
-        "rolling_7d_stats": q_rolling_7d,
         "tier_variance_daily": q_tier_variance,
-        "tier_covariance_daily": q_tier_covariance,
         "merge_intervals_events": q_merge_intervals,
         "interval_difference_events": q_interval_difference,
         "iwa_sorted_validated": q_iwa_sorted_validated,
-        "distinct_users_daily": q_distinct_daily,
-        "distinct_users_weekly_cascade": q_distinct_weekly,
         "overlap_join_weeks": q_overlap_join,
         "overlap_join_bin_left": q_overlap_join_bin_left,
-        "asof_events_tolerance": q_asof_tolerance,
         "rollup_ohlc_weekly": q_ohlc_weekly,
         **_PIPELINE_QUERIES,
     }
@@ -1788,22 +1413,14 @@ def oracle_sql() -> dict[str, str]:
         "gap_fill_interp_daily": SQL_GAP_FILL_INTERP,
         "iwa_monthly_schedule": SQL_IWA_MONTHLY,
         "downsample_m4_daily": SQL_DOWNSAMPLE_M4,
-        "sessionize_events": SQL_SESSIONIZE,
         # gorilla_roundtrip: bit-packed binary codec, not SQL-expressible
         "running_max_events": SQL_RUNNING_MAX,
-        "asof_events": SQL_ASOF_EVENTS,
-        "asof_events_forward": SQL_ASOF_FORWARD,
-        "rolling_7d_stats": SQL_ROLLING_7D,
         "tier_variance_daily": SQL_TIER_VARIANCE,
-        "tier_covariance_daily": SQL_TIER_COVARIANCE,
         "merge_intervals_events": SQL_MERGE_INTERVALS,
         "interval_difference_events": SQL_INTERVAL_DIFFERENCE,
         "iwa_sorted_validated": SQL_IWA_SORTED,
-        "distinct_users_daily": SQL_DISTINCT_DAILY,
-        "distinct_users_weekly_cascade": SQL_DISTINCT_WEEKLY,
         "overlap_join_weeks": SQL_OVERLAP_JOIN,
         "overlap_join_bin_left": SQL_OVERLAP_JOIN_BIN_LEFT,
-        "asof_events_tolerance": SQL_ASOF_TOLERANCE,
         "rollup_ohlc_weekly": SQL_OHLC_WEEKLY,
         **_PIPELINE_ORACLES,
     }

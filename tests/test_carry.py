@@ -115,23 +115,6 @@ def test_empty_frame_flows_through(spark):
     assert running_max(df, "v", ["t"], ["g"]).count() == 0
 
 
-def test_asof_many_groups_no_carry_broadcast(spark):
-    """With groups >= 4x parallelism the as-of carry must use plain
-    per-group windows — no carry-frame broadcast in the plan."""
-    from timeperiods_spark import asof_join
-
-    obs = spark.range(2000).selectExpr(
-        "CAST(id % 400 AS STRING) AS g", "CAST(id AS INT) AS t",
-        "CAST(id AS DOUBLE) AS v")
-    q = spark.range(1000).selectExpr(
-        "CAST(id % 400 AS STRING) AS g", "CAST(id * 2 AS INT) AS t")
-    out = asof_join(q, obs, "t", ["v"], ["g"], cache=False)
-    assert "BroadcastExchange" not in _plan(out)
-    # spot-check values still correct
-    row = out.filter("g = '7' AND t = 14").first()
-    assert row["v"] == 7.0 and row["asof_t"] == 7
-
-
 def test_integrity_scan_many_groups_no_broadcast(spark):
     from timeperiods_spark.operators.interval_avg import _overlap_scan
 

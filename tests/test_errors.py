@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import contextlib
+import os
 import uuid
 import warnings
 
@@ -13,9 +14,12 @@ from timeperiods_spark import (
     IntervalValidationError,
     OverlapError,
     RoleValidationError,
+    TierCatalog,
+    ingest_batch,
     interval_weighted_avg,
     overlap_join,
     remove_overlaps,
+    rollup_regular,
 )
 from timeperiods_spark.plans import cachectl
 
@@ -215,3 +219,41 @@ def test_overlap_join_rejects_string_intervals(spark):
     with _jobs(spark) as jobs, pytest.raises(IntervalValidationError):
         overlap_join(x, y, ("s", "e"))
     assert jobs == []
+
+
+@pytest.mark.parametrize("algorithm", ["bogus", "Sweep"])
+@pytest.mark.parametrize("op", ["rollup_regular", "ingest_batch"])
+def test_unknown_rollup_algorithm_is_rejected_before_spark_work(
+    spark, tmp_path, op, algorithm
+):
+    x = spark.createDataFrame(
+        [("a", 1, 7, 1.0), ("a", 8, 14, 2.0)], "g string, s int, e int, v double"
+    )
+    root = str(tmp_path / "cat")
+    call = {
+        "rollup_regular": lambda: rollup_regular(
+            x, ("s", "e"), ("v",), ("g",), width=1, algorithm=algorithm
+        ),
+        "ingest_batch": lambda: ingest_batch(
+            TierCatalog(root=root, value_vars=("v",), group_vars=("g",)),
+            x, ("s", "e"), algorithm=algorithm,
+        ),
+    }[op]
+    with _jobs(spark) as jobs, pytest.raises(RoleValidationError, match=algorithm):
+        call()
+    assert jobs == []
+    assert not os.path.exists(root)
+
+
+@pytest.mark.parametrize(
+    "tiers", [{"hourly": 24, "daily": 1}, {"hourly": 24, "weekly": 36}]
+)
+def test_ingest_batch_rejects_a_bad_tier_layout(spark, tmp_path, tiers):
+    """The base tier must be the finest, and every tier must nest in it."""
+    x = spark.createDataFrame([("a", 1, 7, 1.0)], "g string, s int, e int, v double")
+    root = str(tmp_path / "cat")
+    cat = TierCatalog(root=root, value_vars=("v",), group_vars=("g",), tiers=tiers)
+    with _jobs(spark) as jobs, pytest.raises(RoleValidationError):
+        ingest_batch(cat, x, ("s", "e"))
+    assert jobs == []
+    assert not os.path.exists(root)

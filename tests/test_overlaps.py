@@ -445,13 +445,12 @@ def test_find_gaps_preserves_date_type(spark):
 
 
 def test_interval_algebra_ungrouped(spark):
-    """Ungrouped paths (gcols=[]) of the union/difference sweeps and
-    sessionize — the always-bucketed branch of plans/carry.py."""
+    """Ungrouped paths (gcols=[]) of the union/difference sweeps — the
+    always-bucketed branch of plans/carry.py."""
     from timeperiods_spark import (
         find_gaps,
         interval_difference,
         merge_intervals,
-        sessionize,
     )
 
     x = spark.createDataFrame([(1, 5), (4, 9), (20, 25)], "s int, e int")
@@ -464,9 +463,6 @@ def test_interval_algebra_ungrouped(spark):
     assert d == [(1, 2), (7, 9), (20, 25)]
     g = sorted((r["s"], r["e"]) for r in find_gaps(x, ("s", "e"), span=(0, 30)).collect())
     assert g == [(0, 0), (10, 19), (26, 30)]
-    ev = spark.createDataFrame([(0,), (5,), (100,)], "t int")
-    sids = {r["t"]: r["session_id"] for r in sessionize(ev, "t", 10).collect()}
-    assert sids == {0: 1, 5: 1, 100: 2}
 
 
 def test_interval_algebra_invalid_rows_raise(spark):

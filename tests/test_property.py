@@ -188,35 +188,6 @@ def test_merge_intervals_union_property(spark, rows):
     assert got == want
 
 
-@given(rows=st.lists(
-    st.tuples(st.integers(0, 1), st.integers(0, 50)), min_size=1, max_size=16
-))
-@settings(**_SPARK_SETTINGS)
-def test_sessionize_property(spark, rows):
-    """sessionize == brute-force gap walk on random (group, ts) rows."""
-    from timeperiods_spark import sessionize
-
-    rows = sorted(set(rows))  # unique (g, t); order irrelevant to Spark
-    df = spark.createDataFrame(rows, "g int, t int")
-    gap = 5
-    got = {
-        (r["g"], r["t"]): r["session_id"]
-        for r in sessionize(df, "t", gap, ["g"]).collect()
-    }
-    want = {}
-    by_g = {}
-    for g, t in rows:
-        by_g.setdefault(g, []).append(t)
-    for g, ts in by_g.items():
-        sid, prev = 0, None
-        for t in sorted(ts):
-            if prev is None or t - prev > gap:
-                sid += 1
-            want[(g, t)] = sid
-            prev = t
-    assert got == want
-
-
 @given(
     obs=st.lists(
         st.tuples(st.integers(0, 30), st.integers(-50, 50)),

@@ -468,91 +468,9 @@ def test_extra_stats_variance_exact_and_cascade_additive(spark):
     assert da[some] == pytest.approx(stats["var"], rel=1e-9)
 
 
-def test_cross_stats_covariance_exact_and_cascade(spark):
-    """sumxy partials: explode == sweep, cascade-exact, and equal to a
-    brute-force time-weighted covariance on one (source, day)."""
-    import pyspark.sql.functions as F
-
-    from timeperiods_spark.operators.rollup import (
-        cascade,
-        finalize_rollup,
-        rollup_regular,
-    )
-    from timeperiods_spark.sources.tokens import token_table
-
-    t = token_table(spark, 500).withColumn(
-        "m", (F.col("n_tok") % 97).cast("double")
-    )
-    kw = dict(width=1, partial=True, cross_stats=[("n_tok", "m")])
-    a = rollup_regular(t, ("start_hour", "end_hour"), ("n_tok", "m"), ("source",), **kw)
-    b = rollup_regular(
-        t, ("start_hour", "end_hour"), ("n_tok", "m"), ("source",),
-        algorithm="sweep", **kw,
-    )
-    ka = {(r["source"], r["period"]): (r["sumxy_n_tok_m"], r["nobsxy_n_tok_m"])
-          for r in a.collect()}
-    kb = {(r["source"], r["period"]): (r["sumxy_n_tok_m"], r["nobsxy_n_tok_m"])
-          for r in b.collect()}
-    assert ka.keys() == kb.keys()
-    for k in ka:
-        assert ka[k][1] == kb[k][1]
-        assert ka[k][0] == pytest.approx(kb[k][0], rel=1e-12)
-
-    daily_c = finalize_rollup(
-        cascade(a, ("n_tok", "m"), ("source",), fine_width=1, coarse_width=24),
-        ("n_tok", "m"), ("source",), width=24, required_percentage=0.0,
-    )
-    daily_d = finalize_rollup(
-        rollup_regular(
-            t, ("start_hour", "end_hour"), ("n_tok", "m"), ("source",),
-            width=24, partial=True, cross_stats=[("n_tok", "m")],
-        ),
-        ("n_tok", "m"), ("source",), width=24, required_percentage=0.0,
-    )
-    da = {(r["source"], r["period"]): r["cov_n_tok_m"] for r in daily_c.collect()}
-    db = {(r["source"], r["period"]): r["cov_n_tok_m"] for r in daily_d.collect()}
-    assert da.keys() == db.keys() and len(da) > 50
-    for k in da:
-        assert da[k] == pytest.approx(db[k], rel=1e-9, abs=1e-9)
-
-    src, per = sorted(da)[0]
-    cells = (
-        t.filter(F.col("source") == src)
-        .select(
-            F.explode(F.sequence("start_hour", "end_hour")).alias("h"),
-            F.col("n_tok").cast("double").alias("x"),
-            F.col("m").alias("y"),
-        )
-        .filter((F.col("h") >= per * 24) & (F.col("h") < (per + 1) * 24))
-    )
-    st = cells.agg(
-        (F.sum(F.col("x") * F.col("y")) / F.count("x")
-         - (F.sum("x") / F.count("x")) * (F.sum("y") / F.count("y"))).alias("cov")
-    ).first()
-    assert da[(src, per)] == pytest.approx(st["cov"], rel=1e-9)
-
-
-def test_cross_stats_ambiguous_names_rejected(spark):
-    import pyspark.sql.functions as F
-
-    from timeperiods_spark.errors import RoleValidationError
-    from timeperiods_spark.operators.rollup import rollup_regular
-
-    df = spark.createDataFrame(
-        [(0, 1, 1.0, 2.0, 3.0)], "s int, e int, x double, y_z double, x_y double"
-    ).withColumn("z", F.lit(4.0))
-    with pytest.raises(RoleValidationError):
-        rollup_regular(
-            df, ("s", "e"), ("x", "y_z", "x_y", "z"), None, width=1,
-            partial=True, cross_stats=[("x_y", "z")],
-        )
-
-
 def test_covariance_respects_required_percentage(spark):
     """A period failing the coverage requirement must report NULL for
-    mean, variance, AND covariance together (round-4 ADVICE: cov was
-    only guarded by nobsxy > 0, so an under-covered period reported a
-    NULL mean with a non-NULL covariance)."""
+    mean and variance together."""
     import pyspark.sql.functions as F
 
     from timeperiods_spark.operators.rollup import finalize_rollup, rollup_regular
@@ -564,17 +482,14 @@ def test_covariance_respects_required_percentage(spark):
     )
     partials = rollup_regular(
         t, ("start_hour", "end_hour"), ("a", "b"), ("source",),
-        width=24, partial=True, cross_stats=[("a", "b")],
-        extra_stats=["variance"],
+        width=24, partial=True, extra_stats=["variance"],
     )
     strict = finalize_rollup(
         partials, ("a", "b"), ("source",), width=24, required_percentage=50.0
     ).collect()[0]
     assert strict["a"] is None and strict["b"] is None
     assert strict["a_var"] is None
-    assert strict["cov_a_b"] is None
     loose = finalize_rollup(
         partials, ("a", "b"), ("source",), width=24, required_percentage=25.0
     ).collect()[0]
     assert loose["a"] == pytest.approx(10.0)
-    assert loose["cov_a_b"] == pytest.approx(0.0)

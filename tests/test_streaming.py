@@ -177,111 +177,3 @@ def test_stateful_locf_stream_carries_state_across_batches(spark, tmp_path):
     assert got[("a", 4)] == (13.0, True) and got[("a", 5)] == (13.0, True)
     assert got[("a", 6)] == (16.0, False)
     assert got[("b", 5)] == (50.0, False) and len(got) == 8
-
-
-def test_sessionized_rollup_stream_matches_batch(spark, tmp_path):
-    """Native session_window stream == the same session aggregation in
-    batch, compared on watermark-closed sessions."""
-    from timeperiods_spark.streaming.stream_ingest import (
-        sessionized_rollup_stream,
-    )
-
-    src = str(tmp_path / "sev")
-    # three bursts per group separated by > gap
-    rows = spark.range(300).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        F.timestamp_seconds(
-            F.lit(1700000000)
-            + (F.col("id") / 3).cast("long") * 7          # 7s cadence
-            + ((F.col("id") / 100).cast("long") * 7200)   # 2h burst gaps
-        ).alias("ts"),
-        (F.col("id") % 5).cast("double").alias("v"),
-    )
-    rows.write.parquet(src)
-
-    stream = spark.readStream.schema(rows.schema).parquet(src)
-    agg = sessionized_rollup_stream(stream, "ts", "v", ["g"], gap="10 minutes")
-    out_path = str(tmp_path / "sout")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "sck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["g"], r["session_start"]): (r["n_events"], r["sum_value"])
-        for r in spark.read.parquet(out_path).collect()
-    }
-    assert got  # at least the watermark-closed sessions emitted
-
-    batch = (
-        rows.groupBy("g", F.session_window("ts", "10 minutes").alias("win"))
-        .agg(F.count("v").alias("n"), F.sum("v").alias("s"))
-        .select("g", F.col("win.start").alias("ss"), "n", "s")
-    )
-    want = {(r["g"], r["ss"]): (r["n"], r["s"]) for r in batch.collect()}
-    for k, v in got.items():
-        assert want[k] == v, (k, v, want.get(k))
-
-
-def test_distinct_rollup_stream_matches_batch_sketch(spark, tmp_path):
-    """Streaming HLL window partials == the batch sketch of the same
-    windows, and they cascade with the batch distinct machinery."""
-    from timeperiods_spark import finalize_distinct
-    from timeperiods_spark.operators.rollup import merge_partials as _mp  # noqa: F401
-    from timeperiods_spark.streaming.stream_ingest import distinct_rollup_stream
-
-    src = str(tmp_path / "ev_d")
-    rows = spark.range(2000).select(
-        (F.col("id") % 3).cast("string").alias("g"),
-        F.timestamp_seconds(F.lit(1700000000) + F.col("id") * 23).alias("ts"),
-        (F.col("id") % 311).alias("uid"),
-    )
-    rows.write.parquet(src)
-
-    stream = spark.readStream.schema(rows.schema).parquet(src)
-    agg = distinct_rollup_stream(stream, "ts", "uid", ["g"],
-                                 window_duration="1 hour")
-    out_path = str(tmp_path / "out_d")
-    q = (
-        agg.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "ck_d"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out_path)
-    assert got.count() > 0
-
-    batch = (
-        rows.groupBy("g", F.window("ts", "1 hour").alias("win"))
-        .agg(F.hll_sketch_agg("uid", F.lit(12)).alias("hll_uid"),
-             F.count(F.lit(1)).alias("n_events"))
-        .select("g", F.col("win.start").alias("window_start"),
-                F.hll_sketch_estimate("hll_uid").alias("est"), "n_events")
-    )
-    bm = {(r["g"], r["window_start"]): r for r in batch.collect()}
-    for r in got.select(
-        "g", "window_start", "n_events",
-        F.hll_sketch_estimate("hll_uid").alias("est"),
-    ).collect():
-        b = bm[(r["g"], r["window_start"])]
-        assert r["n_events"] == b["n_events"]
-        assert r["est"] == b["est"]  # same rows -> same sketch estimate
-
-    # the emitted sketches merge through the batch distinct machinery:
-    # union all streamed windows per group == direct whole-data sketch
-    per_group = got.withColumn("period", F.lit(0).cast("long")).groupBy(
-        "g", "period"
-    ).agg(F.hll_union_agg("hll_uid").alias("hll_uid"))
-    est = {r["g"]: r["n_distinct_est"] for r in finalize_distinct(
-        per_group, "uid", ["g"], width=1).collect()}
-    exact = {r["g"]: r["n"] for r in rows.groupBy("g").agg(
-        F.count_distinct("uid").alias("n")).collect()}
-    for g, e in est.items():
-        assert abs(e - exact[g]) <= 0.05 * exact[g]

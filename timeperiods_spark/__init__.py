@@ -19,18 +19,10 @@ from .functions.compression import compress_series, decompress_series
 from .functions.grid import salted_repartition, timestamp_to_grid
 from .operators.cross import grouped_cartesian
 from .operators.downsample import downsample_m4, rollup_ohlc
-from .operators.rolling import rolling_window_agg
 from .operators.interval_diff import find_gaps, interval_difference
 from .operators.interval_union import merge_intervals
-from .operators.sessions import sessionize
-from .operators.asof import asof_join
 from .operators.sampling import hash_sample, hash_sample_n, source_mix
 from .operators.spandedup import duplicate_span_stats, duplicate_spans
-from .operators.distinct import (
-    distinct_cascade,
-    distinct_rollup,
-    finalize_distinct,
-)
 from .plans.cachectl import release as release_caches
 from .operators.rollup import (
     cascade,
@@ -69,10 +61,8 @@ __all__ = [
     "cascade",
     "gap_fill_locf",
     "gap_fill_interpolate",
-    "sessionize",
     "downsample_m4",
     "rollup_ohlc",
-    "rolling_window_agg",
     "merge_intervals",
     "interval_difference",
     "find_gaps",
@@ -87,14 +77,10 @@ __all__ = [
     "timestamp_to_grid",
     "duplicate_spans",
     "duplicate_span_stats",
-    "distinct_rollup",
-    "distinct_cascade",
-    "finalize_distinct",
     "release_caches",
     "hash_sample",
     "hash_sample_n",
     "source_mix",
-    "asof_join",
     "get_spark",
     "RESERVED_OUTPUT_NAMES",
     "TimeperiodsError",

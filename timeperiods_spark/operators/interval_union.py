@@ -13,7 +13,7 @@ by (group, position) (ONE shuffle, map-side combined), a carried
 prefix-sum (plans/carry.py — no per-group window ceiling) yields the
 running coverage count, and rows where the count enters/leaves zero
 are the merged interval boundaries, paired by a second carried prefix
-count. Same machinery as the width-1 rollup sweep and sessionize.
+count. Same machinery as the width-1 rollup sweep.
 """
 
 from __future__ import annotations

@@ -37,6 +37,9 @@ from ..plans.sql import ident
 
 PARTIAL_COLS = ("xduration", "xminstart", "xmaxend")
 
+#: the ``algorithm`` names ``rollup_regular`` accepts
+ALGORITHMS = ("explode", "sweep")
+
 
 def _nullsafe_broadcast_join(
     left: DataFrame,
@@ -130,16 +133,14 @@ def rollup_regular(
     group_dim: Optional[DataFrame] = None,
     carry_hints: Optional[dict] = None,
     extra_stats: bool = False,
-    cross_stats: Optional[Sequence[tuple]] = None,
 ) -> DataFrame:
     """Roll interval-measured values onto a regular period grid.
 
-    ``cross_stats=[(v1, v2), …]`` adds the additive cross-moment
-    partial ``sumxy_<v1>_<v2>`` (sum of v1*v2 x overlap-duration,
-    counted over rows where BOTH are non-null, with matching
-    ``nobsxy_<v1>_<v2>``) — exact time-weighted covariance/correlation
-    at any tier via ``finalize_rollup`` (``cov_<v1>_<v2>``), cascade-
-    exact like every other partial.
+    ``algorithm`` is ``"explode"`` (the default) or ``"sweep"``; any
+    other name raises ``RoleValidationError``. ``sweep`` applies to
+    ``width=1`` only and is exact for integer-valued series (it sums
+    +v/-v boundary deltas, which can leave ~1ulp residue on arbitrary
+    doubles); other widths take ``explode`` whatever is asked.
 
     ``extra_stats=True`` adds the ADDITIVE second-moment partial
     ``sumsq_<v>`` (sum of v^2 x overlap-duration) to every path, so
@@ -167,34 +168,12 @@ def rollup_regular(
     nobs_<v>/sumprod_<v> per value, xminstart, xmaxend — additive,
     mergeable with ``merge_partials``/``cascade``.
     """
+    if algorithm not in ALGORITHMS:
+        raise RoleValidationError(
+            f"unknown rollup algorithm {algorithm!r}; expected one of {ALGORITHMS}"
+        )
     group_vars = list(group_vars or [])
     value_vars = list(value_vars)
-    cross_stats = [tuple(p) for p in (cross_stats or [])]
-    for a, b in cross_stats:
-        if a not in value_vars or b not in value_vars:
-            raise RoleValidationError(
-                f"cross_stats pair ({a!r}, {b!r}) must name value_vars"
-            )
-    # the partial's column name is sumxy_<a>_<b>; underscores in value
-    # names can make two different pairs collide on one name, which
-    # finalize_rollup could then silently mis-resolve — reject upfront
-    seen_names: dict = {}
-    for a, b in cross_stats:
-        name = f"sumxy_{a}_{b}"
-        other = seen_names.setdefault(name, (a, b))
-        if other != (a, b):
-            raise RoleValidationError(
-                f"cross_stats pairs {other} and {(a, b)} both produce "
-                f"column {name!r}; rename the value columns"
-            )
-    for a, b in cross_stats:
-        for a2 in value_vars:
-            for b2 in value_vars:
-                if (a2, b2) != (a, b) and f"sumxy_{a2}_{b2}" == f"sumxy_{a}_{b}":
-                    raise RoleValidationError(
-                        f"value names make cross_stats column sumxy_{a}_{b} "
-                        f"ambiguous with pair ({a2!r}, {b2!r}); rename them"
-                    )
     if width <= 0:
         raise RoleValidationError("width must be a positive number of grid units")
     unknown = sorted(set(group_encoders or ()) - set(group_vars))
@@ -308,7 +287,6 @@ def rollup_regular(
             group_encoders, origin, partial, required_percentage,
             validate=validate, dim_user_supplied=group_dim is not None,
             carry_hints=carry_hints, extra_stats=extra_stats,
-            cross_stats=cross_stats,
         )
     if width == 1:
         # Unit-width special case (the hourly base tier hot path): every
@@ -329,20 +307,6 @@ def rollup_regular(
                 if extra_stats
                 else []
             ),
-            *[
-                F.sum(F.col(f"__v_{a}") * F.col(f"__v_{b}")).alias(f"sumxy_{a}_{b}")
-                for a, b in cross_stats
-            ],
-            *[
-                F.count(
-                    F.when(
-                        F.col(f"__v_{a}").isNotNull()
-                        & F.col(f"__v_{b}").isNotNull(),
-                        1,
-                    )
-                ).cast("long").alias(f"nobsxy_{a}_{b}")
-                for a, b in cross_stats
-            ],
         )
         cell = (o + F.col("period")).cast("long")
         agg = agg.withColumn("xminstart", cell).withColumn("xmaxend", cell).select(
@@ -352,8 +316,6 @@ def rollup_regular(
             *[f"nobs_{v}" for v in value_vars],
             *[f"sumprod_{v}" for v in value_vars],
             *([f"sumsq_{v}" for v in value_vars] if extra_stats else []),
-            *[f"sumxy_{a}_{b}" for a, b in cross_stats],
-            *[f"nobsxy_{a}_{b}" for a, b in cross_stats],
             "xminstart",
             "xmaxend",
         )
@@ -382,17 +344,6 @@ def rollup_regular(
                 if extra_stats
                 else []
             ),
-            *[
-                (F.col(f"__v_{a}") * F.col(f"__v_{b}") * dur).alias(f"__xy_{a}_{b}")
-                for a, b in cross_stats
-            ],
-            *[
-                F.when(
-                    F.col(f"__v_{a}").isNotNull() & F.col(f"__v_{b}").isNotNull(),
-                    dur,
-                ).otherwise(F.lit(0)).alias(f"__nxy_{a}_{b}")
-                for a, b in cross_stats
-            ],
         )
         agg = weighted.groupBy(*group_vars, "period").agg(
             F.sum("__dur").cast("long").alias("xduration"),
@@ -403,14 +354,6 @@ def rollup_regular(
                 if extra_stats
                 else []
             ),
-            *[
-                F.sum(f"__xy_{a}_{b}").alias(f"sumxy_{a}_{b}")
-                for a, b in cross_stats
-            ],
-            *[
-                F.sum(f"__nxy_{a}_{b}").cast("long").alias(f"nobsxy_{a}_{b}")
-                for a, b in cross_stats
-            ],
             F.min("__cs").alias("xminstart"),
             F.max("__ce").alias("xmaxend"),
         )
@@ -430,8 +373,6 @@ def rollup_regular(
                 *[f"nobs_{v}" for v in value_vars],
                 *[f"sumprod_{v}" for v in value_vars],
                 *([f"sumsq_{v}" for v in value_vars] if extra_stats else []),
-                *[f"sumxy_{a}_{b}" for a, b in cross_stats],
-                *[f"nobsxy_{a}_{b}" for a, b in cross_stats],
                 "xminstart",
                 "xmaxend",
             )
@@ -464,14 +405,12 @@ def _rollup_sweep_unit(
     dim_user_supplied: bool = False,
     carry_hints: Optional[dict] = None,
     extra_stats: bool = False,
-    cross_stats: Optional[Sequence[tuple]] = None,
 ) -> DataFrame:
     """Width-1 sweep backend for rollup_regular (see caller comment)."""
     from pyspark.sql import Window as _W
 
     group_vars = list(group_vars)
     value_vars = list(value_vars)
-    cross_stats = [tuple(p) for p in (cross_stats or [])]
     o = F.lit(int(origin))
 
     # One explode(sequence(0,1)) per row, signs/cells derived from the
@@ -524,17 +463,6 @@ def _rollup_sweep_unit(
         if extra_stats:
             v0 = F.coalesce(vc, F.lit(0.0))
             bcols.append((v0 * v0 * sign).alias(f"__dq_{v}"))
-    for a, b in cross_stats:
-        va = F.coalesce(F.col(f"__v_{a}"), F.lit(0.0))
-        vb = F.coalesce(F.col(f"__v_{b}"), F.lit(0.0))
-        both = (
-            F.col(f"__v_{a}").isNotNull() & F.col(f"__v_{b}").isNotNull()
-        )
-        bcols.append((va * vb * sign).alias(f"__dxy_{a}_{b}"))
-        bcols.append(
-            (F.when(both, F.lit(1)).otherwise(F.lit(0)) * sign)
-            .cast("long").alias(f"__dnxy_{a}_{b}")
-        )
     boundary = side.select(*bcols)
 
     agg = boundary.groupBy(*group_vars, "period").agg(
@@ -546,8 +474,6 @@ def _rollup_sweep_unit(
             if extra_stats
             else []
         ),
-        *[F.sum(f"__dxy_{a}_{b}").alias(f"__dxy_{a}_{b}") for a, b in cross_stats],
-        *[F.sum(f"__dnxy_{a}_{b}").alias(f"__dnxy_{a}_{b}") for a, b in cross_stats],
     )
 
     # Prefix-sum + lead over the delta frame. A window partitioned by
@@ -563,8 +489,6 @@ def _rollup_sweep_unit(
     ]
     if extra_stats:
         sum_cols += [f"__dq_{v}" for v in value_vars]
-    for a, b in cross_stats:
-        sum_cols += [f"__dxy_{a}_{b}", f"__dnxy_{a}_{b}"]
     hints = dict(carry_hints or {})
     if "groups" not in hints and dim is not None and dim_user_supplied:
         # the caller's dim is tiny by contract; its count is the exact
@@ -605,11 +529,6 @@ def _rollup_sweep_unit(
             if extra_stats
             else []
         ),
-        *[_run(f"__dxy_{a}_{b}", f"__rxy_{a}_{b}") for a, b in cross_stats],
-        *[
-            _run(f"__dnxy_{a}_{b}", f"__rnxy_{a}_{b}", cast="long")
-            for a, b in cross_stats
-        ],
     ).filter(F.col("__rc") > 0)
 
     cells = runs.select(
@@ -631,16 +550,6 @@ def _rollup_sweep_unit(
             if extra_stats
             else []
         ),
-        *[
-            F.when(
-                F.col(f"__rnxy_{a}_{b}") > 0, F.col(f"__rxy_{a}_{b}")
-            ).alias(f"sumxy_{a}_{b}")
-            for a, b in cross_stats
-        ],
-        *[
-            F.col(f"__rnxy_{a}_{b}").cast("long").alias(f"nobsxy_{a}_{b}")
-            for a, b in cross_stats
-        ],
     )
     cell = (o + F.col("period")).cast("long")
     out = cells.withColumn("xminstart", cell).withColumn("xmaxend", cell)
@@ -658,8 +567,6 @@ def _rollup_sweep_unit(
         *[f"nobs_{v}" for v in value_vars],
         *[f"sumprod_{v}" for v in value_vars],
         *([f"sumsq_{v}" for v in value_vars] if extra_stats else []),
-        *[f"sumxy_{a}_{b}" for a, b in cross_stats],
-        *[f"nobsxy_{a}_{b}" for a, b in cross_stats],
         "xminstart",
         "xmaxend",
     )
@@ -701,43 +608,6 @@ def finalize_rollup(
             .cast("double")
             .alias(v)
         )
-    for c in partials.columns:
-        if c.startswith("sumxy_"):
-            pair = c[len("sumxy_"):]
-            nxy = F.col(f"nobsxy_{pair}")
-            matches = [
-                (v1, v2)
-                for v1 in value_vars
-                for v2 in value_vars
-                if f"sumxy_{v1}_{v2}" == c
-            ]
-            if len(matches) > 1:
-                raise RoleValidationError(
-                    f"column {c!r} is ambiguous between cross_stats pairs "
-                    f"{matches}; rename the value columns"
-                )
-            if not matches:
-                continue
-            a, b = matches[0]
-            # cov over cells where BOTH values present; per-variable
-            # means restricted to... the additive frame only carries
-            # joint sums, so the exact covariance uses the JOINT means
-            # E[ab]-E[a]E[b] computed over the joint support when the
-            # variables share it (always, when neither is ever NULL —
-            # the common case; with partial missingness this is the
-            # pairwise-complete covariance with marginal means, a
-            # documented approximation)
-            mean_a = F.col(f"sumprod_{a}") / F.col(f"nobs_{a}")
-            mean_b = F.col(f"sumprod_{b}") / F.col(f"nobs_{b}")
-            cov = F.col(c) / nxy - mean_a * mean_b
-            # same coverage mask as the means/variances, applied to the
-            # PAIRWISE support: a period whose mean/var fail the
-            # required_percentage must not report a covariance either
-            cols.append(
-                F.when(
-                    (nxy > 0) & (F.lit(100.0) * nxy / ydur >= req), cov
-                ).cast("double").alias(f"cov_{pair}")
-            )
     for v in value_vars:
         if f"sumsq_{v}" in partials.columns:
             mean = F.col(f"sumprod_{v}") / F.col(f"nobs_{v}")
@@ -778,25 +648,6 @@ def merge_partials(
             F.sum(f"sumsq_{v}").alias(f"sumsq_{v}")
             for v in value_vars
             if f"sumsq_{v}" in df.columns
-        ],
-        *[
-            F.sum(c).alias(c)
-            for c in df.columns
-            if c.startswith("sumxy_")
-        ],
-        *[
-            F.sum(c).cast("long").alias(c)
-            for c in df.columns
-            if c.startswith("nobsxy_")
-        ],
-        # HLL distinct-count sketches (operators/distinct.py) merge by
-        # register-wise union — joining them onto an additive-partial
-        # frame before a tier write makes distinct counts ride the
-        # same catalog/cascade machinery as every other partial
-        *[
-            F.hll_union_agg(F.col(c)).alias(c)
-            for c in df.columns
-            if c.startswith("hll_")
         ],
         F.min("xminstart").alias("xminstart"),
         F.max("xmaxend").alias("xmaxend"),

@@ -14,10 +14,10 @@ panels). The cure used across the engine is the same three-step shape:
    frame — chained with a window over buckets and broadcast-joined
    back null-safely (group keys may be NULL, tests.R:564-580).
 
-Round 2 hand-rolled this three times (interval_avg integrity scan,
-remove_overlaps sweep, as-of carry); this module is the single shared
-implementation, plus the GROUP-CARDINALITY GUARD the r2 verdict asked
-for: the carry frame is one row per (group, bucket), so with many
+Round 2 hand-rolled this in each scan that needed it (the interval_avg
+integrity scan and the remove_overlaps sweep among them); this module
+is the single shared implementation, plus the GROUP-CARDINALITY GUARD
+the r2 verdict asked for: the carry frame is one row per (group, bucket), so with many
 groups the broadcast would be groups x buckets rows — while a plain
 per-group window is ALREADY parallel when groups are many. The plan
 therefore buckets only when the estimated group count is below
@@ -105,7 +105,6 @@ def plan_buckets(
     gcols: Sequence[str],
     t_col: str,
     *,
-    n_buckets: Optional[int] = None,
     group_count_hint: Optional[int] = None,
     bounds_hint: Optional[tuple] = None,
     carry_cap_rows: int = CARRY_CAP_ROWS,
@@ -178,9 +177,7 @@ def plan_buckets(
             _bucket_only(df), gcols, False, False, 1,
             lo=lo, hi=hi, est_groups=est_groups,
         )
-    if n_buckets is None:
-        n_buckets = max(2, par * 4)
-    n_buckets = max(2, min(n_buckets, carry_cap_rows // max(1, est_groups)))
+    n_buckets = max(2, min(par * 4, carry_cap_rows // max(1, est_groups)))
     width = max(1, (hi - lo) // n_buckets + 1)
     out = df.withColumn(
         "__bk", F.expr(f"CAST(({ident(t_col)} - ({lo})) / {width} AS BIGINT)")
@@ -190,11 +187,7 @@ def plan_buckets(
     )
 
 
-def attach_carry(
-    plan: CarryPlan,
-    carries: Sequence[Carry],
-    df: Optional[DataFrame] = None,
-) -> DataFrame:
+def attach_carry(plan: CarryPlan, carries: Sequence[Carry]) -> DataFrame:
     """Attach each :class:`Carry` column to ``plan.df``.
 
     Bucketed plans build the carry frame — one row per (group…, bucket):
@@ -208,14 +201,8 @@ def attach_carry(
     carry frame, no broadcast). The per-bucket window at the call site
     is then exactly the per-group window, and coalescing with a NULL
     carry is the identity. Same call-site code either way.
-
-    ``df`` overrides the frame to aggregate/attach (must carry the
-    plan's ``__bk`` column and group keys) — for multi-stage scans
-    where a later carry aggregates columns derived after an earlier
-    attach (e.g. sessionize: stage 1 carries the previous timestamp,
-    stage 2 prefix-sums the session-start flags computed from it).
     """
-    src = plan.df if df is None else df
+    src = plan.df
     if not plan.bucketed:
         return src.selectExpr(
             "*", *[f"IF(false, {c.expr}, NULL) AS {ident(c.name)}" for c in carries]

@@ -20,6 +20,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 
+from ..errors import RoleValidationError
 from ..operators.rollup import cascade, rollup_regular
 from ..runner import ResumableJob
 from ..sources.catalog import TierCatalog
@@ -62,10 +63,10 @@ def ingest_batch(
 
     ordered = sorted(catalog.tiers, key=catalog.tiers.get)
     if ordered and ordered[0] != base_tier:
-        raise ValueError(f"base tier {base_tier} must be the finest tier")
+        raise RoleValidationError(f"base tier {base_tier} must be the finest tier")
     for tier in ordered:
         if catalog.tiers[tier] % base_width != 0:
-            raise ValueError(
+            raise RoleValidationError(
                 f"tier {tier} width {catalog.tiers[tier]} does not nest in "
                 f"base tier width {base_width}"
             )

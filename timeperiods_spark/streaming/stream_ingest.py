@@ -1,7 +1,7 @@
 """Structured Streaming front-ends for the tier catalog.
 
 The reference is batch-only (SURVEY.md §2.3); the retention tiers are
-continuous aggregates = repeated incremental batch. Two idiomatic
+continuous aggregates = repeated incremental batch. Three idiomatic
 Spark bridges are provided:
 
 ``stream_ingest``
@@ -21,6 +21,10 @@ Spark bridges are provided:
     operator surface; interval-valued measurements still go through
     ``stream_ingest`` (windows can't split a row across periods —
     that overlap-weighting is exactly what the batch core does).
+
+``stateful_locf_stream``
+    Streaming gap-fill/LOCF as a custom stateful operator: the last
+    observation per group is carried across micro-batch boundaries.
 """
 
 from __future__ import annotations
@@ -102,43 +106,6 @@ def windowed_rollup_stream(
             "sum_value",
             "first_ts",
             "last_ts",
-        )
-    )
-
-
-def distinct_rollup_stream(
-    events: DataFrame,
-    ts_col: str,
-    key_col: str,
-    group_cols: Sequence[str],
-    *,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-    lgk: int = 12,
-) -> DataFrame:
-    """Watermarked distinct-count sketch partials of a point-event
-    stream: one HLL sketch per (group, window) — the streaming front
-    of ``operators.distinct``. The emitted BINARY sketch column merges
-    downstream with ``hll_union_agg`` (``distinct_cascade`` /
-    ``merge_partials``), so a streaming hourly tier cascades into the
-    batch daily/weekly tiers with no raw replay. NULL keys are
-    excluded (COUNT DISTINCT semantics); late rows beyond the
-    watermark are dropped by the state store."""
-    return (
-        events.filter(F.col(key_col).isNotNull())
-        .withWatermark(ts_col, watermark)
-        .groupBy(*group_cols, F.window(ts_col, window_duration).alias("win"))
-        .agg(
-            F.hll_sketch_agg(F.col(key_col), F.lit(int(lgk)))
-            .alias(f"hll_{key_col}"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select(
-            *group_cols,
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            f"hll_{key_col}",
-            "n_events",
         )
     )
 
@@ -226,42 +193,5 @@ def stateful_locf_stream(
 
     return events.groupBy(*group_cols).applyInPandasWithState(
         fill, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def sessionized_rollup_stream(
-    events: DataFrame,
-    ts_col: str,
-    value_col: str,
-    group_cols: Sequence[str],
-    *,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked SESSION-window rollup of a point-event stream —
-    Spark's native ``session_window`` (dynamic, gap-merged windows in
-    the state store), the streaming counterpart of the batch row-level
-    ``operators.sessions.sessionize``. Append-mode-ready: a session
-    closes (and emits) once the watermark passes its end + gap. Use the
-    batch operator when every ROW needs its session ordinal; use this
-    when you need per-session aggregates continuously."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(*group_cols, F.session_window(ts_col, gap).alias("win"))
-        .agg(
-            F.count(value_col).alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
-        )
-        .select(
-            *group_cols,
-            F.col("win.start").alias("session_start"),
-            F.col("win.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-            "first_ts",
-            "last_ts",
-        )
     )
 

@@ -3,7 +3,9 @@
 Runs every __spark_entry__.queries() entry at a given sf dir and
 compares against oracle_sql() via DuckDB: row count, column names
 (sorted), and order-insensitive value multiset (floats compared after
-the 6dp rounding both sides already apply).
+the 6dp rounding both sides already apply). Prints one line per query
+and a last line ``oracle: N OK, M ROWS-ONLY, K FAIL``; Spark's console
+progress bar is off so that every result line starts with its name.
 """
 
 from __future__ import annotations
@@ -48,7 +50,12 @@ def normalize(rows, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = sys.argv[2:] or None
-    spark = get_spark("oracle-check", master="local[8]", driver_memory="8g")
+    spark = get_spark(
+        "oracle-check",
+        master="local[8]",
+        driver_memory="8g",
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
@@ -56,7 +63,7 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failures = 0
+    failures = rows_only = passed = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -74,6 +81,8 @@ def main():
                 if mism:
                     failures += 1
                     status = "FAIL"
+                else:
+                    rows_only += 1
             print(f"{name:35s} {status:9s} {extra}  spark={t1-t0:.1f}s")
             continue
         drows = con.execute(oracles[name]).fetchall()
@@ -99,10 +108,12 @@ def main():
                     print("   spark:", x)
                     print("   duck :", y)
         else:
+            passed += 1
             print(
                 f"{name:35s} OK        rows={len(srows)}"
                 f"  spark={t1-t0:.1f}s duck={t2-t1:.1f}s"
             )
+    print(f"oracle: {passed} OK, {rows_only} ROWS-ONLY, {failures} FAIL")
     spark.stop()
     sys.exit(1 if failures else 0)
 

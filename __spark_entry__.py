@@ -1053,115 +1053,6 @@ FROM a
 SQL_TIER_VARIANCE = SQL_TIER_VARIANCE.format(tok=token_table_oracle_sql(N_TOKEN_DOCS))
 
 
-def q_merge_intervals(spark, sf_dir):
-    """Interval union (gaps-and-islands coverage): merge overlapping or
-    closed-grid-adjacent measurement intervals per group. The Spark
-    side is a boundary sweep with carried prefix sums; the twin is the
-    classic running-max island SQL."""
-    from timeperiods_spark import merge_intervals
-
-    ev = _read(spark, sf_dir, "events")
-    iv = ev.select(
-        (F.col("user_id") % 7).cast("int").alias("g"),
-        ((F.col("event_id") * 7) % 10007).cast("int").alias("s"),
-        (
-            (F.col("event_id") * 7) % 10007
-            + (F.col("event_id") % 13) * 3
-            + 2
-        ).cast("int").alias("e"),
-    )
-    out = merge_intervals(iv, ("s", "e"), ["g"])
-    return out.select(
-        "g",
-        F.col("s").cast("long").alias("s"),
-        F.col("e").cast("long").alias("e"),
-        F.col("n_source_intervals").cast("long").alias("n_source_intervals"),
-    )
-
-
-SQL_MERGE_INTERVALS = """
-WITH iv AS (
-  SELECT CAST(user_id % 7 AS INT) AS g,
-         CAST((event_id * 7) % 10007 AS BIGINT) AS s,
-         CAST((event_id * 7) % 10007 + (event_id % 13) * 3 + 2 AS BIGINT) AS e
-  FROM events
-),
-ord AS (
-  SELECT g, s, e,
-         MAX(e) OVER (PARTITION BY g ORDER BY s, e
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_max
-  FROM iv
-),
-flg AS (
-  SELECT g, s, e,
-         CASE WHEN prev_max IS NULL OR s > prev_max + 1 THEN 1 ELSE 0 END AS brk
-  FROM ord
-),
-isl AS (
-  SELECT g, s, e,
-         SUM(brk) OVER (PARTITION BY g ORDER BY s, e
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS island
-  FROM flg
-)
-SELECT g, MIN(s) AS s, MAX(e) AS e,
-       CAST(COUNT(*) AS BIGINT) AS n_source_intervals
-FROM isl GROUP BY g, island
-"""
-
-
-def q_interval_difference(spark, sf_dir):
-    """Coverage subtraction (x minus y): event activity minus regular
-    maintenance windows. The twin materializes both cell sets, EXCEPTs
-    them, and re-forms islands with the c - row_number() trick."""
-    from timeperiods_spark import interval_difference
-
-    ev = _read(spark, sf_dir, "events")
-    base = (F.col("event_id") * 7) % 10007
-    x = ev.select(
-        (F.col("user_id") % 7).cast("int").alias("g"),
-        base.cast("int").alias("s"),
-        (base + (F.col("event_id") % 13) * 3 + 2).cast("int").alias("e"),
-    )
-    y = x.select("g").distinct().crossJoin(
-        spark.range(21).select(
-            (F.col("id") * 500).cast("int").alias("s"),
-            (F.col("id") * 500 + 99).cast("int").alias("e"),
-        )
-    )
-    out = interval_difference(x, y, ("s", "e"), ["g"])
-    return out.select(
-        "g",
-        F.col("s").cast("long").alias("s"),
-        F.col("e").cast("long").alias("e"),
-    )
-
-
-SQL_INTERVAL_DIFFERENCE = """
-WITH x AS (
-  SELECT CAST(user_id % 7 AS INT) AS g,
-         CAST((event_id * 7) % 10007 AS BIGINT) AS s,
-         CAST((event_id * 7) % 10007 + (event_id % 13) * 3 + 2 AS BIGINT) AS e
-  FROM events
-),
-y AS (
-  SELECT g, CAST(500 * k AS BIGINT) AS s, CAST(500 * k + 99 AS BIGINT) AS e
-  FROM (SELECT DISTINCT CAST(user_id % 7 AS INT) AS g FROM events)
-  CROSS JOIN (SELECT range AS k FROM range(21))
-),
-cx AS (SELECT DISTINCT g, unnest(generate_series(s, e)) AS c FROM x),
-cy AS (SELECT DISTINCT g, unnest(generate_series(s, e)) AS c FROM y),
-cells AS (SELECT g, c FROM cx EXCEPT SELECT g, c FROM cy),
-isl AS (
-  SELECT g, c, c - ROW_NUMBER() OVER (PARTITION BY g ORDER BY c) AS grp
-  FROM cells
-)
-SELECT g, CAST(MIN(c) AS BIGINT) AS s, CAST(MAX(c) AS BIGINT) AS e
-FROM isl GROUP BY g, grp
-"""
-
-
 # --------------------------------------------------------------------
 # event-series queries (events table, daily means)
 # --------------------------------------------------------------------
@@ -1387,13 +1278,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "gorilla_roundtrip": q_gorilla_roundtrip,
         "running_max_events": q_running_max,
         "tier_variance_daily": q_tier_variance,
-        "merge_intervals_events": q_merge_intervals,
-        "interval_difference_events": q_interval_difference,
         "iwa_sorted_validated": q_iwa_sorted_validated,
         "overlap_join_weeks": q_overlap_join,
         "overlap_join_bin_left": q_overlap_join_bin_left,
         "rollup_ohlc_weekly": q_ohlc_weekly,
-        **_PIPELINE_QUERIES,
     }
 
 
@@ -1416,252 +1304,8 @@ def oracle_sql() -> dict[str, str]:
         # gorilla_roundtrip: bit-packed binary codec, not SQL-expressible
         "running_max_events": SQL_RUNNING_MAX,
         "tier_variance_daily": SQL_TIER_VARIANCE,
-        "merge_intervals_events": SQL_MERGE_INTERVALS,
-        "interval_difference_events": SQL_INTERVAL_DIFFERENCE,
         "iwa_sorted_validated": SQL_IWA_SORTED,
         "overlap_join_weeks": SQL_OVERLAP_JOIN,
         "overlap_join_bin_left": SQL_OVERLAP_JOIN_BIN_LEFT,
         "rollup_ohlc_weekly": SQL_OHLC_WEEKLY,
-        **_PIPELINE_ORACLES,
     }
-
-
-# --------------------------------------------------------------------
-# training-data pipeline queries (documents / token tables)
-# --------------------------------------------------------------------
-
-
-def q_hash_sample(spark, sf_dir):
-    """Deterministic partition-independent Bernoulli sample: the
-    membership predicate is a pure row expression both engines compute
-    bit-identically (portable MINSTD rounds, seed enters as a
-    multiplier)."""
-    from timeperiods_spark.operators.sampling import hash_sample
-
-    docs = _read(spark, sf_dir, "documents")
-    return hash_sample(docs, "doc_id", 0.3, seed=1).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source"
-    )
-
-
-def _sampling_sql_parts():
-    from timeperiods_spark.operators.sampling import hash_unit_sql
-
-    return hash_unit_sql("doc_id", 1), hash_unit_sql("doc_id", 2)
-
-
-_HU1, _HU2 = _sampling_sql_parts()
-
-SQL_HASH_SAMPLE = f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id, source
-FROM documents
-WHERE {_HU1} < 0.3
-"""
-
-
-def q_hash_sample_n(spark, sf_dir):
-    """Exact-count stratified sample: the 10 smallest-hash docs per
-    source (two-phase rank in Spark; the oracle is the plain
-    ROW_NUMBER formulation over the identical portable hash)."""
-    from timeperiods_spark import hash_sample_n
-
-    docs = _read(spark, sf_dir, "documents")
-    return hash_sample_n(docs, "doc_id", 10, ["source"], seed=3).select(
-        F.col("doc_id").cast("long").alias("doc_id"), "source"
-    )
-
-
-def _hu_sql(seed):
-    from timeperiods_spark.operators.sampling import hash_unit_sql
-
-    return hash_unit_sql("doc_id", seed)
-
-
-SQL_HASH_SAMPLE_N = f"""
-WITH u AS (SELECT doc_id, source, {_hu_sql(3)} AS uu FROM documents),
-r AS (
-  SELECT doc_id, source,
-         ROW_NUMBER() OVER (PARTITION BY source ORDER BY uu, doc_id) AS rn
-  FROM u
-)
-SELECT CAST(doc_id AS BIGINT) AS doc_id, source FROM r WHERE rn <= 10
-"""
-
-
-def q_source_mix(spark, sf_dir):
-    """Token-budget data mixing: per-source rates = min(1,
-    share*target/total) from one totals aggregate, then the row-pure
-    hash predicate. src_9 (the dominant source) gets 2/3 of the
-    budget, src_8 one third; every other source rate 0 — both rates
-    land strictly inside (0, 1) so real Bernoulli selection runs."""
-    from timeperiods_spark.operators.sampling import source_mix
-
-    t = token_table(spark, N_TOKEN_DOCS, with_interval=False)
-    out, _rates = source_mix(
-        t, "doc_id", "n_tok", "source",
-        target_total=100_000,
-        mix_weights={"src_9": 2.0, "src_8": 1.0},
-        seed=2,
-    )
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "source",
-        F.col("n_tok").cast("long").alias("n_tok"),
-    )
-
-
-SQL_SOURCE_MIX = f"""
-WITH tok AS ({token_table_oracle_sql(N_TOKEN_DOCS)}),
-tot AS (
-  SELECT source, CAST(SUM(n_tok) AS DOUBLE) AS total
-  FROM tok GROUP BY source
-),
-rates AS (
-  SELECT source,
-         LEAST(1.0,
-           (CASE source WHEN 'src_9' THEN 2.0/3.0
-                        WHEN 'src_8' THEN 1.0/3.0
-                        ELSE 0.0 END) * 100000 / total) AS rate
-  FROM tot
-)
-SELECT CAST(t.doc_id AS BIGINT) AS doc_id, t.source,
-       CAST(t.n_tok AS BIGINT) AS n_tok
-FROM tok t JOIN rates r ON t.source = r.source
-WHERE {_HU2} < r.rate
-"""
-
-
-def q_quality_sample(spark, sf_dir):
-    """Per-row-rate deterministic sampling (curriculum / quality
-    weighting): each document keeps with probability LEAST(1,
-    n_chars/500) — longer docs survive more often — decided by the
-    same portable row-pure hash as the fraction path."""
-    from timeperiods_spark.operators.sampling import hash_sample
-
-    docs = _read(spark, sf_dir, "documents").withColumn(
-        "__rate", F.least(F.lit(1.0), F.col("n_chars") / F.lit(500.0))
-    )
-    return (
-        hash_sample(docs, "doc_id", rate_col="__rate", seed=1)
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "source",
-            F.col("n_chars").cast("long").alias("n_chars"),
-        )
-    )
-
-
-SQL_QUALITY_SAMPLE = f"""
-SELECT CAST(doc_id AS BIGINT) AS doc_id, source,
-       CAST(n_chars AS BIGINT) AS n_chars
-FROM documents
-WHERE {_HU1} < LEAST(1.0, n_chars / 500.0)
-"""
-
-
-def q_duplicate_spans(spark, sf_dir):
-    """Substring-level dedup (Lee et al. ACL'22 style, windowed-hash
-    formulation): maximal duplicated >=k-token runs per document.
-    Spark side = window explode + map-side-combined count + join-back
-    + the merge_intervals carried sweep; twin = the same pipeline with
-    the running-max island SQL. Exact window-text keys both sides
-    (hash_windows=True is the at-scale variant; same results modulo
-    2^-64 collisions)."""
-    from timeperiods_spark import duplicate_spans
-
-    docs = _read(spark, sf_dir, "documents")
-    out = duplicate_spans(docs, "doc_id", "text", k=12, min_count=2)
-    return out.select(
-        "doc_id",
-        F.col("span_start").cast("long").alias("span_start"),
-        F.col("span_end").cast("long").alias("span_end"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_windows").cast("long").alias("n_windows"),
-    )
-
-
-SQL_DUPLICATE_SPANS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tok FROM documents
-),
-pos AS (
-  SELECT doc_id, CAST(t.i - 1 AS BIGINT) AS pos,
-         array_to_string(list_slice(tok, t.i, t.i + 11), chr(31)) AS win
-  FROM toks, unnest(generate_series(1, len(tok) - 11)) AS t(i)
-  WHERE len(tok) >= 12
-),
-dup AS (
-  SELECT win FROM pos GROUP BY win HAVING COUNT(*) >= 2
-),
-dp AS (
-  SELECT p.doc_id, p.pos AS s, p.pos + 11 AS e
-  FROM pos p JOIN dup USING (win)
-),
-ord AS (
-  SELECT doc_id, s, e,
-         MAX(e) OVER (PARTITION BY doc_id ORDER BY s
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prev_max
-  FROM dp
-),
-isl AS (
-  SELECT doc_id, s, e,
-         SUM(CASE WHEN prev_max IS NULL OR s > prev_max + 1
-                  THEN 1 ELSE 0 END)
-           OVER (PARTITION BY doc_id ORDER BY s
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-  FROM ord
-)
-SELECT doc_id, MIN(s) AS span_start, MAX(e) AS span_end,
-       CAST(MAX(e) - MIN(s) + 1 AS BIGINT) AS n_tokens,
-       CAST(COUNT(*) AS BIGINT) AS n_windows
-FROM isl GROUP BY doc_id, island
-"""
-
-
-def q_duplicate_span_stats(spark, sf_dir):
-    """Per-document duplication dashboard over the span output:
-    every doc emits a row, clean docs zero-filled."""
-    from timeperiods_spark import duplicate_span_stats
-
-    docs = _read(spark, sf_dir, "documents")
-    out = duplicate_span_stats(docs, "doc_id", "text", k=12)
-    return out.select(
-        "doc_id",
-        F.col("n_tok").cast("long").alias("n_tok"),
-        F.col("dup_tokens").cast("long").alias("dup_tokens"),
-        F.round("dup_frac", 6).alias("dup_frac"),
-    )
-
-
-SQL_DUPLICATE_SPAN_STATS = f"""
-WITH spans AS ({SQL_DUPLICATE_SPANS}),
-per_doc AS (
-  SELECT doc_id, SUM(n_tokens) AS dup_tokens FROM spans GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok,
-       CAST(COALESCE(p.dup_tokens, 0) AS BIGINT) AS dup_tokens,
-       ROUND(COALESCE(p.dup_tokens, 0)
-             / GREATEST(len(string_split(d.text, ' ')), 1), 6) AS dup_frac
-FROM documents d LEFT JOIN per_doc p USING (doc_id)
-"""
-
-
-_PIPELINE_QUERIES = {
-    "hash_sample_docs": q_hash_sample,
-    "source_mix_tokens": q_source_mix,
-    "duplicate_spans_docs": q_duplicate_spans,
-    "duplicate_span_stats_docs": q_duplicate_span_stats,
-    "quality_weighted_sample": q_quality_sample,
-    "hash_sample_n_per_source": q_hash_sample_n,
-}
-
-_PIPELINE_ORACLES = {
-    "hash_sample_docs": SQL_HASH_SAMPLE,
-    "source_mix_tokens": SQL_SOURCE_MIX,
-    "duplicate_spans_docs": SQL_DUPLICATE_SPANS,
-    "duplicate_span_stats_docs": SQL_DUPLICATE_SPAN_STATS,
-    "quality_weighted_sample": SQL_QUALITY_SAMPLE,
-    "hash_sample_n_per_source": SQL_HASH_SAMPLE_N,
-}

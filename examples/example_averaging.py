@@ -1,7 +1,6 @@
-"""PySpark equivalent of the reference's example_averaging.R
-(/root/reference/example_averaging.R): weekly predictions per monitor
-averaged to calendar years, then to per-monitor random 15-day periods,
-each cross-checked against the explode oracle.
+"""PySpark equivalent of the reference's example_averaging.R: weekly
+predictions per monitor averaged to calendar years, then to per-monitor
+random 15-day periods.
 
 Run: python examples/example_averaging.py
 """
@@ -16,14 +15,7 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from timeperiods_spark import (
-    get_spark,
-    grouped_cartesian,
-    interval_weighted_avg,
-    interval_weighted_avg_slow,
-)
+from timeperiods_spark import get_spark, grouped_cartesian, interval_weighted_avg
 
 
 def main() -> None:
@@ -61,21 +53,6 @@ def main() -> None:
     # 2017 is incomplete -> NULL under required_percentage=100, visible
     # in xduration (days observed) vs yduration (365)
 
-    slow = interval_weighted_avg_slow(
-        x, y, ("start_date", "end_date"), ("value1", "value2"), ("id",)
-    )
-
-    def rounded(df):
-        return df.withColumn("value1", F.round("value1", 9)).withColumn(
-            "value2", F.round("value2", 9)
-        )
-
-    diff = (
-        rounded(out).unionByName(rounded(slow))
-        .groupBy(out.columns).count().filter("count != 2").count()
-    )
-    print("fast == slow oracle (9dp):", diff == 0)
-
     # different averaging periods per monitor: random 15-day windows
     s2 = []
     d = dt.date(1999, 1, 1)
@@ -94,14 +71,6 @@ def main() -> None:
     )
     print("per-monitor 15-day windows:")
     out2.show(6)
-    slow2 = interval_weighted_avg_slow(
-        x, y2, ("start_date", "end_date"), ("value1", "value2"), ("id",)
-    )
-    diff2 = (
-        rounded(out2).unionByName(rounded(slow2))
-        .groupBy(out2.columns).count().filter("count != 2").count()
-    )
-    print("fast == slow oracle (9dp):", diff2 == 0)
     spark.stop()
 
 

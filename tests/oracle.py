@@ -1,12 +1,13 @@
-"""Expansion-based oracle for interval_weighted_avg.
+"""Expansion-based reference oracle for interval_weighted_avg (tests only).
 
 Reimplements ``interval_weighted_avg_slow_f`` from the reference
-(/root/reference/timeperiod_functions.R:360-523): expand every interval
+(timeperiod_functions.R:360-523): expand every interval
 to one row per grid unit (O16), equi-join the expansions on
 (t, group) (O17), and aggregate per y period (O18-O19). Same output
 contract as the fast path; exists purely for differential testing
 (reference README.md:275-291) — explode() over wide intervals is
-deliberately memory-hungry and must never be used at scale.
+deliberately memory-hungry and must never be used at scale. It is not
+part of the package: the engine never calls it.
 """
 
 from __future__ import annotations
@@ -15,8 +16,8 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..plans.strategy import request_stats
-from .interval_avg import _canonical, _ungrid, _validate
+from timeperiods_spark.operators.interval_avg import _canonical, _ungrid, _validate
+from timeperiods_spark.plans.strategy import request_stats
 
 
 def interval_weighted_avg_slow(

@@ -64,9 +64,8 @@ def _intervals(spark, seed: int):
 
 
 def test_repeated_calls_bounded_storage(spark, clean_caches):
-    """N repeated remove_overlaps + merge_intervals calls hold at most
-    one cached intermediate per call-site, not N."""
-    from timeperiods_spark.operators.interval_union import merge_intervals
+    """N repeated remove_overlaps calls hold at most `keep` cached
+    intermediates, not N."""
     from timeperiods_spark.operators.overlaps import remove_overlaps
 
     high_water = 0
@@ -74,21 +73,16 @@ def test_repeated_calls_bounded_storage(spark, clean_caches):
         remove_overlaps(  # the SQL sweep, which persists its base
             _intervals(spark, i), ["s", "e"], group_vars=["g"], join_strategy="bin"
         ).count()
-        merge_intervals(
-            _intervals(spark, i), ["s", "e"], group_vars=["g"]
-        ).count()
         high_water = max(high_water, _n_cached(spark))
-    # two per-call FAMILIES (remove_overlaps.base,
-    # merge_intervals.deltas), each FIFO-bounded at keep=2 (r5 item 6:
-    # shared tags silently recompute when a pipeline holds several lazy
-    # results); async unpersist may briefly hold one stale frame per
-    # family
-    assert high_water <= 6, f"storage pool grew to {high_water} cached RDDs"
+    # one per-call family, FIFO-bounded at keep=2 (r5 item 6: shared
+    # tags silently recompute when a pipeline holds several lazy
+    # results); async unpersist may briefly hold one stale frame
+    assert high_water <= 3, f"storage pool grew to {high_water} cached RDDs"
     fams = {t.split("#")[0] for t in cachectl.managed_tags()}
-    assert fams == {"merge_intervals.deltas", "remove_overlaps.base"}
-    assert len(cachectl.managed_tags()) <= 4  # keep=2 per family
+    assert fams == {"remove_overlaps.base"}
+    assert len(cachectl.managed_tags()) <= 2  # keep=2
     released = cachectl.release()
-    assert 2 <= released <= 4
+    assert 1 <= released <= 2
     assert cachectl.managed_tags() == []
     assert _wait_cached_at_most(spark, 0) == 0
 

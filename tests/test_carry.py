@@ -77,9 +77,26 @@ def test_running_max_bucketed_equals_plain(spark, series):
 
 
 def test_running_max_ungrouped_not_single_task(spark, series):
+    """The ungrouped path is always bucketed, and its carry gives the
+    plain window's values across bucket boundaries, NULLs included."""
+    from pyspark.sql import Window
+
     out = running_max(series, "v", ["t"])
     p = _plan(out)
     assert "hashpartitioning(__bk" in p, p[:1200]
+
+    df = series.withColumn(
+        "v", F.when(F.col("t") % 17 == 0, None).otherwise(F.col("v"))
+    )
+    got = sorted(
+        (r["t"], r["out"])
+        for r in running_max(df, "v", ["t"], out_col="out").collect()
+    )
+    w = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, 0)
+    want = sorted(
+        (r["t"], r["out"]) for r in df.withColumn("out", F.max("v").over(w)).collect()
+    )
+    assert len(got) == 2000 and got == want
 
 
 def test_running_max_non_numeric_order_raises_ungrouped(spark):

@@ -9,10 +9,10 @@ import datetime as dt
 import pytest
 
 from timeperiods_spark import interval_weighted_avg
-from timeperiods_spark.operators.interval_avg_slow import interval_weighted_avg_slow
 
 from .conftest import assert_df_equal
 from . import fixtures as FX
+from .oracle import interval_weighted_avg_slow
 
 
 def _run_both(spark, builder, required=100.0, strategy="auto", **kw):

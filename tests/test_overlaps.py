@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 
 from timeperiods_spark import interval_weighted_avg
 from timeperiods_spark.operators.cross import grouped_cartesian
-from timeperiods_spark.operators.interval_avg_slow import interval_weighted_avg_slow
 from timeperiods_spark.operators.overlaps import (
     check_no_overlaps,
     remove_overlaps,
@@ -20,6 +19,7 @@ from timeperiods_spark.operators.overlaps import (
 from timeperiods_spark.errors import OverlapError, RoleValidationError
 
 from .conftest import assert_df_equal
+from .oracle import interval_weighted_avg_slow
 
 
 def test_canonical_case(spark):
@@ -309,182 +309,6 @@ def test_verbose_flag_prints_steps(spark, capsys):
     interval_weighted_avg(x, y, ("s", "e"), ("v",), None, 50.0, verbose=True).collect()
     out = capsys.readouterr().out
     assert "x integrity" in out and "join_strategy" in out
-
-
-def test_merge_intervals_semantics(spark):
-    """Union coverage: overlap and closed-grid adjacency merge, gaps
-    split; n_source_intervals counts absorbed inputs."""
-    from timeperiods_spark import merge_intervals
-
-    rows = [
-        ("a", 1, 5), ("a", 5, 10),    # overlap -> one
-        ("a", 11, 12),                # adjacent (10+1=11) -> merges too
-        ("a", 20, 25),                # gap -> separate
-        ("b", 3, 3), ("b", 7, 8),
-    ]
-    df = spark.createDataFrame(rows, "g string, s int, e int")
-    got = sorted(
-        (r["g"], r["s"], r["e"], r["n_source_intervals"])
-        for r in merge_intervals(df, ("s", "e"), ["g"]).collect()
-    )
-    assert got == [
-        ("a", 1, 12, 3), ("a", 20, 25, 1),
-        ("b", 3, 3, 1), ("b", 7, 8, 1),
-    ]
-
-
-def test_merge_intervals_matches_remove_overlaps_coverage(spark):
-    """Property: the union's covered cell set == the atomic pieces'
-    covered cell set from remove_overlaps, on a random panel."""
-    import pyspark.sql.functions as F
-
-    from timeperiods_spark import merge_intervals, remove_overlaps
-
-    df = spark.range(500).selectExpr(
-        "CAST(id % 5 AS STRING) AS g",
-        "CAST((id * 37) % 1000 AS INT) AS s",
-        "CAST((id * 37) % 1000 + (id % 11) + 1 AS INT) AS e",
-    )
-    merged = merge_intervals(df, ("s", "e"), ["g"])
-    cells_m = {
-        (r["g"], r["c"])
-        for r in merged.select(
-            "g", F.explode(F.sequence("s", "e")).alias("c")
-        ).collect()
-    }
-    atomic = remove_overlaps(df, ("s", "e"), ["g"]).select("g", "s", "e").dropDuplicates()
-    cells_a = {
-        (r["g"], r["c"])
-        for r in atomic.select(
-            "g", F.explode(F.sequence("s", "e")).alias("c")
-        ).collect()
-    }
-    assert cells_m == cells_a
-    # merged intervals are disjoint and non-adjacent per group
-    ivs = {}
-    for r in merged.collect():
-        ivs.setdefault(r["g"], []).append((r["s"], r["e"]))
-    for g, lst in ivs.items():
-        lst.sort()
-        for (s1, e1), (s2, e2) in zip(lst, lst[1:]):
-            assert s2 > e1 + 1
-
-
-def test_interval_difference_and_gaps(spark):
-    from timeperiods_spark import find_gaps, interval_difference
-
-    x = spark.createDataFrame(
-        [("a", 0, 20), ("a", 30, 40), ("b", 5, 9)], "g string, s int, e int"
-    )
-    y = spark.createDataFrame(
-        [("a", 5, 8), ("a", 18, 33), ("b", 0, 100)], "g string, s int, e int"
-    )
-    got = sorted(
-        (r["g"], r["s"], r["e"])
-        for r in interval_difference(x, y, ("s", "e"), ["g"]).collect()
-    )
-    assert got == [("a", 0, 4), ("a", 9, 17), ("a", 34, 40)]
-
-    gaps = sorted(
-        (r["g"], r["s"], r["e"])
-        for r in find_gaps(x, ("s", "e"), ["g"], span=(0, 50)).collect()
-    )
-    assert gaps == [("a", 21, 29), ("a", 41, 50), ("b", 0, 4), ("b", 10, 50)]
-
-
-def test_interval_difference_property_vs_cells(spark):
-    """Random panels: difference's covered cells == x cells minus y
-    cells, and outputs are maximal disjoint runs."""
-    import pyspark.sql.functions as F
-
-    from timeperiods_spark import interval_difference
-
-    x = spark.range(120).selectExpr(
-        "CAST(id % 3 AS STRING) AS g",
-        "CAST((id * 53) % 400 AS INT) AS s",
-        "CAST((id * 53) % 400 + (id % 7) + 1 AS INT) AS e",
-    )
-    y = spark.range(60).selectExpr(
-        "CAST(id % 3 AS STRING) AS g",
-        "CAST((id * 91) % 400 AS INT) AS s",
-        "CAST((id * 91) % 400 + (id % 11) + 1 AS INT) AS e",
-    )
-    diff = interval_difference(x, y, ("s", "e"), ["g"])
-    got_cells = {
-        (r["g"], r["c"])
-        for r in diff.select("g", F.explode(F.sequence("s", "e")).alias("c")).collect()
-    }
-    cx = {(r["g"], r["c"]) for r in x.select("g", F.explode(F.sequence("s", "e")).alias("c")).collect()}
-    cy = {(r["g"], r["c"]) for r in y.select("g", F.explode(F.sequence("s", "e")).alias("c")).collect()}
-    assert got_cells == cx - cy
-    ivs = {}
-    for r in diff.collect():
-        ivs.setdefault(r["g"], []).append((r["s"], r["e"]))
-    for g, lst in ivs.items():
-        lst.sort()
-        for (s1, e1), (s2, e2) in zip(lst, lst[1:]):
-            assert s2 > e1 + 1  # maximal: no adjacent outputs
-
-
-def test_find_gaps_preserves_date_type(spark):
-    """Date-typed intervals come back as dates from find_gaps (the
-    synthetic full-span frame must carry x's dtype; review finding)."""
-    import datetime as dt
-
-    from timeperiods_spark import find_gaps
-
-    d = dt.date(2020, 1, 1)
-    x = spark.createDataFrame(
-        [("a", d, d + dt.timedelta(days=4))], "g string, s date, e date"
-    )
-    lo = (d - dt.date(1970, 1, 1)).days
-    gaps = find_gaps(x, ("s", "e"), ["g"], span=(lo, lo + 9))
-    assert dict(gaps.dtypes)["s"] == "date" and dict(gaps.dtypes)["e"] == "date"
-    got = [(r["s"], r["e"]) for r in gaps.collect()]
-    assert got == [(d + dt.timedelta(days=5), d + dt.timedelta(days=9))]
-
-
-def test_interval_algebra_ungrouped(spark):
-    """Ungrouped paths (gcols=[]) of the union/difference sweeps — the
-    always-bucketed branch of plans/carry.py."""
-    from timeperiods_spark import (
-        find_gaps,
-        interval_difference,
-        merge_intervals,
-    )
-
-    x = spark.createDataFrame([(1, 5), (4, 9), (20, 25)], "s int, e int")
-    m = sorted((r["s"], r["e"]) for r in merge_intervals(x, ("s", "e")).collect())
-    assert m == [(1, 9), (20, 25)]
-    y = spark.createDataFrame([(3, 6)], "s int, e int")
-    d = sorted(
-        (r["s"], r["e"]) for r in interval_difference(x, y, ("s", "e")).collect()
-    )
-    assert d == [(1, 2), (7, 9), (20, 25)]
-    g = sorted((r["s"], r["e"]) for r in find_gaps(x, ("s", "e"), span=(0, 30)).collect())
-    assert g == [(0, 0), (10, 19), (26, 30)]
-
-
-def test_interval_algebra_invalid_rows_raise(spark):
-    """merge_intervals / interval_difference raise on NULL endpoints or
-    reversed intervals via the row-local sweep guard (round-4 ADVICE:
-    previously a reversed interval silently drove the running coverage
-    negative, corrupting island detection for the whole group)."""
-    from timeperiods_spark import interval_difference, merge_intervals
-
-    reversed_df = spark.createDataFrame([(1, 9, 3)], "g int, s int, e int")
-    with pytest.raises(Exception, match="end < start|invalid interval"):
-        merge_intervals(reversed_df, ("s", "e"), ["g"]).collect()
-
-    null_df = spark.createDataFrame(
-        [(1, None, 3)], "g int, s int, e int"
-    )
-    with pytest.raises(Exception, match="NULL endpoint|invalid interval"):
-        merge_intervals(null_df, ("s", "e"), ["g"]).collect()
-
-    ok = spark.createDataFrame([(1, 0, 5)], "g int, s int, e int")
-    with pytest.raises(Exception, match="end < start|invalid interval"):
-        interval_difference(ok, reversed_df, ("s", "e"), ["g"]).collect()
 
 
 def test_running_max_string_order_grouped_ok_ungrouped_raises(spark):

@@ -1,17 +1,7 @@
-"""Operators with no dedicated test module: grouped cartesian, M4
-downsampling and exact dedup."""
+"""Operators with no dedicated test module: grouped cartesian and M4
+downsampling."""
 
 from __future__ import annotations
-
-
-def test_exact_dedup_deterministic(spark):
-    from timeperiods_spark.operators.spandedup import exact_dedup
-
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (2, "a", 3.0), (3, "b", 1.0)], "id long, k string, v double"
-    )
-    out = exact_dedup(df, ["k"], order_cols=["v", "id"]).orderBy("k").collect()
-    assert [(r["id"], r["k"]) for r in out] == [(2, "a"), (3, "b")]
 
 
 def test_grouped_cartesian_rename_dodges_own_columns(spark):

@@ -14,7 +14,8 @@ from hypothesis import strategies as st
 
 from timeperiods_spark import interval_weighted_avg, remove_overlaps
 from timeperiods_spark.functions.compression import gorilla_decode, gorilla_encode
-from timeperiods_spark.operators.interval_avg_slow import interval_weighted_avg_slow
+
+from .oracle import interval_weighted_avg_slow
 
 _SPARK_SETTINGS = dict(
     max_examples=6,
@@ -156,36 +157,6 @@ def test_gorilla_roundtrip_property(deltas, data):
         else:
             # bit-exact, including -0.0 vs 0.0 and infinities
             assert np.float64(got).tobytes() == np.float64(want).tobytes()
-
-
-@given(rows=_interval_rows(max_rows=14, groups=2, span=40))
-@settings(**_SPARK_SETTINGS)
-def test_merge_intervals_union_property(spark, rows):
-    """merge_intervals == brute-force cell-set islands on random input."""
-    from timeperiods_spark import merge_intervals
-
-    df = spark.createDataFrame(rows, "g int, s int, e int")
-    got = {
-        (r["g"], r["s"], r["e"], r["n_source_intervals"])
-        for r in merge_intervals(df, ("s", "e"), ["g"]).collect()
-    }
-    # brute force: mark covered cells, extract maximal runs
-    want = set()
-    by_g = {}
-    for g, s, e in rows:
-        by_g.setdefault(g, []).append((s, e))
-    for g, ivs in by_g.items():
-        covered = sorted({c for s, e in ivs for c in range(s, e + 1)})
-        runs = []
-        for c in covered:
-            if runs and c == runs[-1][1] + 1:
-                runs[-1] = (runs[-1][0], c)
-            else:
-                runs.append((c, c))
-        for s, e in runs:
-            n = sum(1 for a, b in ivs if s <= a <= e)
-            want.add((g, s, e, n))
-    assert got == want
 
 
 @given(

@@ -19,10 +19,6 @@ from .functions.compression import compress_series, decompress_series
 from .functions.grid import salted_repartition, timestamp_to_grid
 from .operators.cross import grouped_cartesian
 from .operators.downsample import downsample_m4, rollup_ohlc
-from .operators.interval_diff import find_gaps, interval_difference
-from .operators.interval_union import merge_intervals
-from .operators.sampling import hash_sample, hash_sample_n, source_mix
-from .operators.spandedup import duplicate_span_stats, duplicate_spans
 from .plans.cachectl import release as release_caches
 from .operators.rollup import (
     cascade,
@@ -38,7 +34,6 @@ from .sources.catalog import TierCatalog
 from .sources.tokens import token_table
 from .streaming.continuous import ingest_batch
 from .operators.interval_avg import RESERVED_OUTPUT_NAMES, interval_weighted_avg
-from .operators.interval_avg_slow import interval_weighted_avg_slow
 from .operators.overlaps import (
     check_no_overlaps,
     overlap_join,
@@ -49,7 +44,6 @@ from .session import get_spark
 
 __all__ = [
     "interval_weighted_avg",
-    "interval_weighted_avg_slow",
     "remove_overlaps",
     "overlap_join",
     "check_no_overlaps",
@@ -63,9 +57,6 @@ __all__ = [
     "gap_fill_interpolate",
     "downsample_m4",
     "rollup_ohlc",
-    "merge_intervals",
-    "interval_difference",
-    "find_gaps",
     "period_scaffold",
     "compress_series",
     "decompress_series",
@@ -75,12 +66,7 @@ __all__ = [
     "ingest_batch",
     "salted_repartition",
     "timestamp_to_grid",
-    "duplicate_spans",
-    "duplicate_span_stats",
     "release_caches",
-    "hash_sample",
-    "hash_sample_n",
-    "source_mix",
     "get_spark",
     "RESERVED_OUTPUT_NAMES",
     "TimeperiodsError",

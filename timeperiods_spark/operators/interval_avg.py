@@ -34,7 +34,7 @@ import time
 import warnings
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..errors import (
@@ -82,28 +82,6 @@ def _grid(colname: str, dtype: T.DataType) -> str:
     if isinstance(dtype, T.DateType):
         return f"CAST(datediff({c}, DATE'{_EPOCH}') AS BIGINT)"
     return f"CAST({c} AS BIGINT)"
-
-
-def _sweep_checked_end(gs: Column, ge: Column, op: str) -> Column:
-    """Row-local validity guard for the boundary-sweep operators
-    (merge_intervals / interval_difference / find_gaps): a NULL endpoint
-    or a reversed interval would emit its -1 delta before (or without)
-    its +1 and silently drive the running coverage negative, corrupting
-    island detection for the whole group. The guard is threaded INTO the
-    end-grid expression so it costs no extra scan — it raises inside the
-    first Spark job that reads the frame (surfacing as a
-    SparkRuntimeException carrying this message)."""
-    bad = gs.isNull() | ge.isNull() | (ge < gs)
-    return F.when(
-        bad,
-        F.raise_error(
-            F.lit(
-                f"{op}: invalid interval row (NULL endpoint or end < "
-                "start); interval columns must be non-NULL with end >= "
-                "start on the closed integer grid"
-            )
-        ).cast("long"),
-    ).otherwise(ge)
 
 
 def _ungrid(expr: str, dtype: T.DataType) -> str:

@@ -1,8 +1,7 @@
 """Managed cache lifecycle for operator intermediates.
 
-Several operators persist an intermediate frame that is consumed more
-than once downstream (the as-of union frame, the overlap melt, the
-interval-algebra delta frame). A bare
+``remove_overlaps``' SQL sweep persists an intermediate frame that is
+consumed more than once downstream (the overlap melt). A bare
 ``.persist()`` there leaks in long-lived sessions: nothing ever
 unpersists, and repeated operator calls grow the storage pool without
 bound (VERDICT r3 item 6).

@@ -19,7 +19,7 @@ At design scale (10^12 sequences) the generator is a single narrow
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 MODULUS = 2147483647  # 2^31 - 1 (Mersenne prime, MINSTD modulus)
 VOCAB = 50257
@@ -40,16 +40,14 @@ def token_table(
     spark: SparkSession,
     n_docs: int,
     *,
-    with_interval: bool = True,
     partitions: int | None = None,
     doc_range: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Generate ``n_docs`` deterministic pre-tokenized sequences.
 
     Columns: doc_id (string), tokens (array<int>), n_tok (int),
-    source (string, skewed), and with ``with_interval`` also
-    start_hour / end_hour (int, closed hour-grid interval within one
-    year; duration grows with n_tok).
+    source (string, skewed), start_hour / end_hour (int, closed
+    hour-grid interval within one year; duration grows with n_tok).
 
     ``doc_range=(lo, hi)`` generates only that doc_id slice — the
     batch-ingest path uses it so each batch is a narrow range scan
@@ -63,18 +61,14 @@ def token_table(
         else spark.range(lo, hi)
     )
     num = rng.selectExpr("id AS doc_id")
-    cols = [
+    return num.selectExpr(
         "CAST(doc_id AS STRING) AS doc_id",
         f"transform(sequence(1, {N_TOK}), i -> CAST((({H1}) + i * 69621) % {VOCAB} AS INT)) AS tokens",
         f"CAST({N_TOK} AS INT) AS n_tok",
         f"concat('src_', {SRC_ID}) AS source",
-    ]
-    if with_interval:
-        cols += [
-            f"CAST({START_HOUR} AS INT) AS start_hour",
-            f"CAST({START_HOUR} + {DUR_HOURS} - 1 AS INT) AS end_hour",
-        ]
-    return num.selectExpr(*cols)
+        f"CAST({START_HOUR} AS INT) AS start_hour",
+        f"CAST({START_HOUR} + {DUR_HOURS} - 1 AS INT) AS end_hour",
+    )
 
 
 def token_table_oracle_sql(n_docs: int) -> str:

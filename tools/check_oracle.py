@@ -23,7 +23,7 @@ import __spark_entry__ as entrymod  # noqa: E402
 from timeperiods_spark.session import get_spark  # noqa: E402
 
 TABLES = (
-    "region nation customer supplier part orders lineitem events documents"
+    "region nation customer supplier part orders lineitem events"
 ).split()
 
 

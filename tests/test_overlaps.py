@@ -311,6 +311,94 @@ def test_verbose_flag_prints_steps(spark, capsys):
     assert "x integrity" in out and "join_strategy" in out
 
 
+def _islands(cells):
+    """Maximal runs of consecutive integers in ``cells``."""
+    runs = []
+    for c in sorted(set(cells)):
+        if runs and c == runs[-1][1] + 1:
+            runs[-1] = (runs[-1][0], c)
+        else:
+            runs.append((c, c))
+    return runs
+
+
+def _brute_pieces(rows):
+    """Atomic pieces of ungrouped (s, e) rows by brute force: every
+    original is cut at each start and each end + 1 inside it; one
+    (s, e, o_s, o_e) per piece per original row."""
+    cuts = sorted({s for s, _ in rows} | {e + 1 for _, e in rows})
+    out = []
+    for a, b in rows:
+        inside = [c for c in cuts if a <= c <= b + 1]
+        out += [(lo, hi - 1, a, b) for lo, hi in zip(inside, inside[1:])]
+    return sorted(out)
+
+
+def test_merge_intervals_matches_remove_overlaps_coverage(spark):
+    """Property: the atomic pieces cover exactly the input's cells, on a
+    random panel, through the Arrow sweep and the SQL sweep; merged
+    into maximal runs per group, the distinct pieces give the input's
+    islands."""
+    df = spark.range(500).selectExpr(
+        "CAST(id % 5 AS STRING) AS g",
+        "CAST((id * 37) % 1000 AS INT) AS s",
+        "CAST((id * 37) % 1000 + (id % 11) + 1 AS INT) AS e",
+    )
+    cells_in = {}
+    for r in df.collect():
+        cells_in.setdefault(r["g"], set()).update(range(r["s"], r["e"] + 1))
+    for strategy in ("auto", "bin"):
+        atomic = (
+            remove_overlaps(df, ("s", "e"), ["g"], join_strategy=strategy)
+            .select("g", "s", "e")
+            .dropDuplicates()
+            .collect()
+        )
+        cells_a, pieces = {}, {}
+        for r in atomic:
+            got = cells_a.setdefault(r["g"], set())
+            piece = set(range(r["s"], r["e"] + 1))
+            assert not got & piece, (strategy, r)  # distinct pieces are disjoint
+            got |= piece
+            pieces.setdefault(r["g"], []).append((r["s"], r["e"]))
+        assert cells_a == cells_in, strategy
+        for g, lst in pieces.items():
+            cells = [c for s, e in lst for c in range(s, e + 1)]
+            assert _islands(cells) == _islands(cells_in[g]), (strategy, g)
+
+
+def test_interval_algebra_ungrouped(spark, monkeypatch):
+    """Ungrouped remove_overlaps (no group columns) runs the SQL sweep
+    through the always-bucketed branch of plans/carry.py; its pieces
+    match brute force, also when the sweep's lead crosses buckets."""
+    from timeperiods_spark.plans import carry
+
+    real, plans = carry.plan_buckets, []
+
+    def spy(*args, **kwargs):
+        plans.append(real(*args, **kwargs))
+        return plans[-1]
+
+    monkeypatch.setattr(carry, "plan_buckets", spy)
+
+    x = spark.createDataFrame([(1, 5), (4, 9), (20, 25)], "s int, e int")
+    got = sorted(
+        (r["s"], r["e"], r["o_s"], r["o_e"])
+        for r in remove_overlaps(x, ("s", "e")).collect()
+    )
+    assert got == [(1, 3, 1, 5), (4, 5, 1, 5), (4, 5, 4, 9), (6, 9, 4, 9), (20, 25, 20, 25)]
+
+    rows = [((i * 37) % 3000, (i * 37) % 3000 + (i % 23)) for i in range(300)]
+    big = spark.createDataFrame(rows, "s int, e int")
+    got = sorted(
+        (r["s"], r["e"], r["o_s"], r["o_e"])
+        for r in remove_overlaps(big, ("s", "e")).collect()
+    )
+    assert got == _brute_pieces(rows)
+    assert [p.bucketed for p in plans] == [True, True]
+    assert plans[-1].df.select("__bk").distinct().count() > 1  # the lead crosses buckets
+
+
 def test_running_max_string_order_grouped_ok_ungrouped_raises(spark):
     """Non-bucketable (string) leading order: grouped falls back to
     per-group windows; ungrouped raises instead of silently serializing

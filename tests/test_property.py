@@ -159,6 +159,44 @@ def test_gorilla_roundtrip_property(deltas, data):
             assert np.float64(got).tobytes() == np.float64(want).tobytes()
 
 
+@given(rows=_interval_rows(max_rows=14, groups=2, span=40))
+@settings(**_SPARK_SETTINGS)
+def test_merge_intervals_union_property(spark, rows):
+    """The atomic pieces of remove_overlaps, merged into maximal runs
+    per group, == brute-force cell-set islands on random input; each
+    original (duplicates included) starts one piece inside its island."""
+    df = spark.createDataFrame(rows, "g int, s int, e int")
+    out = remove_overlaps(df, ("s", "e"), ("g",)).collect()
+    cells, starts = {}, {}
+    for r in out:
+        cells.setdefault(r["g"], set()).update(range(r["s"], r["e"] + 1))
+        if r["s"] == r["o_s"]:
+            starts.setdefault(r["g"], []).append(r["s"])
+    got = set()
+    for g, cs in cells.items():
+        for s, e in _runs(cs):
+            got.add((g, s, e, sum(1 for a in starts[g] if s <= a <= e)))
+    # brute force: mark covered cells, extract maximal runs
+    want = set()
+    by_g = {}
+    for g, s, e in rows:
+        by_g.setdefault(g, []).append((s, e))
+    for g, ivs in by_g.items():
+        for s, e in _runs({c for a, b in ivs for c in range(a, b + 1)}):
+            want.add((g, s, e, sum(1 for a, _ in ivs if s <= a <= e)))
+    assert got == want
+
+
+def _runs(cells):
+    runs = []
+    for c in sorted(cells):
+        if runs and c == runs[-1][1] + 1:
+            runs[-1] = (runs[-1][0], c)
+        else:
+            runs.append((c, c))
+    return runs
+
+
 @given(
     obs=st.lists(
         st.tuples(st.integers(0, 30), st.integers(-50, 50)),
